@@ -77,6 +77,14 @@ def contamination(ports=range(4040, 4057)) -> str | None:
     return f"live Spark UI port(s) {live}" if live else None
 
 
+def cpu_counters() -> tuple[int, int]:
+    """(steal, total) jiffies over all CPUs since boot: the share of time
+    the hypervisor gave this machine's CPUs to someone else."""
+    with open("/proc/stat") as fh:
+        ticks = [int(x) for x in fh.readline().split()[1:]]
+    return ticks[7], sum(ticks)
+
+
 def source_identity() -> dict:
     """Commit when the checkout is a git work tree, plus a digest of the
     program sources, which identifies the code either way."""
@@ -427,6 +435,7 @@ def main(argv=None) -> int:
             wl.plans = spans.register_plan_listener(spark)
         passes, ops_log = [], []
         window = time.perf_counter()
+        steal0, total0 = cpu_counters()
 
         def more() -> bool:
             """Whole passes: at least MIN_PASSES measured ones, then
@@ -440,6 +449,12 @@ def main(argv=None) -> int:
             # tracing overhead is not confounded with the JIT still warming
             tracer.enabled = bool(args.trace) and len(passes) % 2 == 0
             passes.append(run_pass(wl, tracer, len(passes), ops_log))
+        steal1, total1 = cpu_counters()
+        # like a live Spark UI, CPU taken by the host skews every timing
+        host_steal = (steal1 - steal0) / max(1, total1 - total0)
+        if host_steal > 0.05:
+            print(f"perfbench: host took {host_steal:.0%} of CPU time while "
+                  "timing", file=sys.stderr)
 
         problems = wl.check()
         bad = {k for k, v in problems.items() if v}
@@ -460,7 +475,8 @@ def main(argv=None) -> int:
         "master": f"local[{CORES}]", "shuffle_partitions": SHUFFLE_PARTITIONS,
         "heap": HEAP, "jvm_flags": f"-Xms{HEAP} -Xmx{HEAP} -XX:+AlwaysPreTouch",
         "pyspark": pyspark.__version__, "inputs": wl.inputs(),
-        "contamination": contaminated, "passes": passes, "ops": ops_log,
+        "contamination": contaminated, "host_steal_frac": host_steal,
+        "passes": passes, "ops": ops_log,
         "check": problems, **extra,
         "metrics": {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()},
     }
