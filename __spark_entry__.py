@@ -72,9 +72,10 @@ def q_dim_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     The D2 DISTINCT and D3 keep-first FUSE into the single window pass:
     keep-first's survivor is the ordering-minimum row per key, which is
     invariant under duplicate rows, so a separate distinct would only add
-    an exchange. (The pipeline keeps distinct-then-window for the
-    high-duplication events source, where the map-side-combined distinct
-    shrinks the window's shuffle input — see pipeline.build_dims.)
+    an exchange. (The pipeline's high-duplication events source takes the
+    same survivor in one combining aggregation instead — ``min`` of a
+    struct, map-side combined before its one exchange; see
+    pipeline.product_updates.)
     """
     src = adapters.product_dim_source(spark, sf_dir)
     dim = star.dedup_keep_first(

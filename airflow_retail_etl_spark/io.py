@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -51,24 +51,26 @@ def write_partitioned(
     df.write.mode(mode).partitionBy(*partition_by).format(fmt).save(path)
 
 
-def write_mart(
-    df: DataFrame,
-    root: str,
-    name: str,
-    date: str,
-    *,
-    skip_empty: bool = True,
-) -> bool:
-    """One dated mart write: ``{root}/aggregates/{name}/dt={date}/``.
+def mart_path(root: str, name: str) -> str:
+    """Table root of mart ``name``; its dates live under ``dt=`` below."""
+    return f"{root.rstrip('/')}/aggregates/{name}"
 
-    Mirrors retail_pipeline.py:78-88 including the skip-when-empty guard
-    (:79). Returns True when data was written.
+
+def write_mart(df: DataFrame, root: str, name: str, date: str) -> int:
+    """One dated mart write: ``{root}/aggregates/{name}/dt={date}/``.
+    Returns the number of rows written, so 0 (falsy) means nothing was.
+
+    Mirrors retail_pipeline.py:78-88 including its skip-when-empty guard
+    (:79), without a separate emptiness check: the write always runs, and
+    under dynamic partition overwrite an empty frame replaces no ``dt=``
+    partition — an existing partition for ``date`` stays as it was, the
+    same on-disk result as skipping. The count is a ``DataFrame.observe``
+    metric collected by the write itself, so the mart's plan runs once.
     """
-    if skip_empty and df.isEmpty():
-        return False
-    out = df.withColumn("dt", F.lit(date))
-    write_partitioned(out, f"{root.rstrip('/')}/aggregates/{name}")
-    return True
+    rows = Observation()
+    out = df.observe(rows, F.count(F.lit(1)).alias("rows"))
+    write_partitioned(out.withColumn("dt", F.lit(date)), mart_path(root, name))
+    return rows.get["rows"]
 
 
 def write_csv(

@@ -2,9 +2,10 @@
 
 All pure DataFrame → DataFrame functions; parameterized over column names so
 the same operator serves the reference's retail schema and the driver's
-testdata schema. Every aggregation here is a single-shuffle hash aggregation
-with map-side partial aggregation — Catalyst's default physical strategy —
-which is exactly what survives a 100× scale-up.
+testdata schema. Every aggregation here is a single-shuffle aggregation
+with map-side partial aggregation — hash-based, Catalyst's default physical
+strategy, except keep_first_agg's sort-based struct ``min`` — which is
+exactly what survives a 100× scale-up.
 """
 
 from __future__ import annotations
@@ -76,6 +77,32 @@ def dedup_keep_first(
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
+    )
+
+
+def keep_first_agg(
+    df: DataFrame,
+    keys: Sequence[str],
+    order_by: Sequence[str],
+) -> DataFrame:
+    """Keyed keep-first D3 as one aggregation: per key, the row whose
+    ``order_by`` values are smallest, compared left to right with nulls
+    first — the survivor of ``dedup_keep_first(df, keys, order_by)``.
+
+    ``min`` over a struct of the ordering columns is combined map-side
+    (sort-based: a struct buffer is not hash-aggregatable), so duplicate
+    rows collapse before the single exchange, and they cannot change the
+    minimum: no DISTINCT pass is needed first. The struct carries the
+    survivor's values, so ``order_by`` must name every non-key column;
+    putting all of them in the order also makes ties impossible. Columns
+    keep ``df``'s order.
+    """
+    rest = set(df.columns) - set(keys) - set(order_by)
+    if rest:
+        raise ValueError(f"columns outside keys and order_by: {sorted(rest)}")
+    first = F.min(F.struct(*order_by)).alias("__first")
+    return df.groupBy(*keys).agg(first).select(
+        *[c if c in keys else F.col(f"__first.{c}").alias(c) for c in df.columns]
     )
 
 

@@ -25,11 +25,16 @@ from pyspark.sql import functions as F
 
 from airflow_retail_etl_spark.functions.columns import split_hierarchy
 from airflow_retail_etl_spark.io import (
+    mart_path,
     promote_staging,
     write_mart,
     write_partitioned,
 )
 from airflow_retail_etl_spark.operators import marts, star
+from airflow_retail_etl_spark.schemas import (
+    DIM_PRODUCT_JOIN_SCHEMA,
+    STAGING_TABLE_SCHEMA,
+)
 from airflow_retail_etl_spark.sources.csv_events import read_day_csv
 
 
@@ -56,7 +61,10 @@ def ingest_day(spark: SparkSession, cfg: PipelineConfig, date: str) -> DataFrame
 
 
 def staging_table(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    return spark.read.parquet(f"{cfg.warehouse_root}/staging_events")
+    """The bronze table, read with its declared schema (no inference job)."""
+    return spark.read.schema(STAGING_TABLE_SCHEMA).parquet(
+        f"{cfg.warehouse_root}/staging_events"
+    )
 
 
 def build_fact(spark: SparkSession, cfg: PipelineConfig, date: str) -> DataFrame:
@@ -70,6 +78,25 @@ def build_fact(spark: SparkSession, cfg: PipelineConfig, date: str) -> DataFrame
     return fact
 
 
+def product_updates(day: DataFrame) -> DataFrame:
+    """One row per non-null ``product_id`` of a staging slice (D2+D3):
+    the smallest (category_code, brand, price, category_id), nulls first.
+
+    One map-side-combined aggregation (``star.keep_first_agg``): the
+    events feed repeats each product many times a day, and the combine
+    shrinks that to one row per product and task before the only
+    exchange. ``category_id`` as the last key decides between rows that
+    agree on the other three.
+    """
+    return star.keep_first_agg(
+        day.select(
+            "product_id", "category_id", "category_code", "brand", "price"
+        ).filter(F.col("product_id").isNotNull()),
+        ["product_id"],
+        ["category_code", "brand", "price", "category_id"],
+    )
+
+
 def build_dims(spark: SparkSession, cfg: PipelineConfig, date: str) -> dict[str, DataFrame]:
     """dim_user (D1) + dim_product (D2/D3/P6) from the date's staging slice."""
     day = staging_table(spark, cfg).filter(F.col("dt") == date)
@@ -77,18 +104,8 @@ def build_dims(spark: SparkSession, cfg: PipelineConfig, date: str) -> dict[str,
         day, ["user_id", "user_session"], not_null=["user_id"]
     ).withColumn("updated_at", F.current_timestamp())
 
-    product_src = star.build_dim(
-        day,
-        ["product_id", "category_id", "category_code", "brand", "price"],
-        not_null=["product_id"],
-    )
-    product = star.dedup_keep_first(
-        product_src,
-        ["product_id"],
-        ["category_code", "brand", "price"],
-    )
     cat, sub1, sub2 = split_hierarchy(F.col("category_code"))
-    dim_product = product.select(
+    dim_product = product_updates(day).select(
         "*",
         cat.alias("category"),
         sub1.alias("sub_category1"),
@@ -198,15 +215,7 @@ def build_dims_incremental(
     updates_user = star.build_dim(
         day, ["user_id", "user_session"], not_null=["user_id"]
     )
-    updates_product = star.dedup_keep_first(
-        star.build_dim(
-            day,
-            ["product_id", "category_id", "category_code", "brand", "price"],
-            not_null=["product_id"],
-        ),
-        ["product_id"],
-        ["category_code", "brand", "price"],
-    )
+    updates_product = product_updates(day)
     spec = {
         "dim_user_scd": (updates_user, ["user_id", "user_session"], []),
         "dim_product_scd": (
@@ -361,15 +370,31 @@ def build_dim_date(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     return cal
 
 
-def build_marts(spark: SparkSession, cfg: PipelineConfig, date: str) -> dict[str, DataFrame]:
-    """Three KPI marts for one date → partitioned mart parquet (K2)."""
+class Marts(dict):
+    """``build_marts``' frames by mart name, plus ``rows``: the number of
+    rows each mart's write put in its ``dt=`` partition (0 = none)."""
+
+    def __init__(self, frames: dict[str, DataFrame], rows: dict[str, int]):
+        super().__init__(frames)
+        self.rows = rows
+
+
+def build_marts(spark: SparkSession, cfg: PipelineConfig, date: str) -> Marts:
+    """Three KPI marts for one date → partitioned mart parquet (K2).
+
+    Each mart's plan runs once, in its write; the writes count their own
+    rows (``io.write_mart``), and a mart with no rows leaves its ``dt=``
+    partition as it was (the reference's skip-when-empty,
+    retail_pipeline.py:79). ``top_brands_by_revenue`` is taken from the
+    funnel partition just written rather than by re-running the funnel's
+    scan, join and aggregation; when the funnel wrote nothing, neither
+    mart is written.
+    """
     view, cart, purchase = cfg.funnel_types
     day = staging_table(spark, cfg).filter(F.col("dt") == date)
-    dim_product = spark.read.parquet(
+    dim_product = spark.read.schema(DIM_PRODUCT_JOIN_SCHEMA).parquet(
         f"{cfg.warehouse_root}/dim_product"
-    ).filter(F.col("dt") == date).select(
-        "product_id", "brand", "category_code"
-    )
+    ).filter(F.col("dt") == date).drop("dt")
 
     revenue = marts.daily_revenue_summary(
         day, view_value=view, cart_value=cart, purchase_value=purchase
@@ -384,23 +409,42 @@ def build_marts(spark: SparkSession, cfg: PipelineConfig, date: str) -> dict[str
         cart_value=cart,
         purchase_value=purchase,
     )
+    rows = {
+        "daily_revenue_summary": write_mart(
+            revenue, cfg.mart_root, "daily_revenue_summary", date
+        ),
+        "daily_funnel_by_brand": write_mart(
+            funnel, cfg.mart_root, "daily_funnel_by_brand", date
+        ),
+    }
+    if rows["daily_funnel_by_brand"]:
+        # funnel.schema is analysis only; the declared schema spares the
+        # read a footer-inference job
+        funnel = spark.read.schema(funnel.schema).parquet(
+            f"{mart_path(cfg.mart_root, 'daily_funnel_by_brand')}/dt={date}"
+        )
     # reference grain: head(10) of the (date, brand, category_code) funnel
     # frame itself (retail_pipeline.py:73), not a brand-level re-aggregation;
     # tiebreak pins the survivor set where pandas' head() order was accidental
     top_brands = marts.top_k(
         funnel, "revenue", 10, tiebreak=["brand", "category_code"]
     )
-    out = {
-        "daily_revenue_summary": revenue,
-        "daily_funnel_by_brand": funnel,
-        "top_brands_by_revenue": top_brands,
-    }
-    for name, df in out.items():
-        write_mart(df, cfg.mart_root, name, date)
-    return out
+    rows["top_brands_by_revenue"] = (
+        write_mart(top_brands, cfg.mart_root, "top_brands_by_revenue", date)
+        if rows["daily_funnel_by_brand"]
+        else 0
+    )
+    return Marts(
+        {
+            "daily_revenue_summary": revenue,
+            "daily_funnel_by_brand": funnel,
+            "top_brands_by_revenue": top_brands,
+        },
+        rows,
+    )
 
 
-def run_day(spark: SparkSession, cfg: PipelineConfig, date: str) -> dict[str, DataFrame]:
+def run_day(spark: SparkSession, cfg: PipelineConfig, date: str) -> Marts:
     """One execution date end-to-end: ingest → fact+dims → marts."""
     ingest_day(spark, cfg, date)
     build_fact(spark, cfg, date)

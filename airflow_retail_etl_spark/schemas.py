@@ -34,6 +34,31 @@ STAGING_EVENTS_SCHEMA = T.StructType(
     ]
 )
 
+
+def _as_stored(fields: list[T.StructField]) -> list[T.StructField]:
+    """Fields as a parquet read sees them: Spark writes every column as
+    optional, so every field reads back nullable."""
+    return [T.StructField(f.name, f.dataType, True) for f in fields]
+
+
+#: The ``dt=`` partition column of every warehouse table, typed as
+#: partition discovery infers it from ``dt=YYYY-MM-DD``.
+DT_FIELD = T.StructField("dt", T.DateType(), True)
+
+#: Read schema of the bronze ``staging_events`` table. Declaring it spares
+#: each ``spark.read.parquet`` the footer-inference job.
+STAGING_TABLE_SCHEMA = T.StructType(
+    _as_stored(STAGING_EVENTS_SCHEMA.fields) + [DT_FIELD]
+)
+
+#: The ``dim_product`` columns the marts join on, plus ``dt``.
+DIM_PRODUCT_JOIN_SCHEMA = T.StructType(
+    _as_stored(
+        [EVENT_CSV_SCHEMA[c] for c in ("product_id", "brand", "category_code")]
+    )
+    + [DT_FIELD]
+)
+
 #: fact_events grain = (event_date, event_type, product_id, user_id)
 #: (table_creation.sql:18-26, populated by retail_pipeline_assets.py:60-72).
 FACT_EVENTS_SCHEMA = T.StructType(

@@ -40,3 +40,17 @@ def test_task_callables_end_to_end(spark, data_root):
         str(data_root / "mart" / "aggregates" / "daily_revenue_summary")
     )
     assert mart.first()["revenue"] == 12.5
+
+
+def test_task_marts_false_when_a_mart_writes_nothing(spark, data_root):
+    """A day whose rows have no product_id writes no funnel rows, so the
+    mart task reports failure from the writes' own row counts."""
+    day = data_root / "raw" / "Day_Wise" / "2019-10-08"
+    day.mkdir(parents=True)
+    (day / "event.csv").write_text(
+        HEADER + "2019-10-08 10:00:00,purchase,,1,a.b,acme,12.50,42,s-42\n"
+    )
+    dagmod.task_ingest("2019-10-08")
+    dagmod.task_fact("2019-10-08")
+    dagmod.task_dims("2019-10-08")
+    assert dagmod.task_marts("2019-10-08") is False

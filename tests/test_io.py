@@ -26,6 +26,30 @@ def test_write_mart_skips_empty(spark, tmp_path):
     assert not write_mart(df, str(tmp_path), "m", "2019-10-05")
 
 
+def _partition_bytes(part):
+    return {p.name: p.read_bytes() for p in part.iterdir()}
+
+
+def test_write_mart_counts_rows_and_empty_leaves_partition(spark, tmp_path):
+    """The write counts its own rows; an empty frame writes no ``dt=``
+    directory and leaves an existing one byte-for-byte as it was (the
+    old skip-when-empty guarantee)."""
+    table = tmp_path / "aggregates" / "m"
+    empty = spark.createDataFrame([], "id int, v string")
+    assert write_mart(empty, str(tmp_path), "m", "2019-10-05") == 0
+    assert not list(table.glob("dt=*"))
+
+    full = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
+    assert write_mart(full, str(tmp_path), "m", "2019-10-05") == 2
+    part = table / "dt=2019-10-05"
+    before = _partition_bytes(part)
+    assert any(name.endswith(".parquet") for name in before)
+
+    assert write_mart(empty, str(tmp_path), "m", "2019-10-05") == 0
+    assert _partition_bytes(part) == before
+    assert sorted(p.name for p in table.glob("dt=*")) == ["dt=2019-10-05"]
+
+
 def test_compact_partitions(spark, tmp_path):
     path = str(tmp_path / "t")
     df = spark.createDataFrame(

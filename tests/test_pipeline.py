@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -116,6 +117,125 @@ def test_dim_date_calendar(spark, cfg):
     assert cal.count() == 5
     r = cal.filter(F.col("date") == dt.date(2019, 10, 1)).first()
     assert (r["weekday"], r["week"]) == (1, 40)  # Tuesday, ISO week 40
+
+
+#: Spark jobs one day may cost per stage (measured: ingest 2 = empty
+#: guard + write; fact 2; dims 4; marts 7). A stage that grows an eager
+#: action — an emptiness check, a count, a schema inference — fails here.
+JOB_BUDGET = {"ingest_day": 2, "build_fact": 2, "build_dims": 4, "build_marts": 7}
+
+
+def _jobs_per_stage(spark, cfg, date):
+    """Run the four stage functions for ``date``, each under its own job
+    group, and count the jobs each one ran."""
+    from airflow_retail_etl_spark import pipeline
+
+    sc = spark.sparkContext
+    groups = {}
+    for stage in JOB_BUDGET:
+        groups[stage] = f"job-budget-{stage}-{date}"
+        sc.setJobGroup(groups[stage], stage)
+        try:
+            getattr(pipeline, stage)(spark, cfg, date)
+        finally:
+            sc._jsc.clearJobGroup()
+    # job starts reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    return {s: len(tracker.getJobIdsForGroup(g)) for s, g in groups.items()}
+
+
+def test_stage_job_budget(spark, cfg):
+    jobs = _jobs_per_stage(spark, cfg, "2019-10-01")
+    over = {s: n for s, n in jobs.items() if n > JOB_BUDGET[s]}
+    assert not over, f"jobs per stage {jobs} exceed the budget {JOB_BUDGET}"
+
+
+def test_declared_read_schemas_match_written_tables(spark, cfg):
+    """The schemas the pipeline reads with are what inference would find
+    in a warehouse written by ingest_day and build_dims."""
+    from airflow_retail_etl_spark.schemas import (
+        DIM_PRODUCT_JOIN_SCHEMA,
+        STAGING_TABLE_SCHEMA,
+    )
+
+    wh = cfg.warehouse_root
+    assert spark.read.parquet(f"{wh}/staging_events").schema == STAGING_TABLE_SCHEMA
+    dim = spark.read.parquet(f"{wh}/dim_product")
+    assert dim.select(*DIM_PRODUCT_JOIN_SCHEMA.fieldNames()).schema == (
+        DIM_PRODUCT_JOIN_SCHEMA
+    )
+
+
+@pytest.fixture(scope="module")
+def edge_cfg(spark, tmp_path_factory):
+    """Days that exercise the dim_product survivor and an empty funnel."""
+    root = tmp_path_factory.mktemp("retail_edges")
+    days = {
+        # product 5: two category_ids, same code/brand/price;
+        # product 6: one row without a price
+        "2019-10-03": [
+            "10:00:00,view,5,9,a.b,x,3.0,1,s1",
+            "10:00:01,view,5,7,a.b,x,3.0,2,s2",
+            "10:00:02,view,6,4,c,y,2.0,1,s1",
+            "10:00:03,purchase,6,4,c,y,,2,s2",
+        ],
+        # no product_id at all: revenue rows, but no funnel join matches
+        "2019-10-04": [
+            "10:00:00,view,,9,a.b,x,3.0,1,s1",
+            "10:00:01,purchase,,9,a.b,x,3.0,2,s2",
+        ],
+    }
+    for date, rows in days.items():
+        d = root / "raw" / "Day_Wise" / date
+        d.mkdir(parents=True)
+        (d / "event.csv").write_text(
+            HEADER + "".join(f"{date} {r}\n" for r in rows)
+        )
+    return PipelineConfig(
+        raw_root=str(root / "raw"),
+        warehouse_root=str(root / "wh"),
+        mart_root=str(root / "mart"),
+    )
+
+
+def test_dim_product_survivor_is_smallest_row(spark, edge_cfg):
+    from airflow_retail_etl_spark.pipeline import build_dims, ingest_day
+
+    ingest_day(spark, edge_cfg, "2019-10-03")
+    build_dims(spark, edge_cfg, "2019-10-03")
+    prod = spark.read.parquet(f"{edge_cfg.warehouse_root}/dim_product")
+    rows = {r["product_id"]: r for r in prod.collect()}
+    assert rows[5]["category_id"] == 7  # the tie goes to the smaller id
+    assert rows[6]["price"] is None  # a null price sorts first
+    assert prod.count() == 2
+
+
+def test_marts_on_day_without_products(spark, edge_cfg):
+    """Every row has a NULL product_id: the revenue mart is written, the
+    funnel and the top brands are not, and nothing raises."""
+    from airflow_retail_etl_spark.pipeline import (
+        build_dims,
+        build_fact,
+        build_marts,
+        ingest_day,
+    )
+
+    date = "2019-10-04"
+    ingest_day(spark, edge_cfg, date)
+    build_fact(spark, edge_cfg, date)
+    build_dims(spark, edge_cfg, date)
+    out = build_marts(spark, edge_cfg, date)
+    assert out.rows == {
+        "daily_revenue_summary": 1,
+        "daily_funnel_by_brand": 0,
+        "top_brands_by_revenue": 0,
+    }
+    assert set(out) == set(out.rows)
+    aggregates = pathlib.Path(edge_cfg.mart_root) / "aggregates"
+    assert (aggregates / "daily_revenue_summary" / f"dt={date}").is_dir()
+    for name in ("daily_funnel_by_brand", "top_brands_by_revenue"):
+        assert not (aggregates / name / f"dt={date}").exists()
 
 
 _STAGING_COLS = (

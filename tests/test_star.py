@@ -2,11 +2,14 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from airflow_retail_etl_spark.operators.star import (
     build_dim,
     dedup_keep_first,
     dim_date,
     fact_rollup,
+    keep_first_agg,
 )
 
 D1 = dt.date(2019, 10, 1)
@@ -52,6 +55,29 @@ def test_dedup_keep_first_deterministic(spark):
     out = dedup_keep_first(df, ["product_id"], ["brand", "price"])
     rows = {r["product_id"]: r["brand"] for r in out.collect()}
     assert rows == {1: "alpha", 2: "x"}  # survivor pinned by ordering
+
+
+def test_keep_first_agg_matches_window_survivor(spark):
+    """min(struct) keeps the row the ascending (nulls-first) window keeps,
+    whatever the duplicates; every non-key column is an ordering key."""
+    rows = [
+        (1, "b", 2.0), (1, "b", None), (1, "a", 9.0), (1, "a", 9.0),
+        (2, None, 5.0), (2, "a", 1.0), (2, None, None),
+        (3, "z", float("nan")), (3, "z", 4.0), (4, None, None),
+    ]
+    df = spark.createDataFrame(
+        rows * 3, "product_id long, brand string, price double"
+    )
+    order = ["brand", "price"]
+    want = dedup_keep_first(df.distinct(), ["product_id"], order)
+    got = keep_first_agg(df, ["product_id"], order)
+    assert got.columns == df.columns
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        map(tuple, want.collect()), key=repr
+    )
+    assert {r[0]: (r[1], r[2]) for r in got.collect()}[1] == ("a", 9.0)
+    with pytest.raises(ValueError, match="price"):
+        keep_first_agg(df, ["product_id"], ["brand"])
 
 
 def test_dim_date_parts_match_pandas_semantics(spark):

@@ -7,7 +7,10 @@ exact work the reference's Airflow deployment did at ~3.2 s/day ingest +
 ~1.6 s fact + ~0.4-0.5 s/dim + mart queries (BASELINE.md).
 
 Usage: python tools/reference_workload.py [n_days] [rows_per_day]
-Prints one JSON line with per-stage totals.
+Prints one JSON line with per-stage totals: seconds and Spark jobs. Each
+stage runs under its own job group, and the jobs are counted from the
+groups after the run, so counting adds no action (exact while a run stays
+under ``spark.ui.retainedJobs``, 1000 by default; 31 days run ~465 jobs).
 """
 
 from __future__ import annotations
@@ -21,11 +24,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from airflow_retail_etl_spark.pipeline import (
-    PipelineConfig,
-    build_dim_date,
-    run_day,
-)
+from airflow_retail_etl_spark import pipeline
 from airflow_retail_etl_spark.session import get_spark
 
 HEADER = (
@@ -36,6 +35,9 @@ HEADER = (
 CATS = ["electronics.smartphone", "electronics.audio.headphone",
         "appliances.kitchen", "apparel", ""]
 BRANDS = ["samsung", "apple", "xiaomi", "huawei", ""]
+
+#: what ``pipeline.run_day`` calls, in order
+STAGES = ("ingest_day", "build_fact", "build_dims", "build_marts")
 
 
 def synth_day(path: Path, date: str, rows: int, seed: int) -> None:
@@ -71,16 +73,33 @@ def main() -> None:
 
         spark = get_spark(master="local[8]", shuffle_partitions=8)
         spark.sparkContext.setLogLevel("ERROR")
-        cfg = PipelineConfig(
+        cfg = pipeline.PipelineConfig(
             raw_root=str(root / "raw"),
             warehouse_root=str(root / "wh"),
             mart_root=str(root / "mart"),
         )
+        sc = spark.sparkContext
+        stage_s = dict.fromkeys(STAGES, 0.0)
         t0 = time.time()
-        build_dim_date(spark, cfg)
+        pipeline.build_dim_date(spark, cfg)
         for date in dates:
-            run_day(spark, cfg, date)
+            for stage in STAGES:
+                sc.setJobGroup(f"refwl-{stage}", stage)
+                t = time.time()
+                getattr(pipeline, stage)(spark, cfg, date)
+                stage_s[stage] += time.time() - t
         total = time.time() - t0
+        sc._jsc.clearJobGroup()
+        # job starts reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        stages = {
+            stage: {
+                "s": round(stage_s[stage], 2),
+                "jobs": len(tracker.getJobIdsForGroup(f"refwl-{stage}")),
+            }
+            for stage in STAGES
+        }
 
         n_staged = spark.read.parquet(f"{cfg.warehouse_root}/staging_events").count()
         n_mart = spark.read.parquet(
@@ -96,6 +115,7 @@ def main() -> None:
                     "rows_ingested": n_staged,
                     "sec_per_day": round(total / n_days, 2),
                     "mart_rows": n_mart,
+                    "stages": stages,
                     "reference_sec_per_day": "~6 (3.2 ingest + 1.6 fact + dims/marts)",
                 }
             )
