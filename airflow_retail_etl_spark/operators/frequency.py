@@ -332,7 +332,7 @@ def heavy_hitters(
         cms = cms_build(occurrences, col, width=width, depth=depth)
     else:
         # a prebuilt sketch of the SAME occurrence multiset (e.g. the
-        # streaming fold_cms_batch state summed across batch partitions —
+        # streaming fold_cells store of cms_cells summed across batches —
         # bit-identical to the one-shot build because counter sums are
         # exact integers under any grouping). Its geometry MUST match the
         # probe's: mismatched width/depth reads the wrong counter cells,

@@ -35,10 +35,12 @@ DECIMAL(18,2) cent state caps at ~10^16 cents per cell; ANSI mode makes
 a breach an explicit overflow error, never a silent wrap (widen the
 state type if a single grain cell can exceed it).
 
-Streaming twin: ``streaming.incremental.fold_kpi_batch`` (additive cells
-are linear, so per-batch dynamic partition OVERWRITE gives replay
-idempotence — the CMS pattern, not HLL's MAX); the distinct-user half
-streams via the existing ``fold_hll_batch``.
+Streaming twin: ``streaming.incremental.fold_cells`` over
+:func:`kpi_cells` / :func:`moment_cells` (additive cells are linear, so
+per-batch dynamic partition OVERWRITE gives replay idempotence — the CMS
+pattern, not HLL's MAX), with ``streaming.incremental.replay`` as the
+store-less batch face; the distinct-user half streams via
+``streaming.incremental.fold_merged`` over ``cardinality.hll_registers``.
 """
 
 from __future__ import annotations
@@ -552,7 +554,7 @@ def decayed_step(
                         F.lit(
                             " — a decayed scalar cannot absorb the past;"
                             " backfill through the linear CELL store"
-                            " (fold_kpi_batch/refresh_day) and re-read"
+                            " (fold_cells/refresh_day) and re-read"
                             " with decayed_read, or replay from that day"
                         ),
                     )

@@ -500,8 +500,9 @@ def rolling_freq_shift_cells(
     """The read half of :func:`rolling_freq_shift`, over ALREADY-BUILT
     per-(day, key) count cells — any provenance: the one-shot groupBy,
     a maintained state table, or a streaming cell fold (kpi cells'
-    ``n_events`` at (key, day) grain ARE these cells, so replay_kpi's
-    stream ≡ batch law transfers to this read verbatim). ``cells`` must
+    ``n_events`` at (key, day) grain ARE these cells, so the
+    ``streaming.incremental.replay`` of kpi cells carries its
+    stream ≡ batch law to this read verbatim). ``cells`` must
     carry columns (day, key, n).
     """
     if window_days < 1:

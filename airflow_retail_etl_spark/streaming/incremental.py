@@ -23,7 +23,8 @@ slice is whatever the feed delivered for that date in this batch.
 
 from __future__ import annotations
 
-from typing import Sequence
+from functools import reduce
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,10 +36,10 @@ from airflow_retail_etl_spark.operators.scd import (
 
 
 def _require_batches(batches: Sequence[DataFrame], fn: str) -> None:
-    """Fail fast on an empty replay. Every ``replay_*`` helper folds
-    with a ``None``-seeded accumulator; zero batches would otherwise
-    surface as an ``AttributeError`` deep inside the state fold instead
-    of naming the actual mistake (round-12 advice)."""
+    """Fail fast on an empty replay. Zero batches would otherwise
+    surface as an unnamed error deep inside the state fold (a
+    ``reduce`` of nothing, a ``None``-seeded accumulator) instead of
+    naming the actual mistake (round-12 advice)."""
     if not batches:
         raise ValueError(f"{fn}: empty batches — nothing to replay")
 
@@ -396,422 +397,87 @@ def dedup_stream_sink(
 
 
 # ---------------------------------------------------------------------------
-# Streaming sketch state (round 10): per-batch HLL register folds
+# Mergeable state stores: one fold per store policy, one DataFrame replay
 # ---------------------------------------------------------------------------
 
 
-def fold_hll_batch(
-    batch: DataFrame, state_path: str, col: str, *, p: int = 11
+def fold_cells(cells: DataFrame, state_path: str, *, batch_id: int) -> None:
+    """Persist one micro-batch's state cells under the LINEAR store
+    policy: the face for state that is a pure function of its batch and
+    merges by summing or re-thresholding across batches — CMS counters
+    (``frequency.cms_cells``), quantile level-samples
+    (``qsketch.qsketch_state``), KPI and moment cells
+    (``mart_state.kpi_cells`` / ``moment_cells``), and the decayed
+    carry rows of :func:`fold_decayed_batch`.
+
+    A replayed batch folded into one accumulated store would
+    double-count, so each batch lands under its own ``batch_id=``
+    partition with dynamic partition OVERWRITE (the admit_doc_batch
+    contract): an at-least-once redelivery rewrites its own partition
+    with identical rows instead of appending. Read the store at any time
+    with the face's own merge across partitions (``cms_from_cells``,
+    ``requantize`` + ``sample_quantiles``, ``kpi_fold``,
+    ``moment_fold``) — bit-identical to the one-shot state of
+    everything delivered. The store is ≤ n_batches × per-batch cells;
+    compact by merging old partitions into one when the batch count
+    grows past reading comfort."""
+    (
+        cells.withColumn("batch_id", F.lit(int(batch_id)))
+        .repartition(1)  # small per-batch state — one file per partition
+        .write.mode("overwrite")
+        .partitionBy("batch_id")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(state_path)
+    )
+
+
+def fold_merged(
+    batch: DataFrame,
+    state_path: str,
+    state: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame], DataFrame],
 ) -> None:
-    """Fold one micro-batch into a persisted HLL register store
-    (reg, mx) — streaming distinct-count state that never rescans
-    delivered data.
+    """Fold one micro-batch into a store under the IDEMPOTENT policy:
+    the face for state whose merge is an idempotent, associative,
+    commutative order statistic — HLL registers
+    (``cardinality.hll_registers``, merged by MAX(mx) per reg) and
+    bottom-k samples (``sampling.sample_state``, merged by
+    ``sampling.sample_fold``). A REPLAYED batch cannot change the merged
+    state, so the store holds one state with no batch-id bookkeeping.
 
-    HLL union is MAX per register: idempotent, associative, and
-    commutative, so a REPLAYED batch (foreachBatch's at-least-once
-    window) cannot change any register — no batch-id bookkeeping is
-    needed, unlike the CMS counter sum (linear, NOT idempotent; stream
-    a CMS with per-batch-partition overwrite like admit_doc_batch and
-    fold partitions with operators.frequency.cms_merge instead). The
-    store is ≤ 2^p rows; the read-merge-overwrite cycle pays one eager
-    localCheckpoint to cut the read lineage (same contract as
-    fold_snapshot_batch). Estimates come from
-    cardinality.hll_fold(store) at any time."""
-    from airflow_retail_etl_spark.operators import cardinality
-
+    ``state`` maps the batch to its state frame; ``merge`` collapses
+    that frame unioned with the prior store back to state. The
+    read-merge-overwrite cycle pays one eager localCheckpoint to cut the
+    read lineage (same contract as fold_snapshot_batch). An empty batch
+    is a no-op."""
     if batch.isEmpty():
         return
-    spark = batch.sparkSession
-    regs = cardinality.hll_registers(batch, (), col, p=p)
-    prior = _read_history(spark, state_path)
+    merged = state(batch)
+    prior = _read_history(batch.sparkSession, state_path)
     if prior is not None:
-        regs = (
-            regs.unionByName(prior.select("reg", "mx"))
-            .groupBy("reg")
-            .agg(F.max("mx").alias("mx"))
-        )
-    regs.localCheckpoint(eager=True).write.mode("overwrite").parquet(
+        merged = merge(merged.unionByName(prior.select(*merged.columns)))
+    merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
         state_path
     )
 
 
-def replay_sketch(
-    batches: Sequence[DataFrame], col: str, *, p: int = 11
-) -> DataFrame:
-    """Replay ordered batches through the HLL state fold, entirely as
-    DataFrames — the batch face of fold_hll_batch (the parquet store
-    replaced by an accumulating register frame). Because the merge is
-    exactly HLL union, the folded estimate is BIT-IDENTICAL to the
-    one-shot sketch of the concatenated input — which is what the
-    oracle computes, certifying stream ≡ batch cross-engine. Returns
-    the hll_fold row of the final state."""
-    _require_batches(batches, "replay_sketch")
-    from airflow_retail_etl_spark.operators import cardinality
-
-    merged: DataFrame | None = None
-    for b in batches:
-        regs = cardinality.hll_registers(b, (), col, p=p)
-        merged = (
-            regs
-            if merged is None
-            else merged.unionByName(regs)
-            .groupBy("reg")
-            .agg(F.max("mx").alias("mx"))
-        )
-    return cardinality.hll_fold(merged, (), p=p)
-
-
-def fold_cms_batch(
-    batch: DataFrame,
-    state_path: str,
-    col: str,
-    *,
-    batch_id: int,
-    width: int = 1024,
-    depth: int = 4,
-) -> None:
-    """Fold one micro-batch into a persisted CMS cell store — streaming
-    FREQUENCY state (the counter twin of :func:`fold_hll_batch`'s
-    distinct-count registers).
-
-    CMS counters are LINEAR (sums), so a replayed batch folded into one
-    accumulated store would double-count — the opposite failure mode of
-    HLL's idempotent MAX. Replay safety therefore comes from the
-    admit_doc_batch contract instead: each batch's SPARSE cells
-    (operators.frequency.cms_cells, ≤ depth·width rows) land under
-    their own ``batch_id=`` partition with dynamic partition OVERWRITE,
-    so an at-least-once redelivery rewrites its own partition with
-    identical cells (a no-op) rather than appending. Estimates at any
-    time: read the store and densify — summing cells ACROSS batch
-    partitions is exactly the linear merge, bit-identical to the
-    one-shot sketch of everything delivered
-    (``frequency.cms_from_cells(spark.read.parquet(state_path))``).
-    State is ≤ n_batches · depth·width rows; compact by summing old
-    partitions into one when batch count grows past reading comfort.
-    """
-    from airflow_retail_etl_spark.operators import frequency
-
-    cells = frequency.cms_cells(batch, col, width=width, depth=depth)
-    (
-        cells.withColumn("batch_id", F.lit(int(batch_id)))
-        .repartition(1)  # ≤ depth·width rows — one file per partition
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(state_path)
-    )
-
-
-def replay_cms(
-    batches: Sequence[DataFrame], col: str, *, width: int = 1024,
-    depth: int = 4,
-) -> DataFrame:
-    """Replay ordered batches through the CMS cell fold entirely as
-    DataFrames — the batch face of :func:`fold_cms_batch` (the
-    partitioned parquet store replaced by a union of per-batch cell
-    frames). Because counter sums are exact integers under any
-    grouping, the merged sketch is BIT-IDENTICAL to the one-shot
-    ``cms_build`` of the concatenated input — which is what the oracle
-    computes, certifying stream ≡ batch cross-engine. Returns the
-    one-row (counters, width, depth) probe form."""
-    _require_batches(batches, "replay_cms")
-    from airflow_retail_etl_spark.operators import frequency
-
-    spark = batches[0].sparkSession
-    cells: DataFrame | None = None
-    for b in batches:
-        c = frequency.cms_cells(b, col, width=width, depth=depth)
-        cells = c if cells is None else cells.unionByName(c)
-    return frequency.cms_from_cells(spark, cells, width=width, depth=depth)
-
-
-def fold_qsketch_batch(
-    batch: DataFrame,
-    state_path: str,
-    value_col: str,
-    key_col: str,
-    *,
-    batch_id: int,
-    cap: int = 2048,
-) -> None:
-    """Fold one micro-batch into a persisted quantile-sketch state store
-    — streaming QUANTILE state (the third face: :func:`fold_hll_batch`
-    holds distinct-count registers, :func:`fold_cms_batch` frequency
-    counters, this one holds operators.qsketch level-sample rows).
-
-    Each batch's state (qsketch_state: ≤ ~cap rows, a pure function of
-    the batch) lands under its own ``batch_id=`` partition with dynamic
-    partition OVERWRITE, so an at-least-once redelivery rewrites its
-    own partition with identical rows — a no-op, like the CMS cells.
-    Estimates at any time: read the store, requantize to cap, read the
-    sample (``qsketch.sample_quantiles(qsketch.requantize(
-    spark.read.parquet(state_path).drop("batch_id"), (), cap=cap),
-    (), qs)``) — bit-identical to the one-shot sketch of everything
-    delivered, because merged-then-requantized states equal the
-    one-shot survivor set exactly (qsketch module docstring). State is
-    ≤ n_batches · cap rows; compact by requantizing old partitions into
-    one when batch count grows past reading comfort (the result is
-    again valid state: survivors at the merged threshold with
-    thr = lvl_used)."""
-    from airflow_retail_etl_spark.operators import qsketch
-
-    state = qsketch.qsketch_state(batch, (), value_col, key_col, cap=cap)
-    (
-        state.withColumn("batch_id", F.lit(int(batch_id)))
-        .repartition(1)  # ≤ ~cap rows — one file per partition
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(state_path)
-    )
-
-
-def replay_qsketch(
+def replay(
     batches: Sequence[DataFrame],
-    value_col: str,
-    key_col: str,
-    qs: Sequence[float],
-    *,
-    cap: int = 2048,
+    state: Callable[[DataFrame], DataFrame],
+    finish: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
-    """Replay ordered batches through the quantile-sketch state fold
-    entirely as DataFrames — the batch face of
-    :func:`fold_qsketch_batch` (the partitioned parquet store replaced
-    by a union of per-batch state frames). Because merged states
-    re-thresholded to cap equal the one-shot sketch of the concatenated
-    input EXACTLY (qsketch module docstring), the folded estimates are
-    BIT-IDENTICAL to the one-shot form — which is what the oracle
-    computes, certifying stream ≡ batch cross-engine. Returns the
-    (q, lvl_used, n_kept, quantile) estimate rows."""
-    _require_batches(batches, "replay_qsketch")
-    from airflow_retail_etl_spark.operators import qsketch
-
-    state: DataFrame | None = None
-    for b in batches:
-        s = qsketch.qsketch_state(b, (), value_col, key_col, cap=cap)
-        state = s if state is None else state.unionByName(s)
-    # ≤ batches·cap rows whose lineage holds every batch's level pass;
-    # requantize + the estimate windows reuse it — materialize once
-    # (A/B-measured: streaming_quantiles 4.54 → 3.67 s warm at sf0.1;
-    # the query's oracle-grade audit legs keep the remainder)
-    state = state.localCheckpoint(eager=True)
-    surv = qsketch.requantize(state, (), cap=cap)
-    return qsketch.sample_quantiles(surv, (), qs)
-
-
-def fold_sample_batch(
-    batch: DataFrame, state_path: str, col: str, *, k: int,
-    seed: str = "",
-) -> None:
-    """Fold one micro-batch into a persisted uniform-sample store
-    (h, v) — streaming SAMPLE state (the fourth face:
-    :func:`fold_hll_batch` holds distinct-count registers,
-    :func:`fold_cms_batch` frequency counters, :func:`fold_qsketch_batch`
-    quantile level-samples, this one holds operators.sampling bottom-k
-    sample rows).
-
-    The bottom-k merge is an order statistic — idempotent, associative,
-    commutative — so like the HLL registers (and unlike the CMS
-    counters) a REPLAYED batch cannot change the state: no batch-id
-    bookkeeping. The store is ≤ k rows; the read-merge-overwrite cycle
-    pays one eager localCheckpoint to cut the read lineage (same
-    contract as fold_hll_batch). Read the sample at any time via
-    ``sampling.sample_read(spark.read.parquet(state_path), (), k=k)``
-    — bit-identical to the one-shot bottom-k of everything delivered.
-    """
-    from airflow_retail_etl_spark.operators import sampling
-
-    if batch.isEmpty():
-        return
-    spark = batch.sparkSession
-    state = sampling.sample_state(batch, (), col, k=k, seed=seed)
-    prior = _read_history(spark, state_path)
-    if prior is not None:
-        state = sampling.sample_fold(
-            state.unionByName(prior.select("h", "v")), (), k=k
-        )
-    state.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-        state_path
-    )
-
-
-def replay_sample(
-    batches: Sequence[DataFrame], col: str, *, k: int, seed: str = "",
-) -> DataFrame:
-    """Replay ordered batches through the sample-state fold entirely as
-    DataFrames — the batch face of :func:`fold_sample_batch` (the
-    parquet store replaced by an accumulating state frame). Because the
-    bottom-k merge equals the one-shot bottom-k of the concatenated
-    input EXACTLY (operators.sampling.sample_state docstring), the
-    folded sample is BIT-IDENTICAL to the one-shot form — which is what
-    the oracle computes, certifying stream ≡ batch cross-engine.
-    Returns the sample_read rows (rk, v, n_kept, threshold, estimate)
-    of the final state."""
-    _require_batches(batches, "replay_sample")
-    from airflow_retail_etl_spark.operators import sampling
-
-    state: DataFrame | None = None
-    for b in batches:
-        s = sampling.sample_state(b, (), col, k=k, seed=seed)
-        state = (
-            s
-            if state is None
-            else sampling.sample_fold(state.unionByName(s), (), k=k)
-        )
-    return sampling.sample_read(state, (), k=k)
-
-
-def fold_kpi_batch(
-    batch: DataFrame,
-    state_path: str,
-    keys: Sequence[str],
-    *,
-    batch_id: int,
-    date_col: str = "event_date",
-    type_col: str = "event_type",
-    revenue_col: str = "price",
-    view_value: str = "view",
-    cart_value: str = "cart",
-    purchase_value: str = "purchase",
-) -> None:
-    """Fold one micro-batch into a persisted additive-KPI cell store —
-    streaming MART state (operators.mart_state generalizes the sketch
-    stores to exact relational aggregates; this is its streaming face).
-
-    KPI cells are LINEAR (exact DECIMAL cent sums + counts), so — like
-    the CMS counters and unlike HLL's idempotent MAX — a replayed batch
-    folded into one accumulated store would double-count. Replay safety
-    is therefore the :func:`fold_cms_batch` pattern: each batch's cells
-    land under their own ``batch_id=`` partition with dynamic partition
-    OVERWRITE, so an at-least-once redelivery rewrites identical rows
-    (cells are a pure function of the batch). Read the mart at any time
-    by folding the store across batch partitions
-    (``mart_state.kpi_fold(spark.read.parquet(state_path), keys)``) —
-    bit-identical to the one-shot aggregate of everything delivered.
-    The distinct-user half streams via :func:`fold_hll_batch`, whose
-    registers ``mart_state.kpi_read`` joins at read time.
-    """
-    from airflow_retail_etl_spark.operators import mart_state
-
-    cells = mart_state.kpi_cells(
-        batch,
-        list(keys),
-        date_col=date_col,
-        type_col=type_col,
-        revenue_col=revenue_col,
-        view_value=view_value,
-        cart_value=cart_value,
-        purchase_value=purchase_value,
-    )
-    (
-        cells.withColumn("batch_id", F.lit(int(batch_id)))
-        .repartition(1)  # grain × days-per-batch rows — one file
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(state_path)
-    )
-
-
-def replay_kpi(
-    batches: Sequence[DataFrame],
-    keys: Sequence[str],
-    *,
-    date_col: str = "event_date",
-    type_col: str = "event_type",
-    revenue_col: str = "price",
-    view_value: str = "view",
-    cart_value: str = "cart",
-    purchase_value: str = "purchase",
-) -> DataFrame:
-    """Replay ordered batches through the KPI cell fold entirely as
-    DataFrames — the batch face of :func:`fold_kpi_batch` (the
-    partitioned parquet store replaced by a union of per-batch cell
-    frames). Because cent sums and counts are exact under any grouping,
-    the folded mart is BIT-IDENTICAL to the one-shot aggregate of the
-    concatenated input — which is what the oracle computes, certifying
-    stream ≡ batch cross-engine. Returns cells folded to
-    ``keys + [date_col]`` grain (the mart's state grain)."""
-    _require_batches(batches, "replay_kpi")
-    from airflow_retail_etl_spark.operators import mart_state
-
-    cells: DataFrame | None = None
-    for b in batches:
-        c = mart_state.kpi_cells(
-            b,
-            list(keys),
-            date_col=date_col,
-            type_col=type_col,
-            revenue_col=revenue_col,
-            view_value=view_value,
-            cart_value=cart_value,
-            purchase_value=purchase_value,
-        )
-        cells = c if cells is None else cells.unionByName(c)
-    return mart_state.kpi_fold(cells, [*keys, date_col])
-
-
-def replay_moment(
-    batches: Sequence[DataFrame],
-    keys: Sequence[str],
-    value_col: str,
-    *,
-    date_col: str = "event_date",
-    dp: int = 2,
-) -> DataFrame:
-    """Replay ordered batches through the moment-cell fold entirely as
-    DataFrames — the batch face of :func:`fold_moment_batch` (the
-    partitioned parquet store replaced by a union of per-batch cell
-    frames), completing the stream ≡ batch replay set: every mergeable
-    state face (HLL, CMS, qsketch, sample, KPI cells, moment cells) now
-    has both a store fold and a DataFrame replay. Moment sums are
-    LINEAR exact DECIMALs, so the folded state is BIT-IDENTICAL to the
-    one-shot per-day aggregate of everything delivered — which is what
-    the oracle computes. Returns cells folded to ``keys + [date_col]``
-    grain."""
-    _require_batches(batches, "replay_moment")
-    from airflow_retail_etl_spark.operators import mart_state
-
-    cells: DataFrame | None = None
-    for b in batches:
-        c = mart_state.moment_cells(
-            b, list(keys), value_col, date_col=date_col, dp=dp
-        )
-        cells = c if cells is None else cells.unionByName(c)
-    return mart_state.moment_fold(cells, [*keys, date_col], dp=dp)
-
-
-def fold_moment_batch(
-    batch: DataFrame,
-    state_path: str,
-    keys: Sequence[str],
-    value_col: str,
-    *,
-    batch_id: int,
-    date_col: str = "event_date",
-    dp: int = 2,
-) -> None:
-    """Fold one micro-batch into a persisted moment-cell store — the
-    streaming face of ``mart_state.moment_cells`` (univariate
-    statistics from (n, Σx, Σx²) state). Moment sums are LINEAR, so
-    replay safety is the :func:`fold_cms_batch` / :func:`fold_kpi_batch`
-    pattern: per-``batch_id`` dynamic partition OVERWRITE (cells are a
-    pure function of the batch — redelivery rewrites identical rows).
-    Read statistics any time via ``mart_state.moment_read`` over the
-    store folded across batch partitions — exact, so stream ≡ batch."""
-    from airflow_retail_etl_spark.operators import mart_state
-
-    cells = mart_state.moment_cells(
-        batch, list(keys), value_col, date_col=date_col, dp=dp
-    )
-    (
-        cells.withColumn("batch_id", F.lit(int(batch_id)))
-        .repartition(1)
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(state_path)
-    )
+    """Replay ordered batches through a mergeable state fold entirely as
+    DataFrames — the store-less batch face of :func:`fold_cells` and
+    :func:`fold_merged`: ``finish`` of the union of every batch's
+    ``state``. ``finish`` holds the face's merge and read
+    (``hll_fold`` after MAX per register, ``cms_from_cells``,
+    ``requantize`` + ``sample_quantiles``, ``sample_read``,
+    ``kpi_fold``, ``moment_fold``). Each face's merge law makes the
+    result BIT-IDENTICAL to the one-shot read of the concatenated input
+    — which is what the replay-backed queries' oracles compute,
+    certifying stream ≡ batch cross-engine."""
+    _require_batches(batches, "replay")
+    return finish(reduce(DataFrame.unionByName, map(state, batches)))
 
 
 def fold_decayed_batch(
@@ -833,15 +499,16 @@ def fold_decayed_batch(
     Unlike the linear cell folds, the decayed state is a CARRIED SCALAR
     (one unrounded double per series plus its calendar position), so
     partition N is a pure function of (partition N−1's carry, batch N):
-    replay safety is still per-``batch_id`` dynamic partition OVERWRITE
-    — an at-least-once redelivery recomputes from the SAME prior carry
-    and rewrites identical rows (test-pinned). Each partition holds the
-    batch's published (date, n_days, decayed) rows (``is_obs``) plus
-    one carry row with the unrounded ``__acc`` (rounding the carry
-    would break bit-equality with the one-shot fold). Batch days must
-    advance monotonically — ``mart_state.decayed_step`` raises the
-    backfill recipe otherwise (late days belong to the permutation-safe
-    CELL store, not to a decayed scalar). Read the series any time with
+    replay safety is still :func:`fold_cells`' per-``batch_id`` dynamic
+    partition OVERWRITE — an at-least-once redelivery recomputes from
+    the SAME prior carry and rewrites identical rows (test-pinned). Each
+    partition holds the batch's published (date, n_days, decayed) rows
+    (``is_obs``) plus one carry row with the unrounded ``__acc``
+    (rounding the carry would break bit-equality with the one-shot
+    fold). Batch days must advance monotonically —
+    ``mart_state.decayed_step`` raises the backfill recipe otherwise
+    (late days belong to the permutation-safe CELL store, not to a
+    decayed scalar). Read the series any time with
     :func:`read_decayed_store` — bit-identical to decayed_read of
     everything delivered.
     """
@@ -905,14 +572,7 @@ def fold_decayed_batch(
                 F.lit(False).alias("is_obs"),
             )
         )
-    (
-        rows.withColumn("batch_id", F.lit(int(batch_id)))
-        .repartition(1)  # ≤ days-per-batch + 1 rows — one file
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(state_path)
-    )
+    fold_cells(rows, state_path, batch_id=batch_id)
 
 
 def read_decayed_store(spark: SparkSession, state_path: str) -> DataFrame:

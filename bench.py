@@ -267,7 +267,7 @@ HEADLINE = (
     "dq_report",
     # round 12: mergeable moment state (rolling price volatility)
     "rolling_volatility",
-    # round 13: moment-cell stream ≡ batch replay (replay_moment) —
+    # round 13: moment-cell stream ≡ batch replay (incremental.replay) —
     # every mergeable state face now has a streaming DataFrame twin
     "streaming_volatility",
     # round 13: embedding Gram/covariance sufficient statistic (the
@@ -667,15 +667,20 @@ def _release_bench_lock() -> None:
         pass
 
 
+#: local[N] core count when SPARK_GRAFT_CPUS is unset — also the core
+#: count of every ledger record written before records stored ``cpus``
+DEFAULT_CPUS = 32
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     contaminated = _contamination_reason()
     spark = get_spark(
         app_name="bench",
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
+        shuffle_partitions=cpus,
     )
     # the testdata is one smallish parquet file per table; split finer so
     # scans parallelize locally (cluster deployments keep the 128MB default)
@@ -760,8 +765,9 @@ def main() -> None:
     # MINIMUM of the two runs — a real plan regression reproduces, noise
     # doesn't. Only flagged candidates pay the re-run.
     rnd = _current_round()
-    prev_entry = _previous_same_sf_queries(float(sf))
-    prev_round = _prev_round_final_queries(float(sf), rnd)
+    config = (float(sf), cpus)
+    prev_entry = _previous_same_sf_queries(config)
+    prev_round = _prev_round_final_queries(config, rnd)
     prev_q = {
         name: min(
             [v for v in (prev_entry.get(name), prev_round.get(name)) if v]
@@ -846,6 +852,7 @@ def main() -> None:
         "queries": timings,
         "jobs": jobs,
         "sf": float(sf),
+        "cpus": cpus,
         "n_queries": len(timings),
         "oracle_forms": oracle_forms,
         "oracle_forms_note": (
@@ -968,34 +975,49 @@ def _history_records() -> list[dict]:
     return out
 
 
-def _previous_same_sf_queries(sf: float) -> dict[str, float]:
-    """Per-query timings of the last same-SF BENCH_HISTORY entry (empty
-    dict when none) — the baseline the regression diff compares against."""
+def _config(record: dict) -> tuple[float, int]:
+    """The like-for-like key of a ledger record: (sf, cpus). Timings and
+    job counts are comparable only within one scale factor AND one core
+    count — an 8-core run diffed against 32-core baselines flags false
+    regressions. Records written before ``cpus`` was stored ran at
+    bench.py's default core count."""
+    return record.get("sf"), int(record.get("cpus", DEFAULT_CPUS))
+
+
+def _previous_same_sf_queries(config: tuple[float, int]) -> dict[str, float]:
+    """Per-query timings of the last BENCH_HISTORY entry with the same
+    (sf, cpus) ``config`` (empty dict when none) — the baseline the
+    regression diff compares against."""
     prev: dict[str, float] = {}
     for cand in _history_records():
-        if cand.get("sf") == sf:
+        if _config(cand) == config:
             prev = cand.get("queries", {})
     return prev
 
 
-def _prev_round_final_queries(sf: float, current_round: int) -> dict[str, float]:
-    """Per-query timings of the LAST same-SF entry of the previous round
-    (the driver's round-final record) — the cross-round drift baseline."""
+def _prev_round_final_queries(
+    config: tuple[float, int], current_round: int
+) -> dict[str, float]:
+    """Per-query timings of the LAST same-(sf, cpus) entry of the
+    previous round (the driver's round-final record) — the cross-round
+    drift baseline."""
     prev: dict[str, float] = {}
     for cand in _history_records():
-        if cand.get("sf") == sf and cand.get("round") == current_round - 1:
+        if _config(cand) == config and cand.get("round") == current_round - 1:
             prev = cand.get("queries", {})
     return prev
 
 
-def _prev_jobs(sf: float, current_round: int) -> dict[str, int]:
-    """Per-query JOB COUNTS of the most recent same-SF entry that carries
-    them (this round's earlier runs included — job counts are a plan
-    property, not a wall measurement, so the freshest record is the
+def _prev_jobs(
+    config: tuple[float, int], current_round: int
+) -> dict[str, int]:
+    """Per-query JOB COUNTS of the most recent same-(sf, cpus) entry that
+    carries them (this round's earlier runs included — job counts are a
+    plan property, not a wall measurement, so the freshest record is the
     right baseline). Empty before the first round-16 record."""
     prev: dict[str, int] = {}
     for cand in _history_records():
-        if cand.get("sf") == sf and cand.get("jobs"):
+        if _config(cand) == config and cand.get("jobs"):
             prev = cand["jobs"]
     return prev
 
@@ -1138,15 +1160,16 @@ def _append_history(record: dict) -> tuple[dict, dict]:
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "BENCH_HISTORY.jsonl")
     rnd = record.get("round", _current_round())
+    config = _config(record)
     regressions = _flag_regressions(
-        record["queries"], _previous_same_sf_queries(record["sf"])
+        record["queries"], _previous_same_sf_queries(config)
     )
     vs_prev_round = _flag_regressions(
-        record["queries"], _prev_round_final_queries(record["sf"], rnd)
+        record["queries"], _prev_round_final_queries(config, rnd)
     )
     if record.get("jobs"):
         record["job_count_increases"] = _flag_job_increases(
-            record["jobs"], _prev_jobs(record["sf"], rnd)
+            record["jobs"], _prev_jobs(config, rnd)
         )
     # carry the canary's adjudication onto every flagged entry:
     # "session_suspect" (the unflagged anchor inflated too — session-wide

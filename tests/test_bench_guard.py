@@ -252,3 +252,38 @@ def test_headline_covers_every_registry_query():
     b = _bench()
     missing = set(entry_mod.queries()) - set(b.HEADLINE)
     assert not missing, f"registry queries absent from bench: {missing}"
+
+
+def test_baselines_match_like_for_like_sf_and_cpus(monkeypatch):
+    """Ledger baselines compare only records of the same (sf, cpus): an
+    8-core run must never be diffed against 32-core records (that raised
+    7 false regressions on the 8-core round-17 record). Records without
+    ``cpus`` ran at bench.py's default core count."""
+    import inspect
+
+    b = _bench()
+    ledger = b._history_records()
+    history = [
+        {"sf": 0.1, "round": 16, "queries": {"q": 1.0}, "jobs": {"q": 3}},
+        {"sf": 0.1, "cpus": 8, "round": 16, "queries": {"q": 2.0},
+         "jobs": {"q": 4}},
+        {"sf": 0.01, "cpus": 8, "round": 16, "queries": {"q": 3.0},
+         "jobs": {"q": 5}},
+        {"sf": 0.1, "cpus": 32, "round": 17, "queries": {"q": 4.0}},
+    ]
+    monkeypatch.setattr(b, "_history_records", lambda: history)
+    c32, c8 = (0.1, b.DEFAULT_CPUS), (0.1, 8)
+    assert b.DEFAULT_CPUS == 32
+    assert b._previous_same_sf_queries(c32) == {"q": 4.0}
+    assert b._previous_same_sf_queries(c8) == {"q": 2.0}
+    assert b._previous_same_sf_queries((0.01, 8)) == {"q": 3.0}
+    assert b._previous_same_sf_queries((0.01, 32)) == {}
+    assert b._prev_round_final_queries(c32, 17) == {"q": 1.0}
+    assert b._prev_round_final_queries(c8, 17) == {"q": 2.0}
+    assert b._prev_jobs(c32, 17) == {"q": 3}
+    assert b._prev_jobs(c8, 17) == {"q": 4}
+    # the ledger's 8-core round-17 record carries its core count, and
+    # main() writes cpus into every new record
+    eight = [r for r in ledger if r.get("value") == 335.416]
+    assert [b._config(r) for r in eight] == [c8]
+    assert '"cpus": cpus' in inspect.getsource(b.main)

@@ -6,9 +6,14 @@ from collections import Counter
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from airflow_retail_etl_spark.operators import cardinality, frequency
 from airflow_retail_etl_spark.operators.scd import scd2_from_snapshots
 from airflow_retail_etl_spark.streaming.daily_ingest import stream_events
-from airflow_retail_etl_spark.streaming.incremental import scd2_stream_sink
+from airflow_retail_etl_spark.streaming.incremental import (
+    fold_cells,
+    fold_merged,
+    scd2_stream_sink,
+)
 
 D = dt.date
 
@@ -81,6 +86,14 @@ def test_second_drain_continues_from_checkpoint(spark, tmp_path):
     )
 
 
+def _hll_state(batch):
+    return cardinality.hll_registers(batch, (), "v", p=6)
+
+
+def _max_per_register(regs):
+    return regs.groupBy("reg").agg(F.max("mx").alias("mx"))
+
+
 def test_fold_hll_batch_stream_equals_batch_and_replay_idempotent(
     spark, tmp_path
 ):
@@ -88,19 +101,14 @@ def test_fold_hll_batch_stream_equals_batch_and_replay_idempotent(
     union), and refolding an already-delivered batch (foreachBatch's
     at-least-once window) changes nothing — MAX per register is
     idempotent, no batch-id bookkeeping needed."""
-    from airflow_retail_etl_spark.operators import cardinality
-    from airflow_retail_etl_spark.streaming.incremental import (
-        fold_hll_batch,
-    )
-
     state = str(tmp_path / "hll_state")
     full = spark.range(900).select(F.col("id").alias("v"))
     batches = [
         full.filter(F.col("v") % 3 == i) for i in range(3)
     ]
     for b in batches:
-        fold_hll_batch(b, state, "v", p=6)
-    fold_hll_batch(batches[1], state, "v", p=6)   # replay
+        fold_merged(b, state, _hll_state, _max_per_register)
+    fold_merged(batches[1], state, _hll_state, _max_per_register)  # replay
     folded = cardinality.hll_fold(
         spark.read.parquet(state), (), p=6
     ).first()
@@ -108,7 +116,9 @@ def test_fold_hll_batch_stream_equals_batch_and_replay_idempotent(
     assert folded.s_scaled == want.s_scaled
     assert folded.estimate == want.estimate
     # empty batch is a no-op
-    fold_hll_batch(full.filter(F.lit(False)), state, "v", p=6)
+    fold_merged(
+        full.filter(F.lit(False)), state, _hll_state, _max_per_register
+    )
     again = cardinality.hll_fold(
         spark.read.parquet(state), (), p=6
     ).first()
@@ -126,11 +136,6 @@ def test_fold_hll_state_is_delivery_schedule_invariant(spark, tmp_path):
     deliveries both before and after their originals."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
-
-    from airflow_retail_etl_spark.operators import cardinality
-    from airflow_retail_etl_spark.streaming.incremental import (
-        fold_hll_batch,
-    )
 
     full = spark.range(400).select(
         (F.col("id") * 37 % 1000).alias("v")
@@ -153,7 +158,7 @@ def test_fold_hll_state_is_delivery_schedule_invariant(spark, tmp_path):
         case[0] += 1
         state = str(tmp_path / f"hll_state_{case[0]}")
         for i in [*dup_before, *perm, *dup_after]:
-            fold_hll_batch(batches[i], state, "v", p=6)
+            fold_merged(batches[i], state, _hll_state, _max_per_register)
         folded = cardinality.hll_fold(
             spark.read.parquet(state), (), p=6
         ).first()
@@ -169,19 +174,19 @@ def test_fold_cms_batch_overwrite_makes_replay_idempotent(spark, tmp_path):
     re-delivering a batch rewrites its own batch_id partition with
     identical cells, and the summed state stays bit-identical to the
     one-shot sketch of everything delivered."""
-    from airflow_retail_etl_spark.operators import frequency
-    from airflow_retail_etl_spark.streaming.incremental import (
-        fold_cms_batch,
-    )
-
     state = str(tmp_path / "cms_state")
     full = spark.range(900).select(
         (F.col("id") % 37).cast("string").alias("v"),
         (F.col("id") % 3).alias("b"),
     )
     batches = [full.filter(F.col("b") == i) for i in range(3)]
-    for i, b in enumerate(batches):
-        fold_cms_batch(b, state, "v", batch_id=i, width=64, depth=4)
+
+    def fold(i):
+        cells = frequency.cms_cells(batches[i], "v", width=64, depth=4)
+        fold_cells(cells, state, batch_id=i)
+
+    for i in range(len(batches)):
+        fold(i)
     want = frequency.cms_build(full, "v", width=64, depth=4).first()
 
     def folded():
@@ -194,7 +199,7 @@ def test_fold_cms_batch_overwrite_makes_replay_idempotent(spark, tmp_path):
     got = folded()
     assert got.counters == want.counters
     # at-least-once redelivery of batch 1: state unchanged
-    fold_cms_batch(batches[1], state, "v", batch_id=1, width=64, depth=4)
+    fold(1)
     assert folded().counters == want.counters
     # and probing the folded state gives exact-per-key estimates equal
     # to the one-shot probe

@@ -7,8 +7,8 @@ from pyspark.sql import functions as F
 from airflow_retail_etl_spark import adapters
 from airflow_retail_etl_spark.operators import cardinality, mart_state
 from airflow_retail_etl_spark.streaming.incremental import (
-    fold_kpi_batch,
-    replay_kpi,
+    fold_cells,
+    replay,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -22,6 +22,14 @@ def _rows(df, *keys):
     return sorted(
         (tuple(r) for r in df.collect()),
         key=lambda t: tuple(str(x) for x in t[: len(keys) or 1]),
+    )
+
+
+def _kpi_replay(batches):
+    return replay(
+        batches,
+        lambda b: mart_state.kpi_cells(b, []),
+        lambda cells: mart_state.kpi_fold(cells, ["event_date"]),
     )
 
 
@@ -162,7 +170,7 @@ def test_rolling_windows_equal_brute_force(spark):
 
 
 def test_streaming_fold_store_redelivery_noop(spark, tmp_path):
-    """fold_kpi_batch under at-least-once delivery: re-folding an
+    """fold_cells of KPI cells under at-least-once delivery: re-folding an
     already-delivered batch rewrites its own batch_id partition with
     identical cells — the folded mart is unchanged (the CMS overwrite
     pattern for linear state)."""
@@ -170,14 +178,15 @@ def test_streaming_fold_store_redelivery_noop(spark, tmp_path):
     store = str(tmp_path / "kpi_state")
     batches = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
     for i, b in enumerate(batches):
-        fold_kpi_batch(b, store, [], batch_id=i)
+        fold_cells(mart_state.kpi_cells(b, []), store, batch_id=i)
     once = _rows(
         mart_state.kpi_fold(
             spark.read.parquet(store).drop("batch_id"), ["event_date"]
         ),
         "event_date",
     )
-    fold_kpi_batch(batches[1], store, [], batch_id=1)  # redelivery
+    # redelivery
+    fold_cells(mart_state.kpi_cells(batches[1], []), store, batch_id=1)
     twice = _rows(
         mart_state.kpi_fold(
             spark.read.parquet(store).drop("batch_id"), ["event_date"]
@@ -186,17 +195,17 @@ def test_streaming_fold_store_redelivery_noop(spark, tmp_path):
     )
     assert once == twice
     # and the store equals the batch-face replay
-    replayed = _rows(replay_kpi(batches, []), "event_date")
+    replayed = _rows(_kpi_replay(batches), "event_date")
     assert once == replayed
 
 
 def test_replay_equals_one_shot(spark):
-    """The stream ≡ batch certificate in-engine: replay_kpi over any
+    """The stream ≡ batch certificate in-engine: a KPI-cell replay over any
     batching equals the one-shot cells of the whole corpus."""
     ev = _events(spark)
     one = _rows(mart_state.kpi_cells(ev, []), "event_date")
     batches = [ev.filter(F.col("event_id") % 4 == i) for i in range(4)]
-    assert _rows(replay_kpi(batches, []), "event_date") == one
+    assert _rows(_kpi_replay(batches), "event_date") == one
 
 
 def test_moment_cells_fold_equals_one_shot_and_brute(spark):
@@ -255,22 +264,22 @@ def test_rolling_moments_equal_brute(spark):
 def test_fold_moment_batch_redelivery_noop(spark, tmp_path):
     """Streaming moment fold under at-least-once delivery: re-folding a
     delivered batch rewrites its own partition with identical cells."""
-    from airflow_retail_etl_spark.streaming.incremental import (
-        fold_moment_batch,
-    )
-
     ev = _events(spark).filter(F.col("event_type") == "purchase")
     store = str(tmp_path / "moment_state")
     batches = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
-    for i, b in enumerate(batches):
-        fold_moment_batch(b, store, [], "price", batch_id=i)
+    def fold(i):
+        cells = mart_state.moment_cells(batches[i], [], "price")
+        fold_cells(cells, store, batch_id=i)
+
+    for i in range(len(batches)):
+        fold(i)
     read = lambda: tuple(  # noqa: E731
         mart_state.moment_read(
             spark.read.parquet(store).drop("batch_id"), []
         ).first()
     )
     once = read()
-    fold_moment_batch(batches[1], store, [], "price", batch_id=1)
+    fold(1)
     assert read() == once
     # stream == batch: folded store equals the one-shot statistics
     one_shot = tuple(
@@ -327,44 +336,42 @@ def test_rolling_kpis_keep_registerless_windows(spark):
 
 
 def test_replay_helpers_reject_empty_batches():
-    """Every replay_* helper fails fast with a named error on zero
-    batches instead of an AttributeError deep in the fold."""
+    """Every replay helper fails fast with a named error on zero
+    batches instead of an unnamed error deep in the fold."""
     import pytest
 
     from airflow_retail_etl_spark.streaming import incremental as inc
 
-    with pytest.raises(ValueError, match="replay_kpi: empty batches"):
-        inc.replay_kpi([], [])
-    with pytest.raises(ValueError, match="replay_sketch: empty batches"):
-        inc.replay_sketch([], "c")
-    with pytest.raises(ValueError, match="replay_cms: empty batches"):
-        inc.replay_cms([], "c")
-    with pytest.raises(ValueError, match="replay_qsketch: empty batches"):
-        inc.replay_qsketch([], "v", "k", [0.5])
-    with pytest.raises(ValueError, match="replay_sample: empty batches"):
-        inc.replay_sample([], "c", k=4)
+    with pytest.raises(ValueError, match="replay: empty batches"):
+        inc.replay([], mart_state.moment_cells, mart_state.moment_fold)
     with pytest.raises(
         ValueError, match="replay_admission: empty batches"
     ):
         inc.replay_admission([])
+    with pytest.raises(ValueError, match="replay_decayed: empty batches"):
+        inc.replay_decayed([], "revenue_cents", lam=0.9)
 
 
 def test_replay_moment_equals_one_shot(spark):
-    """replay_moment folded across 4 batches is bit-identical to the
-    one-shot per-day moment cells (linear exact DECIMAL sums)."""
-    from airflow_retail_etl_spark.streaming.incremental import (
-        replay_moment,
-    )
+    """A moment-cell replay folded across 4 batches is bit-identical to
+    the one-shot per-day moment cells (linear exact DECIMAL sums)."""
+
+    def moment_replay(batches):
+        return replay(
+            batches,
+            lambda b: mart_state.moment_cells(b, [], "price"),
+            lambda cells: mart_state.moment_fold(cells, ["event_date"]),
+        )
 
     ev = _events(spark).filter(F.col("event_type") == "purchase")
     batches = [ev.filter(F.col("event_id") % 4 == i) for i in range(4)]
-    folded = replay_moment(batches, [], "price")
+    folded = moment_replay(batches)
     one_shot = mart_state.moment_cells(ev, [], "price")
     assert _rows(folded) == _rows(one_shot)
     with __import__("pytest").raises(
-        ValueError, match="replay_moment: empty batches"
+        ValueError, match="replay: empty batches"
     ):
-        replay_moment([], [], "price")
+        moment_replay([])
 
 
 def test_decayed_read_incremental_law_and_gaps(spark):
@@ -501,11 +508,6 @@ def test_state_folds_are_day_permutation_invariant(spark, tmp_path):
     rejects late days and routes them here — test above.)"""
     import random
 
-    from airflow_retail_etl_spark.streaming.incremental import (
-        fold_kpi_batch,
-        fold_moment_batch,
-    )
-
     ev = _events(spark)
     days = sorted(
         r["event_date"] for r in ev.select("event_date").distinct().collect()
@@ -522,12 +524,12 @@ def test_state_folds_are_day_permutation_invariant(spark, tmp_path):
     purchases = ev.filter(F.col("event_type") == "purchase")
     for i, d in enumerate(perm):
         day = ev.filter(F.col("event_date") == d)
-        fold_kpi_batch(day, kpi_store, [], batch_id=i)
-        fold_moment_batch(
-            purchases.filter(F.col("event_date") == d),
+        fold_cells(mart_state.kpi_cells(day, []), kpi_store, batch_id=i)
+        fold_cells(
+            mart_state.moment_cells(
+                purchases.filter(F.col("event_date") == d), [], "price"
+            ),
             mom_store,
-            [],
-            "price",
             batch_id=i,
         )
 

@@ -303,7 +303,11 @@ def test_streaming_heavy_change_fold_equals_one_shot(spark):
         rolling_freq_shift,
         rolling_freq_shift_cells,
     )
-    from airflow_retail_etl_spark.streaming.incremental import replay_kpi
+    from airflow_retail_etl_spark.operators.mart_state import (
+        kpi_cells,
+        kpi_fold,
+    )
+    from airflow_retail_etl_spark.streaming.incremental import replay
 
     base = dt.date(2024, 3, 20)
     rows = []
@@ -322,7 +326,11 @@ def test_streaming_heavy_change_fold_equals_one_shot(spark):
         "event_type string, price double"
     )
     batches = [df.filter(F.col("event_id") % 3 == i) for i in range(3)]
-    folded = replay_kpi(batches, ["product_id"])
+    folded = replay(
+        batches,
+        lambda b: kpi_cells(b, ["product_id"]),
+        lambda c: kpi_fold(c, ["product_id", "event_date"]),
+    )
     cells = folded.select(
         F.col("event_date").alias("day"),
         F.col("product_id").alias("key"),

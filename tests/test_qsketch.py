@@ -278,30 +278,37 @@ def test_fold_qsketch_batch_overwrite_makes_replay_idempotent(
     own partition with identical rows (state is a pure function of the
     batch), and the folded estimates equal the one-shot sketch."""
     from airflow_retail_etl_spark.streaming.incremental import (
-        fold_qsketch_batch,
-        replay_qsketch,
+        fold_cells,
+        replay,
     )
 
     cap = 256
     state = str(tmp_path / "qs_state")
     bucket = F.col("k") % 3
     batches = [days_df.filter(bucket == i) for i in range(3)]
+
+    def batch_state(b):
+        return qsketch.qsketch_state(b, (), "val", "k", cap=cap)
+
+    def estimates(st):
+        return qsketch.sample_quantiles(
+            qsketch.requantize(st, (), cap=cap), (), QS
+        )
+
     for i, b in enumerate(batches):
-        fold_qsketch_batch(b, state, "val", "k", batch_id=i, cap=cap)
+        fold_cells(batch_state(b), state, batch_id=i)
 
     def folded():
         st = spark.read.parquet(state).select("thr", "v", "h", "lvl")
-        return qsketch.sample_quantiles(
-            qsketch.requantize(st, (), cap=cap), (), QS
-        ).collect()
+        return estimates(st).collect()
 
     want = qsketch.sketch_quantiles(
         days_df, (), "val", "k", QS, cap=cap
     ).collect()
     assert [tuple(r) for r in folded()] == [tuple(r) for r in want]
     # at-least-once redelivery of batch 1: state unchanged
-    fold_qsketch_batch(batches[1], state, "val", "k", batch_id=1, cap=cap)
+    fold_cells(batch_state(batches[1]), state, batch_id=1)
     assert [tuple(r) for r in folded()] == [tuple(r) for r in want]
     # and the all-DataFrame replay face agrees too
-    rep = replay_qsketch(batches, "val", "k", QS, cap=cap).collect()
+    rep = replay(batches, batch_state, estimates).collect()
     assert [tuple(r) for r in rep] == [tuple(r) for r in want]

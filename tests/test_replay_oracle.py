@@ -1,0 +1,60 @@
+"""Stream ≡ batch certificates against the DuckDB oracle: every
+replay-backed registry query folds its input in batches and must equal
+its one-shot ``oracle_sql()`` twin bit-for-bit, compared the way
+``tools/check_oracle.py`` does."""
+
+from __future__ import annotations
+
+import importlib.util
+import os
+
+import duckdb
+import pytest
+
+import __spark_entry__ as entry
+from airflow_retail_etl_spark.sources.tables import TABLE_NAMES
+
+REPLAY_QUERIES = [
+    "streaming_mart",
+    "streaming_volatility",
+    "streaming_demand_shift",
+    "streaming_sketch",
+    "streaming_sample",
+    "streaming_heavy_hitters",
+    "streaming_quantiles",
+    "streaming_decayed",
+]
+
+
+def _check_oracle():
+    spec = importlib.util.spec_from_file_location(
+        "check_oracle_under_test",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "check_oracle.py"),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.fixture(scope="module")
+def oracle_con(sf_dir):
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    yield con
+    con.close()
+
+
+@pytest.fixture(scope="module")
+def compare():
+    return _check_oracle().compare
+
+
+@pytest.mark.parametrize("name", REPLAY_QUERIES)
+def test_replay_query_matches_one_shot_oracle(
+    spark, sf_dir, oracle_con, compare, name
+):
+    sdf = entry.queries()[name](spark, sf_dir).toPandas()
+    odf = oracle_con.sql(entry.oracle_sql()[name]).df()
+    assert len(sdf) > 0
+    assert compare(name, sdf, odf) == []

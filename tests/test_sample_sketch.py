@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 
 from airflow_retail_etl_spark.operators import sampling
 from airflow_retail_etl_spark.streaming.incremental import (
-    fold_sample_batch,
-    replay_sample,
+    fold_merged,
+    replay,
 )
 
 
@@ -220,12 +220,19 @@ def test_fold_sample_batch_replay_idempotent(spark, days_df, tmp_path):
     batches = [
         days_df.filter(F.col("uid") % 3 == i) for i in range(3)
     ]
+
+    def fold(b):
+        fold_merged(
+            b,
+            state,
+            lambda d: sampling.sample_state(d, (), "uid", k=k),
+            lambda st: sampling.sample_fold(st, (), k=k),
+        )
+
     for b in batches:
-        fold_sample_batch(b, state, "uid", k=k)
-    fold_sample_batch(batches[1], state, "uid", k=k)  # replay
-    fold_sample_batch(
-        days_df.filter(F.lit(False)), state, "uid", k=k
-    )  # empty batch is a no-op
+        fold(b)
+    fold(batches[1])  # replay
+    fold(days_df.filter(F.lit(False)))  # empty batch is a no-op
     got = _sorted(spark.read.parquet(state).select("h", "v").collect())
     one = _sorted(
         sampling.sample_state(days_df, (), "uid", k=k).collect()
@@ -239,7 +246,11 @@ def test_replay_sample_equals_one_shot(spark, days_df):
         days_df.filter(F.col("uid") % 4 == i) for i in range(4)
     ]
     got = _sorted(
-        replay_sample(batches, "uid", k=k)
+        replay(
+            batches,
+            lambda b: sampling.sample_state(b, (), "uid", k=k),
+            lambda st: sampling.sample_read(st, (), k=k),
+        )
         .select("rk", "v", "n_kept", "threshold", "estimate")
         .collect()
     )

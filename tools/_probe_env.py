@@ -8,8 +8,10 @@ round-10 diagnosis). A bare ``os.environ.setdefault`` silently drops the
 flags whenever the caller's environment already carries ANY
 PYSPARK_SUBMIT_ARGS, reverting the probe to that noise band (round-10
 advice on isolated_probe; round-11 advice caught the same pattern
-re-introduced in hh_grain_probe). Every timing tool imports THIS helper
-instead. Don't shrink the heap below 48g (span_excise sf1 spills at 24g).
+re-introduced in the grouped heavy-hitter grain probe, whose findings
+SCALE.md "Grouped heavy hitters: broadcast vs shuffle cells" records).
+Every timing tool imports THIS helper instead. Don't shrink the heap
+below 48g (span_excise sf1 spills at 24g).
 """
 
 from __future__ import annotations
