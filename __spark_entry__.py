@@ -1131,9 +1131,9 @@ def q_global_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed-exact global quantiles of event values
     (selection.global_quantiles): the scale-path twin of
     value_percentiles' buffering percentile — value-grain counts, one
-    distributed prefix sum, and each q finds its two bracketing order
-    statistics through a broadcast position join; type-7 interpolation
-    in fixed-order double arithmetic rounded 6dp. No aggregation buffer
+    distributed prefix sum, and one aggregation picking each q's two
+    bracketing order statistics; type-7 interpolation in fixed-order
+    double arithmetic rounded 6dp. No aggregation buffer
     ever holds the column. Oracle replays the identical rank
     arithmetic."""
     from airflow_retail_etl_spark.operators.selection import (
@@ -1149,9 +1149,9 @@ def q_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     p90 of event value per event_type, type-7 interpolation — the
     grouped face of global_quantiles' rank arithmetic (round 11). No
     per-group value buffer: one (group, value)-grain count aggregation,
-    a per-group cumulative window over value-grain rows, and a
-    broadcast target-rank join. Oracle replays the identical rank
-    arithmetic with PARTITION BY."""
+    a per-group cumulative window over value-grain rows, and one
+    per-group aggregation picking the bracketing order statistics.
+    Oracle replays the identical rank arithmetic with PARTITION BY."""
     from airflow_retail_etl_spark.operators.selection import (
         grouped_quantiles,
     )

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import math
+from collections.abc import Iterable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -46,6 +49,25 @@ def pub_round(value: Column, scale: int = 6) -> Column:
     variance deltas, z-scores, PSI terms, correlations).
     """
     return F.round(value, scale) + F.lit(0.0)
+
+
+def double_array(values: Iterable[float]) -> Column:
+    """Literal ``ARRAY<DOUBLE>`` holding exactly ``values`` — how a
+    bounded result the driver collected goes back into a plan.
+
+    Built by ONE ``F.expr`` parse, not one ``F.lit`` Column per element
+    (plan-construction cost grows with the Column count; CLAUDE.md).
+    ``repr(float)`` is the shortest round-trip form and Java's
+    ``parseDouble`` is correctly rounded, so every element (``-0.0``
+    included) is bit-identical to the Python double; the ``D`` suffix
+    keeps DOUBLE (a bare decimal literal parses as DECIMAL), and NaN /
+    ±Infinity go through a string cast.
+    """
+    elems = [
+        f"{x!r}D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
+        for x in map(float, values)
+    ]
+    return F.expr(f"CAST(array({', '.join(elems)}) AS ARRAY<DOUBLE>)")
 
 
 def safe_ratio(num: Column, den: Column) -> Column:

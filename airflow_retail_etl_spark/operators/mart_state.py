@@ -45,13 +45,16 @@ store-less batch face; the distinct-user half streams via
 
 from __future__ import annotations
 
+import datetime
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from airflow_retail_etl_spark.functions.columns import (
     conditional_count,
+    double_array,
     pub_round,
     safe_ratio,
 )
@@ -485,20 +488,31 @@ def decayed_read(
     )
 
 
+class DecayedCarry(NamedTuple):
+    """The whole streaming state of one decayed series: its first day,
+    the newest day folded, and the UNROUNDED decayed value on that day
+    (rounding the carry would break bit-equality with the one-shot
+    fold)."""
+
+    lo: datetime.date
+    last: datetime.date
+    acc: float
+
+
 def decayed_step(
     cells: DataFrame,
-    carry: DataFrame | None,
+    carry: DecayedCarry | None,
     value_col: str,
     *,
     lam: float,
     date_col: str = "event_date",
     dp: int = 6,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame | None, DecayedCarry | None]:
     """One batch advance of :func:`decayed_read`'s O(1) incremental law
     — the engine step behind the decayed family's STREAMING face
     (``streaming.incremental.fold_decayed_batch`` / ``replay_decayed``):
-    given this batch's per-day exact state cells and the carried
-    ``(__lo, __last, __acc)`` state (None for the first batch), return
+    given this batch's per-day exact state cells and the carry (None
+    for the first batch), return
 
     - ``out``: (date_col, n_days, decayed) for every day observed in
       the batch — each value the law ``decayed(D) = acc·λ^(D−last) +
@@ -508,112 +522,96 @@ def decayed_step(
       one-shot fold over [lo, D], so every published value is
       BIT-IDENTICAL to :func:`decayed_read` of all cells delivered so
       far — the stream ≡ batch certificate.
-    - ``new_carry``: one row carrying (__lo, __last=batch max day,
-      __acc = UNROUNDED decayed at __last) — the whole streaming state,
-      one double per series (the O(1) law made literal).
+    - ``new_carry``: (lo, last = batch max day, acc = the fold over the
+      whole batch calendar) — one double per series, the O(1) law made
+      literal.
 
-    Batch days must be strictly NEWER than the carried ``__last``: a
-    late day cannot be folded into an already-decayed scalar — the
-    guard raises in-plan with the backfill recipe (fold the late day's
-    cells into the CELL store, which is permutation-safe because cells
-    are linear, and re-read via decayed_read / replay from that day).
-    The 1-row state array is localCheckpointed: it feeds the output's
-    broadcast AND every later batch's carry chain, so un-materialized
-    each downstream batch would re-execute this batch's corpus subtree
-    (the psi_drift / round-10 materialize rule — O(B²) batch rescans).
-    Empty batches must be skipped by the caller (carry unchanged).
+    The batch is read by ONE job: its day bounds, its day → value map
+    densified over the calendar, and the new acc folded in Spark. Those
+    are bounded by the batch calendar, so ``out`` is built over literal
+    days and a literal dense array (``double_array``), where Spark runs
+    the Horner fold on the same doubles — no pin, no broadcast. An
+    empty batch (no dated cells) returns ``(None, carry)``.
+
+    Batch days must be strictly NEWER than the carried ``last``: a late
+    day cannot be folded into an already-decayed scalar — the step
+    raises the backfill recipe (fold the late day's cells into the CELL
+    store, which is permutation-safe because cells are linear, and
+    re-read via decayed_read / replay from that day).
     """
     if not 0.0 < lam < 1.0:
         raise ValueError(f"lam must be in (0, 1), got {lam}")
     lam_lit = F.lit(float(lam))
-    series = cells.filter(F.col(date_col).isNotNull()).select(
-        F.col(date_col).alias("__d"),
-        F.col(value_col).cast("double").alias("__s"),
-    )
-    bounds = series.agg(
-        F.min("__d").alias("__bmin"), F.max("__d").alias("__bmax")
-    )
-    if carry is None:
-        base = bounds.select(
-            F.col("__bmin").alias("__lo"),
-            F.col("__bmin").alias("__start"),
-            F.col("__bmax").alias("__hi"),
-            F.lit(0.0).alias("__acc0"),
-        )
-    else:
-        base = bounds.crossJoin(F.broadcast(carry)).select(
-            F.col("__lo"),
-            F.when(
-                F.col("__bmin") <= F.col("__last"),
-                F.raise_error(
-                    F.concat(
-                        F.lit("decayed_step: late day "),
-                        F.col("__bmin").cast("string"),
-                        F.lit(" <= carried last day "),
-                        F.col("__last").cast("string"),
-                        F.lit(
-                            " — a decayed scalar cannot absorb the past;"
-                            " backfill through the linear CELL store"
-                            " (fold_cells/refresh_day) and re-read"
-                            " with decayed_read, or replay from that day"
-                        ),
-                    )
-                ).cast("date"),
+
+    def horner(arr: Column, acc0: Column) -> Column:
+        return F.aggregate(arr, acc0, lambda acc, x: acc * lam_lit + x)
+
+    acc0 = F.lit(0.0 if carry is None else float(carry.acc))
+    m = F.map_from_entries(
+        F.collect_list(
+            F.struct(
+                F.col(date_col).alias("__d"),
+                F.col(value_col).cast("double").alias("__s"),
             )
-            .otherwise(F.date_add(F.col("__last"), 1))
-            .alias("__start"),
-            F.col("__bmax").alias("__hi"),
-            F.col("__acc").alias("__acc0"),
         )
-    cal = base.select(
-        "__lo",
-        "__start",
-        "__hi",
-        "__acc0",
-        F.explode(F.sequence("__start", "__hi")).alias("__d"),
     )
-    dense = cal.join(series, "__d", "left").select(
-        "__lo",
-        "__start",
-        "__hi",
-        "__acc0",
-        "__d",
-        F.coalesce("__s", F.lit(0.0)).alias("__s"),
+    start = (
+        F.col("__bmin")
+        if carry is None
+        else F.lit(carry.last + datetime.timedelta(days=1))
     )
-    arr = (
-        dense.groupBy("__lo", "__start", "__hi", "__acc0")
+    dense = F.transform(
+        F.sequence(start, F.col("__bmax")),
+        lambda d: F.coalesce(F.try_element_at(F.col("__m"), d), F.lit(0.0)),
+    )
+    batch = (
+        cells.filter(F.col(date_col).isNotNull())
         .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("__d", "__s"))),
-                lambda t: t["__s"],
-            ).alias("__arr")
+            F.min(date_col).alias("__bmin"),
+            F.max(date_col).alias("__bmax"),
+            m.alias("__m"),
         )
-        .localCheckpoint(eager=True)
+        .select(
+            "__bmin",
+            "__bmax",
+            F.array_sort(F.map_keys("__m")).alias("__days"),
+            dense.alias("__arr"),
+        )
+        .select("*", horner(F.col("__arr"), acc0).alias("__acc"))
+        .first()
     )
-    obs = series.select(F.col("__d").alias(date_col))
-    idx = F.datediff(F.col(date_col), F.col("__start")) + F.lit(1)
-    horner = F.aggregate(
-        F.slice(F.col("__arr"), F.lit(1), idx),
-        F.col("__acc0"),
-        lambda acc, x: acc * lam_lit + x,
+    if batch["__bmin"] is None:
+        return None, carry
+    if carry is not None and batch["__bmin"] <= carry.last:
+        raise ValueError(
+            f"decayed_step: late day {batch['__bmin']} <= carried last day"
+            f" {carry.last} — a decayed scalar cannot absorb the past;"
+            " backfill through the linear CELL store (fold_cells/"
+            "refresh_day) and re-read with decayed_read, or replay from"
+            " that day"
+        )
+    if carry is None:
+        lo = start_day = batch["__bmin"]
+    else:
+        lo, start_day = carry.lo, carry.last + datetime.timedelta(days=1)
+    day = F.col(date_col)
+    idx = F.datediff(day, F.lit(start_day)) + F.lit(1)
+    days = F.expr(
+        "array("
+        + ", ".join(f"DATE'{d.isoformat()}'" for d in batch["__days"])
+        + ")"
     )
-    out = obs.crossJoin(F.broadcast(arr)).select(
+    out = cells.sparkSession.range(0, 1, 1, 1).select(
+        F.explode(days).alias(date_col)
+    ).select(
         date_col,
-        (F.datediff(F.col(date_col), F.col("__lo")) + F.lit(1))
-        .cast("long")
-        .alias("n_days"),
-        F.round(horner, dp).alias("decayed"),
+        (F.datediff(day, F.lit(lo)) + F.lit(1)).cast("long").alias("n_days"),
+        F.round(
+            horner(F.slice(double_array(batch["__arr"]), F.lit(1), idx), acc0),
+            dp,
+        ).alias("decayed"),
     )
-    new_carry = arr.select(
-        "__lo",
-        F.col("__hi").alias("__last"),
-        F.aggregate(
-            F.col("__arr"),
-            F.col("__acc0"),
-            lambda acc, x: acc * lam_lit + x,
-        ).alias("__acc"),
-    )
-    return out, new_carry
+    return out, DecayedCarry(lo, batch["__bmax"], batch["__acc"])
 
 
 def ewm_stats(

@@ -22,11 +22,12 @@ profiling reads values, it never recomputes money/metric aggregates.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from airflow_retail_etl_spark.functions.columns import pub_round
+from airflow_retail_etl_spark.functions.columns import double_array, pub_round
 
 
 def profile_table(
@@ -229,9 +230,10 @@ def psi_drift(
 
     Buckets are the REFERENCE side's exact ``n_buckets``-quantile edges
     (selection.global_quantiles — type-7, 6dp-rounded, so the edges are
-    engine-identical doubles derived IN-ENGINE, never injected
-    literals); each row's bucket is the count of edges strictly below
-    its value (one broadcast array projection — no per-row join). Per
+    engine-identical doubles derived IN-ENGINE, then inlined as a
+    bit-identical literal array); each row's bucket is the count of
+    edges strictly below its value (one array projection — no per-row
+    join). Per
     bucket: exact counts, shares rounded 6dp, eps-floored (a zero
     bucket would make the log ratio infinite — the standard smoothing),
     ``term = round((p−q)·ln(p/q), 6)`` computed on engine-identical
@@ -240,9 +242,14 @@ def psi_drift(
     (bucket, n_a, n_b, p_a, p_b, term, psi) with ``psi`` the exact
     DECIMAL sum of the rounded terms, ordered by bucket.
 
-    Scale: two value-grain aggregations + the reference-side quantile
-    rank pass; bucket assignment is a pure projection against a
-    broadcast ≤(n_buckets−1)-element array. NULLs excluded both sides.
+    Scale: the reference-side quantile rank pass, then ONE aggregation
+    over both sides (a union with a side tag) into 2·n_buckets
+    conditional counts; bucket assignment is a pure projection against
+    a literal ≤(n_buckets−1)-element array. Both bounded results (the
+    edges, the counts) are collected once — the driver inspects the
+    counts anyway, for the empty-side check — so the output is built
+    over a one-partition literal frame, and its terms and DECIMAL sum
+    are computed by Spark there. NULLs excluded both sides.
     """
     from airflow_retail_etl_spark.operators.selection import (
         global_quantiles,
@@ -253,75 +260,64 @@ def psi_drift(
     if not 0.0 < eps < 0.01:
         raise ValueError(f"eps must be in (0, 0.01), got {eps}")
     qs = [i / n_buckets for i in range(1, n_buckets)]
-    # materialize the one-row edge array (the round-10 rule, measured
-    # here: it feeds THREE broadcast reuses — both sides' bucket
-    # assignments and the spine — and un-materialized each reuse
-    # re-executes the whole reference-side rank pass; PLANS.md read 364
-    # exchanges for this query before the checkpoints, 10 after)
     edges = (
         global_quantiles(df_a, value_col, qs)
-        .agg(F.array_sort(F.collect_list("quantile")).alias("__edges"))
-        .localCheckpoint(eager=True)
+        .agg(F.array_sort(F.collect_list("quantile")))
+        .first()[0]
     )
-
-    def bucketed(df: DataFrame, name: str) -> DataFrame:
-        v = F.col(value_col).cast("double")
-        b = F.size(F.filter(F.col("__edges"), lambda e: v > e))
-        return (
-            df.filter(F.col(value_col).isNotNull())
-            .crossJoin(F.broadcast(edges))
-            .select(b.alias("bucket"))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).cast("long").alias(name))
+    v = F.col("__v")
+    bucket = F.size(F.filter(double_array(edges), lambda e: v > e))
+    sides = (
+        df.filter(F.col(value_col).isNotNull()).select(
+            F.col(value_col).cast("double").alias("__v"),
+            F.lit(side).alias("__side"),
         )
-
-    spine = edges.select(
-        F.explode(
-            F.sequence(F.lit(0), F.lit(int(n_buckets - 1)))
-        ).alias("bucket")
+        for side, df in enumerate((df_a, df_b))
     )
-    # joined is n_buckets rows but its lineage holds both corpus-sized
-    # bucket counts; it feeds the totals fold AND the terms projection
-    joined = (
-        spine.join(bucketed(df_a, "n_a"), "bucket", "left")
-        .join(bucketed(df_b, "n_b"), "bucket", "left")
-        .select(
-            "bucket",
-            F.coalesce("n_a", F.lit(0).cast("long")).alias("n_a"),
-            F.coalesce("n_b", F.lit(0).cast("long")).alias("n_b"),
+    row = (
+        reduce(DataFrame.unionByName, sides)
+        .select("__side", bucket.alias("__b"))
+        .agg(
+            *[
+                F.expr(
+                    f"count(CASE WHEN __side = {s} AND __b = {b} THEN 1 END)"
+                )
+                for s in (0, 1)
+                for b in range(n_buckets)
+            ]
         )
-        .localCheckpoint(eager=True)
+        .first()
     )
-    tot = joined.agg(
-        F.sum("n_a").cast("long").alias("__ta"),
-        F.sum("n_b").cast("long").alias("__tb"),
-    )
+    n_a, n_b = list(row[:n_buckets]), list(row[n_buckets:])
+    ta, tb = sum(n_a), sum(n_b)
     # fail fast on an empty/all-NULL side: p = n/0 would surface as an
-    # opaque IEEE Infinity/NaN inside the ln terms, not a named error.
-    # Bounded check — joined is already eagerly checkpointed, so this
-    # reads n_buckets in-memory rows, never the corpora.
-    trow = tot.collect()[0]
-    if not trow["__ta"] or not trow["__tb"]:
+    # opaque IEEE Infinity/NaN inside the ln terms, not a named error
+    if not ta or not tb:
         raise ValueError(
             "psi_drift: a side has zero non-null values "
-            f"(reference={trow['__ta'] or 0}, current={trow['__tb'] or 0} "
+            f"(reference={ta}, current={tb} "
             f"rows of non-null {value_col!r}) — PSI is undefined on an "
             "empty distribution"
         )
+    counts = F.expr(
+        "inline(array("
+        + ", ".join(
+            f"named_struct('bucket', {b}, 'n_a', {na}L, 'n_b', {nb}L)"
+            for b, (na, nb) in enumerate(zip(n_a, n_b))
+        )
+        + "))"
+    )
+    joined = df_a.sparkSession.range(0, 1, 1, 1).select(counts)
     eps_l = F.lit(float(eps))
     p_a = F.greatest(
-        F.round(
-            F.col("n_a").cast("double") / F.col("__ta").cast("double"), 6
-        ),
+        F.round(F.col("n_a").cast("double") / F.lit(ta).cast("double"), 6),
         eps_l,
     )
     p_b = F.greatest(
-        F.round(
-            F.col("n_b").cast("double") / F.col("__tb").cast("double"), 6
-        ),
+        F.round(F.col("n_b").cast("double") / F.lit(tb).cast("double"), 6),
         eps_l,
     )
-    terms = joined.crossJoin(F.broadcast(tot)).select(
+    terms = joined.select(
         "bucket",
         "n_a",
         "n_b",
@@ -329,16 +325,13 @@ def psi_drift(
         F.round(p_b, 6).alias("p_b"),
         pub_round((p_a - p_b) * F.log(p_a / p_b), 6).alias("term"),
     )
-    psi = terms.agg(
+    # one partition: the total window needs no exchange
+    psi = (
         F.sum(F.col("term").cast("decimal(18,6)"))
+        .over(Window.partitionBy())
         .cast("double")
-        .alias("psi")
     )
-    return (
-        terms.crossJoin(F.broadcast(psi))
-        .select("bucket", "n_a", "n_b", "p_a", "p_b", "term", "psi")
-        .orderBy("bucket")
-    )
+    return terms.select("*", psi.alias("psi")).orderBy("bucket")
 
 
 def freq_shift(
@@ -384,7 +377,7 @@ def _rank_freq_shift(
     ``counts`` is a (key, cnt_a, cnt_b) frame (any provenance — raw
     conditional agg or per-day cell window sums). Materializes it once
     (it feeds a bounded validation collect, a broadcast totals build,
-    AND the ranked read — the psi_drift pattern; cardinality is
+    AND the ranked read — the round-10 materialize rule; cardinality is
     key-bounded, not data-sized), fails fast on an empty period, then
     ranks by the exact integer |cnt_b·tot_a − cnt_a·tot_b|.
     """

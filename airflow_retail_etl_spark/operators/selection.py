@@ -41,10 +41,13 @@ def global_cumsum(
     value_col: str,
     *,
     out_col: str = "cum",
+    total_col: str | None = None,
     num_partitions: int = 16,
 ) -> DataFrame:
     """Annotate ``df`` with the exact running sum of ``value_col`` in
-    ``order`` (which must be a TOTAL order — include a unique tiebreak).
+    ``order`` (which must be a TOTAL order — include a unique tiebreak),
+    and with the grand total as ``total_col`` when one is named (it
+    rides the offsets broadcast, so it costs no extra pass).
 
     ``num_partitions`` bounds per-executor window size; the sequential
     offset pass touches ``num_partitions`` rows, never data rows.
@@ -74,6 +77,11 @@ def global_cumsum(
     offs = totals.select(
         "__pid",
         F.coalesce(F.sum("__psum").over(w_off), F.lit(0)).alias("__off"),
+        *(
+            [F.sum("__psum").over(Window.partitionBy()).alias(total_col)]
+            if total_col
+            else []
+        ),
     )
     w_in = (
         Window.partitionBy("__pid")
@@ -105,6 +113,63 @@ def budget_select(
     return cum.filter(F.col(cum_col) <= F.lit(budget))
 
 
+def _check_quantiles(qs: Sequence[float]) -> None:
+    if not qs:
+        raise ValueError("no quantiles requested")
+    for q in qs:
+        if not 0.0 <= q <= 1.0:
+            raise ValueError(f"quantile {q} outside [0, 1]")
+    if len({float(q) for q in qs}) != len(qs):
+        # each q is one output row, keyed by q
+        raise ValueError(f"duplicate quantiles in {list(qs)}")
+
+
+def _type7_rank(q: float) -> str:
+    """SQL for h = q·(n−1)+1 over the row's population size ``n`` (the
+    ``D`` suffix keeps the literal DOUBLE; a bare one parses as
+    DECIMAL)."""
+    return f"({float(q)!r}D * CAST(n - 1 AS DOUBLE) + 1.0D)"
+
+
+# The two helpers below build their columns from SQL text: one F.expr
+# parse per column instead of a py4j call per expression node, which
+# measured ~0.2 s per helper at 9 qs (CLAUDE.md's literal-count rule).
+
+
+def _order_stat_picks(qs: Sequence[float]) -> list[Column]:
+    """Aggregate columns ``__lo{i}`` / ``__hi{i}``: the values at ranks
+    floor(h) and ceil(h) of each q, over value-grain rows carrying
+    (v, cum, n). ``cum`` strictly increases with ``v`` (every count is
+    ≥ 1), so the row with cum − c < r ≤ cum is min(v) over cum ≥ r
+    (``min`` orders like the window: NaN last) — one aggregation, no
+    rank table and no range join."""
+    return [
+        F.expr(
+            f"min(CASE WHEN cum >= CAST({fn}({_type7_rank(q)}) AS BIGINT)"
+            f" THEN v END) AS __{side}{i}"
+        )
+        for i, q in enumerate(qs)
+        for side, fn in (("lo", "FLOOR"), ("hi", "CEIL"))
+    ]
+
+
+def _stack_quantiles(qs: Sequence[float]) -> Column:
+    """Generator of (q, quantile) rows from :func:`_order_stat_picks`'
+    columns: type-7 interpolation in the fixed-order IEEE expression
+    ``lo + d·(hi−lo)`` (the textbook (1−d)·lo + d·hi differs at the
+    last ulp and would break the oracle's bit-exactness), 6dp."""
+    rows = []
+    for i, q in enumerate(qs):
+        h = _type7_rank(q)
+        d = f"({h} - CAST(CAST(FLOOR({h}) AS BIGINT) AS DOUBLE))"
+        lv, hv = f"CAST(__lo{i} AS DOUBLE)", f"CAST(__hi{i} AS DOUBLE)"
+        rows.append(
+            f"named_struct('q', {float(q)!r}D,"
+            f" 'quantile', round({lv} + {d} * ({hv} - {lv}), 6))"
+        )
+    return F.expr(f"inline(array({', '.join(rows)}))")
+
+
 def grouped_quantiles(
     df: DataFrame,
     group_col: str,
@@ -113,30 +178,27 @@ def grouped_quantiles(
 ) -> DataFrame:
     """EXACT per-group interpolated quantiles — the grouped face of
     :func:`global_quantiles`, same type-7 definition (h = q·(n−1)+1,
-    interpolated as ``lo + d·(hi−lo)`` — the EXACT fixed-order IEEE
-    expression both this code and the DuckDB oracle run; the textbook
-    (1−d)·lo + d·hi form differs at the last ulp, so a refactor to it
-    would break oracle exactness — 6dp rounded), without
+    interpolated as ``lo + d·(hi−lo)``, 6dp rounded), without
     per-group value buffers (Spark's ``percentile`` holds every value
     of a group in one aggregation buffer — fine for tiny groups, fatal
     for a per-source quantile over a 100 TB corpus slice).
 
     Plan: one (group, value)-grain count aggregation, one per-group
     cumulative window over the VALUE-GRAIN rows (state is the group's
-    distinct-value count, not its row count), and a broadcast join of
-    the (|groups|·|qs|)-row target-rank table picking each q's two
-    bracketing order statistics. NULL values excluded; NULL groups
-    excluded (they are absent keys, not a quantile population). Returns
-    (``group_col``, q, quantile, n) ordered by (group, q).
+    distinct-value count, not its row count), and one per-group
+    aggregation picking each q's two bracketing order statistics
+    (:func:`_order_stat_picks`) — the window already clustered the rows
+    by group, so the pick adds no exchange. NULL values excluded; NULL
+    groups excluded (they are absent keys, not a quantile population).
+    Returns (``group_col``, q, quantile, n), one row per group and q
+    (q in the order given; groups unordered). Duplicate qs are refused.
 
     Scale note: the cumulative window partitions by group over
     value-grain rows — heavy-tailed value domains per group stay
     bounded by |distinct values|; for one monster group, slice it and
     use :func:`global_quantiles` (range repartition) instead.
     """
-    for q in qs:
-        if not 0.0 <= q <= 1.0:
-            raise ValueError(f"quantile {q} outside [0, 1]")
+    _check_quantiles(qs)
     counts = (
         df.filter(
             F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
@@ -149,66 +211,14 @@ def grouped_quantiles(
         .orderBy("v")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    w_all = Window.partitionBy("g")
-    cum = (
-        counts.withColumn("cum", F.sum("c").over(w_cum))
-        .withColumn("cum_prev", F.col("cum") - F.col("c"))
-        .withColumn("n", F.sum("c").over(w_all).cast("long"))
+    cum = counts.withColumn("cum", F.sum("c").over(w_cum)).withColumn(
+        "n", F.sum("c").over(Window.partitionBy("g")).cast("long")
     )
-    spark = df.sparkSession
-    qdf = spark.createDataFrame([(float(q),) for q in qs], "q double")
-    # rename the group key immediately so the targets⋈cum joins below
-    # are never ambiguous self-references
-    targets = (
-        cum.select(F.col("g").alias("tg"), F.col("n").alias("tn"))
-        .distinct()
-        .crossJoin(F.broadcast(qdf))
-        .withColumn(
-            "h",
-            F.col("q") * (F.col("tn") - 1).cast("double") + F.lit(1.0),
-        )
-        .withColumn("lo", F.floor("h").cast("long"))
-        .withColumn("hi", F.ceil("h").cast("long"))
-        .withColumn("d", F.col("h") - F.col("lo").cast("double"))
-    )
-    lo_v = cum.join(
-        F.broadcast(targets),
-        (F.col("g") == F.col("tg"))
-        & (F.col("cum_prev") < F.col("lo"))
-        & (F.col("lo") <= F.col("cum")),
-    ).select(
-        "g", "q", F.col("tn").alias("n"), "d", F.col("v").alias("lv")
-    )
-    hi_v = cum.join(
-        F.broadcast(
-            targets.select(
-                F.col("tg").alias("tg2"), F.col("q").alias("q2"), "hi"
-            )
-        ),
-        (F.col("g") == F.col("tg2"))
-        & (F.col("cum_prev") < F.col("hi"))
-        & (F.col("hi") <= F.col("cum")),
-    ).select(F.col("g").alias("g2"), "q2", F.col("v").alias("hv"))
     return (
-        lo_v.join(
-            hi_v,
-            (F.col("g") == F.col("g2")) & (F.col("q") == F.col("q2")),
-        )
-        .select(
-            F.col("g").alias(group_col),
-            "q",
-            F.round(
-                F.col("lv").cast("double")
-                + F.col("d")
-                * (
-                    F.col("hv").cast("double")
-                    - F.col("lv").cast("double")
-                ),
-                6,
-            ).alias("quantile"),
-            "n",
-        )
-        .orderBy(group_col, "q")
+        cum.groupBy("g")
+        .agg(F.max("n").alias("n"), *_order_stat_picks(qs))
+        .select(F.col("g").alias(group_col), "n", _stack_quantiles(qs))
+        .select(group_col, "q", "quantile", "n")
     )
 
 
@@ -228,71 +238,29 @@ def global_quantiles(
     definition).
 
     Plan: one value-grain count aggregation, one distributed prefix sum
-    (``global_cumsum``), then each requested q finds its two bracketing
-    order statistics h = q·(n−1)+1 via a BROADCAST join of the (|qs|-row)
-    position table against the cumulative table — one pass, no sort of
-    the data, no per-group buffers. Interpolation is the EXACT
-    fixed-order IEEE expression ``lo + d·(hi−lo)`` (the textbook
-    (1−d)·lo + d·hi differs at the last ulp and would break the oracle's
-    bit-exactness), rounded 6dp. NULLs excluded. Returns (q, quantile, n).
+    (``global_cumsum``), then ONE aggregation picking each q's two
+    bracketing order statistics at h = q·(n−1)+1
+    (:func:`_order_stat_picks`) — no sort of the data, no per-group
+    buffers. Interpolation is the exact fixed-order IEEE expression
+    ``lo + d·(hi−lo)``, rounded 6dp. NULLs excluded; an all-NULL input
+    returns no rows. Returns (q, quantile, n), one row per q in the
+    order given. Duplicate qs are refused.
     """
-    for q in qs:
-        if not 0.0 <= q <= 1.0:
-            raise ValueError(f"quantile {q} outside [0, 1]")
+    _check_quantiles(qs)
     counts = (
         df.filter(F.col(value_col).isNotNull())
         .groupBy(F.col(value_col).alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
     cum = global_cumsum(
-        counts, [F.col("v").asc()], "c", out_col="cum",
+        counts, [F.col("v").asc()], "c", out_col="cum", total_col="n",
         num_partitions=num_partitions,
-    ).withColumn("cum_prev", F.col("cum") - F.col("c"))
-    n = cum.agg(F.sum("c").cast("long").alias("n"))
-    spark = df.sparkSession
-    qdf = (
-        spark.createDataFrame([(float(q),) for q in qs], "q double")
-        .crossJoin(F.broadcast(n))
-        .withColumn(
-            "h",
-            F.col("q") * (F.col("n") - 1).cast("double") + F.lit(1.0),
-        )
-        .withColumn("lo", F.floor("h").cast("long"))
-        .withColumn("hi", F.ceil("h").cast("long"))
-        .withColumn("d", F.col("h") - F.col("lo").cast("double"))
-    )
-    lo_v = (
-        cum.join(
-            F.broadcast(qdf),
-            (F.col("cum_prev") < F.col("lo"))
-            & (F.col("lo") <= F.col("cum")),
-        )
-        .select("q", "n", "d", F.col("v").alias("lv"))
-    )
-    hi_v = (
-        cum.join(
-            F.broadcast(qdf.select("q", "hi")),
-            (F.col("cum_prev") < F.col("hi"))
-            & (F.col("hi") <= F.col("cum")),
-        )
-        .select("q", F.col("v").alias("hv"))
     )
     return (
-        lo_v.join(hi_v, "q")
-        .select(
-            "q",
-            F.round(
-                F.col("lv").cast("double")
-                + F.col("d")
-                * (
-                    F.col("hv").cast("double")
-                    - F.col("lv").cast("double")
-                ),
-                6,
-            ).alias("quantile"),
-            "n",
-        )
-        .orderBy("q")
+        cum.agg(F.max("n").cast("long").alias("n"), *_order_stat_picks(qs))
+        .filter(F.col("n").isNotNull())
+        .select("n", _stack_quantiles(qs))
+        .select("q", "quantile", "n")
     )
 
 
@@ -340,7 +308,9 @@ def robust_stats(
     # feeds THREE reuses (meds -> deviations, meds -> output join,
     # bounds -> trim filter) — materialize once (the round-10 rule,
     # measured: PLANS.md read 79 exchanges for robust_value_stats
-    # before, and the warm wall-time halves)
+    # before, and the warm wall-time halves; re-measured with the
+    # one-aggregation pick: fresh-JVM sf0.1 probe 3.3-4.0 s pinned vs
+    # 4.3-5.0 s un-pinned, though un-pinned runs 4 fewer jobs)
     qv = qv.localCheckpoint(eager=True)
     wide = qv.groupBy(group_col).agg(
         F.max("n").cast("long").alias("n"),

@@ -519,40 +519,40 @@ def fold_decayed_batch(
     if batch_id > 0:
         prior = _read_history(spark, state_path)
         if prior is not None:
-            carry = prior.filter(
-                (F.col("batch_id") == int(batch_id) - 1)
-                & (~F.col("is_obs"))
-            ).select("__lo", "__last", "__acc")
-            if carry.isEmpty():  # empty-store prefix (no days yet)
-                carry = None
-    cells = batch.filter(F.col(date_col).isNotNull())
-    if cells.isEmpty():
-        # nothing delivered: rewrite the prior carry under this batch id
-        # (pure function of the empty batch — redelivery-idempotent)
-        rows = (
-            carry.select(
-                F.col("__last").alias(date_col),
-                F.lit(None).cast("long").alias("n_days"),
-                F.lit(None).cast("double").alias("decayed"),
-                "__lo",
-                "__last",
-                "__acc",
-                F.lit(False).alias("is_obs"),
+            rows = (
+                prior.filter(
+                    (F.col("batch_id") == int(batch_id) - 1)
+                    & (~F.col("is_obs"))
+                )
+                .select("__lo", "__last", "__acc")
+                .collect()
             )
-            if carry is not None
-            else spark.createDataFrame(
-                [],
-                f"{date_col} date, n_days long, decayed double, "
-                "__lo date, __last date, __acc double, is_obs boolean",
-            )
+            if rows:  # an empty-store prefix (no days yet) has no carry
+                carry = mart_state.DecayedCarry(*rows[0])
+    day_cells = batch.groupBy(date_col).agg(F.sum(value_col).alias(value_col))
+    out, carry = mart_state.decayed_step(
+        day_cells, carry, value_col, lam=lam, date_col=date_col, dp=dp
+    )
+    # the carry row; an empty batch rewrites the prior carry under its
+    # own batch id (a pure function of the empty batch — redelivery-
+    # idempotent)
+    if carry is None:
+        rows = spark.createDataFrame(
+            [],
+            f"{date_col} date, n_days long, decayed double, "
+            "__lo date, __last date, __acc double, is_obs boolean",
         )
     else:
-        day_cells = cells.groupBy(date_col).agg(
-            F.sum(value_col).alias(value_col)
+        rows = spark.range(0, 1, 1, 1).select(
+            F.lit(carry.last).alias(date_col),
+            F.lit(None).cast("long").alias("n_days"),
+            F.lit(None).cast("double").alias("decayed"),
+            F.lit(carry.lo).alias("__lo"),
+            F.lit(carry.last).alias("__last"),
+            F.lit(carry.acc).alias("__acc"),
+            F.lit(False).alias("is_obs"),
         )
-        out, new_carry = mart_state.decayed_step(
-            day_cells, carry, value_col, lam=lam, date_col=date_col, dp=dp
-        )
+    if out is not None:
         rows = out.select(
             date_col,
             "n_days",
@@ -561,17 +561,7 @@ def fold_decayed_batch(
             F.lit(None).cast("date").alias("__last"),
             F.lit(None).cast("double").alias("__acc"),
             F.lit(True).alias("is_obs"),
-        ).unionByName(
-            new_carry.select(
-                F.col("__last").alias(date_col),
-                F.lit(None).cast("long").alias("n_days"),
-                F.lit(None).cast("double").alias("decayed"),
-                "__lo",
-                "__last",
-                "__acc",
-                F.lit(False).alias("is_obs"),
-            )
-        )
+        ).unionByName(rows)
     fold_cells(rows, state_path, batch_id=batch_id)
 
 
@@ -599,33 +589,27 @@ def replay_decayed(
     """Replay TIME-ORDERED batches through the decayed carry fold
     entirely as DataFrames — the batch face of
     :func:`fold_decayed_batch` (the parquet store replaced by the
-    chained 1-row carry frames). Resuming the Horner fold from the
-    carried acc is the identical IEEE operation sequence as the
-    one-shot fold, so the union of per-batch outputs is BIT-IDENTICAL
-    to ``mart_state.decayed_read`` of the concatenated input — which is
-    what the oracle computes, certifying stream ≡ batch cross-engine
-    for the decayed face. Batches must advance in event time (the
-    streaming reality; late days raise the backfill recipe in-plan);
-    empty batches are skipped (carry unchanged)."""
+    ``mart_state.DecayedCarry`` values each step returns). Resuming the
+    Horner fold from the carried acc is the identical IEEE operation
+    sequence as the one-shot fold, so the union of per-batch outputs is
+    BIT-IDENTICAL to ``mart_state.decayed_read`` of the concatenated
+    input — which is what the oracle computes, certifying stream ≡
+    batch cross-engine for the decayed face. Batches must advance in event time (the
+    streaming reality; late days raise the backfill recipe); empty
+    batches are skipped (carry unchanged)."""
     _require_batches(batches, "replay_decayed")
     from airflow_retail_etl_spark.operators import mart_state
 
-    carry: DataFrame | None = None
+    carry = None
     outs: list[DataFrame] = []
     for b in batches:
-        cells = b.filter(F.col(date_col).isNotNull())
-        if cells.isEmpty():
-            continue
-        day_cells = cells.groupBy(date_col).agg(
-            F.sum(value_col).alias(value_col)
-        )
+        day_cells = b.groupBy(date_col).agg(F.sum(value_col).alias(value_col))
         out, carry = mart_state.decayed_step(
             day_cells, carry, value_col, lam=lam, date_col=date_col, dp=dp
         )
-        outs.append(out)
+        if out is not None:
+            outs.append(out)
     if not outs:
         raise ValueError("replay_decayed: every batch was empty")
-    folded = outs[0]
-    for o in outs[1:]:
-        folded = folded.unionByName(o)
-    return folded.orderBy(date_col)
+    # |days| literal rows: on one partition the sort needs no exchange
+    return reduce(DataFrame.unionByName, outs).coalesce(1).orderBy(date_col)

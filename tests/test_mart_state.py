@@ -613,3 +613,30 @@ def test_ewm_stats_matches_reference_fold(spark):
         ).collect()
     }
     assert again == got
+
+
+def test_replay_decayed_skips_empty_batches(spark):
+    """A batch with no dated cells leaves the carry unchanged: the replay
+    around it still equals the one-shot read, and a replay of nothing
+    but empty batches is refused by name."""
+    import pytest
+
+    from airflow_retail_etl_spark.streaming.incremental import replay_decayed
+
+    b0, b1, b2 = _decayed_batches(spark)
+    empty = b0.filter("1 = 0")
+    got = _rows(
+        replay_decayed([empty, b0, empty, b1, b2], "revenue_cents", lam=0.9),
+        "event_date",
+    )
+    one_shot = _rows(
+        mart_state.decayed_read(
+            mart_state.kpi_cells(_events(spark), []),
+            "revenue_cents",
+            lam=0.9,
+        ),
+        "event_date",
+    )
+    assert got == one_shot
+    with pytest.raises(ValueError, match="every batch was empty"):
+        replay_decayed([empty, empty], "revenue_cents", lam=0.9)

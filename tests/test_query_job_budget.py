@@ -1,0 +1,42 @@
+"""Driver-action budgets for the registry queries that used to be the
+most job-heavy (ROADMAP item 2; perfbench's ``driver_bound`` workload).
+
+Each query is built and forced with the noop sink under its own job
+group, and every Spark job the group ran is counted — the pins and
+collects inside the query function as well as the sink's own. Measured
+at sf0.001 on local[4]: psi_drift 14, robust_value_stats 17,
+streaming_decayed 14 (35, 33 and 35 before the quantile picks became
+one aggregation and the bounded edge, count and decay results were
+collected once). A query that grows an eager action fails here."""
+
+from __future__ import annotations
+
+import pytest
+
+import __spark_entry__ as entry
+
+JOB_BUDGET = {
+    "psi_drift": 22,
+    "robust_value_stats": 20,
+    "streaming_decayed": 20,
+}
+
+
+def _jobs(spark, sf_dir, name):
+    sc = spark.sparkContext
+    group = f"job-budget-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        df = entry.queries()[name](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc._jsc.clearJobGroup()
+    # job starts reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", JOB_BUDGET)
+def test_query_job_budget(spark, sf_dir, name):
+    jobs = _jobs(spark, sf_dir, name)
+    assert jobs <= JOB_BUDGET[name], f"{name} ran {jobs} Spark jobs"

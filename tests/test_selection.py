@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -192,3 +194,144 @@ def test_robust_stats_small_frame(spark):
     assert b["n_trimmed"] == 0 and b["trimmed_mean"] is None
     with pytest.raises(ValueError, match="trim_q"):
         robust_stats(df, "g", "v", trim_q=0.5)
+
+
+def test_quantiles_refuse_duplicate_q(spark):
+    """A repeated q used to multiply rows (the two range joins matched
+    each copy); both faces now refuse it by name, and an empty q list
+    too."""
+    import pytest
+
+    from airflow_retail_etl_spark.operators.selection import (
+        global_quantiles,
+        grouped_quantiles,
+    )
+
+    df = spark.createDataFrame([("a", 1.0), ("a", 2.0)], "g string, v double")
+    with pytest.raises(ValueError, match="duplicate quantiles"):
+        grouped_quantiles(df, "g", "v", [0.5, 0.5])
+    with pytest.raises(ValueError, match="duplicate quantiles"):
+        global_quantiles(df, "v", [0.25, 0.5, 0.5])
+    with pytest.raises(ValueError, match="no quantiles"):
+        grouped_quantiles(df, "g", "v", [])
+
+
+def _check_oracle_compare():
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "check_oracle_under_test",
+        os.path.join(
+            os.path.dirname(__file__), "..", "tools", "check_oracle.py"
+        ),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.compare
+
+
+#: q ∈ {0, 1} pick the extreme order statistics (h = 1 and h = n)
+EDGE_QS = [0.0, 0.25, 0.5, 0.9, 1.0]
+
+NAN = float("nan")
+
+#: ties, one-value groups, NaN (orders last on both engines), signed
+#: zeros, NULL values and a NULL group
+EDGE_ROWS = (
+    [("ties", v) for v in (1.0, 1.0, 1.0, 2.0, 2.0, 3.0)]
+    + [("one", 5.0)]
+    + [("one_rep", 7.0)] * 3
+    + [("nan", v) for v in (1.0, NAN, 2.0, NAN)]
+    + [("all_nan", NAN)] * 2
+    + [("zero", v) for v in (-0.0, 0.0, -0.0, 1.5, -2.0)]
+    + [("nulls", None), ("nulls", 4.0), (None, 9.0)]
+)
+
+
+def _quantile_twins(spark, rows, qs):
+    """(spark, oracle) pandas frames for both quantile faces over
+    ``rows``: grouped through the ``_gq_block`` CTE, global through the
+    registry's ``global_quantiles`` SQL with its q list swapped for
+    ``qs``."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    from airflow_retail_etl_spark.operators.selection import (
+        global_quantiles,
+        grouped_quantiles,
+    )
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (g VARCHAR, v DOUBLE)")
+    if rows:
+        con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    con.execute("CREATE VIEW events AS SELECT v AS value FROM t")
+    grouped_sql = f"""
+    WITH src AS (
+        SELECT g, v FROM t WHERE v IS NOT NULL AND g IS NOT NULL
+    ), {entry._gq_block("x", "src", qs)}
+    SELECT g, q, quantile, CAST(n AS BIGINT) AS n FROM x_q
+    """
+    registry_qs = "[0.25, 0.5, 0.9, 0.99]"
+    global_sql = entry.oracle_sql()["global_quantiles"]
+    assert registry_qs in global_sql
+    global_sql = global_sql.replace(registry_qs, repr([float(q) for q in qs]))
+    sdf = spark.createDataFrame(rows, "g string, v double")
+    out = {
+        "grouped": (
+            grouped_quantiles(sdf, "g", "v", qs).toPandas(),
+            con.sql(grouped_sql).df(),
+        ),
+        "global": (
+            global_quantiles(sdf, "v", qs).toPandas(),
+            con.sql(global_sql).df(),
+        ),
+    }
+    con.close()
+    return out
+
+
+def test_quantile_picks_match_duckdb_on_edge_values(spark):
+    """The one-aggregation order-statistic pick is bit-exact against the
+    DuckDB twins (compared as tools/check_oracle.py does) on ties,
+    one-value groups, q ∈ {0, 1}, NaN and signed zeros; an all-NULL
+    input returns no rows on both engines."""
+    compare = _check_oracle_compare()
+    for face, (s, o) in _quantile_twins(spark, EDGE_ROWS, EDGE_QS).items():
+        assert len(s) > 0
+        assert compare(face, s, o) == [], face
+    all_null = [("a", None), ("b", None)]
+    for face, (s, o) in _quantile_twins(spark, all_null, EDGE_QS).items():
+        assert len(s) == len(o) == 0, face
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.sampled_from(["a", "b", "c", None]),
+            st.one_of(
+                st.none(),
+                st.sampled_from([-2.0, -0.0, 0.0, 0.5, 1.0, 3.25, NAN]),
+                st.integers(-50, 50).map(float),
+            ),
+        ),
+        max_size=40,
+    ),
+    # grid qs: DuckDB reads a q literal as DECIMAL, exact on this grid
+    qs=st.lists(
+        st.integers(0, 20).map(lambda i: i / 20),
+        min_size=1,
+        max_size=4,
+        unique=True,
+    ),
+)
+def test_quantile_picks_match_duckdb_property(spark, rows, qs):
+    compare = _check_oracle_compare()
+    for face, (s, o) in _quantile_twins(spark, rows, qs).items():
+        assert compare(face, s, o) == [], face
