@@ -1472,6 +1472,7 @@ def q_rolling_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit column recomputes each window from raw events (affordable at
     oracle scale, the thing the sketch exists to avoid at 100 TB)."""
     from airflow_retail_etl_spark.operators import cardinality
+    from airflow_retail_etl_spark.operators.mart_state import trailing_windows
 
     ev = adapters.staging_events(spark, sf_dir)
     # NOT materialized, by measurement (round 12): unlike
@@ -1484,41 +1485,23 @@ def q_rolling_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, ["event_date"], "user_id", p=_ROLL_P
     )
     days = regs.select("event_date").distinct()
-    lo = F.date_sub(F.col("d.event_date"), _ROLL_WINDOW - 1)
-    in_window = (F.col("r.event_date") <= F.col("d.event_date")) & (
-        F.col("r.event_date") >= lo
-    )
     merged = (
-        days.alias("d")
-        .join(regs.alias("r"), in_window)
-        .groupBy(
-            F.col("d.event_date").alias("window_end"),
-            F.col("r.reg").alias("reg"),
-        )
-        .agg(F.max("r.mx").alias("mx"))
+        trailing_windows(regs, days, _ROLL_WINDOW, "event_date")
+        .groupBy("window_end", "reg")
+        .agg(F.max("mx").alias("mx"))
     )
     est = cardinality.hll_fold(merged, ["window_end"], p=_ROLL_P)
     n_days = (
-        days.alias("d")
-        .join(
-            days.select(F.col("event_date").alias("src_date")).alias("r"),
-            (F.col("r.src_date") <= F.col("d.event_date"))
-            & (F.col("r.src_date") >= lo),
-        )
-        .groupBy(F.col("d.event_date").alias("window_end"))
+        trailing_windows(days, days, _ROLL_WINDOW, "event_date")
+        .groupBy("window_end")
         .agg(F.count(F.lit(1)).cast("long").alias("n_days"))
     )
     exact = (
-        days.alias("d")
-        .join(
-            ev.select(
-                F.col("event_date").alias("src_date"), "user_id"
-            ).alias("e"),
-            (F.col("e.src_date") <= F.col("d.event_date"))
-            & (F.col("e.src_date") >= lo),
+        trailing_windows(
+            ev.select("event_date", "user_id"), days, _ROLL_WINDOW, "event_date"
         )
-        .groupBy(F.col("d.event_date").alias("window_end"))
-        .agg(F.count_distinct("e.user_id").alias("exact_distinct"))
+        .groupBy("window_end")
+        .agg(F.count_distinct("user_id").alias("exact_distinct"))
     )
     return (
         est.join(n_days, "window_end")

@@ -45,6 +45,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from airflow_retail_etl_spark.functions import xhash
+from airflow_retail_etl_spark.operators.mart_state import trailing_windows
 
 
 def _positions(col: Column, depth: int, width: int) -> list[Column]:
@@ -591,8 +592,6 @@ def rolling_heavy_hitters(
         raise ValueError(
             f"threshold_frac must be in (0, 1], got {threshold_frac}"
         )
-    if window_days < 1:
-        raise ValueError(f"window_days must be >= 1, got {window_days}")
     from airflow_retail_etl_spark.functions.partitioning import spread
 
     occ0 = occurrences.select(
@@ -640,13 +639,8 @@ def rolling_heavy_hitters(
         )
         .localCheckpoint(eager=True)
     )
-    days = totals.select(F.col("day").alias("wd"))
-    span = F.date_sub(F.col("wd"), window_days - 1)
-    mapping = days.join(
-        totals.select(F.col("day").alias("__d"), "__dn"),
-        (F.col("__d") >= span) & (F.col("__d") <= F.col("wd")),
-    )
-    thr = mapping.groupBy("wd").agg(
+    mapping = trailing_windows(totals, totals, window_days, "day")
+    thr = mapping.groupBy("window_end").agg(
         F.greatest(
             F.lit(1).cast("long"),
             F.ceil(F.lit(threshold_frac) * F.sum("__dn")),
@@ -662,17 +656,13 @@ def rolling_heavy_hitters(
     #   showed the whole merge subtree replicated FOUR times (one per
     #   broadcast build — exchange reuse does not dedup across the
     #   aliased builds), the r10 materialize-before-broadcast law.
-    from airflow_retail_etl_spark.functions.partitioning import spread
-
     wcells = (
         spread(
-            mapping.select("wd", F.col("__d").alias("day")).join(
-                cells, "day"
-            ),
-            "wd",
+            mapping.select("window_end", "day").join(cells, "day"),
+            "window_end",
             "idx",
         )
-        .groupBy("wd", "idx")
+        .groupBy("window_end", "idx")
         .agg(F.sum("c").alias("c"))
         .localCheckpoint(eager=True)
     )
@@ -689,23 +679,20 @@ def rolling_heavy_hitters(
             for j, p in enumerate(_bound_positions(depth, width))
         ],
     )
-    wocc = hocc.join(
-        F.broadcast(mapping.select("wd", F.col("__d").alias("day"))),
-        "day",
-    )
-    probed = wocc.join(F.broadcast(thr), "wd")
+    wocc = hocc.join(F.broadcast(mapping.select("window_end", "day")), "day")
+    probed = wocc.join(F.broadcast(thr), "window_end")
     colnames = []
     for j in range(depth):
         cj = F.broadcast(
             wcells.select(
-                F.col("wd").alias(f"__w{j}"),
+                F.col("window_end").alias(f"__w{j}"),
                 F.col("idx").alias(f"__i{j}"),
                 F.col("c").alias(f"__c{j}"),
             )
         )
         probed = probed.join(
             cj,
-            (F.col("wd") == F.col(f"__w{j}"))
+            (F.col("window_end") == F.col(f"__w{j}"))
             & (F.col(f"__pos{j}") == F.col(f"__i{j}")),
         )
         colnames.append(f"__c{j}")
@@ -713,7 +700,7 @@ def rolling_heavy_hitters(
         "cms_est", F.least(*[F.col(c) for c in colnames])
     ).filter(F.col("cms_est") >= F.col("__thr"))
     return (
-        survivors.groupBy(F.col("wd").alias("window_end"), "value")
+        survivors.groupBy("window_end", "value")
         .agg(
             # each contracted row carries __w occurrences — the exact
             # count is the weight sum (≡ count(1) on the raw grain;

@@ -100,6 +100,14 @@ def kpi_cells(
     )
 
 
+def _kpi_sums() -> list[Column]:
+    """The additive state columns summed back to their state types."""
+    return [
+        F.sum(c).cast(_CENT if c == "revenue_cents" else "long").alias(c)
+        for c in KPI_ADDITIVE
+    ]
+
+
 def kpi_fold(cells: DataFrame, group_keys: Sequence[str]) -> DataFrame:
     """Merge KPI cells to ``group_keys`` grain — the linear fold.
 
@@ -110,13 +118,9 @@ def kpi_fold(cells: DataFrame, group_keys: Sequence[str]) -> DataFrame:
     what makes the state MERGEABLE: lifetime reads, range reads, and
     trailing windows are all this one function over different slices.
     """
-    aggs = [
-        F.sum(c).cast(_CENT if c == "revenue_cents" else "long").alias(c)
-        for c in KPI_ADDITIVE
-    ]
     if group_keys:
-        return cells.groupBy(*group_keys).agg(*aggs)
-    return cells.agg(*aggs)
+        return cells.groupBy(*group_keys).agg(*_kpi_sums())
+    return cells.agg(*_kpi_sums())
 
 
 def refresh_day(
@@ -132,41 +136,65 @@ def refresh_day(
     return kept.unionByName(day_cells)
 
 
-def kpi_read(
-    cells: DataFrame,
-    regs: DataFrame,
-    keys: Sequence[str],
-    *,
-    p: int,
-    rate_dp: int = 6,
+def trailing_windows(
+    rows: DataFrame, days: DataFrame, window_days: int, date_col: str
 ) -> DataFrame:
-    """Read the mart at ``keys`` grain from state alone: fold the
-    additive cells, MAX-merge the HLL registers, estimate distinct
-    users, and derive the funnel rates — no raw-event scan.
+    """``rows`` once per trailing window that contains its ``date_col``,
+    tagged with that window's ``window_end``.
 
-    ``regs`` is a ``cardinality.hll_registers`` table whose keys are a
-    superset of ``keys`` (typically keys + the day column); the merge
-    law (MAX per register) collapses the extra grain. Rates are rounded
-    BEFORE publication (transcendental/ratio policy: one division on
-    exact integer inputs, then round — engine- and layout-stable).
-    """
-    from airflow_retail_etl_spark.operators import cardinality
+    Every ``date_col`` value of ``days`` (one row per present day) ends
+    one window ``[end − window_days + 1, end]``; the first
+    window_days − 1 windows are the ramp-up head and hold fewer days.
+    Grouping the result by ``window_end`` (plus the state's own keys)
+    and merging is how every rolling face reads its per-day state: the
+    range join touches |days| · window_days state rows per state key,
+    independent of corpus size.
 
-    add = kpi_fold(cells, keys)
-    merged = regs.groupBy(*keys, "reg").agg(F.max("mx").alias("mx"))
-    est = cardinality.hll_fold(merged, list(keys), p=p).select(
-        *keys, F.col("estimate").alias("unique_users_est")
+    Both join inputs carry their day under an alias (``rows`` gets its
+    ``date_col`` back on output), so the broadcast side of every window
+    join over the same ``days`` — including ``trailing_windows(days,
+    days, …)``, the window's day count — is one canonical plan that
+    Spark's exchange reuse broadcasts once per query."""
+    if window_days < 1:
+        raise ValueError(
+            f"trailing_windows: window_days must be >= 1, got {window_days}"
+        )
+    end, day = F.col("window_end"), F.col("__day")
+    return (
+        days.select(F.col(date_col).alias("window_end"))
+        .join(
+            rows.withColumnRenamed(date_col, "__day"),
+            (day <= end) & (day >= F.date_sub(end, window_days - 1)),
+        )
+        .withColumnRenamed("__day", date_col)
     )
-    # LEFT join (round-12 advice): a grain whose rows all carry NULL
-    # user_id has cells but no registers — an inner join would silently
-    # drop its views/revenue from the mart. Estimate defaults to 0.0
-    # (the HLL of an empty user set); the oracle twins mirror the LEFT
-    # JOIN + COALESCE so the contract stays cross-engine exact.
+
+
+def _kpi_publish(
+    add: DataFrame, est: DataFrame, keys: Sequence[str], *extra: str
+) -> DataFrame:
+    """The published KPI row: folded additive cells (``add``) LEFT-joined
+    to the HLL estimate, revenue as double, and the two funnel rates.
+
+    LEFT join (round-12 advice): a grain whose rows all carry NULL
+    user_id has cells but no registers — an inner join would silently
+    drop its views/revenue from the mart. The estimate defaults to 0.0
+    (the HLL of an empty user set); the oracle twins mirror the LEFT
+    JOIN + COALESCE so the contract stays cross-engine exact. Rates are
+    rounded to 6 dp BEFORE publication (ratio policy: one division on
+    exact integer inputs, then round — engine- and layout-stable)."""
     joined = add.join(est, list(keys), "left") if keys else add.crossJoin(
         F.broadcast(est)
     )
+
+    def rate(num: str) -> Column:
+        return F.round(
+            safe_ratio(F.col(num).cast("double"), F.col("views")), 6
+        )
+
     return joined.select(
         *keys,
+        *extra,
         "views",
         "carts",
         "purchases",
@@ -175,14 +203,36 @@ def kpi_read(
         F.coalesce("unique_users_est", F.lit(0.0)).alias(
             "unique_users_est"
         ),
-        F.round(
-            safe_ratio(F.col("carts").cast("double"), F.col("views")),
-            rate_dp,
-        ).alias("cart_rate"),
-        F.round(
-            safe_ratio(F.col("purchases").cast("double"), F.col("views")),
-            rate_dp,
-        ).alias("purchase_rate"),
+        rate("carts").alias("cart_rate"),
+        rate("purchases").alias("purchase_rate"),
+    )
+
+
+def _hll_estimate(
+    regs: DataFrame, keys: Sequence[str], *, p: int
+) -> DataFrame:
+    """MAX-merge HLL registers to ``keys`` grain and estimate distinct
+    users as ``unique_users_est``."""
+    from airflow_retail_etl_spark.operators import cardinality
+
+    merged = regs.groupBy(*keys, "reg").agg(F.max("mx").alias("mx"))
+    return cardinality.hll_fold(merged, list(keys), p=p).select(
+        *keys, F.col("estimate").alias("unique_users_est")
+    )
+
+
+def kpi_read(
+    cells: DataFrame, regs: DataFrame, keys: Sequence[str], *, p: int
+) -> DataFrame:
+    """Read the mart at ``keys`` grain from state alone: fold the
+    additive cells, MAX-merge the HLL registers, estimate distinct
+    users, and derive the funnel rates — no raw-event scan.
+
+    ``regs`` is a ``cardinality.hll_registers`` table whose keys are a
+    superset of ``keys`` (typically keys + the day column); the merge
+    law (MAX per register) collapses the extra grain."""
+    return _kpi_publish(
+        kpi_fold(cells, keys), _hll_estimate(regs, keys, p=p), keys
     )
 
 
@@ -193,87 +243,37 @@ def rolling_kpis(
     window_days: int,
     p: int,
     date_col: str = "event_date",
-    rate_dp: int = 6,
-    materialize: bool = True,
 ) -> DataFrame:
     """Trailing ``window_days``-day KPI windows, one row per window end,
-    computed ENTIRELY from per-day state: additive cells join ≤
-    window_days predecessor days and SUM (linear merge); registers
-    MAX-merge per window (idempotent). Both joins are calendar-bounded —
-    |days|² × state-grain row touches, independent of corpus size. The
-    first window_days-1 windows fold fewer days (ramp-up head, reported
-    via n_days). ``cells``/``regs`` must be at (day,) grain (keys=[]).
+    computed ENTIRELY from per-day state: additive cells SUM over each
+    :func:`trailing_windows` window (linear merge); registers MAX-merge
+    per window (idempotent), published like :func:`kpi_read`. Both
+    window reads are calendar-bounded — independent of corpus size. The
+    ramp-up head is reported via n_days. ``cells``/``regs`` must be at
+    (day,) grain (keys=[]).
 
-    ``materialize`` (default on) localCheckpoints both state frames
-    before the window joins — the round-10 materialize-before-broadcast
-    rule: the calendar-bounded state is derived from a corpus-sized
-    subtree, and un-materialized it would re-execute that subtree once
-    per join branch (days derivation + both window sides ⇒ 4 raw scans;
-    measured 6.4 s → ~2 s warm at sf0.1 where single-row-group scans
-    serialize the re-derivations). In production the states are
-    PERSISTED tables and this flag is moot — it makes the from-raw query
-    face match the persisted-state cost shape."""
-    from airflow_retail_etl_spark.operators import cardinality
-
-    if materialize:
-        cells = cells.localCheckpoint(eager=True)
-        regs = regs.localCheckpoint(eager=True)
+    Both state frames are localCheckpointed before the window joins —
+    the round-10 materialize-before-broadcast rule: the calendar-bounded
+    state is derived from a corpus-sized subtree, and un-materialized it
+    would re-execute that subtree once per join branch (days derivation
+    + both window sides ⇒ 4 raw scans; measured 6.4 s → ~2 s warm at
+    sf0.1 where single-row-group scans serialize the re-derivations). In
+    production the states are PERSISTED tables and the pins are cheap
+    re-reads."""
+    cells = cells.localCheckpoint(eager=True)
+    regs = regs.localCheckpoint(eager=True)
     days = cells.select(date_col).distinct()
-    lo = F.date_sub(F.col(f"d.{date_col}"), window_days - 1)
-    in_win = (F.col(f"s.{date_col}") <= F.col(f"d.{date_col}")) & (
-        F.col(f"s.{date_col}") >= lo
-    )
     win_add = (
-        days.alias("d")
-        .join(cells.alias("s"), in_win)
-        .groupBy(F.col(f"d.{date_col}").alias("window_end"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_days"),
-            *[
-                F.sum(f"s.{c}")
-                .cast(_CENT if c == "revenue_cents" else "long")
-                .alias(c)
-                for c in KPI_ADDITIVE
-            ],
-        )
+        trailing_windows(cells, days, window_days, date_col)
+        .groupBy("window_end")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_days"), *_kpi_sums())
     )
-    reg_in_win = (F.col(f"r.{date_col}") <= F.col(f"d.{date_col}")) & (
-        F.col(f"r.{date_col}") >= lo
+    est = _hll_estimate(
+        trailing_windows(regs, days, window_days, date_col),
+        ["window_end"],
+        p=p,
     )
-    win_regs = (
-        days.alias("d")
-        .join(regs.alias("r"), reg_in_win)
-        .groupBy(
-            F.col(f"d.{date_col}").alias("window_end"),
-            F.col("r.reg").alias("reg"),
-        )
-        .agg(F.max("r.mx").alias("mx"))
-    )
-    est = cardinality.hll_fold(win_regs, ["window_end"], p=p).select(
-        "window_end", F.col("estimate").alias("unique_users_est")
-    )
-    # LEFT join for the same reason as kpi_read: a window whose days
-    # carry no registers (all-NULL users) must keep its additive KPIs.
-    return win_add.join(est, "window_end", "left").select(
-        "window_end",
-        "n_days",
-        "views",
-        "carts",
-        "purchases",
-        F.col("revenue_cents").cast("double").alias("revenue"),
-        "n_events",
-        F.coalesce("unique_users_est", F.lit(0.0)).alias(
-            "unique_users_est"
-        ),
-        F.round(
-            safe_ratio(F.col("carts").cast("double"), F.col("views")),
-            rate_dp,
-        ).alias("cart_rate"),
-        F.round(
-            safe_ratio(F.col("purchases").cast("double"), F.col("views")),
-            rate_dp,
-        ).alias("purchase_rate"),
-    )
+    return _kpi_publish(win_add, est, ["window_end"], "n_days")
 
 
 def moment_cells(
@@ -374,30 +374,23 @@ def rolling_moments(
     *,
     window_days: int,
     date_col: str = "event_date",
-    materialize: bool = True,
 ) -> DataFrame:
     """Trailing ``window_days``-day mean/variance/stddev per window end,
     ENTIRELY from per-day moment state (calendar²-bounded window sums of
     exact DECIMAL cells — the volatility dashboard that would otherwise
     rescan raw rows once per window). Same ramp-up-head contract as the
-    sibling rolling faces (n_days reports coverage); ``materialize``
-    follows the measured rule (two branches consume the state)."""
-    if materialize:
-        cells = cells.localCheckpoint(eager=True)
+    sibling rolling faces (n_days reports coverage); the state is
+    pinned first, by the measured rule (two branches consume it)."""
+    cells = cells.localCheckpoint(eager=True)
     days = cells.select(date_col).distinct()
-    lo = F.date_sub(F.col(f"d.{date_col}"), window_days - 1)
-    in_win = (F.col(f"s.{date_col}") <= F.col(f"d.{date_col}")) & (
-        F.col(f"s.{date_col}") >= lo
-    )
     win = (
-        days.alias("d")
-        .join(cells.alias("s"), in_win)
-        .groupBy(F.col(f"d.{date_col}").alias("window_end"))
+        trailing_windows(cells, days, window_days, date_col)
+        .groupBy("window_end")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_days"),
-            F.sum("s.n").cast("long").alias("n"),
-            F.sum("s.sx").alias("sx"),
-            F.sum("s.sxx").alias("sxx"),
+            F.sum("n").cast("long").alias("n"),
+            F.sum("sx").alias("sx"),
+            F.sum("sxx").alias("sxx"),
         )
     )
     return win.select(

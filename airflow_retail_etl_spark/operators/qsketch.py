@@ -70,7 +70,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from airflow_retail_etl_spark.functions import xhash
-from airflow_retail_etl_spark.functions.columns import pub_round
+from airflow_retail_etl_spark.functions.columns import (
+    double_array,
+    pub_round,
+)
+from airflow_retail_etl_spark.operators.mart_state import trailing_windows
 
 #: level bits — the low 60 bits of the md5 u64 fit a positive signed
 #: BIGINT in both engines (the same headroom trick as HLL's rest bits),
@@ -263,10 +267,8 @@ def sample_quantiles(
             F.collect_list(F.struct(F.col("v"), F.col("h")))
         ).alias("__arr"),
     )
-    spark = survivors.sparkSession
-    qdf = spark.createDataFrame([(float(q),) for q in qs], "q double")
     targets = (
-        grouped.crossJoin(F.broadcast(qdf))
+        grouped.select("*", F.explode(double_array(qs)).alias("q"))
         .withColumn("__m", F.size("__arr").cast("long"))
         .withColumn(
             "hpos",
@@ -342,36 +344,16 @@ def rolling_quantiles(
     O(1/√cap) bound speaks about. Windows with fewer than
     ``window_days`` source days (the calendar head) fold fewer days —
     n_days reports it, same contract as rolling_distinct_hll."""
-    if window_days < 1:
-        raise ValueError(f"window_days must be >= 1, got {window_days}")
-    # materialize the calendar-bounded state (≤ days · ~cap rows) before
-    # the window joins: `days` and `merged` both consume it, and
-    # un-materialized each branch re-runs the corpus-sized sketch build
-    # (the r10 materialize rule — same fix as mart_state.rolling_kpis)
+    # pinned: `days` and every window read consume the calendar-bounded
+    # state (≤ days · ~cap rows), and un-materialized each branch re-runs
+    # the corpus-sized sketch build (the r10 materialize rule)
     state = qsketch_state(
         df, [date_col], value_col, key_col, cap=cap
     ).localCheckpoint(eager=True)
     days = state.select(date_col).distinct()
-    back = window_days - 1
-    lo = F.date_sub(F.col(f"d.{date_col}"), back)
-    in_window = (F.col(f"s.{date_col}") <= F.col(f"d.{date_col}")) & (
-        F.col(f"s.{date_col}") >= lo
-    )
-    merged = (
-        days.alias("d")
-        .join(state.alias("s"), in_window)
-        .select(
-            F.col(f"d.{date_col}").alias("window_end"),
-            "s.thr",
-            "s.v",
-            "s.h",
-            "s.lvl",
-        )
-    )
     # The r14 materialize audit A/B-probed two further checkpoint sites
-    # here (the requantize survivors feeding sample_quantiles' three
-    # join consumers, and the tiny est frame feeding the audit
-    # broadcast + final join) against this 51-exchange plan — and
+    # here (the requantize survivors feeding sample_quantiles, and the
+    # tiny est frame feeding the audit broadcast + final join) — and
     # REVERTED both: isolated pretouched-JVM probes read sf1 warm
     # 5.48 s plain vs 6.68-6.72 s with either materialization (sf0.1
     # warm flat at ~3.5-3.6 s; only COLD improved, 8.9 → 6.3 s).
@@ -380,34 +362,19 @@ def rolling_quantiles(
     # rolling_distinct_hll precedent (SCALING_HISTORY
     # r14_materialize_audit). The exchange count alone is the TELL,
     # not the verdict.
+    merged = trailing_windows(state, days, window_days, date_col)
     est = sample_quantiles(
         requantize(merged, ["window_end"], cap=cap), ["window_end"], qs
     )
     n_days = (
-        days.alias("d")
-        .join(
-            days.select(F.col(date_col).alias("src_date")).alias("r"),
-            (F.col("r.src_date") <= F.col(f"d.{date_col}"))
-            & (F.col("r.src_date") >= lo),
-        )
-        .groupBy(F.col(f"d.{date_col}").alias("window_end"))
+        trailing_windows(days, days, window_days, date_col)
+        .groupBy("window_end")
         .agg(F.count(F.lit(1)).cast("long").alias("n_days"))
     )
     raw = df.filter(
         F.col(value_col).isNotNull() & F.col(key_col).isNotNull()
-    ).select(
-        F.col(date_col).alias("src_date"),
-        F.col(value_col).cast("double").alias("rv"),
-    )
-    wrows = (
-        days.alias("d")
-        .join(
-            raw.alias("e"),
-            (F.col("e.src_date") <= F.col(f"d.{date_col}"))
-            & (F.col("e.src_date") >= lo),
-        )
-        .select(F.col(f"d.{date_col}").alias("window_end"), "e.rv")
-    )
+    ).select(date_col, F.col(value_col).cast("double").alias("rv"))
+    wrows = trailing_windows(raw, days, window_days, date_col)
     # one audit pass: after the broadcast est join every (window_end, q)
     # group sees all of that window's raw rows, so the group's row count
     # IS n_exact — fusing it into the rank aggregation saves a second

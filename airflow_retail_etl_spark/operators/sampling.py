@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from airflow_retail_etl_spark.functions import xhash
 from airflow_retail_etl_spark.functions.columns import pub_round
+from airflow_retail_etl_spark.operators.mart_state import trailing_windows
 from airflow_retail_etl_spark.operators.selection import global_cumsum
 
 #: u is uniform on [0, 2^64); keep iff u < fraction · 2^64
@@ -709,52 +710,30 @@ def rolling_sample(
     exists to avoid at 100 TB) and ``rel_err`` is the realized relative
     error. Calendar-head windows fold fewer days — n_days reports it,
     same contract as rolling_distinct_hll."""
-    if window_days < 1:
-        raise ValueError(f"window_days must be >= 1, got {window_days}")
-    # materialize the calendar-bounded state (≤ days · k rows) before
-    # the window joins: `days` and `merged` both consume it, and
-    # un-materialized each branch re-runs the corpus-sized state build
-    # (the r10 materialize rule — same fix as mart_state.rolling_kpis)
+    # pinned: `days` and every window read consume the calendar-bounded
+    # state (≤ days · k rows), and un-materialized each branch re-runs
+    # the corpus-sized state build (the r10 materialize rule)
     state = sample_state(
         df, [date_col], key_col, k=k, seed=seed
     ).localCheckpoint(eager=True)
     days = state.select(date_col).distinct()
-    back = window_days - 1
-    lo = F.date_sub(F.col(f"d.{date_col}"), back)
-    in_window = (F.col(f"s.{date_col}") <= F.col(f"d.{date_col}")) & (
-        F.col(f"s.{date_col}") >= lo
+    sampled = sample_read(
+        trailing_windows(state, days, window_days, date_col),
+        ["window_end"],
+        k=k,
     )
-    merged = (
-        days.alias("d")
-        .join(state.alias("s"), in_window)
-        .select(
-            F.col(f"d.{date_col}").alias("window_end"), "s.h", "s.v"
-        )
-    )
-    sampled = sample_read(merged, ["window_end"], k=k)
     n_days = (
-        days.alias("d")
-        .join(
-            days.select(F.col(date_col).alias("src_date")).alias("r"),
-            (F.col("r.src_date") <= F.col(f"d.{date_col}"))
-            & (F.col("r.src_date") >= lo),
-        )
-        .groupBy(F.col(f"d.{date_col}").alias("window_end"))
+        trailing_windows(days, days, window_days, date_col)
+        .groupBy("window_end")
         .agg(F.count(F.lit(1)).cast("long").alias("n_days"))
     )
     raw = df.select(
-        F.col(date_col).alias("src_date"),
-        F.col(key_col).cast("string").alias("v"),
+        date_col, F.col(key_col).cast("string").alias("v")
     ).filter(F.col("v").isNotNull())
     exact = (
-        days.alias("d")
-        .join(
-            raw.alias("e"),
-            (F.col("e.src_date") <= F.col(f"d.{date_col}"))
-            & (F.col("e.src_date") >= lo),
-        )
-        .groupBy(F.col(f"d.{date_col}").alias("window_end"))
-        .agg(F.count_distinct("e.v").cast("long").alias("exact_distinct"))
+        trailing_windows(raw, days, window_days, date_col)
+        .groupBy("window_end")
+        .agg(F.count_distinct("v").cast("long").alias("exact_distinct"))
     )
     return (
         sampled.join(F.broadcast(n_days), "window_end")

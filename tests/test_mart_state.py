@@ -335,6 +335,50 @@ def test_rolling_kpis_keep_registerless_windows(spark):
     assert sum(r["views"] for r in out) == 3  # 1 + (1+2 ramp-up window)
 
 
+def test_trailing_windows_membership_with_calendar_gaps(spark):
+    """A row lands in exactly the windows [end − w + 1, end] whose end
+    is a present day and that contain its date — across a calendar gap
+    and the ramp-up head — and keeps its own columns."""
+    import datetime
+
+    days = [datetime.date(2024, 1, d) for d in (1, 2, 3, 6, 7, 20)]
+    rows = spark.createDataFrame(
+        [(d, i) for i, d in enumerate(days)], "event_date date, x int"
+    )
+    ends = rows.select("event_date").distinct()
+    for w in (1, 3, 7):
+        got = sorted(
+            (r["window_end"], r["event_date"], r["x"])
+            for r in mart_state.trailing_windows(
+                rows, ends, w, "event_date"
+            ).collect()
+        )
+        want = sorted(
+            (e, d, i)
+            for e in days
+            for i, d in enumerate(days)
+            if e - datetime.timedelta(days=w - 1) <= d <= e
+        )
+        assert got == want
+
+
+def test_rolling_faces_refuse_empty_windows(spark):
+    """window_days < 1 names the error instead of returning an empty
+    frame (no date can satisfy end − w + 1 ≤ d ≤ end when w = 0)."""
+    import pytest
+
+    ev = _events(spark)
+    cells = mart_state.kpi_cells(ev, [])
+    regs = cardinality.hll_registers(ev, ["event_date"], "user_id", p=8)
+    moments = mart_state.moment_cells(ev, [], "price")
+    with pytest.raises(ValueError, match="window_days must be >= 1"):
+        mart_state.rolling_kpis(cells, regs, window_days=0, p=8)
+    with pytest.raises(ValueError, match="window_days must be >= 1"):
+        mart_state.rolling_moments(moments, window_days=0)
+    with pytest.raises(ValueError, match="trailing_windows"):
+        mart_state.trailing_windows(cells, cells, -1, "event_date")
+
+
 def test_replay_helpers_reject_empty_batches():
     """Every replay helper fails fast with a named error on zero
     batches instead of an unnamed error deep in the fold."""

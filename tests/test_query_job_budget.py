@@ -7,7 +7,12 @@ collects inside the query function as well as the sink's own. Measured
 at sf0.001 on local[4]: psi_drift 14, robust_value_stats 17,
 streaming_decayed 14 (35, 33 and 35 before the quantile picks became
 one aggregation and the bounded edge, count and decay results were
-collected once). A query that grows an eager action fails here."""
+collected once). The rolling faces and the quantile-sketch reads are
+budgeted at exactly their measured counts: the window joins over one
+``days`` frame share a single broadcast (``trailing_windows``), and
+``sample_quantiles`` explodes a literal q array instead of joining a
+``createDataFrame`` q table. A query that grows an eager action fails
+here."""
 
 from __future__ import annotations
 
@@ -19,6 +24,14 @@ JOB_BUDGET = {
     "psi_drift": 22,
     "robust_value_stats": 20,
     "streaming_decayed": 20,
+    "rolling_mart": 14,
+    "rolling_volatility": 9,
+    "rolling_sample": 18,
+    "rolling_heavy_hitters": 21,
+    "rolling_distinct_hll": 13,
+    "rolling_quantiles": 22,
+    "streaming_quantiles": 24,
+    "quantile_sketch": 19,
 }
 
 

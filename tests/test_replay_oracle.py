@@ -1,7 +1,8 @@
-"""Stream ≡ batch certificates against the DuckDB oracle: every
-replay-backed registry query folds its input in batches and must equal
-its one-shot ``oracle_sql()`` twin bit-for-bit, compared the way
-``tools/check_oracle.py`` does."""
+"""State-read certificates against the DuckDB oracle, compared the way
+``tools/check_oracle.py`` does: every replay-backed registry query folds
+its input in batches, and every rolling query reads trailing windows
+from per-day state; each must equal its one-shot ``oracle_sql()`` twin
+bit-for-bit."""
 
 from __future__ import annotations
 
@@ -23,6 +24,15 @@ REPLAY_QUERIES = [
     "streaming_heavy_hitters",
     "streaming_quantiles",
     "streaming_decayed",
+]
+
+ROLLING_QUERIES = [
+    "rolling_mart",
+    "rolling_volatility",
+    "rolling_sample",
+    "rolling_heavy_hitters",
+    "rolling_distinct_hll",
+    "rolling_quantiles",
 ]
 
 
@@ -50,7 +60,7 @@ def compare():
     return _check_oracle().compare
 
 
-@pytest.mark.parametrize("name", REPLAY_QUERIES)
+@pytest.mark.parametrize("name", REPLAY_QUERIES + ROLLING_QUERIES)
 def test_replay_query_matches_one_shot_oracle(
     spark, sf_dir, oracle_con, compare, name
 ):
