@@ -1771,38 +1771,41 @@ def q_decayed_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_streaming_decayed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming decayed state, batch-replay form
-    (streaming.incremental.replay_decayed — the carried-scalar fold
-    fold_decayed_batch runs, minus the parquet store): the events
-    stream arrives in four TIME-ORDERED batches (contiguous
-    day-of-month ranges — the decayed carry is a sequential law, so
-    unlike the linear cell folds its batches advance in event time;
-    late days raise the backfill recipe in-plan), each reduced to
-    per-day DECIMAL cent cells, and each batch's days published by
-    resuming the λ=0.9 Horner fold FROM the carried unrounded acc.
-    Resuming a sequential fold is the identical IEEE operation sequence
-    as the one-shot fold, so the union of per-batch outputs is
+    (streaming.incremental.replay over mart_state.kpi_cells, read with
+    mart_state.decayed_read — the linear cell fold fold_cells persists,
+    minus the parquet store): the events stream arrives in four batches
+    (contiguous day-of-month ranges), each reduced to per-day DECIMAL
+    cent cells; the union folds to day grain (kpi_fold) and the λ=0.9
+    Horner read runs over the folded cells. The decayed value is linear
+    in the per-day cents and exact DECIMAL sums fold bit-identically in
+    any order or split (a late day included), so the replay is
     BIT-IDENTICAL to decayed_revenue — the oracle IS that one-shot SQL,
-    certifying stream ≡ batch for the decayed face (the sixth mergeable
-    state face, closing the replay set); store-backed redelivery
-    idempotence is test-pinned."""
+    certifying stream ≡ batch for the decayed face; store-backed
+    redelivery idempotence is test-pinned."""
     from airflow_retail_etl_spark.operators import mart_state
-    from airflow_retail_etl_spark.streaming.incremental import (
-        replay_decayed,
-    )
+    from airflow_retail_etl_spark.streaming.incremental import replay
 
     ev = adapters.staging_events(spark, sf_dir)
     dom = F.dayofmonth("event_date")
     batches = [
-        mart_state.kpi_cells(
-            ev.filter((dom >= lo) & (dom <= hi)),
+        ev.filter((dom >= lo) & (dom <= hi))
+        for lo, hi in ((1, 8), (9, 16), (17, 24), (25, 31))
+    ]
+    return replay(
+        batches,
+        lambda b: mart_state.kpi_cells(
+            b,
             [],
             view_value=VIEW,
             cart_value=CART,
             purchase_value=PURCHASE,
-        )
-        for lo, hi in ((1, 8), (9, 16), (17, 24), (25, 31))
-    ]
-    return replay_decayed(batches, "revenue_cents", lam=0.9)
+        ),
+        lambda cells: mart_state.decayed_read(
+            mart_state.kpi_fold(cells, ["event_date"]),
+            "revenue_cents",
+            lam=0.9,
+        ),
+    )
 
 
 def q_ewm_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2341,19 +2344,20 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: rolling heavy-hitter window shape: 7-day trailing windows, 1% of
-#: window occurrence mass, a deliberately narrow sketch (256×4) so
-#: collision-inflated estimates are live in the oracle check
+#: rolling heavy-hitter window shape: 7-day trailing windows, 0.2% of
+#: window occurrence mass (at 1% no user qualified at sf0.1), a
+#: deliberately narrow sketch (256×4) so collision-inflated estimates
+#: are live in the oracle check
 _RHH_WIDTH = 256
 _RHH_DEPTH = 4
-_RHH_FRAC = 0.01
+_RHH_FRAC = 0.002
 _RHH_DAYS = 7
 
 
 def q_rolling_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling heavy hitters from per-day CMS cells
     (frequency.rolling_heavy_hitters): the users dominating each 7-day
-    trailing window's event volume (≥ 1% of window occurrences), exact,
+    trailing window's event volume (≥ 0.2% of window occurrences), exact,
     with the sketch estimate as the audit column — the CMS twin of
     rolling_distinct_hll's register windows. The corpus is scanned ONCE
     into day-grain sparse cells; every window sketch is a
@@ -4869,14 +4873,15 @@ def q_perplexity_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT a single-partition ntile; the decile is integer arithmetic
     ((rank-1)·10 div N) so both engines bucket identically. Mean is
     DECIMAL-accumulated over the 6dp-rounded scores (transcendental
-    policy: round before any aggregation).
+    policy: round before any aggregation). The denominator N is the
+    grand total of the weight, which global_cumsum carries on its
+    offsets broadcast (total_col) — no separate count pass.
 
-    The doc-grain NLL table is materialized ONCE (localCheckpoint) and
-    shared between the rank pass and the denominator count — without it
-    the whole unigram pipeline (token explode → model fit → token join)
-    re-executes for the 1-row COUNT(*), nearly doubling the plan
-    (measured 25 exchanges/2 SMJs → 10/0 at sf0.01). Doc-grain is the
-    bounded grain, so the checkpoint is small at any corpus size."""
+    The doc-grain NLL table is materialized ONCE (localCheckpoint)
+    before the range repartition, whose bound sampling and checkpoint
+    would otherwise each re-run the whole unigram pipeline (token
+    explode → model fit → token join). Doc-grain is the bounded grain,
+    so the checkpoint is small at any corpus size."""
     from airflow_retail_etl_spark.operators import lm, selection
 
     docs = load_table(spark, sf_dir, "documents")
@@ -4891,9 +4896,9 @@ def q_perplexity_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.asc_nulls_first("avg_nll"), F.asc("doc_id")],
         "__one",
         out_col="rn",
+        total_col="__n",
     )
-    n = scored.agg(F.count(F.lit(1)).alias("__n"))
-    dec = ranked.crossJoin(F.broadcast(n)).withColumn(
+    dec = ranked.withColumn(
         "decile",
         (F.expr("((rn - 1) * 10) div __n") + 1).cast("int"),
     )
@@ -6189,9 +6194,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # streaming_decayed (NEW in round 14): the decayed family's
         # stream ≡ batch certificate — the sixth and final mergeable
         # state face to gain a streaming fold twin (r13 verdict item 4):
-        # replay_decayed resumes the Horner fold from a carried
-        # unrounded acc per time-ordered batch, bit-identical to the
-        # one-shot decayed_revenue (its oracle IS the one-shot SQL);
+        # replay over the linear kpi_cells, read by decayed_read of the
+        # folded cells, bit-identical to the one-shot decayed_revenue
+        # (its oracle IS the one-shot SQL);
         # rotates into the prefix next round per the one-round-lag
         # protocol
         "dim_upsert": q_dim_upsert,
@@ -9826,7 +9831,7 @@ def oracle_sql() -> dict[str, str]:
         "streaming_volatility": _streaming_volatility_sql(),
         "decayed_revenue": _decayed_revenue_sql(0.9),
         # the streaming replay is bit-identical to the one-shot by the
-        # resumed-Horner argument (q_streaming_decayed docstring), so
+        # linear-cell argument (q_streaming_decayed docstring), so
         # its oracle IS the one-shot SQL — the strongest stream ≡ batch
         # certificate the driver can check
         "streaming_decayed": _decayed_revenue_sql(0.9),

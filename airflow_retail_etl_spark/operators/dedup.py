@@ -547,7 +547,6 @@ def incremental_lsh_dedup(
     hash: str = "xxhash64",
     max_bucket_size: int | None = 10_000,
     index_shingles: DataFrame | None = None,
-    return_artifacts: bool = False,
     incoming_sigs: DataFrame | None = None,
     return_drops: bool = False,
 ) -> DataFrame:
@@ -569,16 +568,6 @@ def incremental_lsh_dedup(
     ``shingle_store`` rows for the next batch. Same ``max_bucket_size``
     skew backstop on both joins.
 
-    ``return_artifacts=True`` returns ``(survivors, bands, shingles)``
-    where the band and shingle frames are the SURVIVORS' index rows
-    derived from the signatures this call already computed (a semi-join
-    on the surviving ids) — identical rows to re-running
-    ``minhash_band_index``/``shingle_store`` on the survivors, without
-    re-shingling and re-hashing the batch. Callers that append to a
-    persisted index should use this form; the artifact bands are
-    UNCAPPED (the index stores every row — capping is a per-join
-    decision made at read time).
-
     ``incoming_sigs``: precomputed ``minhash_signatures`` of the batch
     (same kind/n/num_hashes/hash). The batch-sequential callers
     (streaming.incremental) checkpoint the signatures ONCE and feed them
@@ -594,9 +583,10 @@ def incremental_lsh_dedup(
             kind=kind, n=n, num_hashes=num_hashes, hash=hash,
         )
     )
-    inc_banded_raw = _banded(inc_sigs, bands, rows_per_band, hash)
     inc_banded = _cap_buckets(
-        inc_banded_raw, ["band", "bucket"], max_bucket_size
+        _banded(inc_sigs, bands, rows_per_band, hash),
+        ["band", "bucket"],
+        max_bucket_size,
     )
     ex_banded = _cap_buckets(
         index.select("id", "band", "bucket"), ["band", "bucket"],
@@ -675,15 +665,9 @@ def incremental_lsh_dedup(
         # documents, and every downstream (admitted rows, next-batch
         # index) is a cheap anti/semi join off it
         return drops
-    survivors = incoming.join(
+    return incoming.join(
         drops, incoming[id_col] == drops["drop_id"], "left_anti"
     )
-    if not return_artifacts:
-        return survivors
-    surv_ids = survivors.select(F.col(id_col).alias("id"))
-    surv_bands = inc_banded_raw.join(surv_ids, "id", "left_semi")
-    surv_shingles = inc_sh.join(surv_ids, "id", "left_semi")
-    return survivors, surv_bands, surv_shingles
 
 
 def _cap_buckets(
@@ -925,17 +909,9 @@ def simhash(
     toks = F.array_distinct(
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     )
-    if hash == "xxhash64":
-        def hash_fn(t):
-            return F.xxhash64(t)
-    elif hash == "md5":
-        def hash_fn(t):
-            return xhash.md5_long(t)
-    else:
-        raise ValueError(f"unknown hash family: {hash!r}")
     hashed = df.select(
         F.col(id_col).alias("id"),
-        F.transform(toks, hash_fn).alias("hashes"),
+        F.transform(toks, _gram_hasher(hash)).alias("hashes"),
     ).transform(_spread_id)
     hashes = F.col("hashes")
     n_tok = F.size(hashes)
@@ -1054,15 +1030,7 @@ def winnow_fingerprints(
     (functions.xhash.md5_long) so the DuckDB oracle replays fingerprints
     bit-exactly; production keeps xxhash64.
     """
-    if hash_family == "md5":
-        def hash_gram(g: Column) -> Column:
-            return xhash.md5_long(g)
-    elif hash_family == "xxhash64":
-        def hash_gram(g: Column) -> Column:
-            return F.xxhash64(g)
-    else:
-        raise ValueError(f"unknown hash_family {hash_family!r}")
-
+    hash_gram = _gram_hasher(hash_family)
     base = df.select(
         F.col(id_col).alias("id"),
         normalize_text(F.col(text_col)).alias("t"),
@@ -1095,7 +1063,6 @@ def winnow_overlap_pairs(
     *,
     min_shared: int = 2,
     max_doc_freq: int | None = 1_000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Pairs sharing ≥ ``min_shared`` winnowing fingerprints.
 
@@ -1106,17 +1073,17 @@ def winnow_overlap_pairs(
     makes short grams near-universal, and then the cap (not the join)
     must do the pruning.
 
-    ``materialize`` eagerly checkpoints the exploded index: it feeds the
+    The exploded index is eagerly checkpointed: it feeds the
     doc-frequency stats AND both self-join sides, and without pinning it
     each consumer would re-run the per-position hashing (the expensive
     leaf) — the checkpoint trades a small (id, fp) spill for 3× the hash
     compute.
     """
-    inv = fps.select("id", F.explode_outer("fps").alias("fp")).filter(
-        F.col("fp").isNotNull()
+    inv = (
+        fps.select("id", F.explode_outer("fps").alias("fp"))
+        .filter(F.col("fp").isNotNull())
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        inv = inv.localCheckpoint(eager=True)
     if max_doc_freq is not None:
         rare = (
             inv.groupBy("fp")
@@ -1236,7 +1203,6 @@ def shared_span_pairs(
     max_doc_freq: int | None = None,
     hash_family: str = "xxhash64",
     unsafe_large_cap: bool = False,
-    materialize_anchors: bool = False,
 ) -> DataFrame:
     """EXACT cross-document shared-substring spans (the plagiarism
     "diagonal method") — winnowing's exactness upgrade: not just WHICH
@@ -1290,7 +1256,7 @@ def shared_span_pairs(
         )
     anchors = _span_anchors(
         df, text_col, id_col, k=k, hash_family=hash_family,
-        max_doc_freq=max_doc_freq, materialize=materialize_anchors,
+        max_doc_freq=max_doc_freq,
     )
     a, b = anchors.alias("a"), anchors.alias("b")
     matches = a.join(
@@ -1326,14 +1292,13 @@ def _span_anchors(
     k: int,
     hash_family: str,
     max_doc_freq: int | None,
-    materialize: bool = False,
 ) -> DataFrame:
     """(id, pos, h): the hash of every positional char k-gram of the
     normalized text, materialized behind a spread exchange (the
     HOF-lambda trap: see _with_shingles), optionally doc-freq capped.
 
-    ``materialize`` localCheckpoints the raw anchor frame before reuse.
-    The capped plan does re-execute the per-char hashing scan FOUR
+    The anchor frame is deliberately NOT pinned before reuse. The
+    capped plan does re-execute the per-char hashing scan FOUR
     times (each self-join side plus each side's df-cap aggregation —
     the broadcast semi blocks exchange reuse; PLANS.md span_excise
     audit), but the recompute is CHEAPER than pinning: measured at sf1
@@ -1342,10 +1307,7 @@ def _span_anchors(
     and the uncapped md5 form regressed 128 s -> 238 s — the anchor
     scan is ~2 s of the total, while an eager 19M-row checkpoint adds
     a hard pre-AQE barrier plus never-freed RDD blocks that degrade
-    every later job in the session (348 s second run). Default False;
-    set True only where the hash scan (not the join) dominates — e.g.
-    very long documents with tiny match volume — and the caller
-    manages session lifetime."""
+    every later job in the session (348 s second run)."""
     hash_gram = _gram_hasher(hash_family)
     base = df.select(
         F.col(id_col).alias("id"),
@@ -1360,8 +1322,6 @@ def _span_anchors(
             )
         ).alias("pos0", "h"),
     ).select("id", (F.col("pos0") + 1).alias("pos"), "h")
-    if materialize:
-        anchors = anchors.localCheckpoint(eager=True)
     if max_doc_freq is not None:
         rare = (
             anchors.groupBy("h")
@@ -1394,7 +1354,7 @@ def span_cap_dropped(
     """
     anchors = _span_anchors(
         df, text_col, id_col, k=k, hash_family=hash_family,
-        max_doc_freq=None, materialize=False,
+        max_doc_freq=None,
     )
     hot = (
         anchors.groupBy("h")
@@ -1447,7 +1407,6 @@ def shared_span_pairs_cross(
     max_doc_freq: int | None = None,
     hash_family: str = "xxhash64",
     unsafe_large_cap: bool = False,
-    materialize_anchors: bool = False,
 ) -> DataFrame:
     """EXACT shared-substring spans BETWEEN two corpora (no self-pairs):
     every maximal substring ≥ ``min_len`` chars that a ``left`` document
@@ -1476,11 +1435,11 @@ def shared_span_pairs_cross(
         )
     la = _span_anchors(
         left, text_col, id_col, k=k, hash_family=hash_family,
-        max_doc_freq=max_doc_freq, materialize=materialize_anchors,
+        max_doc_freq=max_doc_freq,
     )
     ra = _span_anchors(
         right, text_col, id_col, k=k, hash_family=hash_family,
-        max_doc_freq=None, materialize=False,  # single consumer
+        max_doc_freq=None,
     )
     matches = la.alias("a").join(
         ra.alias("b"), F.col("a.h") == F.col("b.h")

@@ -65,7 +65,6 @@ def pagerank(
     damping: float = 0.85,
     checkpoint_every: int = 8,
     materialize: bool = True,
-    broadcast_state: bool = True,
     nodes_from_sources: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list: (node, pagerank).
@@ -87,20 +86,14 @@ def pagerank(
     deterministic, oracle-replicable, and how production link analysis is
     actually operated (bounded rounds per refresh).
 
-    ``broadcast_state`` (default True) broadcasts the node-sized state
-    into the per-iteration edge join. The hint matters: the state is a
-    derived plan whose size AQE cannot estimate, so without it the edge
-    join falls back to sort-merge — sorting the full edge list by string
-    key every iteration (measured at sf0.1: 3×SortMergeJoin, 11.2 s vs
-    4.1 s with the hint). Disable only when the node table itself is too
-    big to broadcast (billion-node graphs) — the algorithm is unchanged,
-    and the joins run shuffle-side.
+    The node-sized state is broadcast into the per-iteration edge join.
+    The hint matters: the state is a derived plan whose size AQE cannot
+    estimate, so without it the edge join falls back to sort-merge —
+    sorting the full edge list by string key every iteration (measured
+    at sf0.1: 3×SortMergeJoin, 11.2 s vs 4.1 s with the hint).
     """
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-
-    def _b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_state else df
 
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     if materialize:
@@ -125,7 +118,7 @@ def pagerank(
     # while the aggregation exchange it would remove only moves
     # map-side-combined (≈node-sized) partial sums. Keep the small
     # shuffle, not the big one.
-    e2 = e.join(_b(deg), "src")
+    e2 = e.join(F.broadcast(deg), "src")
     if materialize:
         e2 = e2.localCheckpoint(eager=True)
     if nodes_from_sources:
@@ -156,7 +149,7 @@ def pagerank(
 
     for i in range(n_iter):
         contrib = e2.join(
-            _b(state.select(F.col("node").alias("src"), "pr")),
+            F.broadcast(state.select(F.col("node").alias("src"), "pr")),
             "src",
         ).select(
             F.col("dst").alias("node"),
@@ -180,7 +173,7 @@ def pagerank(
             # below stays lazy (a join of two node-sized frames whose
             # lineage is already cut at ``nodes`` and ``sums``).
             sums = sums.localCheckpoint(eager=True)
-        state = nodes.join(_b(sums), "node", "left").select(
+        state = nodes.join(F.broadcast(sums), "node", "left").select(
             "node",
             F.round(
                 F.lit(base)
@@ -286,8 +279,6 @@ def label_propagation(
     label_col: str = "label",
     *,
     n_iter: int = 2,
-    materialize: bool = True,
-    broadcast_state: bool = True,
     nodes_from_sources: bool = False,
 ) -> DataFrame:
     """Semi-supervised label propagation: spread seed labels over the
@@ -312,24 +303,21 @@ def label_propagation(
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
     from pyspark.sql import Window
 
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if materialize:
-        e = e.localCheckpoint(eager=True)
+    e = edges.select(
+        F.col(src).alias("src"), F.col(dst).alias("dst")
+    ).localCheckpoint(eager=True)
     if nodes_from_sources:
         # same contract as pagerank: every node appears as a source
         # (symmetrized edge lists) — the node set is one src-keyed agg,
         # not a full-edge-list distinct
         nodes = e.select(F.col("src").alias("node")).distinct()
-        if materialize:
-            nodes = nodes.localCheckpoint(eager=True)
     else:
         nodes = (
             e.select(F.col("src").alias("node"))
             .union(e.select(F.col("dst").alias("node")))
             .distinct()
         )
-        if materialize:
-            nodes = nodes.localCheckpoint(eager=True)
+    nodes = nodes.localCheckpoint(eager=True)
     seed = seeds.select(
         F.col(node_col).alias("node"), F.col(label_col).alias("seed_label")
     )
@@ -337,16 +325,13 @@ def label_propagation(
         "node", "seed_label", F.col("seed_label").alias("label")
     )
 
-    def _b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_state else df
-
     w = Window.partitionBy("dst").orderBy(
         F.col("n").desc(), F.col("label").asc()
     )
     for _ in range(n_iter):
         votes = (
             e.join(
-                _b(
+                F.broadcast(
                     state.filter(F.col("label").isNotNull()).select(
                         F.col("node").alias("src"), "label"
                     )
@@ -361,14 +346,13 @@ def label_propagation(
             .filter(F.col("rn") == 1)
             .select(F.col("dst").alias("node"), F.col("label").alias("new_label"))
         )
-        if materialize:
-            # same rule as pagerank's contribution sums: materialize the
-            # node-sized vote winners BEFORE they feed a broadcast, so
-            # the build job never re-executes the edge-sized vote
-            # subtree (and lineage is cut every round without a separate
-            # state checkpoint)
-            best = best.localCheckpoint(eager=True)
-        state = state.join(_b(best), "node", "left").select(
+        # same rule as pagerank's contribution sums: materialize the
+        # node-sized vote winners BEFORE they feed a broadcast, so the
+        # build job never re-executes the edge-sized vote subtree (and
+        # lineage is cut every round without a separate state
+        # checkpoint)
+        best = best.localCheckpoint(eager=True)
+        state = state.join(F.broadcast(best), "node", "left").select(
             "node",
             "seed_label",
             F.coalesce("seed_label", "new_label", "label").alias("label"),

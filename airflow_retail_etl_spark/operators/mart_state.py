@@ -41,20 +41,19 @@ per-batch dynamic partition OVERWRITE gives replay idempotence — the CMS
 pattern, not HLL's MAX), with ``streaming.incremental.replay`` as the
 store-less batch face; the distinct-user half streams via
 ``streaming.incremental.fold_merged`` over ``cardinality.hll_registers``.
+The decayed reads (:func:`decayed_read`, :func:`ewm_stats`) keep no
+state of their own: they read the same folded cells.
 """
 
 from __future__ import annotations
 
-import datetime
 from collections.abc import Sequence
-from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from airflow_retail_etl_spark.functions.columns import (
     conditional_count,
-    double_array,
     pub_round,
     safe_ratio,
 )
@@ -401,6 +400,62 @@ def rolling_moments(
     )
 
 
+def _check_lam(lam: float) -> None:
+    if not 0.0 < lam < 1.0:
+        raise ValueError(f"lam must be in (0, 1), got {lam}")
+
+
+def _horner(arr: Column, lam: float) -> Column:
+    """One left-to-right fold ``acc ← acc·λ + x`` over ``arr`` from 0.0
+    — day-grain decay by repeated multiplication, never ``pow``."""
+    lam_lit = F.lit(float(lam))
+    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc * lam_lit + x)
+
+
+def _decayed_prefixes(
+    cells: DataFrame,
+    value_cols: Sequence[str],
+    *,
+    lam: float,
+    date_col: str,
+) -> tuple[DataFrame, Column, list[Column]]:
+    """The dense-calendar Horner pipeline behind :func:`decayed_read`
+    and :func:`ewm_stats`: one row per observed day of ``cells`` (with
+    the broadcast day arrays beside it), that day's 1-based calendar
+    position, and per value column the Horner fold over the calendar
+    prefix ending at that day.
+
+    Each value column is cast once to double; the calendar is dense
+    over [min, max] with gap days at 0.0, and every column's daily
+    values become ONE ordered array (bounded by the calendar, the
+    rolling faces' state-size argument). NULL-date cells are excluded:
+    a dateless cell has no position on the decay axis."""
+    _check_lam(lam)
+    vals = [f"__v{i}" for i in range(len(value_cols))]
+    series = cells.filter(F.col(date_col).isNotNull()).select(
+        F.col(date_col).alias("__d"),
+        *[F.col(c).cast("double").alias(v) for c, v in zip(value_cols, vals)],
+    )
+    bounds = series.agg(
+        F.min("__d").alias("__lo"), F.max("__d").alias("__hi")
+    )
+    cal = bounds.select(
+        F.explode(F.sequence("__lo", "__hi")).alias("__d"), "__lo"
+    )
+    dense = cal.join(series, "__d", "left").select(
+        "__lo", "__d", *[F.coalesce(v, F.lit(0.0)).alias(v) for v in vals]
+    )
+    days = F.array_sort(F.collect_list(F.struct("__d", *vals)))
+    arr = dense.groupBy("__lo").agg(
+        *[days.getField(v).alias(v) for v in vals]
+    )
+    idx = F.datediff(F.col(date_col), F.col("__lo")) + F.lit(1)
+    rows = series.select(F.col("__d").alias(date_col)).crossJoin(
+        F.broadcast(arr)
+    )
+    return rows, idx, [_horner(F.slice(v, F.lit(1), idx), lam) for v in vals]
+
+
 def decayed_read(
     cells: DataFrame,
     value_col: str,
@@ -424,187 +479,26 @@ def decayed_read(
     before publication. Never ``pow``: libm powers differ across
     engines; a fold of multiplies cannot.
 
-    Mergeability/incrementality law (test-pinned): the read is O(1) to
-    maintain — ``decayed(D+g) = decayed(D)·λ^g + S_{D+g}`` with λ^g by
-    repeated multiplication — so a streaming job carries one double per
-    grain, never re-reading history. This batch face recomputes every
-    prefix from the calendar² state (|days|-sized array broadcast), the
-    same audit-vs-production split as the rolling faces.
+    The read is linear in the per-day cells, so its streaming face is
+    the linear cell store: fold each batch's ``kpi_cells`` with
+    ``streaming.incremental.fold_cells`` / ``replay`` and read
+    ``decayed_read(kpi_fold(cells, [date_col]), …)`` — exact DECIMAL
+    sums fold bit-identically in any order or split, late days
+    included. The O(1) recurrence ``decayed(D+g) = decayed(D)·λ^g +
+    S_{D+g}`` is test-pinned.
 
     ``cells`` must be at (day,) grain with an exact (DECIMAL/integer)
     ``value_col``. Returns (date_col, n_days, decayed) for every
     observed day, ordered.
     """
-    if not 0.0 < lam < 1.0:
-        raise ValueError(f"lam must be in (0, 1), got {lam}")
-    lam_lit = F.lit(float(lam))
-    # NULL-date cells are excluded (a dateless cell has no position on
-    # the decay axis; left in, it would surface as a NULL output row)
-    series = cells.filter(F.col(date_col).isNotNull()).select(
-        F.col(date_col).alias("__d"),
-        F.col(value_col).cast("double").alias("__s"),
+    rows, idx, (s,) = _decayed_prefixes(
+        cells, [value_col], lam=lam, date_col=date_col
     )
-    # dense calendar: one row per day in [min, max], gaps at 0.0, then
-    # ONE ordered array of daily values (bounded by the calendar, the
-    # rolling faces' state-size argument)
-    bounds = series.agg(
-        F.min("__d").alias("__lo"), F.max("__d").alias("__hi")
-    )
-    cal = bounds.select(
-        F.explode(F.sequence("__lo", "__hi")).alias("__d"), "__lo"
-    )
-    dense = (
-        cal.join(series, "__d", "left")
-        .select("__lo", "__d", F.coalesce("__s", F.lit(0.0)).alias("__s"))
-    )
-    arr = dense.groupBy("__lo").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("__d", "__s"))),
-            lambda t: t["__s"],
-        ).alias("__arr")
-    )
-    obs = series.select(F.col("__d").alias(date_col))
-    idx = F.datediff(F.col(date_col), F.col("__lo")) + F.lit(1)
-    horner = F.aggregate(
-        F.slice(F.col("__arr"), F.lit(1), idx),
-        F.lit(0.0),
-        lambda acc, x: acc * lam_lit + x,
-    )
-    return (
-        obs.crossJoin(F.broadcast(arr))
-        .select(
-            date_col,
-            idx.cast("long").alias("n_days"),
-            F.round(horner, dp).alias("decayed"),
-        )
-        .orderBy(date_col)
-    )
-
-
-class DecayedCarry(NamedTuple):
-    """The whole streaming state of one decayed series: its first day,
-    the newest day folded, and the UNROUNDED decayed value on that day
-    (rounding the carry would break bit-equality with the one-shot
-    fold)."""
-
-    lo: datetime.date
-    last: datetime.date
-    acc: float
-
-
-def decayed_step(
-    cells: DataFrame,
-    carry: DecayedCarry | None,
-    value_col: str,
-    *,
-    lam: float,
-    date_col: str = "event_date",
-    dp: int = 6,
-) -> tuple[DataFrame | None, DecayedCarry | None]:
-    """One batch advance of :func:`decayed_read`'s O(1) incremental law
-    — the engine step behind the decayed family's STREAMING face
-    (``streaming.incremental.fold_decayed_batch`` / ``replay_decayed``):
-    given this batch's per-day exact state cells and the carry (None
-    for the first batch), return
-
-    - ``out``: (date_col, n_days, decayed) for every day observed in
-      the batch — each value the law ``decayed(D) = acc·λ^(D−last) +
-      Σ S_d·λ^(D−d)`` computed as ONE left-to-right Horner fold resumed
-      FROM the carried acc over the dense calendar (last, D]. Resuming
-      a sequential fold is the identical IEEE operation sequence as the
-      one-shot fold over [lo, D], so every published value is
-      BIT-IDENTICAL to :func:`decayed_read` of all cells delivered so
-      far — the stream ≡ batch certificate.
-    - ``new_carry``: (lo, last = batch max day, acc = the fold over the
-      whole batch calendar) — one double per series, the O(1) law made
-      literal.
-
-    The batch is read by ONE job: its day bounds, its day → value map
-    densified over the calendar, and the new acc folded in Spark. Those
-    are bounded by the batch calendar, so ``out`` is built over literal
-    days and a literal dense array (``double_array``), where Spark runs
-    the Horner fold on the same doubles — no pin, no broadcast. An
-    empty batch (no dated cells) returns ``(None, carry)``.
-
-    Batch days must be strictly NEWER than the carried ``last``: a late
-    day cannot be folded into an already-decayed scalar — the step
-    raises the backfill recipe (fold the late day's cells into the CELL
-    store, which is permutation-safe because cells are linear, and
-    re-read via decayed_read / replay from that day).
-    """
-    if not 0.0 < lam < 1.0:
-        raise ValueError(f"lam must be in (0, 1), got {lam}")
-    lam_lit = F.lit(float(lam))
-
-    def horner(arr: Column, acc0: Column) -> Column:
-        return F.aggregate(arr, acc0, lambda acc, x: acc * lam_lit + x)
-
-    acc0 = F.lit(0.0 if carry is None else float(carry.acc))
-    m = F.map_from_entries(
-        F.collect_list(
-            F.struct(
-                F.col(date_col).alias("__d"),
-                F.col(value_col).cast("double").alias("__s"),
-            )
-        )
-    )
-    start = (
-        F.col("__bmin")
-        if carry is None
-        else F.lit(carry.last + datetime.timedelta(days=1))
-    )
-    dense = F.transform(
-        F.sequence(start, F.col("__bmax")),
-        lambda d: F.coalesce(F.try_element_at(F.col("__m"), d), F.lit(0.0)),
-    )
-    batch = (
-        cells.filter(F.col(date_col).isNotNull())
-        .agg(
-            F.min(date_col).alias("__bmin"),
-            F.max(date_col).alias("__bmax"),
-            m.alias("__m"),
-        )
-        .select(
-            "__bmin",
-            "__bmax",
-            F.array_sort(F.map_keys("__m")).alias("__days"),
-            dense.alias("__arr"),
-        )
-        .select("*", horner(F.col("__arr"), acc0).alias("__acc"))
-        .first()
-    )
-    if batch["__bmin"] is None:
-        return None, carry
-    if carry is not None and batch["__bmin"] <= carry.last:
-        raise ValueError(
-            f"decayed_step: late day {batch['__bmin']} <= carried last day"
-            f" {carry.last} — a decayed scalar cannot absorb the past;"
-            " backfill through the linear CELL store (fold_cells/"
-            "refresh_day) and re-read with decayed_read, or replay from"
-            " that day"
-        )
-    if carry is None:
-        lo = start_day = batch["__bmin"]
-    else:
-        lo, start_day = carry.lo, carry.last + datetime.timedelta(days=1)
-    day = F.col(date_col)
-    idx = F.datediff(day, F.lit(start_day)) + F.lit(1)
-    days = F.expr(
-        "array("
-        + ", ".join(f"DATE'{d.isoformat()}'" for d in batch["__days"])
-        + ")"
-    )
-    out = cells.sparkSession.range(0, 1, 1, 1).select(
-        F.explode(days).alias(date_col)
-    ).select(
+    return rows.select(
         date_col,
-        (F.datediff(day, F.lit(lo)) + F.lit(1)).cast("long").alias("n_days"),
-        F.round(
-            horner(F.slice(double_array(batch["__arr"]), F.lit(1), idx), acc0),
-            dp,
-        ).alias("decayed"),
-    )
-    return out, DecayedCarry(lo, batch["__bmax"], batch["__acc"])
+        idx.cast("long").alias("n_days"),
+        F.round(s, dp).alias("decayed"),
+    ).orderBy(date_col)
 
 
 def ewm_stats(
@@ -633,59 +527,17 @@ def ewm_stats(
     publication (DuckDB twin: the same three ``list_reduce`` folds).
     Returns (date_col, n_days, ewm_n, ewm_mean, ewm_var), ordered.
     """
-    if not 0.0 < lam < 1.0:
-        raise ValueError(f"lam must be in (0, 1), got {lam}")
-    lam_lit = F.lit(float(lam))
-    series = cells.filter(F.col(date_col).isNotNull()).select(
-        F.col(date_col).alias("__d"),
-        F.col("n").cast("double").alias("__n"),
-        F.col("sx").cast("double").alias("__sx"),
-        F.col("sxx").cast("double").alias("__sxx"),
+    rows, idx, (en, esx, esxx) = _decayed_prefixes(
+        cells, ["n", "sx", "sxx"], lam=lam, date_col=date_col
     )
-    bounds = series.agg(
-        F.min("__d").alias("__lo"), F.max("__d").alias("__hi")
-    )
-    cal = bounds.select(
-        F.explode(F.sequence("__lo", "__hi")).alias("__d"), "__lo"
-    )
-    dense = cal.join(series, "__d", "left").select(
-        "__lo",
-        "__d",
-        F.coalesce("__n", F.lit(0.0)).alias("__n"),
-        F.coalesce("__sx", F.lit(0.0)).alias("__sx"),
-        F.coalesce("__sxx", F.lit(0.0)).alias("__sxx"),
-    )
-    rows = F.array_sort(
-        F.collect_list(F.struct("__d", "__n", "__sx", "__sxx"))
-    )
-    arr = dense.groupBy("__lo").agg(
-        F.transform(rows, lambda t: t["__n"]).alias("__an"),
-        F.transform(rows, lambda t: t["__sx"]).alias("__ax"),
-        F.transform(rows, lambda t: t["__sxx"]).alias("__axx"),
-    )
-    obs = series.select(F.col("__d").alias(date_col))
-    idx = F.datediff(F.col(date_col), F.col("__lo")) + F.lit(1)
-
-    def fold(col: str) -> Column:
-        return F.aggregate(
-            F.slice(F.col(col), F.lit(1), idx),
-            F.lit(0.0),
-            lambda acc, x: acc * lam_lit + x,
-        )
-
-    en, esx, esxx = fold("__an"), fold("__ax"), fold("__axx")
     var = (en * esxx - esx * esx) / (en * en)
-    return (
-        obs.crossJoin(F.broadcast(arr))
-        .select(
-            date_col,
-            idx.cast("long").alias("n_days"),
-            F.round(en, dp).alias("ewm_n"),
-            pub_round(esx / en, dp).alias("ewm_mean"),
-            pub_round(var, dp).alias("ewm_var"),
-        )
-        .orderBy(date_col)
-    )
+    return rows.select(
+        date_col,
+        idx.cast("long").alias("n_days"),
+        F.round(en, dp).alias("ewm_n"),
+        pub_round(esx / en, dp).alias("ewm_mean"),
+        pub_round(var, dp).alias("ewm_var"),
+    ).orderBy(date_col)
 
 
 def decayed_now_by(
@@ -708,9 +560,7 @@ def decayed_now_by(
     never corpus-sized) and ONE fixed-order Horner fold per group over
     exact DECIMAL inputs. Returns (keys…, n_days, decayed).
     """
-    if not 0.0 < lam < 1.0:
-        raise ValueError(f"lam must be in (0, 1), got {lam}")
-    lam_lit = F.lit(float(lam))
+    _check_lam(lam)
     series = cells.filter(F.col(date_col).isNotNull()).select(
         *keys,
         F.col(date_col).alias("__d"),
@@ -736,13 +586,12 @@ def decayed_now_by(
             F.coalesce("__s", F.lit(0.0)).alias("__s"),
         )
     )
-    horner = F.aggregate(
+    horner = _horner(
         F.transform(
             F.array_sort(F.collect_list(F.struct("__d", "__s"))),
             lambda t: t["__s"],
         ),
-        F.lit(0.0),
-        lambda acc, x: acc * lam_lit + x,
+        lam,
     )
     return (
         dense.groupBy(*keys)

@@ -76,7 +76,6 @@ def funnel_by_dim(
     view_value: str = "view",
     cart_value: str = "cart",
     purchase_value: str = "purchase",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Funnel-by-brand mart A3 over the star join J1.
 
@@ -86,9 +85,8 @@ def funnel_by_dim(
     events), so the fact table never shuffles for the join — the only shuffle
     is the final aggregation on the group keys.
     """
-    d = F.broadcast(dim) if broadcast_dim else dim
     t = F.col(type_col)
-    joined = fact.join(d, on=on, how="inner")
+    joined = fact.join(F.broadcast(dim), on=on, how="inner")
     return joined.groupBy(*group_by).agg(
         conditional_count(t == view_value).alias("views"),
         conditional_count(t == cart_value).alias("carts"),

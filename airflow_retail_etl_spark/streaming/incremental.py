@@ -406,9 +406,10 @@ def fold_cells(cells: DataFrame, state_path: str, *, batch_id: int) -> None:
     policy: the face for state that is a pure function of its batch and
     merges by summing or re-thresholding across batches — CMS counters
     (``frequency.cms_cells``), quantile level-samples
-    (``qsketch.qsketch_state``), KPI and moment cells
-    (``mart_state.kpi_cells`` / ``moment_cells``), and the decayed
-    carry rows of :func:`fold_decayed_batch`.
+    (``qsketch.qsketch_state``), and KPI and moment cells
+    (``mart_state.kpi_cells`` / ``moment_cells``) — which also serve the
+    decayed reads (``decayed_read`` / ``ewm_stats`` of the folded
+    cells), since a decayed value is linear in the per-day sums.
 
     A replayed batch folded into one accumulated store would
     double-count, so each batch lands under its own ``batch_id=``
@@ -418,7 +419,9 @@ def fold_cells(cells: DataFrame, state_path: str, *, batch_id: int) -> None:
     with the face's own merge across partitions (``cms_from_cells``,
     ``requantize`` + ``sample_quantiles``, ``kpi_fold``,
     ``moment_fold``) — bit-identical to the one-shot state of
-    everything delivered. The store is ≤ n_batches × per-batch cells;
+    everything delivered, in any delivery order: a late day's cells
+    land beside the later days already folded and merge by the same
+    sum. The store is ≤ n_batches × per-batch cells;
     compact by merging old partitions into one when the batch count
     grows past reading comfort."""
     (
@@ -472,144 +475,10 @@ def replay(
     ``state``. ``finish`` holds the face's merge and read
     (``hll_fold`` after MAX per register, ``cms_from_cells``,
     ``requantize`` + ``sample_quantiles``, ``sample_read``,
-    ``kpi_fold``, ``moment_fold``). Each face's merge law makes the
+    ``kpi_fold``, ``moment_fold``, ``decayed_read`` of ``kpi_fold``).
+    Each face's merge law makes the
     result BIT-IDENTICAL to the one-shot read of the concatenated input
     — which is what the replay-backed queries' oracles compute,
     certifying stream ≡ batch cross-engine."""
     _require_batches(batches, "replay")
     return finish(reduce(DataFrame.unionByName, map(state, batches)))
-
-
-def fold_decayed_batch(
-    batch: DataFrame,
-    state_path: str,
-    value_col: str,
-    *,
-    batch_id: int,
-    lam: float,
-    date_col: str = "event_date",
-    dp: int = 6,
-) -> None:
-    """Fold one micro-batch into a persisted DECAYED-read store — the
-    streaming face of ``mart_state.decayed_read``'s O(1) incremental
-    law (``decayed(D+g) = decayed(D)·λ^g + S``), completing the state
-    family: the sixth mergeable face (HLL, CMS, qsketch, sample,
-    KPI/moment cells, now the decayed scalar) to gain a streaming fold.
-
-    Unlike the linear cell folds, the decayed state is a CARRIED SCALAR
-    (one unrounded double per series plus its calendar position), so
-    partition N is a pure function of (partition N−1's carry, batch N):
-    replay safety is still :func:`fold_cells`' per-``batch_id`` dynamic
-    partition OVERWRITE — an at-least-once redelivery recomputes from
-    the SAME prior carry and rewrites identical rows (test-pinned). Each
-    partition holds the batch's published (date, n_days, decayed) rows
-    (``is_obs``) plus one carry row with the unrounded ``__acc``
-    (rounding the carry would break bit-equality with the one-shot
-    fold). Batch days must advance monotonically —
-    ``mart_state.decayed_step`` raises the backfill recipe otherwise
-    (late days belong to the permutation-safe CELL store, not to a
-    decayed scalar). Read the series any time with
-    :func:`read_decayed_store` — bit-identical to decayed_read of
-    everything delivered.
-    """
-    from airflow_retail_etl_spark.operators import mart_state
-
-    spark = batch.sparkSession
-    carry = None
-    if batch_id > 0:
-        prior = _read_history(spark, state_path)
-        if prior is not None:
-            rows = (
-                prior.filter(
-                    (F.col("batch_id") == int(batch_id) - 1)
-                    & (~F.col("is_obs"))
-                )
-                .select("__lo", "__last", "__acc")
-                .collect()
-            )
-            if rows:  # an empty-store prefix (no days yet) has no carry
-                carry = mart_state.DecayedCarry(*rows[0])
-    day_cells = batch.groupBy(date_col).agg(F.sum(value_col).alias(value_col))
-    out, carry = mart_state.decayed_step(
-        day_cells, carry, value_col, lam=lam, date_col=date_col, dp=dp
-    )
-    # the carry row; an empty batch rewrites the prior carry under its
-    # own batch id (a pure function of the empty batch — redelivery-
-    # idempotent)
-    if carry is None:
-        rows = spark.createDataFrame(
-            [],
-            f"{date_col} date, n_days long, decayed double, "
-            "__lo date, __last date, __acc double, is_obs boolean",
-        )
-    else:
-        rows = spark.range(0, 1, 1, 1).select(
-            F.lit(carry.last).alias(date_col),
-            F.lit(None).cast("long").alias("n_days"),
-            F.lit(None).cast("double").alias("decayed"),
-            F.lit(carry.lo).alias("__lo"),
-            F.lit(carry.last).alias("__last"),
-            F.lit(carry.acc).alias("__acc"),
-            F.lit(False).alias("is_obs"),
-        )
-    if out is not None:
-        rows = out.select(
-            date_col,
-            "n_days",
-            "decayed",
-            F.lit(None).cast("date").alias("__lo"),
-            F.lit(None).cast("date").alias("__last"),
-            F.lit(None).cast("double").alias("__acc"),
-            F.lit(True).alias("is_obs"),
-        ).unionByName(rows)
-    fold_cells(rows, state_path, batch_id=batch_id)
-
-
-def read_decayed_store(spark: SparkSession, state_path: str) -> DataFrame:
-    """The decayed series published so far: every batch's observed-day
-    rows across partitions (day sets are disjoint — days advance), in
-    calendar order. Bit-identical to ``mart_state.decayed_read`` over
-    everything delivered (the fold's certificate)."""
-    store = spark.read.parquet(state_path)
-    return (
-        store.filter(F.col("is_obs"))
-        .select(store.columns[0], "n_days", "decayed")
-        .orderBy(store.columns[0])
-    )
-
-
-def replay_decayed(
-    batches: Sequence[DataFrame],
-    value_col: str,
-    *,
-    lam: float,
-    date_col: str = "event_date",
-    dp: int = 6,
-) -> DataFrame:
-    """Replay TIME-ORDERED batches through the decayed carry fold
-    entirely as DataFrames — the batch face of
-    :func:`fold_decayed_batch` (the parquet store replaced by the
-    ``mart_state.DecayedCarry`` values each step returns). Resuming the
-    Horner fold from the carried acc is the identical IEEE operation
-    sequence as the one-shot fold, so the union of per-batch outputs is
-    BIT-IDENTICAL to ``mart_state.decayed_read`` of the concatenated
-    input — which is what the oracle computes, certifying stream ≡
-    batch cross-engine for the decayed face. Batches must advance in event time (the
-    streaming reality; late days raise the backfill recipe); empty
-    batches are skipped (carry unchanged)."""
-    _require_batches(batches, "replay_decayed")
-    from airflow_retail_etl_spark.operators import mart_state
-
-    carry = None
-    outs: list[DataFrame] = []
-    for b in batches:
-        day_cells = b.groupBy(date_col).agg(F.sum(value_col).alias(value_col))
-        out, carry = mart_state.decayed_step(
-            day_cells, carry, value_col, lam=lam, date_col=date_col, dp=dp
-        )
-        if out is not None:
-            outs.append(out)
-    if not outs:
-        raise ValueError("replay_decayed: every batch was empty")
-    # |days| literal rows: on one partition the sort needs no exchange
-    return reduce(DataFrame.unionByName, outs).coalesce(1).orderBy(date_col)

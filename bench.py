@@ -290,7 +290,7 @@ HEADLINE = (
     # round 13: PSI drift score (ks_drift's thresholdable companion)
     "psi_drift",
     # round 14: the decayed family's stream ≡ batch certificate (the
-    # carried-scalar fold replayed as DataFrames)
+    # linear kpi cells replayed as DataFrames, then read decayed)
     "streaming_decayed",
     # round 14: EWMA/EWMVar — decayed Horner reads composed over the
     # existing moment cells

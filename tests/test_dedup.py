@@ -113,6 +113,8 @@ def test_unknown_hash_family_rejected(docs):
         dedup.simhash(docs, "text", "doc_id", hash="sha1")
     with pytest.raises(ValueError):
         dedup.minhash_signatures(docs, "text", "doc_id", hash="sha1")
+    with pytest.raises(ValueError):
+        dedup.winnow_fingerprints(docs, "text", "doc_id", hash_family="sha1")
 
 
 # --- skew guards (SCALE.md): adversarial corpora ---------------------------

@@ -392,8 +392,6 @@ def test_replay_helpers_reject_empty_batches():
         ValueError, match="replay_admission: empty batches"
     ):
         inc.replay_admission([])
-    with pytest.raises(ValueError, match="replay_decayed: empty batches"):
-        inc.replay_decayed([], "revenue_cents", lam=0.9)
 
 
 def test_replay_moment_equals_one_shot(spark):
@@ -455,91 +453,74 @@ def test_decayed_read_incremental_law_and_gaps(spark):
 
 
 def _decayed_batches(spark, n=3):
+    """Raw events in contiguous day-of-month batches."""
     ev = _events(spark)
     dom = F.dayofmonth("event_date")
     spans = ((1, 10), (11, 20), (21, 31))[:n]
-    return [
-        mart_state.kpi_cells(ev.filter((dom >= lo) & (dom <= hi)), [])
-        for lo, hi in spans
-    ]
+    return [ev.filter((dom >= lo) & (dom <= hi)) for lo, hi in spans]
+
+
+def _decayed(cells):
+    """The decayed revenue series of (possibly per-batch) kpi cells."""
+    return mart_state.decayed_read(
+        mart_state.kpi_fold(cells, ["event_date"]), "revenue_cents", lam=0.9
+    )
+
+
+def _decayed_store(spark, store):
+    return _rows(
+        _decayed(spark.read.parquet(store).drop("batch_id")), "event_date"
+    )
+
+
+def _decayed_one_shot(spark):
+    return _rows(
+        mart_state.decayed_read(
+            mart_state.kpi_cells(_events(spark), []), "revenue_cents", lam=0.9
+        ),
+        "event_date",
+    )
 
 
 def test_fold_decayed_batch_redelivery_noop(spark, tmp_path):
-    """Streaming decayed fold under at-least-once delivery: partition N
-    is a pure function of (partition N−1's carry, batch N), so
-    re-folding a delivered batch rewrites identical rows — the series
-    read is unchanged, and it is BIT-identical to the one-shot
-    decayed_read of everything delivered (the store-backed certificate
-    the other five state folds have)."""
-    from airflow_retail_etl_spark.streaming.incremental import (
-        fold_decayed_batch,
-        read_decayed_store,
-    )
-
-    store = str(tmp_path / "decayed_state")
+    """The decayed face streams through the linear cell store under
+    at-least-once delivery: each batch's kpi cells land in their own
+    fold_cells partition, so re-folding a delivered batch rewrites
+    identical rows — the decayed read is unchanged, and it is
+    BIT-identical to the one-shot decayed_read of everything delivered."""
+    store = str(tmp_path / "decayed_cells")
     batches = _decayed_batches(spark)
     for i, b in enumerate(batches):
-        fold_decayed_batch(b, store, "revenue_cents", batch_id=i, lam=0.9)
-    once = _rows(read_decayed_store(spark, store), "event_date")
-    fold_decayed_batch(
-        batches[1], store, "revenue_cents", batch_id=1, lam=0.9
+        fold_cells(mart_state.kpi_cells(b, []), store, batch_id=i)
+    once = _decayed_store(spark, store)
+    fold_cells(
+        mart_state.kpi_cells(batches[1], []), store, batch_id=1
     )  # redelivery
-    assert _rows(read_decayed_store(spark, store), "event_date") == once
-    # stream == batch: the store equals the one-shot decayed read
-    ev = _events(spark)
-    one_shot = _rows(
-        mart_state.decayed_read(
-            mart_state.kpi_cells(ev, []), "revenue_cents", lam=0.9
-        ),
-        "event_date",
-    )
-    assert once == one_shot
+    assert _decayed_store(spark, store) == once
+    # stream == batch: the store reads equal to the one-shot decayed read
+    assert once == _decayed_one_shot(spark)
 
 
-def test_fold_decayed_batch_rejects_late_day(spark, tmp_path):
-    """A batch whose days do not advance past the carried last day must
-    raise the backfill recipe, never silently fold the past into an
-    already-decayed scalar."""
-    import pytest
-
-    from airflow_retail_etl_spark.streaming.incremental import (
-        fold_decayed_batch,
-    )
-
-    store = str(tmp_path / "decayed_state")
-    batches = _decayed_batches(spark)
-    for i, b in enumerate(batches):
-        fold_decayed_batch(b, store, "revenue_cents", batch_id=i, lam=0.9)
-    with pytest.raises(Exception, match="late day"):
-        fold_decayed_batch(
-            batches[0], store, "revenue_cents", batch_id=3, lam=0.9
-        )
+def test_fold_decayed_batch_absorbs_late_day(spark, tmp_path):
+    """A batch whose days are OLDER than days already folded (late days)
+    lands beside them in the cell store, and the decayed read of the
+    store equals the one-shot read: linear cells absorb the past."""
+    store = str(tmp_path / "decayed_cells")
+    b0, b1, b2 = _decayed_batches(spark)
+    for i, b in enumerate((b1, b2, b0)):  # the earliest days arrive last
+        fold_cells(mart_state.kpi_cells(b, []), store, batch_id=i)
+    assert _decayed_store(spark, store) == _decayed_one_shot(spark)
 
 
 def test_fold_decayed_batch_empty_batch_carries_through(spark, tmp_path):
-    """An empty micro-batch rewrites the prior carry under its own
-    batch id; the next real batch resumes from it and the final series
-    still equals the one-shot read."""
-    from airflow_retail_etl_spark.streaming.incremental import (
-        fold_decayed_batch,
-        read_decayed_store,
-    )
-
-    store = str(tmp_path / "decayed_state")
+    """An empty micro-batch folds to no cells; the batches around it
+    still read equal to the one-shot series."""
+    store = str(tmp_path / "decayed_cells")
     b0, b1, b2 = _decayed_batches(spark)
     empty = b0.filter("1 = 0")
     for i, b in enumerate((b0, empty, b1, b2)):
-        fold_decayed_batch(b, store, "revenue_cents", batch_id=i, lam=0.9)
-    got = _rows(read_decayed_store(spark, store), "event_date")
-    one_shot = _rows(
-        mart_state.decayed_read(
-            mart_state.kpi_cells(_events(spark), []),
-            "revenue_cents",
-            lam=0.9,
-        ),
-        "event_date",
-    )
-    assert got == one_shot
+        fold_cells(mart_state.kpi_cells(b, []), store, batch_id=i)
+    assert _decayed_store(spark, store) == _decayed_one_shot(spark)
 
 
 def test_state_folds_are_day_permutation_invariant(spark, tmp_path):
@@ -547,9 +528,7 @@ def test_state_folds_are_day_permutation_invariant(spark, tmp_path):
     ANY arrival order — including a LATE day landing after later days
     were already folded — read identically to the calendar-ordered fold
     for the kpi, moment, and decayed READS, because cells are linear
-    and every read is a pure function of the folded cell state. (The
-    carried-scalar decayed STORE is the one order-sensitive face; it
-    rejects late days and routes them here — test above.)"""
+    and every read is a pure function of the folded cell state."""
     import random
 
     ev = _events(spark)
@@ -660,27 +639,15 @@ def test_ewm_stats_matches_reference_fold(spark):
 
 
 def test_replay_decayed_skips_empty_batches(spark):
-    """A batch with no dated cells leaves the carry unchanged: the replay
-    around it still equals the one-shot read, and a replay of nothing
-    but empty batches is refused by name."""
-    import pytest
+    """Empty batches pass through the decayed replay: the replay around
+    them still equals the one-shot read, and a replay of nothing but
+    empty batches is an empty series."""
 
-    from airflow_retail_etl_spark.streaming.incremental import replay_decayed
+    def decayed_replay(batches):
+        return replay(batches, lambda b: mart_state.kpi_cells(b, []), _decayed)
 
     b0, b1, b2 = _decayed_batches(spark)
     empty = b0.filter("1 = 0")
-    got = _rows(
-        replay_decayed([empty, b0, empty, b1, b2], "revenue_cents", lam=0.9),
-        "event_date",
-    )
-    one_shot = _rows(
-        mart_state.decayed_read(
-            mart_state.kpi_cells(_events(spark), []),
-            "revenue_cents",
-            lam=0.9,
-        ),
-        "event_date",
-    )
-    assert got == one_shot
-    with pytest.raises(ValueError, match="every batch was empty"):
-        replay_decayed([empty, empty], "revenue_cents", lam=0.9)
+    got = _rows(decayed_replay([empty, b0, empty, b1, b2]), "event_date")
+    assert got == _decayed_one_shot(spark)
+    assert decayed_replay([empty, empty]).collect() == []

@@ -4,10 +4,14 @@ most job-heavy (ROADMAP item 2; perfbench's ``driver_bound`` workload).
 Each query is built and forced with the noop sink under its own job
 group, and every Spark job the group ran is counted — the pins and
 collects inside the query function as well as the sink's own. Measured
-at sf0.001 on local[4]: psi_drift 14, robust_value_stats 17,
-streaming_decayed 14 (35, 33 and 35 before the quantile picks became
-one aggregation and the bounded edge, count and decay results were
-collected once). The rolling faces and the quantile-sketch reads are
+at sf0.001 on local[4]: psi_drift 14, robust_value_stats 17 (35 and 33
+before the quantile picks became one aggregation and the bounded edge
+and count results were collected once). streaming_decayed is one plan
+over the linear kpi cells (15 jobs), and the decayed reads
+decayed_revenue and ewm_price_stats share one dense-calendar pipeline
+(9 each). perplexity_deciles takes its row count from global_cumsum's
+offsets broadcast (20; 22 with a separate count). The rolling faces
+and the quantile-sketch reads are
 budgeted at exactly their measured counts: the window joins over one
 ``days`` frame share a single broadcast (``trailing_windows``), and
 ``sample_quantiles`` explodes a literal q array instead of joining a
@@ -23,7 +27,7 @@ import __spark_entry__ as entry
 JOB_BUDGET = {
     "psi_drift": 22,
     "robust_value_stats": 20,
-    "streaming_decayed": 20,
+    "streaming_decayed": 15,
     "rolling_mart": 14,
     "rolling_volatility": 9,
     "rolling_sample": 18,
@@ -32,6 +36,10 @@ JOB_BUDGET = {
     "rolling_quantiles": 22,
     "streaming_quantiles": 24,
     "quantile_sketch": 19,
+    "decayed_revenue": 9,
+    "ewm_price_stats": 9,
+    "trending_brands": 13,
+    "perplexity_deciles": 20,
 }
 
 

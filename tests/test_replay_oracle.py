@@ -1,8 +1,9 @@
 """State-read certificates against the DuckDB oracle, compared the way
 ``tools/check_oracle.py`` does: every replay-backed registry query folds
-its input in batches, and every rolling query reads trailing windows
-from per-day state; each must equal its one-shot ``oracle_sql()`` twin
-bit-for-bit."""
+its input in batches, every rolling query reads trailing windows from
+per-day state, every decayed query folds a dense calendar by Horner, and
+``perplexity_deciles`` ranks through ``global_cumsum``; each must equal
+its one-shot ``oracle_sql()`` twin bit-for-bit."""
 
 from __future__ import annotations
 
@@ -35,6 +36,13 @@ ROLLING_QUERIES = [
     "rolling_quantiles",
 ]
 
+STATE_READ_QUERIES = [
+    "decayed_revenue",
+    "ewm_price_stats",
+    "trending_brands",
+    "perplexity_deciles",
+]
+
 
 def _check_oracle():
     spec = importlib.util.spec_from_file_location(
@@ -60,7 +68,9 @@ def compare():
     return _check_oracle().compare
 
 
-@pytest.mark.parametrize("name", REPLAY_QUERIES + ROLLING_QUERIES)
+@pytest.mark.parametrize(
+    "name", REPLAY_QUERIES + ROLLING_QUERIES + STATE_READ_QUERIES
+)
 def test_replay_query_matches_one_shot_oracle(
     spark, sf_dir, oracle_con, compare, name
 ):
