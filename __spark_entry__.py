@@ -2431,7 +2431,7 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             b, "value", width=_HH_WIDTH, depth=_HH_DEPTH
         ),
         lambda cells: frequency.cms_from_cells(
-            spark, cells, width=_HH_WIDTH, depth=_HH_DEPTH
+            cells, width=_HH_WIDTH, depth=_HH_DEPTH
         ),
     )
     return frequency.heavy_hitters(
@@ -7876,7 +7876,9 @@ def _ewm_price_stats_sql(lam: float) -> str:
 
 def _trending_brands_sql(lam: float) -> str:
     """DuckDB twin of q_trending_brands: per-brand cells, one dense
-    global calendar array per brand, the identical Horner fold."""
+    global calendar array per brand, the identical Horner fold. The
+    NULL-safe brand join reads a NULL brand's own cells, as Spark's
+    group-by does."""
     lam_sql = f"CAST({float(lam)!r} AS DOUBLE)"
     return (
         _STAGING_CTE
@@ -7903,7 +7905,8 @@ def _trending_brands_sql(lam: float) -> str:
         SELECT g.brand, cal.lo, cal.hi, cal.d,
                COALESCE(CAST(c.s AS DOUBLE), CAST(0.0 AS DOUBLE)) AS s
         FROM g CROSS JOIN cal
-        LEFT JOIN cells c ON c.brand = g.brand AND c.event_date = cal.d
+        LEFT JOIN cells c
+            ON c.brand IS NOT DISTINCT FROM g.brand AND c.event_date = cal.d
     ), arr AS (
         SELECT brand,
                CAST(date_diff('day', MIN(lo), MIN(hi)) + 1 AS BIGINT)

@@ -25,24 +25,11 @@ never as plan literals — the round-9 plan-size trap does not apply.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from airflow_retail_etl_spark.functions import xhash
-
-
-def _positions(col: Column, k_hashes: int, n_bits: int) -> list[Column]:
-    """The k Kirsch–Mitzenmacher bit positions of a value, as BIGINTs in
-    [0, n_bits). Pure LONG hi/lo arithmetic (round 15): the u64 rides as
-    two 32-bit halves and ``xhash.km_hash_mod`` decomposes the mod —
-    bit-identical to the old DECIMAL form (equivalence proven in
-    functions/xhash's module notes and pinned by tests/test_xhash.py)."""
-    h1, l1 = xhash.md5_u64_hilo(col, 1)
-    h2, l2 = xhash.md5_u64_hilo(col, 2)
-    return [
-        xhash.km_hash_mod(h1, l1, h2, l2, i, n_bits)
-        for i in range(k_hashes)
-    ]
+from airflow_retail_etl_spark.functions.columns import dense_array
 
 
 def build_bloom(
@@ -57,61 +44,44 @@ def build_bloom(
 
     Shape: explode k positions per value (linear), one word-keyed
     bit_or aggregation (≤ n_bits/64 uniform keys, map-side combine),
-    then a dense ordered array built by filling absent words with 0 —
-    the single collect-free fold a filter of any size supports. The
-    result is data, broadcast-joined by probes, so filter size is
-    bounded by executor memory, not plan size.
+    then one aggregation that collects the words as a w → bits map,
+    read at every word in [0, n_bits/64) with absent words at 0
+    (``functions.columns.dense_array``). The result is data,
+    broadcast-joined by probes, so filter size is bounded by executor
+    memory, not plan size.
     """
     if n_bits % 64 != 0:
         raise ValueError(f"n_bits must be a multiple of 64, got {n_bits}")
-    n_words = n_bits // 64
     v = values.select(F.col(col).cast("string").alias("v")).filter(
         F.col("v").isNotNull()
     )
-    # md5 halves bound BELOW the generate: explode evaluates each array
-    # element's tree independently, so inline positions would hash every
-    # row k times (round 15 — see operators/frequency._with_km_halves;
-    # explode_outer ≡ explode on this never-empty literal array and
-    # dodges the InferFiltersFromGenerate re-inlining trap)
-    h1a, l1a = xhash.md5_u64_hilo(F.col("v"), 1)
-    h2a, l2a = xhash.md5_u64_hilo(F.col("v"), 2)
-    hv = v.select(
-        h1a.alias("__h1"),
-        l1a.alias("__l1"),
-        h2a.alias("__h2"),
-        l2a.alias("__l2"),
+    # md5 halves bound BELOW the generate (xhash.with_km_halves): explode
+    # evaluates each array element's tree independently, so inline
+    # positions would hash every row k times (explode_outer ≡ explode on
+    # this never-empty literal array and dodges the
+    # InferFiltersFromGenerate re-inlining trap)
+    pos = xhash.with_km_halves(v, F.col("v")).select(
+        F.explode_outer(
+            F.array(*xhash.bound_positions(k_hashes, n_bits))
+        ).alias("p")
     )
-    bound = [
-        xhash.km_hash_mod(
-            F.col("__h1"), F.col("__l1"), F.col("__h2"), F.col("__l2"),
-            i, n_bits,
-        )
-        for i in range(k_hashes)
-    ]
-    pos = hv.select(F.explode_outer(F.array(*bound)).alias("p"))
     words = (
         pos.select(
             F.shiftright(F.col("p"), 6).alias("w"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(p AS INT) & 63)").alias(
-                "b"
-            ),
+            F.expr("shiftleft(CAST(1 AS BIGINT), p & 63)").alias("b"),
         )
         .groupBy("w")
         .agg(F.bit_or("b").alias("bits"))
+        .agg(
+            F.map_from_entries(F.collect_list(F.struct("w", "bits"))).alias(
+                "m"
+            )
+        )
     )
-    dense = (
-        values.sparkSession.range(n_words)
-        .select(F.col("id").alias("w"))
-        .join(words, "w", "left")
-        .select("w", F.coalesce("bits", F.lit(0).cast("bigint")).alias("bits"))
-    )
-    return dense.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("w", "bits"))),
-            lambda s: s["bits"],
-        ).alias("bits")
-    ).select(
-        "bits",
+    return words.select(
+        dense_array(F.col("m"), F.lit(0), F.lit(n_bits // 64 - 1), 0).alias(
+            "bits"
+        ),
         F.lit(n_bits).cast("long").alias("n_bits"),
         F.lit(k_hashes).cast("int").alias("k_hashes"),
     )
@@ -137,35 +107,22 @@ def bloom_probe(
     # condition — off bound position columns the duplicated predicate
     # is cheap bit arithmetic instead of k md5 re-derivations, and the
     # one lower projection dedups the md5 via subexpression elimination
-    h1a, l1a = xhash.md5_u64_hilo(F.col(col).cast("string"), 1)
-    h2a, l2a = xhash.md5_u64_hilo(F.col(col).cast("string"), 2)
     tmp = [f"__bp{i}" for i in range(k_hashes)]
-    hv = df.select(
-        "*",
-        h1a.alias("__bh1"),
-        l1a.alias("__bl1"),
-        h2a.alias("__bh2"),
-        l2a.alias("__bl2"),
-    ).select(
+    hv = xhash.with_km_halves(df, F.col(col).cast("string")).select(
         "*",
         *[
-            xhash.km_hash_mod(
-                F.col("__bh1"), F.col("__bl1"),
-                F.col("__bh2"), F.col("__bl2"),
-                i, n_bits,
-            ).alias(tmp[i])
-            for i in range(k_hashes)
+            p.alias(n)
+            for n, p in zip(tmp, xhash.bound_positions(k_hashes, n_bits))
         ],
-    ).drop("__bh1", "__bl1", "__bh2", "__bl2")
+    ).drop(*xhash.KM_COLS)
     probed = hv.crossJoin(
         F.broadcast(bloom.select(F.col("bits").alias("__bloom_bits")))
     )
     hit = None
     for name in tmp:
         c = F.expr(
-            f"(element_at(__bloom_bits, "
-            f"CAST(shiftright({name}, 6) AS INT) + 1) & "
-            f"shiftleft(CAST(1 AS BIGINT), CAST({name} AS INT) & 63)) != 0"
+            f"(element_at(__bloom_bits, shiftright({name}, 6) + 1) & "
+            f"shiftleft(CAST(1 AS BIGINT), {name} & 63)) != 0"
         )
         hit = c if hit is None else hit & c
     return probed.withColumn(

@@ -70,6 +70,21 @@ def double_array(values: Iterable[float]) -> Column:
     return F.expr(f"CAST(array({', '.join(elems)}) AS ARRAY<DOUBLE>)")
 
 
+def dense_array(m: Column, lo: Column, hi: Column, zero: object) -> Column:
+    """The values of map ``m`` at every key of ``sequence(lo, hi)``, in
+    key order, with ``zero`` where a key is absent — how a sparse
+    state (cells keyed by day, word or counter index) becomes the dense
+    array a fold or probe reads, straight off the one aggregation that
+    collected it, with no key-range spine to join.
+
+    The key range must be small (a calendar, a sketch's width): the
+    array is built in one row."""
+    return F.transform(
+        F.sequence(lo, hi),
+        lambda k: F.coalesce(F.element_at(m, k), F.lit(zero)),
+    )
+
+
 def safe_ratio(num: Column, den: Column) -> Column:
     """Ratio with SQL division semantics: x/0 → NULL.
 

@@ -23,7 +23,7 @@ engine-portable sketches.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MAX_I64 = 9223372036854775807
@@ -134,6 +134,36 @@ def km_hash_mod(
     return (
         hi32 % F.lit(m) * F.lit(_TWO32 % m) + lo32 % F.lit(m)
     ) % F.lit(m)
+
+
+#: bound-column names with_km_halves introduces (dropped before output)
+KM_COLS = ("__kmh1", "__kml1", "__kmh2", "__kml2")
+
+
+def with_km_halves(df: DataFrame, col: Column) -> DataFrame:
+    """``df`` plus the four LONG md5 halves of ``col`` as bound columns —
+    the one Kirsch–Mitzenmacher binding of the CMS and Bloom sketches.
+
+    The four conv/substring derivations share ONE md5 via in-project
+    subexpression elimination; downstream expressions reference the
+    bound columns, so Catalyst's CollapseProject keeps this projection
+    separate (multi-referenced non-cheap aliases are never inlined) and
+    every row hashes exactly once regardless of the hash count. Inline
+    positions would not: a GENERATE (explode) or a JOIN KEY evaluates
+    every element's tree independently — one md5 per position per row
+    (measured 3.3× on the CMS build explode at 2M rows)."""
+    h1, l1 = md5_u64_hilo(col, 1)
+    h2, l2 = md5_u64_hilo(col, 2)
+    return df.select(
+        "*", *[c.alias(n) for c, n in zip((h1, l1, h2, l2), KM_COLS)]
+    )
+
+
+def bound_positions(k: int, m: int) -> list[Column]:
+    """The k positions ``km_hash_mod(…, i, m)``, i < k, as INTs in
+    [0, m), off the bound halves of :func:`with_km_halves`."""
+    halves = [F.col(c) for c in KM_COLS]
+    return [km_hash_mod(*halves, i, m).cast("int") for i in range(k)]
 
 
 def km_hash_biased(

@@ -41,70 +41,12 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from airflow_retail_etl_spark.functions import xhash
+from airflow_retail_etl_spark.functions.columns import dense_array
 from airflow_retail_etl_spark.operators.mart_state import trailing_windows
-
-
-def _positions(col: Column, depth: int, width: int) -> list[Column]:
-    """The d Kirsch–Mitzenmacher counter positions of a value, as INTs in
-    [0, width) — LONG-domain arithmetic, bit-identical to the DECIMAL
-    derivation (functions/xhash, round 15; same construction as
-    functions/bloom._positions over column instead of bit positions).
-
-    Each returned column re-derives the md5 halves of ``col``; inside a
-    single Project codegen's subexpression elimination dedups them, but
-    a GENERATE (explode) or a JOIN KEY evaluates every element's tree
-    independently — d md5 evaluations per row. Those call sites must
-    bind the halves in a lower projection and use
-    :func:`_bound_positions` instead (measured 3.3× on the CMS build
-    explode at 2M rows)."""
-    h1, l1 = xhash.md5_u64_hilo(col, 1)
-    h2, l2 = xhash.md5_u64_hilo(col, 2)
-    return [
-        xhash.km_hash_mod(h1, l1, h2, l2, j, width).cast("int")
-        for j in range(depth)
-    ]
-
-
-#: bound-column names _with_km_halves introduces (dropped before output)
-_KM_COLS = ("__kmh1", "__kml1", "__kmh2", "__kml2")
-
-
-def _with_km_halves(df: DataFrame, col: Column) -> DataFrame:
-    """``df`` plus the four LONG md5 halves of ``col`` as bound columns.
-
-    The four conv/substring derivations share ONE md5 via in-project
-    subexpression elimination; downstream expressions reference the
-    bound columns, so Catalyst's CollapseProject keeps this projection
-    separate (multi-referenced non-cheap aliases are never inlined) and
-    every row hashes exactly once regardless of depth/k."""
-    h1, l1 = xhash.md5_u64_hilo(col, 1)
-    h2, l2 = xhash.md5_u64_hilo(col, 2)
-    return df.select(
-        "*",
-        h1.alias("__kmh1"),
-        l1.alias("__kml1"),
-        h2.alias("__kmh2"),
-        l2.alias("__kml2"),
-    )
-
-
-def _bound_positions(depth: int, width: int) -> list[Column]:
-    """The d positions off the bound halves of :func:`_with_km_halves`."""
-    return [
-        xhash.km_hash_mod(
-            F.col("__kmh1"),
-            F.col("__kml1"),
-            F.col("__kmh2"),
-            F.col("__kml2"),
-            j,
-            width,
-        ).cast("int")
-        for j in range(depth)
-    ]
 
 
 def cms_build(
@@ -119,9 +61,10 @@ def cms_build(
 
     ``counters`` is row-major: row j's counter for position p sits at
     index j·width + p (1-based ``element_at`` offset applied at probe
-    time). Dense by construction — absent cells filled with 0 via a
-    ``range(depth·width)`` left join, then one ordered collect_list fold
-    (depth·width rows, driver-safe at any input size).
+    time). Dense by construction: :func:`cms_from_cells` collects the
+    sparse cells as an idx → count map and reads it at every index,
+    absent cells as 0 (depth·width values, driver-safe at any input
+    size).
 
     The sketch is LINEAR: cms(A ⊎ B) = cms(A) + cms(B) element-wise, so
     shards build independently and merge with one ``zip_with(+)``
@@ -129,9 +72,7 @@ def cms_build(
     undefined, matching the Bloom probe's null verdict.
     """
     cells = cms_cells(values, col, width=width, depth=depth)
-    return cms_from_cells(
-        values.sparkSession, cells, width=width, depth=depth
-    )
+    return cms_from_cells(cells, width=width, depth=depth)
 
 
 def cms_cells(
@@ -156,13 +97,13 @@ def cms_cells(
     # every row depth times (round 15; explode_outer ≡ explode — the
     # array is a non-empty literal construction — and dodges the
     # InferFiltersFromGenerate re-inlining trap)
-    hv = _with_km_halves(v, F.col("v"))
+    hv = xhash.with_km_halves(v, F.col("v"))
     pos = hv.select(
         F.explode_outer(
             F.array(
                 *[
                     (F.lit(j * width) + p).cast("long")
-                    for j, p in enumerate(_bound_positions(depth, width))
+                    for j, p in enumerate(xhash.bound_positions(depth, width))
                 ]
             )
         ).alias("idx")
@@ -171,32 +112,25 @@ def cms_cells(
 
 
 def cms_from_cells(
-    spark,
     cells: DataFrame,
     *,
     width: int = 1024,
     depth: int = 4,
 ) -> DataFrame:
     """Densify sparse (idx, c) cells — possibly a UNION of several
-    shards'/batches' cell frames — into the one-row
-    (counters, width, depth) probe form. Sums per idx first (linear
-    merge), fills absent cells with 0 via a range join, then one
-    ordered collect_list fold (depth·width rows, driver-safe)."""
-    n_cells = depth * width
+    shards'/batches' cell frames, overlapping in idx — into the one-row
+    (counters, width, depth) probe form: sum per idx (the linear
+    merge), collect the sums as one idx → count map, and read it at
+    every index in [0, depth·width) with absent cells at 0
+    (``functions.columns.dense_array``; driver-safe)."""
     summed = cells.groupBy("idx").agg(F.sum("c").cast("long").alias("c"))
-    dense = (
-        spark.range(n_cells)
-        .select(F.col("id").alias("idx"))
-        .join(summed, "idx", "left")
-        .select("idx", F.coalesce("c", F.lit(0).cast("long")).alias("c"))
+    m = summed.agg(
+        F.map_from_entries(F.collect_list(F.struct("idx", "c"))).alias("m")
     )
-    return dense.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("idx", "c"))),
-            lambda s: s["c"],
-        ).alias("counters")
-    ).select(
-        "counters",
+    return m.select(
+        dense_array(
+            F.col("m"), F.lit(0), F.lit(depth * width - 1), 0
+        ).alias("counters"),
         F.lit(width).cast("int").alias("width"),
         F.lit(depth).cast("int").alias("depth"),
     )
@@ -255,13 +189,13 @@ def cms_probe(
     # knocks the projection out of codegen subexpression elimination:
     # probe stage 40-61 s vs 21 s CPU at sf0.1.)
     pcols = [f"__cmspos{j}" for j in range(depth)]
-    hv = _with_km_halves(df, F.col(col).cast("string")).select(
+    hv = xhash.with_km_halves(df, F.col(col).cast("string")).select(
         "*",
         *[
             p.alias(n)
-            for n, p in zip(pcols, _bound_positions(depth, width))
+            for n, p in zip(pcols, xhash.bound_positions(depth, width))
         ],
-    ).drop(*_KM_COLS)
+    ).drop(*xhash.KM_COLS)
     probed = hv.crossJoin(
         F.broadcast(cms.select(F.col("counters").alias("__cms_counters")))
     )
@@ -391,14 +325,14 @@ def cms_cells_by(
         *cols, F.col(col).cast("string").alias("v")
     ).filter(F.col("v").isNotNull())
     # same bound-halves-below-generate rule as cms_cells (round 15)
-    hv = _with_km_halves(v, F.col("v"))
+    hv = xhash.with_km_halves(v, F.col("v"))
     pos = hv.select(
         *cols,
         F.explode_outer(
             F.array(
                 *[
                     (F.lit(j * width) + p).cast("long")
-                    for j, p in enumerate(_bound_positions(depth, width))
+                    for j, p in enumerate(xhash.bound_positions(depth, width))
                 ]
             )
         ).alias("idx"),
@@ -512,13 +446,13 @@ def heavy_hitters_by(
     # is evaluated per join, so inlined positions would hash every probe
     # row depth times across the d joins (round 15; the single
     # projection dedups the md5 via subexpression elimination)
-    probed = _with_km_halves(
+    probed = xhash.with_km_halves(
         occ.join(F.broadcast(thr), group_col), F.col("value")
     ).select(
         "*",
         *[
             (F.lit(j * width) + p).cast("long").alias(f"__pos{j}")
-            for j, p in enumerate(_bound_positions(depth, width))
+            for j, p in enumerate(xhash.bound_positions(depth, width))
         ],
     )
     cols = []
@@ -672,11 +606,11 @@ def rolling_heavy_hitters(
     # every row ×windows — the r15 bound-positions rule pushed one
     # level further down. The halves/positions ride the explode as
     # plain longs.
-    hocc = _with_km_halves(occ, F.col("value")).select(
+    hocc = xhash.with_km_halves(occ, F.col("value")).select(
         "*",
         *[
             (F.lit(j * width) + p).cast("long").alias(f"__pos{j}")
-            for j, p in enumerate(_bound_positions(depth, width))
+            for j, p in enumerate(xhash.bound_positions(depth, width))
         ],
     )
     wocc = hocc.join(F.broadcast(mapping.select("window_end", "day")), "day")

@@ -49,11 +49,12 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from airflow_retail_etl_spark.functions.columns import (
     conditional_count,
+    dense_array,
     pub_round,
     safe_ratio,
 )
@@ -412,6 +413,25 @@ def _horner(arr: Column, lam: float) -> Column:
     return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc * lam_lit + x)
 
 
+def _day_state(date_col: str, value_cols: Sequence[str]) -> list[Column]:
+    """The aggregates a decayed read takes from its cells in ONE pass:
+    the day bounds ``__lo`` / ``__hi`` and, per value column, a day →
+    value map ``__m{i}`` (values cast once to double). Cells must be at
+    day grain: a repeated day fails with ``DUPLICATED_MAP_KEY`` instead
+    of misaligning the calendar."""
+    d = F.col(date_col)
+    return [
+        F.min(d).alias("__lo"),
+        F.max(d).alias("__hi"),
+        *[
+            F.map_from_entries(
+                F.collect_list(F.struct(d, F.col(c).cast("double")))
+            ).alias(f"__m{i}")
+            for i, c in enumerate(value_cols)
+        ],
+    ]
+
+
 def _decayed_prefixes(
     cells: DataFrame,
     value_cols: Sequence[str],
@@ -421,38 +441,32 @@ def _decayed_prefixes(
 ) -> tuple[DataFrame, Column, list[Column]]:
     """The dense-calendar Horner pipeline behind :func:`decayed_read`
     and :func:`ewm_stats`: one row per observed day of ``cells`` (with
-    the broadcast day arrays beside it), that day's 1-based calendar
+    the dense day arrays beside it), that day's 1-based calendar
     position, and per value column the Horner fold over the calendar
     prefix ending at that day.
 
-    Each value column is cast once to double; the calendar is dense
-    over [min, max] with gap days at 0.0, and every column's daily
-    values become ONE ordered array (bounded by the calendar, the
-    rolling faces' state-size argument). NULL-date cells are excluded:
-    a dateless cell has no position on the decay axis."""
+    ONE aggregation reads the cells (:func:`_day_state`);
+    ``functions.columns.dense_array`` turns each day → value map into
+    the dense calendar array over [min, max] with gap days at 0.0
+    (bounded by the calendar, the rolling faces' state-size argument),
+    and the observed days are the map's keys — so the corpus below the
+    cells is scanned once per read. NULL-date cells are excluded: a
+    dateless cell has no position on the decay axis."""
     _check_lam(lam)
+    state = cells.filter(F.col(date_col).isNotNull()).agg(
+        *_day_state(date_col, value_cols)
+    )
     vals = [f"__v{i}" for i in range(len(value_cols))]
-    series = cells.filter(F.col(date_col).isNotNull()).select(
-        F.col(date_col).alias("__d"),
-        *[F.col(c).cast("double").alias(v) for c, v in zip(value_cols, vals)],
-    )
-    bounds = series.agg(
-        F.min("__d").alias("__lo"), F.max("__d").alias("__hi")
-    )
-    cal = bounds.select(
-        F.explode(F.sequence("__lo", "__hi")).alias("__d"), "__lo"
-    )
-    dense = cal.join(series, "__d", "left").select(
-        "__lo", "__d", *[F.coalesce(v, F.lit(0.0)).alias(v) for v in vals]
-    )
-    days = F.array_sort(F.collect_list(F.struct("__d", *vals)))
-    arr = dense.groupBy("__lo").agg(
-        *[days.getField(v).alias(v) for v in vals]
+    rows = state.select(
+        "__lo",
+        F.explode(F.map_keys("__m0")).alias(date_col),
+        *[
+            dense_array(F.col(f"__m{i}"), F.col("__lo"), F.col("__hi"), 0.0)
+            .alias(v)
+            for i, v in enumerate(vals)
+        ],
     )
     idx = F.datediff(F.col(date_col), F.col("__lo")) + F.lit(1)
-    rows = series.select(F.col("__d").alias(date_col)).crossJoin(
-        F.broadcast(arr)
-    )
     return rows, idx, [_horner(F.slice(v, F.lit(1), idx), lam) for v in vals]
 
 
@@ -555,51 +569,31 @@ def decayed_now_by(
     day (so groups are comparable: a group with no recent activity
     decays toward 0 instead of being read at its own stale day).
 
-    Same engine-exactness argument as decayed_read: per-group dense
-    calendar arrays (|groups|·|days| state rows — calendar²-bounded,
-    never corpus-sized) and ONE fixed-order Horner fold per group over
-    exact DECIMAL inputs. Returns (keys…, n_days, decayed).
+    Same engine-exactness argument as decayed_read: ONE aggregation
+    collects each group's day → value map and day bounds, a window over
+    those |groups| rows widens the bounds to the global calendar, and
+    each group's dense calendar array (|groups|·|days| values —
+    calendar²-bounded, never corpus-sized) takes ONE fixed-order Horner
+    fold over exact DECIMAL inputs. A NULL key is a group like any
+    other. Returns (keys…, n_days, decayed).
     """
     _check_lam(lam)
-    series = cells.filter(F.col(date_col).isNotNull()).select(
-        *keys,
-        F.col(date_col).alias("__d"),
-        F.col(value_col).cast("double").alias("__s"),
+    groups = (
+        cells.filter(F.col(date_col).isNotNull())
+        .groupBy(*keys)
+        .agg(*_day_state(date_col, [value_col]))
+        # keys=[] over no cells still aggregates to one (NULL-bound) row
+        .filter(F.col("__lo").isNotNull())
     )
-    bounds = series.agg(
-        F.min("__d").alias("__lo"), F.max("__d").alias("__hi")
-    )
-    cal = bounds.select(
-        F.explode(F.sequence("__lo", "__hi")).alias("__d"),
-        "__lo",
-        "__hi",
-    )
-    groups = series.select(*keys).distinct()
-    dense = (
-        groups.crossJoin(F.broadcast(cal))
-        .join(series, [*keys, "__d"], "left")
-        .select(
-            *keys,
-            "__lo",
-            "__hi",
-            "__d",
-            F.coalesce("__s", F.lit(0.0)).alias("__s"),
-        )
-    )
-    horner = _horner(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("__d", "__s"))),
-            lambda t: t["__s"],
-        ),
-        lam,
-    )
+    every = Window.partitionBy()
+    lo, hi = F.min("__lo").over(every), F.max("__hi").over(every)
     return (
-        dense.groupBy(*keys)
-        .agg(
-            (F.datediff(F.first("__hi"), F.first("__lo")) + F.lit(1))
-            .cast("long")
-            .alias("n_days"),
-            F.round(horner, dp).alias("decayed"),
+        groups.select(
+            *keys,
+            (F.datediff(hi, lo) + F.lit(1)).cast("long").alias("n_days"),
+            F.round(
+                _horner(dense_array(F.col("__m0"), lo, hi, 0.0), lam), dp
+            ).alias("decayed"),
         )
         .orderBy(F.col("decayed").desc(), *[F.col(k).asc() for k in keys])
     )

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from airflow_retail_etl_spark.functions.columns import (
     conditional_count,
     conditional_sum,
+    dense_array,
     money_sum,
     safe_ratio,
     split_hierarchy,
@@ -51,3 +52,20 @@ def test_conditional_agg_and_money_sum(spark):
     assert row["c"] == 2
     assert math.isclose(row["s"], 10.15)
     assert row["m"] == 10.15  # decimal-exact
+
+
+def test_dense_array_fills_absent_keys(spark):
+    """Map values in key order over [lo, hi], zero where a key is
+    absent (gaps, both ends), and NULL when the bounds are NULL — the
+    empty-input case of an aggregation over no cells."""
+    df = spark.createDataFrame(
+        [({2: 20, 4: 40}, 1, 5), ({3: 7}, 3, 3), ({}, None, None)],
+        "m map<int, bigint>, lo int, hi int",
+    )
+    got = [
+        r.a
+        for r in df.select(
+            dense_array(F.col("m"), F.col("lo"), F.col("hi"), 0).alias("a")
+        ).collect()
+    ]
+    assert got == [[0, 20, 0, 40, 0], [7], None]

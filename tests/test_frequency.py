@@ -306,3 +306,22 @@ def test_cms_cells_by_weighted_grain_equals_raw(spark):
     ra = sorted(map(tuple, a.collect()))
     rb = sorted(map(tuple, b.collect()))
     assert ra == rb
+
+
+def test_cms_from_cells_of_overlapping_batches_equals_one_shot(spark):
+    """Cells from batches that share keys (so their idx overlap) union
+    and densify to exactly the one-shot sketch; no cells at all read as
+    an all-zero sketch."""
+    batches = [{"a": 3, "b": 1}, {"a": 4, "c": 2}, {"b": 2, "c": 1, "e": 1}]
+    cells = None
+    for counts in batches:
+        c = frequency.cms_cells(_occ(spark, counts), "v", width=W, depth=D)
+        cells = c if cells is None else cells.unionByName(c)
+    both = {
+        k: sum(b.get(k, 0) for b in batches) for k in {"a", "b", "c", "e"}
+    }
+    got = frequency.cms_from_cells(cells, width=W, depth=D).first()
+    want = frequency.cms_build(_occ(spark, both), "v", width=W, depth=D)
+    assert got == want.first()
+    empty = frequency.cms_from_cells(cells.filter("1 = 0"), width=W, depth=D)
+    assert empty.first().counters == [0] * (W * D)

@@ -191,7 +191,6 @@ def test_fold_cms_batch_overwrite_makes_replay_idempotent(spark, tmp_path):
 
     def folded():
         return frequency.cms_from_cells(
-            spark,
             spark.read.parquet(state).select("idx", "c"),
             width=64, depth=4,
         ).first()
@@ -211,7 +210,7 @@ def test_fold_cms_batch_overwrite_makes_replay_idempotent(spark, tmp_path):
     two = frequency.cms_probe(
         full.select("v").distinct(), "v",
         frequency.cms_from_cells(
-            spark, spark.read.parquet(state).select("idx", "c"),
+            spark.read.parquet(state).select("idx", "c"),
             width=64, depth=4,
         ),
         width=64, depth=4,

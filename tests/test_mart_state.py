@@ -651,3 +651,92 @@ def test_replay_decayed_skips_empty_batches(spark):
     got = _rows(decayed_replay([empty, b0, empty, b1, b2]), "event_date")
     assert got == _decayed_one_shot(spark)
     assert decayed_replay([empty, empty]).collect() == []
+
+
+def _revenue_cells(spark, rows, keys=()):
+    """kpi_cells of purchase rows (*keys, day, price)."""
+    schema = [f"{k} string" for k in keys] + ["event_date date", "price double"]
+    ev = spark.createDataFrame(rows, ", ".join(schema)).withColumn(
+        "event_type", F.lit("purchase")
+    )
+    return mart_state.kpi_cells(ev, list(keys))
+
+
+def test_decayed_reads_single_day_and_empty_input(spark):
+    """A single observed day reads its own cell (n_days 1); empty cells
+    read zero rows without error, for every decayed read."""
+    import datetime as dt
+
+    day = dt.date(2024, 3, 5)
+    one = _revenue_cells(spark, [(day, 12.5)])
+    assert [tuple(r) for r in mart_state.decayed_read(
+        one, "revenue_cents", lam=0.9
+    ).collect()] == [(day, 1, 12.5)]
+    prices = spark.createDataFrame([(day, 4.0)], "event_date date, price double")
+    (r,) = mart_state.ewm_stats(
+        mart_state.moment_cells(prices, [], "price"), lam=0.9
+    ).collect()
+    assert (r.n_days, r.ewm_n, r.ewm_mean, r.ewm_var) == (1, 1.0, 4.0, 0.0)
+    brand = _revenue_cells(spark, [("b", day, 3.0)], keys=("brand",))
+    assert [tuple(r) for r in mart_state.decayed_now_by(
+        brand, ["brand"], "revenue_cents", lam=0.9
+    ).collect()] == [("b", 1, 3.0)]
+
+    empty = one.filter("1 = 0")
+    assert not mart_state.decayed_read(empty, "revenue_cents", lam=0.9).collect()
+    assert mart_state.ewm_stats(
+        mart_state.moment_cells(empty, [], "revenue_cents"), lam=0.9
+    ).collect() == []
+    for keys, cells in ((["brand"], brand), ([], one)):
+        assert not mart_state.decayed_now_by(
+            cells.filter("1 = 0"), keys, "revenue_cents", lam=0.9
+        ).collect()
+
+
+def test_decayed_read_refuses_repeated_day(spark):
+    """Cells must be at day grain: two cells on one day would misalign
+    the dense calendar, so the read fails instead of guessing."""
+    import datetime as dt
+
+    import pytest
+    from pyspark.errors import SparkRuntimeException
+
+    day = dt.date(2024, 3, 5)
+    two = [("a", day, 1.0), ("b", day, 2.0)]
+    cells = _revenue_cells(spark, two, ("brand",))
+    with pytest.raises(SparkRuntimeException, match="DUPLICATED_MAP_KEY"):
+        mart_state.decayed_read(cells, "revenue_cents", lam=0.9).collect()
+
+
+def test_decayed_now_by_global_calendar_gaps_and_null_key(spark):
+    """Every group folds over the GLOBAL calendar [lo, hi] with gap days
+    at 0 (a python Horner reference), so a group that stopped selling
+    decays; a NULL key is a group like any other and reads its own
+    cells."""
+    import datetime as dt
+
+    d = [dt.date(2024, 1, i) for i in range(1, 8)]
+    rows = [
+        ("a", d[0], 100.0),
+        ("a", d[1], 50.0),  # stops early: decays over 5 days
+        ("b", d[3], 10.0),  # gaps on both sides of its own cells
+        ("b", d[6], 20.0),
+        (None, d[2], 8.0),
+        (None, d[2], 2.0),
+    ]
+    cells = _revenue_cells(spark, rows, ("brand",))
+    got = {
+        r.brand: (r.n_days, r.decayed)
+        for r in mart_state.decayed_now_by(
+            cells, ["brand"], "revenue_cents", lam=0.5
+        ).collect()
+    }
+
+    def horner(group):
+        acc = 0.0
+        for day in d:
+            s = sum(p for g, x, p in rows if g == group and x == day)
+            acc = acc * 0.5 + s
+        return round(acc, 6)
+
+    assert got == {g: (7, horner(g)) for g in ("a", "b", None)}

@@ -191,3 +191,20 @@ def test_heavy_hitters_prune_is_pre_aggregation(spark, q, sf_dir):
     # and the probe side never shuffles for the join: broadcast hint rides
     # the one-row sketch
     assert "rightHint=(strategy=broadcast)" in join_line
+
+
+@pytest.mark.parametrize(
+    "name, scans",
+    [("decayed_revenue", 1), ("ewm_price_stats", 1), ("streaming_decayed", 4)],
+)
+def test_decayed_reads_scan_events_once(spark, q, sf_dir, name, scans):
+    """mart_state's claim that the corpus is scanned once per read: the
+    cells feed one aggregation, so the executed (post-AQE) plan holds
+    one events scan — one per batch for the four-batch replay. A second
+    consumer of the cells would re-scan and re-aggregate the events."""
+    df = q[name](spark, sf_dir)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    found = re.findall(r"FileScan parquet [^\n]*events\.parquet", final)
+    assert len(found) == scans, final

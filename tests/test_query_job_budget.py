@@ -6,10 +6,13 @@ group, and every Spark job the group ran is counted — the pins and
 collects inside the query function as well as the sink's own. Measured
 at sf0.001 on local[4]: psi_drift 14, robust_value_stats 17 (35 and 33
 before the quantile picks became one aggregation and the bounded edge
-and count results were collected once). streaming_decayed is one plan
-over the linear kpi cells (15 jobs), and the decayed reads
-decayed_revenue and ewm_price_stats share one dense-calendar pipeline
-(9 each). perplexity_deciles takes its row count from global_cumsum's
+and count results were collected once). Every sparse-state fold reads
+its input in one aggregation that collects the cells as a map and
+densifies it with ``functions.columns.dense_array`` — no key-range
+spine join: streaming_decayed 7 (15 with the calendar join),
+decayed_revenue and ewm_price_stats 4 each (9), trending_brands 7 (13),
+heavy_hitters 9 (10), streaming_heavy_hitters 16 (17) and bloom_decontam
+14 (15). perplexity_deciles takes its row count from global_cumsum's
 offsets broadcast (20; 22 with a separate count). The rolling faces
 and the quantile-sketch reads are
 budgeted at exactly their measured counts: the window joins over one
@@ -27,7 +30,7 @@ import __spark_entry__ as entry
 JOB_BUDGET = {
     "psi_drift": 22,
     "robust_value_stats": 20,
-    "streaming_decayed": 15,
+    "streaming_decayed": 7,
     "rolling_mart": 14,
     "rolling_volatility": 9,
     "rolling_sample": 18,
@@ -36,9 +39,12 @@ JOB_BUDGET = {
     "rolling_quantiles": 22,
     "streaming_quantiles": 24,
     "quantile_sketch": 19,
-    "decayed_revenue": 9,
-    "ewm_price_stats": 9,
-    "trending_brands": 13,
+    "decayed_revenue": 4,
+    "ewm_price_stats": 4,
+    "trending_brands": 7,
+    "heavy_hitters": 9,
+    "streaming_heavy_hitters": 16,
+    "bloom_decontam": 14,
     "perplexity_deciles": 20,
 }
 
