@@ -77,11 +77,32 @@ def dense_array(m: Column, lo: Column, hi: Column, zero: object) -> Column:
     array a fold or probe reads, straight off the one aggregation that
     collected it, with no key-range spine to join.
 
-    The key range must be small (a calendar, a sketch's width): the
-    array is built in one row."""
-    return F.transform(
-        F.sequence(lo, hi),
-        lambda k: F.coalesce(F.element_at(m, k), F.lit(zero)),
+    Keys are integers in [lo, hi]. The array is built in one row, in
+    O(|keys|·log|keys| + hi − lo) — the key-sorted entries, each
+    preceded by a run of ``zero`` as long as the gap before it —
+    never by one map lookup per key of the range: Spark's
+    ``element_at`` scans a map's keys linearly, so that form is
+    quadratic (a 2^20-bit Bloom filter built 15× slower than a
+    range-spine join). A lambda here may read only its own arguments:
+    an outer array expression inside it is re-evaluated per element."""
+    z = F.lit(zero)
+    # each sorted entry zipped with the key before it (lo − 1 first)
+    prev = F.slice(
+        F.concat(F.array(lo - F.lit(1)), F.sort_array(F.map_keys(m))),
+        1,
+        F.size(m),
+    )
+    runs = F.zip_with(
+        F.sort_array(F.map_entries(m)),
+        prev,
+        lambda x, p: F.array_append(
+            F.array_repeat(z, (x["key"] - p - F.lit(1)).cast("int")),
+            F.coalesce(x["value"], z),
+        ),
+    )
+    last = F.coalesce(F.array_max(F.map_keys(m)), lo - F.lit(1))
+    return F.concat(
+        F.flatten(runs), F.array_repeat(z, (hi - last).cast("int"))
     )
 
 

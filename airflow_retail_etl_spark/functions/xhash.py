@@ -161,7 +161,9 @@ def with_km_halves(df: DataFrame, col: Column) -> DataFrame:
 
 def bound_positions(k: int, m: int) -> list[Column]:
     """The k positions ``km_hash_mod(…, i, m)``, i < k, as INTs in
-    [0, m), off the bound halves of :func:`with_km_halves`."""
+    [0, m), off the bound halves of :func:`with_km_halves`. The cast is
+    exact: ``km_hash_mod`` refuses m > 2^31, so a sketch wider than
+    that (a Bloom filter over 2^31 bits) fails when it is built."""
     halves = [F.col(c) for c in KM_COLS]
     return [km_hash_mod(*halves, i, m).cast("int") for i in range(k)]
 

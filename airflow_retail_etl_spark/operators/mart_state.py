@@ -413,13 +413,33 @@ def _horner(arr: Column, lam: float) -> Column:
     return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc * lam_lit + x)
 
 
+def _horner_prefixes(arr: Column, lam: float) -> Column:
+    """Every prefix of :func:`_horner` over ``arr`` in one pass: the
+    fold's running accumulator, element k being the fold of the first
+    k elements — the same operations in the same order, so
+    bit-identical to folding each prefix on its own, in |arr| fold
+    steps instead of |arr|²/2 (each append still copies the
+    accumulator: a memory copy, not an interpreted lambda call)."""
+    lam_lit = F.lit(float(lam))
+    return F.aggregate(
+        arr,
+        F.array().cast("array<double>"),
+        lambda acc, x: F.array_append(
+            acc,
+            F.coalesce(F.try_element_at(acc, F.lit(-1)), F.lit(0.0)) * lam_lit
+            + x,
+        ),
+    )
+
+
 def _day_state(date_col: str, value_cols: Sequence[str]) -> list[Column]:
     """The aggregates a decayed read takes from its cells in ONE pass:
     the day bounds ``__lo`` / ``__hi`` and, per value column, a day →
-    value map ``__m{i}`` (values cast once to double). Cells must be at
-    day grain: a repeated day fails with ``DUPLICATED_MAP_KEY`` instead
-    of misaligning the calendar."""
-    d = F.col(date_col)
+    value map ``__m{i}`` (values cast once to double), days as
+    ``unix_date`` integers — the integer keys ``dense_array`` reads.
+    Cells must be at day grain: a repeated day fails with
+    ``DUPLICATED_MAP_KEY`` instead of misaligning the calendar."""
+    d = F.unix_date(F.col(date_col))
     return [
         F.min(d).alias("__lo"),
         F.max(d).alias("__hi"),
@@ -438,36 +458,54 @@ def _decayed_prefixes(
     *,
     lam: float,
     date_col: str,
-) -> tuple[DataFrame, Column, list[Column]]:
+) -> DataFrame:
     """The dense-calendar Horner pipeline behind :func:`decayed_read`
-    and :func:`ewm_stats`: one row per observed day of ``cells`` (with
-    the dense day arrays beside it), that day's 1-based calendar
-    position, and per value column the Horner fold over the calendar
-    prefix ending at that day.
+    and :func:`ewm_stats`: one row per observed day of ``cells`` with
+    that day's 1-based calendar position ``n_days`` and, per value
+    column ``i``, the Horner fold over the calendar prefix ending at
+    that day as ``__s{i}``.
 
     ONE aggregation reads the cells (:func:`_day_state`);
     ``functions.columns.dense_array`` turns each day → value map into
     the dense calendar array over [min, max] with gap days at 0.0
     (bounded by the calendar, the rolling faces' state-size argument),
-    and the observed days are the map's keys — so the corpus below the
-    cells is scanned once per read. NULL-date cells are excluded: a
+    :func:`_horner_prefixes` folds it once into every day's prefix
+    value, and the observed days are the map's keys, each reading its
+    own prefix — so the corpus below the cells is scanned once per read
+    and the calendar folded once. NULL-date cells are excluded: a
     dateless cell has no position on the decay axis."""
     _check_lam(lam)
     state = cells.filter(F.col(date_col).isNotNull()).agg(
         *_day_state(date_col, value_cols)
     )
     vals = [f"__v{i}" for i in range(len(value_cols))]
-    rows = state.select(
+    # the prefix arrays are projected BELOW the explode: built beside
+    # it, they would be rebuilt once per exploded day
+    dense = state.select(
         "__lo",
-        F.explode(F.map_keys("__m0")).alias(date_col),
+        "__m0",
         *[
-            dense_array(F.col(f"__m{i}"), F.col("__lo"), F.col("__hi"), 0.0)
-            .alias(v)
+            _horner_prefixes(
+                dense_array(
+                    F.col(f"__m{i}"), F.col("__lo"), F.col("__hi"), 0.0
+                ),
+                lam,
+            ).alias(v)
             for i, v in enumerate(vals)
         ],
     )
-    idx = F.datediff(F.col(date_col), F.col("__lo")) + F.lit(1)
-    return rows, idx, [_horner(F.slice(v, F.lit(1), idx), lam) for v in vals]
+    rows = dense.select(
+        "__lo", F.explode(F.map_keys("__m0")).alias("__d"), *vals
+    )
+    idx = F.col("__d") - F.col("__lo") + F.lit(1)
+    return rows.select(
+        F.date_from_unix_date("__d").alias(date_col),
+        idx.cast("long").alias("n_days"),
+        *[
+            F.element_at(v, idx).alias(f"__s{i}")
+            for i, v in enumerate(vals)
+        ],
+    )
 
 
 def decayed_read(
@@ -505,13 +543,10 @@ def decayed_read(
     ``value_col``. Returns (date_col, n_days, decayed) for every
     observed day, ordered.
     """
-    rows, idx, (s,) = _decayed_prefixes(
+    return _decayed_prefixes(
         cells, [value_col], lam=lam, date_col=date_col
-    )
-    return rows.select(
-        date_col,
-        idx.cast("long").alias("n_days"),
-        F.round(s, dp).alias("decayed"),
+    ).select(
+        date_col, "n_days", F.round("__s0", dp).alias("decayed")
     ).orderBy(date_col)
 
 
@@ -541,13 +576,13 @@ def ewm_stats(
     publication (DuckDB twin: the same three ``list_reduce`` folds).
     Returns (date_col, n_days, ewm_n, ewm_mean, ewm_var), ordered.
     """
-    rows, idx, (en, esx, esxx) = _decayed_prefixes(
-        cells, ["n", "sx", "sxx"], lam=lam, date_col=date_col
-    )
+    en, esx, esxx = F.col("__s0"), F.col("__s1"), F.col("__s2")
     var = (en * esxx - esx * esx) / (en * en)
-    return rows.select(
+    return _decayed_prefixes(
+        cells, ["n", "sx", "sxx"], lam=lam, date_col=date_col
+    ).select(
         date_col,
-        idx.cast("long").alias("n_days"),
+        "n_days",
         F.round(en, dp).alias("ewm_n"),
         pub_round(esx / en, dp).alias("ewm_mean"),
         pub_round(var, dp).alias("ewm_var"),
@@ -590,7 +625,7 @@ def decayed_now_by(
     return (
         groups.select(
             *keys,
-            (F.datediff(hi, lo) + F.lit(1)).cast("long").alias("n_days"),
+            (hi - lo + F.lit(1)).cast("long").alias("n_days"),
             F.round(
                 _horner(dense_array(F.col("__m0"), lo, hi, 0.0), lam), dp
             ).alias("decayed"),

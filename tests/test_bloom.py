@@ -71,6 +71,17 @@ def test_n_bits_must_be_word_aligned(spark):
         bloom.build_bloom(_vals(spark, ["x"]), "v", n_bits=100)
 
 
+def test_n_bits_over_int_positions_refused(spark):
+    """Positions are INTs, so a filter over 2^31 bits is refused when
+    the plan is built — never a wrapped word index (false negatives)."""
+    big = (1 << 31) + 64
+    with pytest.raises(ValueError, match="m <= 2\\^31"):
+        bloom.build_bloom(_vals(spark, ["x"]), "v", n_bits=big)
+    filt = bloom.build_bloom(_vals(spark, ["x"]), "v", n_bits=N_BITS)
+    with pytest.raises(ValueError, match="m <= 2\\^31"):
+        bloom.bloom_probe(_vals(spark, ["x"]), "v", filt, n_bits=big)
+
+
 def test_bloom_contamination_superset_of_exact(spark):
     """The bloom gate must flag EVERY doc the exact rule drops (no
     false negatives — the prefilter contract), with any extras being

@@ -56,10 +56,17 @@ def test_conditional_agg_and_money_sum(spark):
 
 def test_dense_array_fills_absent_keys(spark):
     """Map values in key order over [lo, hi], zero where a key is
-    absent (gaps, both ends), and NULL when the bounds are NULL — the
-    empty-input case of an aggregation over no cells."""
+    absent (gaps, both ends) or its value is NULL, and NULL when the
+    bounds are NULL — the empty-input case of an aggregation over no
+    cells."""
     df = spark.createDataFrame(
-        [({2: 20, 4: 40}, 1, 5), ({3: 7}, 3, 3), ({}, None, None)],
+        [
+            ({4: 40, 2: 20}, 1, 5),
+            ({3: 7}, 3, 3),
+            ({1: None, 0: 5}, 0, 2),
+            ({}, 0, 1),
+            ({}, None, None),
+        ],
         "m map<int, bigint>, lo int, hi int",
     )
     got = [
@@ -68,4 +75,4 @@ def test_dense_array_fills_absent_keys(spark):
             dense_array(F.col("m"), F.col("lo"), F.col("hi"), 0).alias("a")
         ).collect()
     ]
-    assert got == [[0, 20, 0, 40, 0], [7], None]
+    assert got == [[0, 20, 0, 40, 0], [7], [5, 0, 0], [0, 0], None]
