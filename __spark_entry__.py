@@ -1398,6 +1398,42 @@ def q_daily_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _doc_bigrams(spark: SparkSession, sf_dir: str, *keep: str) -> DataFrame:
+    """(*keep, value): every adjacent token pair of every non-empty
+    document, its tokens the single-space split of
+    ``tf.normalize_text`` (the oracle twins' _NORM_TEXT). ``keep`` names
+    the carried columns: "id" (the doc_id) and/or document columns such
+    as "lang". The documents
+    spread by id BEFORE the lambda-heavy bigram projection and the
+    per-occurrence double-md5 downstream: single-row-group testdata
+    parquet cannot parallelize past one task without an exchange
+    (round-7 trap)."""
+    from airflow_retail_etl_spark.functions.partitioning import spread
+
+    docs = load_table(spark, sf_dir, "documents")
+    arrs = (
+        docs.filter(F.col("text").isNotNull())
+        .select(
+            F.col("doc_id").alias("id"),
+            *[c for c in keep if c != "id"],
+            tf.normalize_text(F.col("text")).alias("__t"),
+        )
+        .filter(F.length("__t") > 0)
+        .transform(lambda d: spread(d, "id"))
+        .select(*keep, F.split("__t", " ").alias("arr"))
+    )
+    return arrs.select(
+        *keep,
+        F.explode(
+            F.zip_with(
+                F.slice("arr", 1, F.size("arr") - 1),
+                F.slice("arr", 2, F.size("arr") - 1),
+                lambda a, b: F.concat(a, F.lit(" "), b),
+            )
+        ).alias("value"),
+    )
+
+
 #: heavy_hitters_by_lang knobs: per-LANGUAGE fractional cut (0.1% of the
 #: group's bigram mass, greatest(1, ceil(frac·N_g)) resolved in-engine
 #: on both sides) — a global absolute cut either drowns the small
@@ -1418,30 +1454,10 @@ def q_heavy_hitters_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffles before the prune; the grouped overestimate guarantee
     keeps the prune lossless per group. DuckDB replays per-language
     cells, thresholds, and every estimate bit-for-bit."""
-    from airflow_retail_etl_spark.functions.partitioning import spread
     from airflow_retail_etl_spark.operators import frequency
 
-    docs = load_table(spark, sf_dir, "documents")
-    norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
-    arrs = (
-        docs.filter(F.col("text").isNotNull())
-        .select(F.col("doc_id").alias("id"), "lang", norm.alias("__t"))
-        .filter(F.length("__t") > 0)
-        .transform(lambda d: spread(d, "id"))
-        .select("lang", F.split("__t", " ").alias("arr"))
-    )
-    bigrams = arrs.select(
-        "lang",
-        F.explode(
-            F.zip_with(
-                F.slice("arr", 1, F.size("arr") - 1),
-                F.slice("arr", 2, F.size("arr") - 1),
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            )
-        ).alias("value"),
-    )
     return frequency.heavy_hitters_by(
-        bigrams,
+        _doc_bigrams(spark, sf_dir, "lang"),
         "value",
         "lang",
         threshold_frac=_HHB_FRAC,
@@ -2311,32 +2327,10 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays every counter and every estimate bit-for-bit — including
     the collision-inflated ones (see _HH_WIDTH). Tokenization matches
     the lm/dedup normalization (_NORM_TEXT)."""
-    from airflow_retail_etl_spark.functions.partitioning import spread
     from airflow_retail_etl_spark.operators import frequency
 
-    docs = load_table(spark, sf_dir, "documents")
-    norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
-    # spread BEFORE the lambda-heavy bigram projection and the per-
-    # occurrence double-md5: single-row-group testdata parquet cannot
-    # parallelize past one task without an exchange (round-7 trap)
-    arrs = (
-        docs.filter(F.col("text").isNotNull())
-        .select(F.col("doc_id").alias("id"), norm.alias("__t"))
-        .filter(F.length("__t") > 0)
-        .transform(lambda d: spread(d, "id"))
-        .select(F.split("__t", " ").alias("arr"))
-    )
-    bigrams = arrs.select(
-        F.explode(
-            F.zip_with(
-                F.slice("arr", 1, F.size("arr") - 1),
-                F.slice("arr", 2, F.size("arr") - 1),
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            )
-        ).alias("value")
-    )
     return frequency.heavy_hitters(
-        bigrams,
+        _doc_bigrams(spark, sf_dir),
         "value",
         threshold=_HH_THRESHOLD,
         width=_HH_WIDTH,
@@ -2355,17 +2349,18 @@ _RHH_DAYS = 7
 
 
 def q_rolling_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling heavy hitters from per-day CMS cells
-    (frequency.rolling_heavy_hitters): the users dominating each 7-day
-    trailing window's event volume (≥ 0.2% of window occurrences), exact,
-    with the sketch estimate as the audit column — the CMS twin of
-    rolling_distinct_hll's register windows. The corpus is scanned ONCE
-    into day-grain sparse cells; every window sketch is a
-    calendar²-bounded cell sum; the probe explodes occurrences into
-    their ≤ 7 windows map-side against the broadcast window cells, and
-    only candidate (window, user) occurrences shuffle for the exact
-    verify. DuckDB replays per-day cells, window sums, thresholds, and
-    every collision-inflated estimate bit-for-bit."""
+    """Rolling heavy hitters (frequency.rolling_heavy_hitters): the
+    users dominating each 7-day trailing window's event volume (≥ 0.2%
+    of window occurrences), exact, with the sketch estimate as the
+    audit column — the CMS twin of rolling_distinct_hll's register
+    windows. The events contract once to the (day, user, n) grain, each
+    grain row joins its ≤ 7 windows, and the (window_end, user, n) sums
+    run the grouped heavy-hitter engine with the window as the group:
+    per-window cells, thresholds and probe joins, and only candidate
+    (window, user) rows reach the exact verify. DuckDB replays per-day
+    cells, window sums, thresholds, and every collision-inflated
+    estimate bit-for-bit — the same values, since the sketch is
+    linear."""
     from airflow_retail_etl_spark.operators import frequency
 
     ev = load_table(spark, sf_dir, "events")
@@ -2396,29 +2391,10 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     store-backed fold (per-batch dynamic partition overwrite — the
     linear sketch's answer to at-least-once delivery, where HLL's
     idempotent MAX needs none) is test-pinned."""
-    from airflow_retail_etl_spark.functions.partitioning import spread
     from airflow_retail_etl_spark.operators import frequency
     from airflow_retail_etl_spark.streaming.incremental import replay
 
-    docs = load_table(spark, sf_dir, "documents")
-    norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
-    arrs = (
-        docs.filter(F.col("text").isNotNull())
-        .select(F.col("doc_id").alias("id"), norm.alias("__t"))
-        .filter(F.length("__t") > 0)
-        .transform(lambda d: spread(d, "id"))
-        .select("id", F.split("__t", " ").alias("arr"))
-    )
-    bigrams = arrs.select(
-        "id",
-        F.explode(
-            F.zip_with(
-                F.slice("arr", 1, F.size("arr") - 1),
-                F.slice("arr", 2, F.size("arr") - 1),
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            )
-        ).alias("value"),
-    )
+    bigrams = _doc_bigrams(spark, sf_dir, "id")
     # LONG-domain seeded mod (round 16): same buckets as the DECIMAL
     # `_sample_u % 3` (md5_u64_mod equality test-pinned), no BigDecimal
     bucket = xhash.md5_u64_mod(

@@ -41,13 +41,8 @@ from airflow_retail_etl_spark.functions import xhash
 _TWO64 = 18446744073709551616
 
 
-def _u64(col: Column) -> Column:
-    """Uniform DECIMAL(20,0) draw on [0, 2^64) from a value's md5."""
-    return xhash.md5_u64(col.cast("string"))
-
-
 def _u64_biased(col: Column) -> Column:
-    """The same draw as an ORDER-PRESERVING signed long (u − 2^63) —
+    """A value's md5 u64 as an ORDER-PRESERVING signed long (u − 2^63) —
     round 16: the KMV path's distinct/sort/min-k ran on DECIMAL(20,0)
     (a BigDecimal allocation per row per comparison); every KMV
     operation is ordering/equality, so the biased image carries it at

@@ -40,12 +40,14 @@ Scale shape:
 from __future__ import annotations
 
 import math
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from airflow_retail_etl_spark.functions import xhash
 from airflow_retail_etl_spark.functions.columns import dense_array
+from airflow_retail_etl_spark.functions.partitioning import spread
 from airflow_retail_etl_spark.operators.mart_state import trailing_windows
 
 
@@ -79,19 +81,29 @@ def cms_cells(
     values: DataFrame,
     col: str,
     *,
+    group_cols: Sequence[str] = (),
+    weight_col: str | None = None,
     width: int = 1024,
     depth: int = 4,
 ) -> DataFrame:
-    """Sparse CMS cells of ``values[col]`` occurrences: (idx, c) with
-    row-major idx = j·width + pos — the sketch's MERGE/PERSISTENCE
-    grain (absent cells are zero by omission). Because the sketch is
-    linear, cell frames from any sharding of the data (days, batches,
-    shards) combine by summing c per idx — never revisiting the data;
-    :func:`cms_from_cells` densifies any such union into the probe
-    form. This is the ungrouped twin of :func:`cms_cells_by`."""
-    v = values.select(F.col(col).cast("string").alias("v")).filter(
-        F.col("v").isNotNull()
-    )
+    """Sparse CMS cells of ``values[col]`` occurrences: (*group_cols,
+    idx, c) with row-major idx = j·width + pos, one sketch per
+    ``group_cols`` value — the sketch's MERGE/PERSISTENCE grain (absent
+    cells are zero by omission; a probed key's own occurrences
+    guarantee its d cells exist, so inner probe joins never miss).
+    Because the sketch is linear, cell frames from any sharding of the
+    data (days, batches, shards) combine by summing c per idx — never
+    revisiting the data; :func:`cms_from_cells` densifies any such
+    union of ungrouped cells into the probe form.
+
+    ``weight_col``: each row counts as that many occurrences, so cells
+    off a pre-aggregated (group, value, n) grain are IDENTICAL to cells
+    off the raw occurrence stream (test-pinned) — the weighted-grain
+    contraction the grouped heavy hitters run on."""
+    keep = [*group_cols, *([weight_col] if weight_col else [])]
+    v = values.select(
+        *keep, F.col(col).cast("string").alias("v")
+    ).filter(F.col("v").isNotNull())
     # halves bound BELOW the generate: explode evaluates each array
     # element's tree independently, so inlined positions would hash
     # every row depth times (round 15; explode_outer ≡ explode — the
@@ -99,6 +111,7 @@ def cms_cells(
     # InferFiltersFromGenerate re-inlining trap)
     hv = xhash.with_km_halves(v, F.col("v"))
     pos = hv.select(
+        *keep,
         F.explode_outer(
             F.array(
                 *[
@@ -106,9 +119,16 @@ def cms_cells(
                     for j, p in enumerate(xhash.bound_positions(depth, width))
                 ]
             )
-        ).alias("idx")
+        ).alias("idx"),
     )
-    return pos.groupBy("idx").agg(F.count(F.lit(1)).alias("c"))
+    # coalesce pins the non-nullable schema count(1) has (a group is
+    # never empty, so the 0 branch is unreachable)
+    c = (
+        F.coalesce(F.sum(weight_col), F.lit(0).cast("long"))
+        if weight_col
+        else F.count(F.lit(1))
+    ).alias("c")
+    return pos.groupBy(*group_cols, "idx").agg(c)
 
 
 def cms_from_cells(
@@ -250,19 +270,10 @@ def heavy_hitters(
     the same control-flow class as pagerank's node count, not a data
     collect.
     """
-    if (threshold is None) == (threshold_frac is None):
-        raise ValueError(
-            "pass exactly one of threshold / threshold_frac"
-        )
+    _check_threshold(threshold, threshold_frac)
     if threshold_frac is not None:
-        if not 0.0 < threshold_frac <= 1.0:
-            raise ValueError(
-                f"threshold_frac must be in (0, 1], got {threshold_frac}"
-            )
         n = occurrences.filter(F.col(col).isNotNull()).count()
         threshold = max(1, math.ceil(threshold_frac * n))
-    if threshold < 1:
-        raise ValueError(f"threshold must be >= 1, got {threshold}")
     if cms is None:
         cms = cms_build(occurrences, col, width=width, depth=depth)
     else:
@@ -301,50 +312,22 @@ def heavy_hitters(
     )
 
 
-def cms_cells_by(
-    occurrences: DataFrame,
-    col: str,
-    group_col: str,
-    *,
-    width: int = 1024,
-    depth: int = 4,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Sparse per-group CMS cells: (group_col, idx, c) with idx row-major
-    j·width+pos — the grouped sketch's state grain, bounded by
-    |groups| · depth · width rows after map-side combine (absent cells
-    are zero by omission; a probed key's own occurrences guarantee its
-    d cells exist, so inner probe joins never miss).
-
-    ``weight_col``: each row counts as that many occurrences (CMS is
-    linear, so cells off a pre-aggregated (group, value, n) grain are
-    IDENTICAL to cells off the raw occurrence stream — round 16, the
-    weighted-grain contraction rolling_heavy_hitters rides)."""
-    cols = [group_col] + ([weight_col] if weight_col else [])
-    v = occurrences.select(
-        *cols, F.col(col).cast("string").alias("v")
-    ).filter(F.col("v").isNotNull())
-    # same bound-halves-below-generate rule as cms_cells (round 15)
-    hv = xhash.with_km_halves(v, F.col("v"))
-    pos = hv.select(
-        *cols,
-        F.explode_outer(
-            F.array(
-                *[
-                    (F.lit(j * width) + p).cast("long")
-                    for j, p in enumerate(xhash.bound_positions(depth, width))
-                ]
-            )
-        ).alias("idx"),
-    )
-    # coalesce pins the non-nullable schema count(1) had (the group is
-    # never empty, so the 0 branch is unreachable)
-    c = (
-        F.coalesce(F.sum(weight_col), F.lit(0).cast("long"))
-        if weight_col
-        else F.count(F.lit(1))
-    ).alias("c")
-    return pos.groupBy(group_col, "idx").agg(c)
+def _check_threshold(
+    threshold: int | None, threshold_frac: float | None
+) -> None:
+    """Reject a heavy-hitter cut before any Spark job runs: exactly one
+    of an absolute ``threshold`` ≥ 1 or a ``threshold_frac`` in
+    (0, 1]."""
+    if (threshold is None) == (threshold_frac is None):
+        raise ValueError(
+            "pass exactly one of threshold / threshold_frac"
+        )
+    if threshold_frac is not None and not 0.0 < threshold_frac <= 1.0:
+        raise ValueError(
+            f"threshold_frac must be in (0, 1], got {threshold_frac}"
+        )
+    if threshold is not None and threshold < 1:
+        raise ValueError(f"threshold must be >= 1, got {threshold}")
 
 
 def heavy_hitters_by(
@@ -369,7 +352,7 @@ def heavy_hitters_by(
     ``greatest(1, ceil(frac · N_g))`` from one bounded group-total
     aggregation (the scale-safe cut — see :func:`heavy_hitters`);
     ``threshold`` applies one absolute count to every group. Exactly
-    one of the two.
+    one of the two; both are checked before any Spark job runs.
 
     Scale shape: the sparse cell table (|groups| · depth · width rows,
     map-side combined) broadcasts into d map-side probe joins — the
@@ -386,43 +369,119 @@ def heavy_hitters_by(
     shuffles d times pre-prune, which only pays when the group grain is
     too fine to broadcast AND the prune is selective; at that grain
     also consider a coarser grouping or the global sketch per shard."""
-    if (threshold is None) == (threshold_frac is None):
-        raise ValueError(
-            "pass exactly one of threshold / threshold_frac"
+    grain = (
+        occurrences.select(
+            group_col, F.col(col).cast("string").alias("value")
         )
-    from airflow_retail_etl_spark.functions.partitioning import spread
-
-    # weighted-grain contraction + pin (round 16, the
-    # rolling_heavy_hitters treatment): the occurrence stream fed THREE
-    # passes (cells checkpoint, threshold checkpoint, probe), each
-    # re-executing the corpus-sized subtree — and its map side runs on
-    # ONE task over a single-row-group source. Aggregate to the
-    # (group, value, __w) grain first (map-side combine below that
-    # exchange), pin the contracted grain once, and run every pass off
-    # the pin. CMS is linear and every aggregate below is a sum, so
-    # cells/thresholds/exact counts are bit-identical
-    # (test_cms_cells_by_weighted_grain_equals_raw + the oracle).
-    occ = (
-        spread(
-            occurrences.select(
-                group_col, F.col(col).cast("string").alias("value")
-            )
-            .filter(F.col("value").isNotNull())
-            .groupBy(group_col, "value")
-            .agg(F.count(F.lit(1)).cast("long").alias("__w")),
-            "value",
-        )
-        .localCheckpoint(eager=True)
+        .filter(F.col("value").isNotNull())
+        .groupBy(group_col, "value")
+        .agg(F.count(F.lit(1)).cast("long").alias("__w"))
     )
-    cells = cms_cells_by(
-        occ, "value", group_col, width=width, depth=depth,
-        weight_col="__w",
+    return _weighted_heavy_hitters(
+        grain,
+        group_col,
+        threshold=threshold,
+        threshold_frac=threshold_frac,
+        width=width,
+        depth=depth,
+        broadcast_cells=broadcast_cells,
+    )
+
+
+def rolling_heavy_hitters(
+    occurrences: DataFrame,
+    col: str,
+    day_col: str,
+    *,
+    window_days: int = 7,
+    threshold_frac: float,
+    width: int = 1024,
+    depth: int = 4,
+) -> DataFrame:
+    """Per-trailing-window exact heavy hitters — the rolling face of the
+    sketch family (the CMS twin of ``cardinality.hll_registers``'
+    rolling distinct): every value whose exact count inside
+    [day − window_days + 1, day] is ≥
+    greatest(1, ceil(frac · window occurrences)), one row per
+    (window_end, value).
+
+    A trailing window is just a group: the occurrences contract to the
+    (day, value, n) grain, ``mart_state.trailing_windows`` tags each
+    grain row with the ≤ ``window_days`` windows containing its day,
+    and the tagged rows sum to the (window_end, value, n) grain that
+    the grouped engine of :func:`heavy_hitters_by` runs on with
+    ``window_end`` as the group. The CMS is linear and every aggregate
+    is a sum, so each window's cells, threshold, estimates and exact
+    counts equal those of the window's own occurrences, and the
+    overestimate guarantee keeps the prune lossless per window.
+
+    Cost: the sketch hashes the (window_end, value) grain — between the
+    distinct (day, value) pairs and ``window_days`` times that (every
+    value seen on one day only). The corpus itself is scanned once and
+    shuffles once, already contracted.
+
+    Returns (window_end, value, n_exact, cms_est, threshold) ordered by
+    (window_end, n_exact DESC, value); windows exist for every day
+    PRESENT in the data (leading windows are partial, like any
+    trailing-window metric).
+    """
+    grain = (
+        occurrences.select(
+            F.col(day_col).alias("day"),
+            F.col(col).cast("string").alias("value"),
+        )
+        .filter(F.col("value").isNotNull() & F.col("day").isNotNull())
+        .groupBy("day", "value")
+        .agg(F.count(F.lit(1)).cast("long").alias("__w"))
+    )
+    windows = (
+        trailing_windows(
+            grain, grain.select("day").distinct(), window_days, "day"
+        )
+        .groupBy("window_end", "value")
+        .agg(F.sum("__w").alias("__w"))
+    )
+    return _weighted_heavy_hitters(
+        windows,
+        "window_end",
+        threshold=None,
+        threshold_frac=threshold_frac,
+        width=width,
+        depth=depth,
+        broadcast_cells=True,
+    )
+
+
+def _weighted_heavy_hitters(
+    grain: DataFrame,
+    group_col: str,
+    *,
+    threshold: int | None,
+    threshold_frac: float | None,
+    width: int,
+    depth: int,
+    broadcast_cells: bool,
+) -> DataFrame:
+    """The grouped heavy-hitter engine over a weighted
+    (group_col, value, __w) grain, each row standing for __w
+    occurrences of value in its group: per-group cells, per-group
+    threshold, d probe joins on (group, idx), exact weight-sum verify.
+    Output and arguments as :func:`heavy_hitters_by`."""
+    _check_threshold(threshold, threshold_frac)
+    # spread() pins the post-agg parallelism (AQE would coalesce the
+    # small grain to one partition — AQE sizes by bytes, not rows);
+    # the eager pin materializes the grain ONCE for the three passes it
+    # feeds (cells, thresholds, probe), each of which re-executed the
+    # whole single-task scan + aggregate subtree unpinned (round 16,
+    # A/B measured; MEMORY_AND_DISK, so an at-scale grain spills)
+    occ = spread(grain, "value").localCheckpoint(eager=True)
+    # bounded rows off a corpus-sized subtree, materialized before the
+    # broadcasts they feed (the round-10 rule)
+    cells = cms_cells(
+        occ, "value", group_cols=(group_col,), weight_col="__w",
+        width=width, depth=depth,
     ).localCheckpoint(eager=True)
     if threshold_frac is not None:
-        if not 0.0 < threshold_frac <= 1.0:
-            raise ValueError(
-                f"threshold_frac must be in (0, 1], got {threshold_frac}"
-            )
         thr = occ.groupBy(group_col).agg(
             F.greatest(
                 F.lit(1).cast("long"),
@@ -431,17 +490,12 @@ def heavy_hitters_by(
                     * F.coalesce(F.sum("__w"), F.lit(0))
                 ),
             ).alias("__thr")
-        ).localCheckpoint(eager=True)  # same rule: |groups| rows
-        # feeding a broadcast — pinned so the build is one cheap read
+        )
     else:
-        if threshold < 1:
-            raise ValueError(f"threshold must be >= 1, got {threshold}")
         thr = occ.select(group_col).distinct().select(
             group_col, F.lit(threshold).cast("long").alias("__thr")
-        ).localCheckpoint(eager=True)
-    def _b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_cells else df
-
+        )
+    thr = thr.localCheckpoint(eager=True)
     # positions bound ONCE before the join chain: a join-key expression
     # is evaluated per join, so inlined positions would hash every probe
     # row depth times across the d joins (round 15; the single
@@ -455,23 +509,19 @@ def heavy_hitters_by(
             for j, p in enumerate(xhash.bound_positions(depth, width))
         ],
     )
-    cols = []
     for j in range(depth):
-        cj = _b(
-            cells.select(
-                F.col(group_col).alias(f"__g{j}"),
-                F.col("idx").alias(f"__i{j}"),
-                F.col("c").alias(f"__c{j}"),
-            )
+        cj = cells.select(
+            F.col(group_col).alias(f"__g{j}"),
+            F.col("idx").alias(f"__i{j}"),
+            F.col("c").alias(f"__c{j}"),
         )
         probed = probed.join(
-            cj,
+            F.broadcast(cj) if broadcast_cells else cj,
             (F.col(group_col) == F.col(f"__g{j}"))
             & (F.col(f"__pos{j}") == F.col(f"__i{j}")),
         )
-        cols.append(f"__c{j}")
     survivors = probed.withColumn(
-        "cms_est", F.least(*[F.col(c) for c in cols])
+        "cms_est", F.least(*[F.col(f"__c{j}") for j in range(depth)])
     ).filter(F.col("cms_est") >= F.col("__thr"))
     return (
         survivors.groupBy(group_col, "value")
@@ -486,165 +536,4 @@ def heavy_hitters_by(
         )
         .filter(F.col("n_exact") >= F.col("threshold"))
         .orderBy(group_col, F.col("n_exact").desc(), "value")
-    )
-
-
-def rolling_heavy_hitters(
-    occurrences: DataFrame,
-    col: str,
-    day_col: str,
-    *,
-    window_days: int = 7,
-    threshold_frac: float,
-    width: int = 1024,
-    depth: int = 4,
-) -> DataFrame:
-    """Per-trailing-window exact heavy hitters from PER-DAY CMS cells —
-    the rolling face of the sketch family (the CMS twin of
-    ``cardinality.hll_registers``' rolling distinct): every value whose
-    exact count inside [day − window_days + 1, day] is ≥
-    greatest(1, ceil(frac · window occurrences)), one row per
-    (window_end, value).
-
-    Why per-day cells: the corpus is scanned ONCE into day-grain sparse
-    cells (≤ days · depth · width rows — the sketch's persistence
-    grain); every window's sketch is then a calendar²-bounded cell SUM
-    (the linear merge), never a rescan. The probe side explodes each
-    occurrence into the ≤ ``window_days`` windows containing its day —
-    a projection against the broadcast window-cell table — and only
-    surviving (window, value) occurrences shuffle for the exact count,
-    so the per-window key-grain work is candidates, not corpus. The
-    overestimate guarantee holds per window (sums of day cells only
-    add), keeping the prune lossless.
-
-    Returns (window_end, value, n_exact, cms_est, threshold) ordered by
-    (window_end, n_exact DESC, value); windows exist for every day
-    PRESENT in the data (leading windows are partial, like any
-    trailing-window metric).
-    """
-    if not 0.0 < threshold_frac <= 1.0:
-        raise ValueError(
-            f"threshold_frac must be in (0, 1], got {threshold_frac}"
-        )
-    from airflow_retail_etl_spark.functions.partitioning import spread
-
-    occ0 = occurrences.select(
-        F.col(day_col).alias("day"),
-        F.col(col).cast("string").alias("value"),
-    ).filter(F.col("value").isNotNull() & F.col("day").isNotNull())
-    # weighted-grain contraction (round 16): the raw occurrence stream
-    # repeats each (day, value) pair many times, and a single-row-group
-    # parquet source runs the whole scan + exchange write on ONE task
-    # (the round-7 input-split trap) — job_profile measured 1.7-1.9 s
-    # single-task on that map side at sf0.1. Aggregating to the
-    # (day, value, __w) grain FIRST puts a map-side combine below that
-    # exchange, so the one-task side emits |distinct pairs| weighted
-    # rows instead of every occurrence, and every downstream pass
-    # (cells, totals, the ×window_days probe explode, the exact count)
-    # hashes/joins the contracted grain. CMS is linear and every
-    # aggregate below is a sum, so results are bit-identical
-    # (test-pinned against the raw-grain form). spread() pins the
-    # post-agg parallelism (AQE would coalesce the small grain to one
-    # partition — the CLAUDE.md bytes-blind trap), and the eager
-    # localCheckpoint materializes the grain ONCE: it feeds the cells
-    # checkpoint, the totals checkpoint, AND the probe stream, and each
-    # of those re-executed the whole single-task scan+aggregate subtree
-    # (~2 s apiece at sf0.1 — A/B measured 5.1-6.0 s unpinned vs
-    # 3.1-3.9 s pinned, the r10 materialize-before-reuse law on the
-    # contracted |days|·|keys| grain, the sketch's own state-size
-    # class; MEMORY_AND_DISK, so an at-scale grain spills, not OOMs).
-    occ = spread(
-        occ0.groupBy("day", "value").agg(
-            F.count(F.lit(1)).cast("long").alias("__w")
-        ),
-        "value",
-    ).localCheckpoint(eager=True)
-    # day-grain state, materialized before the broadcasts it feeds
-    # (bounded rows off a corpus-sized subtree — the round-10 rule)
-    cells = cms_cells_by(
-        occ, "value", "day", width=width, depth=depth, weight_col="__w"
-    ).localCheckpoint(eager=True)
-    totals = (
-        occ.groupBy("day")
-        .agg(
-            F.coalesce(F.sum("__w"), F.lit(0))
-            .cast("long")
-            .alias("__dn")
-        )
-        .localCheckpoint(eager=True)
-    )
-    mapping = trailing_windows(totals, totals, window_days, "day")
-    thr = mapping.groupBy("window_end").agg(
-        F.greatest(
-            F.lit(1).cast("long"),
-            F.ceil(F.lit(threshold_frac) * F.sum("__dn")),
-        ).alias("__thr")
-    )
-    # two round-15 fixes on the window-merged cell table, both measured
-    # in the executed plan:
-    # - spread the merge aggregation: its input is |windows|·|days in
-    #   window|·(depth·width) small rows and AQE sizes the exchange by
-    #   BYTES — it collapsed to ONE task for 3.1 s at sf0.1 (the
-    #   CLAUDE.md coalesce trap, aggregation face);
-    # - localCheckpoint BEFORE the d broadcast probe joins: the plan
-    #   showed the whole merge subtree replicated FOUR times (one per
-    #   broadcast build — exchange reuse does not dedup across the
-    #   aliased builds), the r10 materialize-before-broadcast law.
-    wcells = (
-        spread(
-            mapping.select("window_end", "day").join(cells, "day"),
-            "window_end",
-            "idx",
-        )
-        .groupBy("window_end", "idx")
-        .agg(F.sum("c").alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    # km halves + positions bound ON THE CONTRACTED GRAIN, BEFORE the
-    # window explode (round 16): the double-md5 depends only on value,
-    # so hashing above the ≤window_days broadcast explode re-hashed
-    # every row ×windows — the r15 bound-positions rule pushed one
-    # level further down. The halves/positions ride the explode as
-    # plain longs.
-    hocc = xhash.with_km_halves(occ, F.col("value")).select(
-        "*",
-        *[
-            (F.lit(j * width) + p).cast("long").alias(f"__pos{j}")
-            for j, p in enumerate(xhash.bound_positions(depth, width))
-        ],
-    )
-    wocc = hocc.join(F.broadcast(mapping.select("window_end", "day")), "day")
-    probed = wocc.join(F.broadcast(thr), "window_end")
-    colnames = []
-    for j in range(depth):
-        cj = F.broadcast(
-            wcells.select(
-                F.col("window_end").alias(f"__w{j}"),
-                F.col("idx").alias(f"__i{j}"),
-                F.col("c").alias(f"__c{j}"),
-            )
-        )
-        probed = probed.join(
-            cj,
-            (F.col("window_end") == F.col(f"__w{j}"))
-            & (F.col(f"__pos{j}") == F.col(f"__i{j}")),
-        )
-        colnames.append(f"__c{j}")
-    survivors = probed.withColumn(
-        "cms_est", F.least(*[F.col(c) for c in colnames])
-    ).filter(F.col("cms_est") >= F.col("__thr"))
-    return (
-        survivors.groupBy("window_end", "value")
-        .agg(
-            # each contracted row carries __w occurrences — the exact
-            # count is the weight sum (≡ count(1) on the raw grain;
-            # coalesce pins count's non-nullable schema)
-            F.coalesce(F.sum("__w"), F.lit(0))
-            .cast("long")
-            .alias("n_exact"),
-            F.min("cms_est").alias("cms_est"),
-            F.min("__thr").alias("threshold"),
-        )
-        .filter(F.col("n_exact") >= F.col("threshold"))
-        .orderBy("window_end", F.col("n_exact").desc(), "value")
     )

@@ -80,14 +80,9 @@ from airflow_retail_etl_spark.operators.mart_state import trailing_windows
 #: BIGINT in both engines (the same headroom trick as HLL's rest bits),
 #: so leading zeros come from ``length(bin(...))``, no transcendentals
 LEVEL_BITS = 60
-_TWO60 = 1 << LEVEL_BITS
 
 #: default state capacity per group (rank error ~ 1/√cap ≈ 2.2%)
 DEFAULT_CAP = 2048
-
-
-def _two60() -> Column:
-    return F.lit(str(_TWO60)).cast("decimal(20,0)")
 
 
 def level_cols(key: Column) -> tuple[Column, Column]:

@@ -205,8 +205,43 @@ def test_heavy_hitters_by_validation(spark):
         )
 
 
+def test_invalid_cuts_run_no_spark_job(spark):
+    """Every heavy-hitter argument is checked before the first Spark
+    job: a bad call fails fast instead of scanning the corpus first."""
+    df = _gocc(spark, GROUPED)
+    days = df.select(F.current_date().alias("day"), "v")
+    bad = [
+        lambda: frequency.heavy_hitters_by(
+            df, "v", "g", threshold=0, width=W, depth=D
+        ),
+        lambda: frequency.heavy_hitters_by(
+            df, "v", "g", threshold_frac=1.5, width=W, depth=D
+        ),
+        lambda: frequency.heavy_hitters(
+            df, "v", threshold_frac=0.0, width=W, depth=D
+        ),
+        lambda: frequency.rolling_heavy_hitters(
+            days, "v", "day", threshold_frac=0.0
+        ),
+        lambda: frequency.rolling_heavy_hitters(
+            days, "v", "day", window_days=0, threshold_frac=0.5
+        ),
+    ]
+    sc = spark.sparkContext
+    for i, call in enumerate(bad):
+        group = f"hh-invalid-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(ValueError):
+                call()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], i
+
+
 def test_rolling_heavy_hitters_matches_naive_windows(spark):
-    """Per-day-cell window sums + sketch prune must reproduce the naive
+    """Window-grain cells + sketch prune must reproduce the naive
     exact trailing-window computation — including partial leading
     windows and per-window fractional thresholds — with est ≥ exact for
     every reported row (the overestimate guarantee survives the window
@@ -282,9 +317,9 @@ def test_heavy_hitters_rejects_mismatched_prebuilt_cms(spark):
     assert {r.value for r in out} == {f"v{i}" for i in range(5)}
 
 
-def test_cms_cells_by_weighted_grain_equals_raw(spark):
-    """Round 16: rolling_heavy_hitters contracts the occurrence stream
-    to the (group, value, n) grain before sketching. CMS is linear, so
+def test_cms_cells_weighted_grain_equals_raw(spark):
+    """The grouped heavy hitters contract the occurrence stream to the
+    (group, value, n) grain before sketching. CMS is linear, so
     weighted cells must be BIT-identical to raw-occurrence cells —
     every (group, idx, c) row."""
     import datetime as dt
@@ -298,9 +333,12 @@ def test_cms_cells_by_weighted_grain_equals_raw(spark):
     weighted = raw.groupBy("day", "v").agg(
         F.count(F.lit(1)).cast("long").alias("__w")
     )
-    a = frequency.cms_cells_by(raw, "v", "day", width=W, depth=D)
-    b = frequency.cms_cells_by(
-        weighted, "v", "day", width=W, depth=D, weight_col="__w"
+    a = frequency.cms_cells(
+        raw, "v", group_cols=("day",), width=W, depth=D
+    )
+    b = frequency.cms_cells(
+        weighted, "v", group_cols=("day",), weight_col="__w",
+        width=W, depth=D,
     )
     assert a.schema == b.schema
     ra = sorted(map(tuple, a.collect()))

@@ -12,7 +12,10 @@ densifies it with ``functions.columns.dense_array`` — no key-range
 spine join: streaming_decayed 7 (15 with the calendar join),
 decayed_revenue and ewm_price_stats 4 each (9), trending_brands 7 (13),
 heavy_hitters 9 (10), streaming_heavy_hitters 16 (17) and bloom_decontam
-14 (15). perplexity_deciles takes its row count from global_cumsum's
+14 (15). The grouped heavy hitters share one engine: heavy_hitters_by_lang
+15, and rolling_heavy_hitters, which runs it with the trailing window as
+the group, 17 (21 with its own per-day cell sums and probe chain).
+perplexity_deciles takes its row count from global_cumsum's
 offsets broadcast (20; 22 with a separate count). The rolling faces
 and the quantile-sketch reads are
 budgeted at exactly their measured counts: the window joins over one
@@ -28,13 +31,13 @@ import pytest
 import __spark_entry__ as entry
 
 JOB_BUDGET = {
-    "psi_drift": 22,
-    "robust_value_stats": 20,
+    "psi_drift": 14,
+    "robust_value_stats": 17,
     "streaming_decayed": 7,
     "rolling_mart": 14,
     "rolling_volatility": 9,
     "rolling_sample": 18,
-    "rolling_heavy_hitters": 21,
+    "rolling_heavy_hitters": 17,
     "rolling_distinct_hll": 13,
     "rolling_quantiles": 22,
     "streaming_quantiles": 24,
@@ -43,6 +46,7 @@ JOB_BUDGET = {
     "ewm_price_stats": 4,
     "trending_brands": 7,
     "heavy_hitters": 9,
+    "heavy_hitters_by_lang": 15,
     "streaming_heavy_hitters": 16,
     "bloom_decontam": 14,
     "perplexity_deciles": 20,

@@ -1,9 +1,11 @@
 """State-read certificates against the DuckDB oracle, compared the way
 ``tools/check_oracle.py`` does: every replay-backed registry query folds
 its input in batches, every rolling query reads trailing windows from
-per-day state, every decayed query folds a dense calendar by Horner, and
-``perplexity_deciles`` ranks through ``global_cumsum``; each must equal
-its one-shot ``oracle_sql()`` twin bit-for-bit."""
+per-day state, every decayed query folds a dense calendar by Horner,
+``perplexity_deciles`` ranks through ``global_cumsum``, and
+``heavy_hitters_by_lang`` runs the grouped heavy-hitter engine that
+``rolling_heavy_hitters`` shares; each must equal its one-shot
+``oracle_sql()`` twin bit-for-bit."""
 
 from __future__ import annotations
 
@@ -41,6 +43,7 @@ STATE_READ_QUERIES = [
     "ewm_price_stats",
     "trending_brands",
     "perplexity_deciles",
+    "heavy_hitters_by_lang",
 ]
 
 
