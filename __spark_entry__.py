@@ -1069,8 +1069,8 @@ def q_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout-invariant (pinned by test), bit-reproducible cross-engine,
     and a different independent order every epoch. The position comes
     from the DISTRIBUTED prefix sum (selection.global_cumsum: range
-    repartition + broadcast partition offsets — no single-partition
-    window), and io.write_sorted on (shuffle_u, doc_id) lays the corpus
+    repartition + per-partition offsets observed on the pin — no
+    single-partition window), and io.write_sorted on (shuffle_u, doc_id) lays the corpus
     down so readers stream it in shuffled order. Oracle: ROW_NUMBER()
     over the identical DuckDB md5 expression.
     """
@@ -4814,8 +4814,8 @@ def q_corpus_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget corpus selection: best-quality documents until a
     10k-token budget is spent. The running token total uses
     operators.selection.global_cumsum — range-repartition on the total
-    order (quality desc, doc_id), per-partition offsets broadcast back,
-    within-partition windows — NOT a single-partition global window, so
+    order (quality desc, doc_id), per-partition offsets observed on the
+    pin and read as literals, within-partition windows — NOT a single-partition global window, so
     the selection scales; integer token counts make the two-phase sum
     bit-identical to the sequential one."""
     from airflow_retail_etl_spark.operators import selection
@@ -4845,13 +4845,13 @@ def q_perplexity_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus fluency profile: docs bucketed into 10 deciles by unigram
     cross-entropy, with per-decile count and min/mean/max. The global
     rank comes from operators.selection.global_cumsum over a weight of 1
-    (distributed row_number — range repartition + broadcast offsets),
+    (distributed row_number — range repartition + observed offsets),
     NOT a single-partition ntile; the decile is integer arithmetic
     ((rank-1)·10 div N) so both engines bucket identically. Mean is
     DECIMAL-accumulated over the 6dp-rounded scores (transcendental
     policy: round before any aggregation). The denominator N is the
-    grand total of the weight, which global_cumsum carries on its
-    offsets broadcast (total_col) — no separate count pass.
+    grand total of the weight, which global_cumsum observes on its pin
+    and carries as a literal (total_col) — no separate count pass.
 
     The doc-grain NLL table is materialized ONCE (localCheckpoint)
     before the range repartition, whose bound sampling and checkpoint
@@ -5862,7 +5862,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_classifier": q_quality_classifier,
         # corpus_budget reps the running-sum family in the window with the
         # DISTRIBUTED prefix sum (selection.global_cumsum — range
-        # repartition + broadcast offsets) plus budgeted selection on top;
+        # repartition + observed offsets) plus budgeted selection on top;
         # cumulative_daily_revenue (a 30-row ordered window over the same
         # money policy) moves just past the prefix
         "corpus_budget": q_corpus_budget,

@@ -15,9 +15,11 @@ distributed steps:
    RangePartitioner puts partition i's every row before partition i+1's
    in key order, and the ordering key is made total (unique tiebreak
    column), so ranges are disjoint;
-2. one tiny per-partition aggregate (``num_partitions`` rows) whose
-   running total — the only sequential step — is a window over those
-   few rows, broadcast back as per-partition offsets;
+2. each range partition's total, observed (``DataFrame.observe``) on
+   the same job that pins the range-partitioned rows; the running total
+   of those ``num_partitions`` numbers — the only sequential step — is
+   computed exactly on the driver and rides into the plan as literal
+   per-partition offsets;
 3. a WITHIN-partition cumulative window (partitioned by the range id),
    so no executor ever sees more than its partition.
 
@@ -29,10 +31,32 @@ a DOUBLE value column would make the partition split observable.
 
 from __future__ import annotations
 
+import decimal
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def _sum_type(t: T.DataType) -> T.DataType:
+    """Spark's ``sum`` result type for an exact value type (``Sum``'s
+    rule: integral → BIGINT, DECIMAL(p, s) → DECIMAL(min(p+10, 38), s))."""
+    if isinstance(t, T.DecimalType):
+        return T.DecimalType(min(t.precision + 10, 38), t.scale)
+    if isinstance(t, T.IntegralType):
+        return T.LongType()
+    raise TypeError(f"global_cumsum needs an exact value type, got {t}")
+
+
+def _typed_literal(x, t: T.DataType) -> str:
+    """SQL text for the exact value ``x`` (int, Decimal or None) as type
+    ``t`` — a string cast, so no digit is lost to a literal's parse."""
+    if x is None:
+        v = "NULL"
+    else:
+        v = f"'{x:f}'" if isinstance(x, decimal.Decimal) else f"'{x}'"
+    return f"CAST({v} AS {t.simpleString()})"
 
 
 def global_cumsum(
@@ -46,53 +70,72 @@ def global_cumsum(
 ) -> DataFrame:
     """Annotate ``df`` with the exact running sum of ``value_col`` in
     ``order`` (which must be a TOTAL order — include a unique tiebreak),
-    and with the grand total as ``total_col`` when one is named (it
-    rides the offsets broadcast, so it costs no extra pass).
+    and with the grand total as ``total_col`` when one is named.
+    ``value_col`` must be integral or DECIMAL (exact addition is what
+    makes the partition split unobservable).
 
-    ``num_partitions`` bounds per-executor window size; the sequential
-    offset pass touches ``num_partitions`` rows, never data rows.
+    ``num_partitions`` bounds per-executor window size. Each range
+    partition's total is OBSERVED on the pin's own job (one
+    ``DataFrame.observe`` of ``num_partitions`` conditional sums, built
+    as one SQL expression); the driver turns the totals into prefix
+    offsets with exact integer / 76-digit decimal arithmetic and the
+    window reads them, and the grand total, as literals — no
+    per-partition aggregation, no offsets window, no broadcast join.
+    The offset and ``total_col`` are typed as the sum of the window
+    sum (BIGINT for integral values, DECIMAL(min(p+20, 38), s) for
+    DECIMAL(p, s)), so ``out_col`` keeps the type of the former
+    offsets-plus-window expression.
 
     The range-partitioned frame is EAGERLY MATERIALIZED before anything
     reads ``__pid`` — this is correctness, not the r10 perf rule:
-    ``repartitionByRange`` samples its bounds per execution, and the
-    un-pinned subtree executes TWICE (once building the broadcast
-    offsets, once for the output), so the two executions can assign
-    different ``__pid`` to boundary rows and the offsets then belong to
-    a different partitioning than the rows they're joined to (observed
-    round 15: an intermittent sf0.1 corpus_shuffle run with 94% of
-    positions shifted; identical session re-runs were clean — exchange
-    reuse usually hides it). At 100 TB prefer persisting the
-    range-clustered table (``io.write_sorted``) and reading it back.
+    ``repartitionByRange`` samples its bounds per execution, so totals
+    from one execution and rows from another can disagree on the
+    ``__pid`` of boundary rows (observed round 15, when the offsets
+    were a second consumer of the un-pinned subtree: an intermittent
+    sf0.1 corpus_shuffle run with 94% of positions shifted). The
+    observed totals come from the very execution the pin stores, so
+    they belong to its partitioning by construction. At 100 TB prefer
+    persisting the range-clustered table (``io.write_sorted``) and
+    reading it back.
     """
+    off_t = _sum_type(_sum_type(df.schema[value_col].dataType))
+    obs = Observation()
+    psums = ", ".join(
+        f"sum(CASE WHEN __pid = {i} THEN `{value_col}` END)"
+        for i in range(num_partitions)
+    )
     part = (
         df.repartitionByRange(num_partitions, *order)
         .withColumn("__pid", F.spark_partition_id())
+        .observe(obs, F.expr(f"array({psums})").alias("psums"))
         .localCheckpoint(eager=True)
     )
-    totals = part.groupBy("__pid").agg(F.sum(value_col).alias("__psum"))
-    w_off = (
-        Window.orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = totals.select(
-        "__pid",
-        F.coalesce(F.sum("__psum").over(w_off), F.lit(0)).alias("__off"),
-        *(
-            [F.sum("__psum").over(Window.partitionBy()).alias(total_col)]
-            if total_col
-            else []
-        ),
-    )
+    totals = obs.get.get("psums") or [None] * num_partitions
+    # offsets[i] = sum of the totals before partition i; NULL while
+    # every value so far is NULL, as the single window's sum would be
+    offsets, run = [], None
+    with decimal.localcontext(decimal.Context(prec=76)):
+        for t in totals:
+            offsets.append(run)
+            if t is not None:
+                run = t if run is None else run + t
+    off = ", ".join(_typed_literal(o, off_t) for o in offsets)
     w_in = (
         Window.partitionBy("__pid")
         .orderBy(*order)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return (
-        part.join(F.broadcast(offs), "__pid")
-        .withColumn(out_col, F.col("__off") + F.sum(value_col).over(w_in))
-        .drop("__pid", "__off")
+    pid_off = F.expr(f"element_at(array({off}), __pid + 1)")
+    win = F.sum(value_col).over(w_in)
+    out = part.withColumn(
+        out_col,
+        F.when(win.isNull(), pid_off).otherwise(
+            F.coalesce(pid_off, F.lit(0)) + win
+        ),
     )
+    if total_col:
+        out = out.withColumn(total_col, F.expr(_typed_literal(run, off_t)))
+    return out.drop("__pid")
 
 
 def budget_select(
@@ -131,7 +174,7 @@ def _type7_rank(q: float) -> str:
     return f"({float(q)!r}D * CAST(n - 1 AS DOUBLE) + 1.0D)"
 
 
-# The two helpers below build their columns from SQL text: one F.expr
+# The three helpers below build their columns from SQL text: one F.expr
 # parse per column instead of a py4j call per expression node, which
 # measured ~0.2 s per helper at 9 qs (CLAUDE.md's literal-count rule).
 
@@ -153,21 +196,58 @@ def _order_stat_picks(qs: Sequence[float]) -> list[Column]:
     ]
 
 
-def _stack_quantiles(qs: Sequence[float]) -> Column:
-    """Generator of (q, quantile) rows from :func:`_order_stat_picks`'
-    columns: type-7 interpolation in the fixed-order IEEE expression
+def _interpolated(i: int, q: float) -> str:
+    """SQL for q's type-7 quantile from :func:`_order_stat_picks`'
+    ``__lo{i}`` / ``__hi{i}``: the fixed-order IEEE expression
     ``lo + d·(hi−lo)`` (the textbook (1−d)·lo + d·hi differs at the
     last ulp and would break the oracle's bit-exactness), 6dp."""
-    rows = []
-    for i, q in enumerate(qs):
-        h = _type7_rank(q)
-        d = f"({h} - CAST(CAST(FLOOR({h}) AS BIGINT) AS DOUBLE))"
-        lv, hv = f"CAST(__lo{i} AS DOUBLE)", f"CAST(__hi{i} AS DOUBLE)"
-        rows.append(
-            f"named_struct('q', {float(q)!r}D,"
-            f" 'quantile', round({lv} + {d} * ({hv} - {lv}), 6))"
+    h = _type7_rank(q)
+    d = f"({h} - CAST(CAST(FLOOR({h}) AS BIGINT) AS DOUBLE))"
+    lv, hv = f"CAST(__lo{i} AS DOUBLE)", f"CAST(__hi{i} AS DOUBLE)"
+    return f"round({lv} + {d} * ({hv} - {lv}), 6)"
+
+
+def _stack_quantiles(qs: Sequence[float]) -> Column:
+    """Generator of (q, quantile) rows from :func:`_order_stat_picks`'
+    columns, one per q in the order given."""
+    rows = ", ".join(
+        f"named_struct('q', {float(q)!r}D, 'quantile', {_interpolated(i, q)})"
+        for i, q in enumerate(qs)
+    )
+    return F.expr(f"inline(array({rows}))")
+
+
+def _value_counts(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
+    """(g, v, c) value-grain counts of the non-NULL (group, value) rows."""
+    return (
+        df.filter(
+            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
         )
-    return F.expr(f"inline(array({', '.join(rows)}))")
+        .groupBy(F.col(group_col).alias("g"), F.col(value_col).alias("v"))
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    )
+
+
+def _grouped_picks(
+    counts: DataFrame, qs: Sequence[float], *extra: Column
+) -> DataFrame:
+    """Per group ``g`` of value-grain rows (g, v, c, …): the population
+    ``n`` and each q's two bracketing order statistics
+    (:func:`_order_stat_picks`), plus the ``extra`` aggregates over the
+    same rows. One per-group cumulative window over the value grain;
+    the window already clustered the rows by group, so the pick adds
+    no exchange."""
+    w_cum = (
+        Window.partitionBy("g")
+        .orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = counts.withColumn("cum", F.sum("c").over(w_cum)).withColumn(
+        "n", F.sum("c").over(Window.partitionBy("g")).cast("long")
+    )
+    return cum.groupBy("g").agg(
+        F.max("n").alias("n"), *_order_stat_picks(qs), *extra
+    )
 
 
 def grouped_quantiles(
@@ -187,9 +267,8 @@ def grouped_quantiles(
     cumulative window over the VALUE-GRAIN rows (state is the group's
     distinct-value count, not its row count), and one per-group
     aggregation picking each q's two bracketing order statistics
-    (:func:`_order_stat_picks`) — the window already clustered the rows
-    by group, so the pick adds no exchange. NULL values excluded; NULL
-    groups excluded (they are absent keys, not a quantile population).
+    (:func:`_grouped_picks`). NULL values excluded; NULL groups
+    excluded (they are absent keys, not a quantile population).
     Returns (``group_col``, q, quantile, n), one row per group and q
     (q in the order given; groups unordered). Duplicate qs are refused.
 
@@ -199,24 +278,8 @@ def grouped_quantiles(
     use :func:`global_quantiles` (range repartition) instead.
     """
     _check_quantiles(qs)
-    counts = (
-        df.filter(
-            F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
-        )
-        .groupBy(F.col(group_col).alias("g"), F.col(value_col).alias("v"))
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    w_cum = (
-        Window.partitionBy("g")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = counts.withColumn("cum", F.sum("c").over(w_cum)).withColumn(
-        "n", F.sum("c").over(Window.partitionBy("g")).cast("long")
-    )
     return (
-        cum.groupBy("g")
-        .agg(F.max("n").alias("n"), *_order_stat_picks(qs))
+        _grouped_picks(_value_counts(df, group_col, value_col), qs)
         .select(F.col("g").alias(group_col), "n", _stack_quantiles(qs))
         .select(group_col, "q", "quantile", "n")
     )
@@ -276,7 +339,7 @@ def robust_stats(
     rank arithmetic of :func:`grouped_quantiles` (no per-group value
     buffers, no approximations):
 
-    - median = grouped_quantiles(…, [0.5]) — exact type-7;
+    - median = the exact type-7 0.5-quantile;
     - MAD = the exact median of |x − median| (deviations rounded 6dp
       BEFORE re-ranking so the second rank pass runs on an engine-
       identical value domain — the transcendental/ratio policy applied
@@ -285,93 +348,79 @@ def robust_stats(
       values 6dp-round → DECIMAL accumulate (exact, layout-free), one
       double division, 6dp round.
 
+    Two rank passes. The first picks (lo, median, hi) per group — one
+    wide |groups|-row frame, pinned. The second reads the raw rows
+    ONCE, joined to that broadcast: one (group, deviation) aggregation
+    counts each deviation and carries, per deviation, the in-bounds
+    row count and their exact DECIMAL sum, so the grouped pick over
+    the deviations yields MAD, ``n_trimmed`` and the trimmed mean
+    together — no separate trim pass, no join of per-statistic frames.
     Heavy-tailed pipelines use these instead of mean/stddev (a handful
-    of outlier documents should not move the center estimate); all
-    three passes are value-grain aggregations + broadcast joins, so
-    scale posture is grouped_quantiles' (state per group = its distinct
-    values, never its rows). Returns
-    (group, n, median, mad, n_trimmed, trimmed_mean), ordered."""
+    of outlier documents should not move the center estimate); scale
+    posture is grouped_quantiles' (state per group = its distinct
+    values, never its rows). A group that trims to EMPTY (both bounds
+    strictly between two of its values) keeps its median and MAD with
+    ``n_trimmed`` 0 and a NULL trimmed mean. Returns
+    (group, n, median, mad, n_trimmed, trimmed_mean), ordered by group
+    on one partition (|groups| rows)."""
     if not 0.0 < trim_q < 0.5:
         raise ValueError(f"trim_q must be in (0, 0.5), got {trim_q}")
     g, v = F.col(group_col), F.col(value_col)
     base = df.filter(v.isNotNull() & g.isNotNull()).select(
-        group_col, v.cast("double").alias("__v")
+        g.alias("g"), v.cast("double").alias("__v")
     )
-    # ONE rank pass computes the median AND both trim bounds (the
-    # value-grain cumulative window is the expensive part — don't run
-    # it twice over the same domain); the deviations need a second pass
-    # because their value domain only exists after the median does
-    qv = grouped_quantiles(
-        base, group_col, "__v", [trim_q, 0.5, 1.0 - trim_q]
-    )
-    # |groups|-row frame whose lineage holds the whole rank pass; it
-    # feeds THREE reuses (meds -> deviations, meds -> output join,
-    # bounds -> trim filter) — materialize once (the round-10 rule,
-    # measured: PLANS.md read 79 exchanges for robust_value_stats
-    # before, and the warm wall-time halves; re-measured with the
-    # one-aggregation pick: fresh-JVM sf0.1 probe 3.3-4.0 s pinned vs
-    # 4.3-5.0 s un-pinned, though un-pinned runs 4 fewer jobs)
-    qv = qv.localCheckpoint(eager=True)
-    wide = qv.groupBy(group_col).agg(
-        F.max("n").cast("long").alias("n"),
-        F.min(
-            F.when(F.col("q") == float(trim_q), F.col("quantile"))
-        ).alias("__lo"),
-        F.min(
-            F.when(F.col("q") == 0.5, F.col("quantile"))
-        ).alias("median"),
-        F.max(
-            F.when(F.col("q") == float(1.0 - trim_q), F.col("quantile"))
-        ).alias("__hi"),
-    )
-    meds = wide.select(group_col, "median", "n")
-    bounds = wide.select(group_col, "__lo", "__hi")
-    dev = base.join(F.broadcast(meds), group_col).select(
-        group_col,
-        F.round(F.abs(F.col("__v") - F.col("median")), 6).alias("__dev"),
-    )
-    mads = grouped_quantiles(dev, group_col, "__dev", [0.5]).select(
-        group_col, F.col("quantile").alias("mad")
-    )
-    trimmed = (
-        base.join(F.broadcast(bounds), group_col)
-        .filter(
-            (F.col("__v") >= F.col("__lo"))
-            & (F.col("__v") <= F.col("__hi"))
+    qs = [trim_q, 0.5, 1.0 - trim_q]
+    # |groups|-row picks whose lineage holds the whole first rank pass;
+    # materialized before it feeds the broadcast (the round-10 rule:
+    # un-pinned, the broadcast build re-runs the pass)
+    wide = (
+        _grouped_picks(_value_counts(base, "g", "__v"), qs)
+        .select(
+            "g",
+            *(
+                F.expr(f"{_interpolated(i, q)} AS {name}")
+                for i, (q, name) in enumerate(
+                    zip(qs, ("__lo", "median", "__hi"))
+                )
+            ),
         )
-        .groupBy(group_col)
+        .localCheckpoint(eager=True)
+    )
+    kept = (F.col("__v") >= F.col("__lo")) & (F.col("__v") <= F.col("__hi"))
+    devs = (
+        base.join(F.broadcast(wide), "g")
+        .groupBy(
+            "g", F.round(F.abs(F.col("__v") - F.col("median")), 6).alias("v")
+        )
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_trimmed"),
+            F.count(F.lit(1)).cast("long").alias("c"),
+            F.max("median").alias("median"),
+            F.count_if(kept).alias("__tn"),
             F.sum(
-                F.round(F.col("__v"), 6).cast("decimal(24,6)")
+                F.when(kept, F.round(F.col("__v"), 6).cast("decimal(24,6)"))
             ).alias("__ts"),
         )
+    )
+    return (
+        _grouped_picks(
+            devs,
+            [0.5],
+            F.max("median").alias("median"),
+            F.sum("__tn").cast("long").alias("n_trimmed"),
+            F.sum("__ts").alias("__ts"),
+        )
         .select(
-            group_col,
+            F.col("g").alias(group_col),
+            "n",
+            "median",
+            F.expr(f"{_interpolated(0, 0.5)} AS mad"),
             "n_trimmed",
             F.round(
                 F.col("__ts").cast("double")
-                / F.col("n_trimmed").cast("double"),
+                / F.nullif(F.col("n_trimmed"), F.lit(0)).cast("double"),
                 6,
             ).alias("trimmed_mean"),
         )
-    )
-    # LEFT join: a small group can trim to EMPTY (both bounds fall
-    # strictly between its values — e.g. two values at trim_q=0.2); it
-    # must keep its median/MAD with n_trimmed=0 and a NULL trimmed
-    # mean, not vanish (the kpi_read registerless-grain lesson)
-    return (
-        meds.join(mads, group_col)
-        .join(trimmed, group_col, "left")
-        .select(
-            group_col,
-            "n",
-            "median",
-            "mad",
-            F.coalesce("n_trimmed", F.lit(0).cast("long")).alias(
-                "n_trimmed"
-            ),
-            "trimmed_mean",
-        )
-        .orderBy(group_col)
+        .repartition(1)
+        .sortWithinPartitions(group_col)
     )

@@ -11,6 +11,8 @@ TIMESTAMP is wall-clock, and NTZ keeps results independent of session zone.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -57,10 +59,34 @@ def _normalize_timestamps(df: DataFrame, table: str) -> DataFrame:
     return df
 
 
+#: Inferred parquet schemas by (path, st_mtime_ns, st_size): inference is
+#: a Spark job of its own (``parquet at NativeMethodAccessorImpl``) on
+#: every read, so each table pays it once per process, and a rewritten
+#: table (new mtime or size) gets a new key.
+_SCHEMAS: dict[tuple[str, int, int], T.StructType] = {}
+
+
+def _schema_key(path: str) -> tuple[str, int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local path (s3a://…): infer on every read
+        return None
+    return (path, st.st_mtime_ns, st.st_size)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table with normalized timestamp columns."""
+    """Read one testdata table with normalized timestamp columns; its
+    schema is inferred on the first read only (see ``_SCHEMAS``)."""
     configure(spark)
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    key = _schema_key(path)
+    schema = _SCHEMAS.get(key) if key else None
+    if schema is None:
+        df = spark.read.parquet(path)
+        if key:
+            _SCHEMAS[key] = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
     return _normalize_timestamps(df, name)
 
 
@@ -103,8 +129,6 @@ def partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     real-shape TPC-H Q9/Q11/Q16/Q20 queries are hash-exact against the
     driver's pre-registered tables with no proxy arithmetic.
     """
-    import os
-
     path = f"{sf_dir.rstrip('/')}/partsupp.parquet"
     if os.path.exists(path):
         return spark.read.parquet(path)

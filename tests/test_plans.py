@@ -193,6 +193,13 @@ def test_heavy_hitters_prune_is_pre_aggregation(spark, q, sf_dir):
     assert "rightHint=(strategy=broadcast)" in join_line
 
 
+def _final_plan(df) -> str:
+    """The executed (post-AQE) plan of ``df`` after running it."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
 @pytest.mark.parametrize(
     "name, scans",
     [("decayed_revenue", 1), ("ewm_price_stats", 1), ("streaming_decayed", 4)],
@@ -202,9 +209,30 @@ def test_decayed_reads_scan_events_once(spark, q, sf_dir, name, scans):
     cells feed one aggregation, so the executed (post-AQE) plan holds
     one events scan — one per batch for the four-batch replay. A second
     consumer of the cells would re-scan and re-aggregate the events."""
-    df = q[name](spark, sf_dir)
-    df.collect()
-    final = df._jdf.queryExecution().executedPlan().toString()
-    final = final.split("== Initial Plan ==")[0]
+    final = _final_plan(q[name](spark, sf_dir))
     found = re.findall(r"FileScan parquet [^\n]*events\.parquet", final)
     assert len(found) == scans, final
+
+
+def test_robust_stats_reads_events_once_after_its_pin(spark, q, sf_dir):
+    """robust_stats pins its first rank pass as one |groups|-row frame;
+    the rest of the executed (post-AQE) plan reads the events once,
+    broadcast-joined to that pin BELOW the deviation aggregation. The
+    MAD, n_trimmed and trimmed mean come out of one grouped pick — no
+    per-statistic frames joined above it, and no second trim scan."""
+    final = _final_plan(q["robust_value_stats"](spark, sf_dir))
+    lines = final.splitlines()
+    scans = [l for l in lines if re.search(r"FileScan parquet .*events\.parquet", l)]
+    assert len(scans) == 1, final
+    joins = [i for i, l in enumerate(lines) if "Join" in l]
+    top_agg = next(i for i, l in enumerate(lines) if "HashAggregate" in l)
+    assert len(joins) == 1 and joins[0] > top_agg, final
+
+
+def test_global_cumsum_offsets_need_no_aggregation_or_broadcast(spark, q, sf_dir):
+    """global_cumsum's per-partition totals are observed on the pin's own
+    job and enter the window as literals: global_quantiles' executed
+    plan aggregates nothing by ``__pid`` and broadcasts nothing."""
+    final = _final_plan(q["global_quantiles"](spark, sf_dir))
+    assert not re.search(r"HashAggregate\(keys=\[__pid", final), final
+    assert "BroadcastExchange" not in final, final

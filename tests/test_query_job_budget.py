@@ -3,53 +3,70 @@ most job-heavy (ROADMAP item 2; perfbench's ``driver_bound`` workload).
 
 Each query is built and forced with the noop sink under its own job
 group, and every Spark job the group ran is counted — the pins and
-collects inside the query function as well as the sink's own. Measured
-at sf0.001 on local[4]: psi_drift 14, robust_value_stats 17 (35 and 33
-before the quantile picks became one aggregation and the bounded edge
-and count results were collected once). Every sparse-state fold reads
-its input in one aggregation that collects the cells as a map and
-densifies it with ``functions.columns.dense_array`` — no key-range
-spine join: streaming_decayed 7 (15 with the calendar join),
-decayed_revenue and ewm_price_stats 4 each (9), trending_brands 7 (13),
-heavy_hitters 9 (10), streaming_heavy_hitters 16 (17) and bloom_decontam
-14 (15). The grouped heavy hitters share one engine: heavy_hitters_by_lang
-15, and rolling_heavy_hitters, which runs it with the trailing window as
-the group, 17 (21 with its own per-day cell sums and probe chain).
-perplexity_deciles takes its row count from global_cumsum's
-offsets broadcast (20; 22 with a separate count). The rolling faces
-and the quantile-sketch reads are
-budgeted at exactly their measured counts: the window joins over one
-``days`` frame share a single broadcast (``trailing_windows``), and
-``sample_quantiles`` explodes a literal q array instead of joining a
-``createDataFrame`` q table. A query that grows an eager action fails
-here."""
+collects inside the query function as well as the sink's own. Every
+testdata table is loaded once first: ``sources.tables.load_table``
+infers a table's schema on its first read only, and that one job must
+not land on whichever query happens to read the table first. Every
+budget is the count measured at sf0.001 on local[4] (counts before the
+schema memo and before global_cumsum observed its per-partition totals
+on its pin, in brackets):
+
+- the ``global_cumsum`` callers: psi_drift 10 (14), global_quantiles 7
+  (11), ks_drift 15 (22), corpus_shuffle and epoch_slice 7 (11),
+  curriculum_order 14 (21), corpus_budget 7 (11) and perplexity_deciles
+  16 (20), which takes its row count from global_cumsum's total;
+- robust_value_stats 8 (17): one pinned wide pick, then one deviation
+  pass that yields MAD, n_trimmed and the trimmed mean together;
+- the sparse-state folds, which read their input in one aggregation and
+  densify it with ``functions.columns.dense_array`` — no key-range spine
+  join: streaming_decayed 6 (7), decayed_revenue and ewm_price_stats 3
+  (4), trending_brands 5 (7), heavy_hitters 8 (9),
+  streaming_heavy_hitters 15 (16) and bloom_decontam 13 (14);
+- the grouped heavy hitters' one engine: heavy_hitters_by_lang 14 (15)
+  and rolling_heavy_hitters 16 (17), which runs it with the trailing
+  window as the group;
+- the rolling faces and quantile-sketch reads, whose window joins over
+  one ``days`` frame share a single broadcast (``trailing_windows``)
+  and whose ``sample_quantiles`` explodes a literal q array:
+  rolling_mart 13 (14), rolling_volatility 8 (9), rolling_sample 17
+  (18), rolling_distinct_hll 12 (13), rolling_quantiles 21 (22),
+  streaming_quantiles 23 (24) and quantile_sketch 18 (19).
+
+A query that grows an eager action fails here."""
 
 from __future__ import annotations
 
 import pytest
 
 import __spark_entry__ as entry
+from airflow_retail_etl_spark.sources.tables import TABLE_NAMES, load_table
 
 JOB_BUDGET = {
-    "psi_drift": 14,
-    "robust_value_stats": 17,
-    "streaming_decayed": 7,
-    "rolling_mart": 14,
-    "rolling_volatility": 9,
-    "rolling_sample": 18,
-    "rolling_heavy_hitters": 17,
-    "rolling_distinct_hll": 13,
-    "rolling_quantiles": 22,
-    "streaming_quantiles": 24,
-    "quantile_sketch": 19,
-    "decayed_revenue": 4,
-    "ewm_price_stats": 4,
-    "trending_brands": 7,
-    "heavy_hitters": 9,
-    "heavy_hitters_by_lang": 15,
-    "streaming_heavy_hitters": 16,
-    "bloom_decontam": 14,
-    "perplexity_deciles": 20,
+    "psi_drift": 10,
+    "robust_value_stats": 8,
+    "streaming_decayed": 6,
+    "rolling_mart": 13,
+    "rolling_volatility": 8,
+    "rolling_sample": 17,
+    "rolling_heavy_hitters": 16,
+    "rolling_distinct_hll": 12,
+    "rolling_quantiles": 21,
+    "streaming_quantiles": 23,
+    "quantile_sketch": 18,
+    "decayed_revenue": 3,
+    "ewm_price_stats": 3,
+    "trending_brands": 5,
+    "heavy_hitters": 8,
+    "heavy_hitters_by_lang": 14,
+    "streaming_heavy_hitters": 15,
+    "bloom_decontam": 13,
+    "perplexity_deciles": 16,
+    "global_quantiles": 7,
+    "ks_drift": 15,
+    "corpus_shuffle": 7,
+    "epoch_slice": 7,
+    "curriculum_order": 14,
+    "corpus_budget": 7,
 }
 
 
@@ -67,7 +84,13 @@ def _jobs(spark, sf_dir, name):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+@pytest.fixture(scope="module")
+def loaded(spark, sf_dir):
+    for t in TABLE_NAMES:
+        load_table(spark, sf_dir, t)
+
+
 @pytest.mark.parametrize("name", JOB_BUDGET)
-def test_query_job_budget(spark, sf_dir, name):
+def test_query_job_budget(spark, sf_dir, loaded, name):
     jobs = _jobs(spark, sf_dir, name)
     assert jobs <= JOB_BUDGET[name], f"{name} ran {jobs} Spark jobs"

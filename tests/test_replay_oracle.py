@@ -4,8 +4,10 @@ its input in batches, every rolling query reads trailing windows from
 per-day state, every decayed query folds a dense calendar by Horner,
 ``perplexity_deciles`` ranks through ``global_cumsum``, and
 ``heavy_hitters_by_lang`` runs the grouped heavy-hitter engine that
-``rolling_heavy_hitters`` shares; each must equal its one-shot
-``oracle_sql()`` twin bit-for-bit."""
+``rolling_heavy_hitters`` shares, and the rank passes of
+``operators.selection`` (global and grouped quantiles, the two drift
+scores, robust statistics) pick exact order statistics; each must
+equal its one-shot ``oracle_sql()`` twin bit-for-bit."""
 
 from __future__ import annotations
 
@@ -46,6 +48,14 @@ STATE_READ_QUERIES = [
     "heavy_hitters_by_lang",
 ]
 
+RANK_QUERIES = [
+    "global_quantiles",
+    "grouped_quantiles",
+    "ks_drift",
+    "psi_drift",
+    "robust_value_stats",
+]
+
 
 def _check_oracle():
     spec = importlib.util.spec_from_file_location(
@@ -72,7 +82,8 @@ def compare():
 
 
 @pytest.mark.parametrize(
-    "name", REPLAY_QUERIES + ROLLING_QUERIES + STATE_READ_QUERIES
+    "name",
+    REPLAY_QUERIES + ROLLING_QUERIES + STATE_READ_QUERIES + RANK_QUERIES,
 )
 def test_replay_query_matches_one_shot_oracle(
     spark, sf_dir, oracle_con, compare, name

@@ -71,8 +71,9 @@ def test_budget_select_boundary(spark):
 
 
 def test_no_single_partition_window_over_data(spark):
-    # the data-scale window must be partitioned by the range id; only the
-    # per-partition offset pass (num_partitions rows) may run global
+    # the data-scale window must be partitioned by the range id; the
+    # per-partition offsets are observed on the pin and ride in as
+    # literals, so there is no other window at all
     import re
 
     df = _scored(spark)
@@ -84,9 +85,73 @@ def test_no_single_partition_window_over_data(spark):
         .toString()
     )
     windows = re.findall(r"Window \[.*", plan)
-    assert len(windows) == 2
-    data_windows = [w for w in windows if "n_tokens" in w]
-    assert data_windows and all("__pid" in w for w in data_windows)
+    assert len(windows) == 1
+    assert "n_tokens" in windows[0] and "__pid" in windows[0]
+
+
+def _decimal_frame(spark):
+    """5 keys with DECIMAL values, one of them NULL, in 3 partitions."""
+    from decimal import Decimal
+
+    rows = [(1, Decimal("10.25")), (2, None), (3, Decimal("-3.50")),
+            (4, Decimal("99999999.99")), (5, Decimal("0.01"))]
+    return spark.createDataFrame(rows, "k int, v decimal(10,2)").repartition(3)
+
+
+def test_decimal_cumsum_with_empty_range_partitions(spark):
+    """16 range partitions over 5 keys leave most partitions empty (their
+    observed totals are NULL); the running sum and grand total still
+    equal the single-partition window's, NULL value included."""
+    df = _decimal_frame(spark)
+    w = Window.orderBy("k").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    want = {
+        r["k"]: (r["cum"], r["tot"])
+        for r in df.select(
+            "k",
+            F.sum("v").over(w).alias("cum"),
+            F.sum("v").over(Window.partitionBy()).alias("tot"),
+        ).collect()
+    }
+    for n in (1, 16):
+        got = selection.global_cumsum(
+            df, [F.col("k").asc()], "v", total_col="tot", num_partitions=n
+        )
+        assert {r["k"]: (r["cum"], r["tot"]) for r in got.collect()} == want
+
+
+def test_cumsum_output_types_unchanged(spark):
+    """``out_col`` and ``total_col`` keep the types of the former
+    offsets-plus-window expression: BIGINT for integral weights, the
+    sum of the window sum for DECIMAL ones."""
+    import pytest
+    from pyspark.sql import types as T
+
+    base = spark.range(0, 20)
+    cases = {
+        "int": (T.LongType(), T.LongType()),
+        "bigint": (T.LongType(), T.LongType()),
+        "decimal(10,2)": (T.DecimalType(31, 2), T.DecimalType(30, 2)),
+        "decimal(24,6)": (T.DecimalType(38, 6), T.DecimalType(38, 6)),
+    }
+    for t, (cum_t, tot_t) in cases.items():
+        out = selection.global_cumsum(
+            base.withColumn("v", (F.col("id") % 3).cast(t)),
+            [F.col("id").asc()],
+            "v",
+            total_col="tot",
+            num_partitions=4,
+        )
+        assert out.schema["cum"].dataType == cum_t, t
+        assert out.schema["tot"].dataType == tot_t, t
+        assert out.columns == ["id", "v", "cum", "tot"]
+    with pytest.raises(TypeError, match="exact value type"):
+        selection.global_cumsum(
+            base.withColumn("v", F.col("id").cast("double")),
+            [F.col("id").asc()],
+            "v",
+        )
 
 
 def test_global_quantiles_matches_buffering_percentile(spark, sf_dir):
@@ -179,7 +244,9 @@ def test_robust_stats_small_frame(spark):
         [("a", v) for v in vals] + [("b", 7.0), ("b", 9.0)],
         "g string, v double",
     )
-    got = {r["g"]: r for r in robust_stats(df, "g", "v", trim_q=0.2).collect()}
+    rows = robust_stats(df, "g", "v", trim_q=0.2).collect()
+    assert [r["g"] for r in rows] == ["a", "b"]  # ordered by group
+    got = {r["g"]: r for r in rows}
     a = got["a"]
     assert a["n"] == 5 and a["median"] == 3.0
     # deviations |x-3| = [2,1,0,1,97] -> median 1

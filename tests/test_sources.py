@@ -80,6 +80,43 @@ def test_load_table_normalizes_nanos_timestamps(spark, sf_dir):
     assert ev.filter(ev.ts.isNull()).isEmpty()
 
 
+def _load_jobs(spark, sf_dir, name, tag):
+    """(frame, Spark jobs run while building it) for one load_table."""
+    sc = spark.sparkContext
+    group = f"load-table-{name}-{tag}"
+    sc.setJobGroup(group, name)
+    try:
+        df = load_table(spark, sf_dir, name)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_infers_schema_once_and_rereads_rewrites(spark, tmp_path):
+    """The parquet schema is inferred on a table's first read only; a
+    table rewritten in place with another schema is read with the new
+    one, and the remembered schema equals a fresh inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [1, 2], "r_name": ["a", "b"]}), path)
+    first, first_jobs = _load_jobs(spark, str(tmp_path), "region", "first")
+    again, again_jobs = _load_jobs(spark, str(tmp_path), "region", "again")
+    assert first_jobs >= 1 and again_jobs == 0
+    assert again.schema == first.schema == spark.read.parquet(str(path)).schema
+    assert again.collect() == first.collect()
+
+    pq.write_table(
+        pa.table({"r_regionkey": [3], "r_comment": ["new"], "r_x": [1.5]}),
+        path,
+    )
+    rewritten = load_table(spark, str(tmp_path), "region")
+    assert rewritten.columns == ["r_regionkey", "r_comment", "r_x"]
+    assert [tuple(r) for r in rewritten.collect()] == [(3, "new", 1.5)]
+
+
 def test_date_sequence_inclusive(spark):
     out = date_sequence(spark, "2019-10-01", "2019-10-03").collect()
     assert [str(r["date"]) for r in out] == [

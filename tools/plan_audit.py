@@ -9,6 +9,9 @@ run standalone after plan-affecting changes to diff the committed
 PLANS.md and see exactly which plans moved.
 
 Usage: python tools/plan_audit.py [sf_dir] [out_md]
+  (reads the testdata under sf_dir, default sf0.01: building the query
+  frames runs every eager pin and collect inside them — about 2 minutes
+  of Spark stages at sf0.01; only the final plans are left unexecuted)
 """
 
 from __future__ import annotations
@@ -52,9 +55,13 @@ def audit_one(name: str, plan: str) -> dict:
 
 
 def run_audit(spark, sf_dir: str, out_md: Path) -> int:
-    """Regenerate PLANS.md with ``spark`` (plan-only — nothing executes);
-    returns the row count. Callable in-process from bench so the audit
-    can't go stale relative to the benched plans."""
+    """Regenerate PLANS.md with ``spark``; returns the row count.
+    Callable in-process from bench so the audit can't go stale relative
+    to the benched plans. The final plans are only explained, but each
+    query function runs its eager pins (``localCheckpoint``) and
+    driver collects while its frame is built, so the audit executes a
+    real share of every query — about 2 minutes of Spark stages over
+    the headline at sf0.01 — and needs ``sf_dir``'s testdata present."""
     queries = {**entry_mod.queries(), **_production_sketches()}
 
     rows, details = [], []
