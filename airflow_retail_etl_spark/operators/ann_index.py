@@ -21,11 +21,11 @@ control-plane data on the order of the plan itself, same class as the
 inlined seeded literals), never from anything implicit in the session.
 
 ``append_to_ann_index`` admits new vectors without refitting: assignment
-to the EXISTING centroids (Euclidean argmin, matching KMeans transform)
-and encoding with the STORED codebook are both pure projections over a
-broadcast of the constants, appended as new files inside the assigned
-cell partitions — per-batch work ∝ batch, the same incremental contract
-as the dedup band index. Re-fit (build again) when drift degrades
+to the EXISTING centroids (the build's own argmin,
+``similarity._nearest_centroid_udf``) and encoding with the STORED
+codebook are both pure projections over the constants, appended as new
+files inside the assigned cell partitions — per-batch work ∝ batch, the
+same incremental contract as the dedup band index. Re-fit (build again) when drift degrades
 recall; centroid quality only gates candidate generation, never
 correctness of returned sims (exact rescore).
 """
@@ -33,19 +33,20 @@ correctness of returned sims (exact rescore).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from airflow_retail_etl_spark.operators.similarity import (
+    _CORPUS,
+    _adc_col,
     _fit_coarse_cells,
-    _ivf_corpus,
+    _nearest_centroid_udf,
     _pq_codebook,
     _pq_literals,
     _pq_query_side,
     _pq_shortlist_rescore,
-    _adc_col,
-    as_double,
-    dot,
+    _probe_cells,
+    _side,
     pq_encode,
 )
 
@@ -62,7 +63,6 @@ def build_ann_index(
     n_cells: int = 16,
     seed: int = 7,
     fit_fraction: float | None = None,
-    init_mode: str = "random",
     max_iter: int = 4,
     codebook=None,
 ) -> None:
@@ -78,11 +78,10 @@ def build_ann_index(
     assert cb.shape == (m, ksub, dsub), cb.shape
 
     assigned, centers_df = _fit_coarse_cells(
-        _ivf_corpus(vectors, id_col, vec_col),
+        _side(vectors, id_col, vec_col, _CORPUS),
         n_cells=n_cells,
         seed=seed,
         fit_fraction=fit_fraction,
-        init_mode=init_mode,
         max_iter=max_iter,
     )
     enc = pq_encode(
@@ -201,11 +200,6 @@ def _load_index_meta(spark: SparkSession, path: str):
     return cb, cent_rows, cent_df.schema
 
 
-def _load_codebook(spark: SparkSession, path: str):
-    """Stored codebook rows → ndarray (m, ksub, dsub) (cached)."""
-    return _load_index_meta(spark, path)[0]
-
-
 #: (app_id, path) → (cells/ signature, DataFrame). The partitioned read
 #: re-runs partition discovery (a listing job over every cell directory)
 #: on each ``spark.read.parquet`` — per-query overhead for an index that
@@ -286,8 +280,10 @@ def ann_index_topk(
     shortlist: int = 50,
     prune_rescore: bool | None = None,
 ) -> DataFrame:
-    """Top-k against the persisted index — ivf_pq_topk's query side over
-    the stored tables.
+    """Top-k against the persisted index: the stored codebook's LUT,
+    ``similarity._probe_cells`` over the stored centroids, the ADC scan
+    of the probed cells and ``_pq_shortlist_rescore`` — the same steps
+    as ivf_pq_topk's query side.
 
     The cells scan joins a BROADCAST of the probed (query, cell) pairs
     on the partition column, so dynamic partition pruning restricts the
@@ -313,18 +309,8 @@ def ann_index_topk(
     # centroids re-enter as a local-rows DataFrame (n_cells rows, cached
     # with the codebook) — no parquet scan in the query plan for them
     centers_df = spark.createDataFrame(cent_rows, cent_schema)
-    qc = (
-        q.crossJoin(F.broadcast(centers_df))
-        .withColumn("aff", dot(F.col("qv"), F.col("centroid")))
-        .drop("centroid")
-    )
-    w_cells = Window.partitionBy("query_id").orderBy(
-        F.col("aff").desc(), F.col("cell").asc()
-    )
-    probed = (
-        qc.withColumn("cr", F.row_number().over(w_cells))
-        .filter(F.col("cr") <= n_probe)
-        .select("query_id", "qq", "lut", "cell")
+    probed = _probe_cells(q, centers_df, n_probe).select(
+        "query_id", "qq", "lut", "cell"
     )
 
     enc = _cells_df(spark, path).withColumnsRenamed(
@@ -346,10 +332,7 @@ def ann_index_topk(
     if prune_rescore is None:
         # recursive byte count (top-level listStatus only sees the cell
         # DIRECTORIES, whose length is 0) — one getContentSummary call
-        sc = spark.sparkContext
-        p = sc._jvm.org.apache.hadoop.fs.Path(f"{path}/cells")
-        fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
-        cells_bytes = fs.getContentSummary(p).getLength()
+        cells_bytes = _fs_signature(spark, f"{path}/cells")[0]
         prune_rescore = cells_bytes >= 64 * 1024 * 1024
     join_on = ("cell", "neighbor_id") if prune_rescore else ("neighbor_id",)
     return _pq_shortlist_rescore(
@@ -366,43 +349,22 @@ def append_to_ann_index(
 ) -> None:
     """Admit new vectors into the existing index without refitting.
 
-    Assignment = Euclidean argmin over the STORED centroids (matching
-    KMeans transform: ‖v−c‖² ranking via c² − 2⟨v,c⟩, the ‖v‖² term
-    constant under the argmin; deterministic cell tiebreak), encoding =
-    the STORED codebook — both broadcast-constant projections, so the
-    append shuffles nothing but its own batch and lands as new files in
-    the assigned cell partitions. The incremental contract of the dedup
-    band index, for vectors.
+    Assignment = the build's own ``_nearest_centroid_udf`` over the
+    STORED centroids (a vector appended here lands in the cell
+    ``build_ann_index`` would have given it — pinned in tests),
+    encoding = the STORED codebook — both constant projections, so the
+    append shuffles nothing and lands as new files in the assigned cell
+    partitions. The incremental contract of the dedup band index, for
+    vectors.
     """
     spark = vectors.sparkSession
-    cb = _load_codebook(spark, path)
+    cb, cent_rows, _ = _load_index_meta(spark, path)
     m, ksub, dsub = cb.shape
-    centers_df = spark.read.parquet(f"{path}/centroids").select(
-        "cell",
-        F.col("centroid"),
-        dot(F.col("centroid"), F.col("centroid")).alias("c2c"),
-    )
-
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(F.col(vec_col)).alias("cv"),
-    ).withColumn("cc", dot(F.col("cv"), F.col("cv")))
-    scored = v.crossJoin(F.broadcast(centers_df)).select(
-        "neighbor_id",
-        "cv",
-        "cc",
-        "cell",
-        (F.col("c2c") - 2.0 * dot(F.col("cv"), F.col("centroid"))).alias(
-            "d2"
-        ),
-    )
-    w = Window.partitionBy("neighbor_id").orderBy(
-        F.col("d2").asc(), F.col("cell").asc()
-    )
-    assigned = (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") == 1)
-        .select("neighbor_id", "cv", "cc", "cell")
+    centers = np.empty((len(cent_rows), len(cent_rows[0]["centroid"])))
+    for r in cent_rows:
+        centers[r["cell"]] = r["centroid"]
+    assigned = _side(vectors, id_col, vec_col, _CORPUS).withColumn(
+        "cell", _nearest_centroid_udf(centers)(F.col("cv"))
     )
     enc = pq_encode(
         assigned,
@@ -439,26 +401,20 @@ def compact_ann_index(spark: SparkSession, path: str) -> None:
 
     cells = f"{path}/cells"
     staging = f"{cells}__staging"
-    live = spark.read.parquet(cells)
-    tomb = _tombstones_df(spark, path)
-    if tomb is not None:
-        live = live.join(
-            F.broadcast(tomb), live["id"] == tomb["__dead_id"], "left_anti"
-        )
     (
-        live.repartition(F.col("cell"))
+        _cells_df(spark, path)
+        .repartition(F.col("cell"))
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(staging)
     )
     promote_staging(spark, staging, cells)
     # clear tombstones AFTER the swap: a crash in between leaves no-op
-    # tombstones (their rows are already gone), never resurrected rows
-    if tomb is not None:
-        sc = spark.sparkContext
-        p = sc._jvm.org.apache.hadoop.fs.Path(f"{path}/tombstones")
-        fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
-        fs.delete(p, True)
+    # tombstones (their rows are already gone), never resurrected rows;
+    # deleting an absent directory is a no-op
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(f"{path}/tombstones")
+    p.getFileSystem(sc._jsc.hadoopConfiguration()).delete(p, True)
 
 
 def recall_report(

@@ -546,7 +546,7 @@ def incremental_lsh_dedup(
     min_jaccard: float = 0.5,
     hash: str = "xxhash64",
     max_bucket_size: int | None = 10_000,
-    index_shingles: DataFrame | None = None,
+    index_shingles: DataFrame,
     incoming_sigs: DataFrame | None = None,
     return_drops: bool = False,
 ) -> DataFrame:
@@ -555,11 +555,10 @@ def incremental_lsh_dedup(
 
     ``index`` is ``minhash_band_index`` output (typically a parquet
     table maintained across batches, partitioned by band) and
-    ``index_shingles`` its ``shingle_store`` companion for the exact-
-    Jaccard verify — no corpus re-read, no re-hashing. A legacy
-    combined index (shingles column riding every band row) still works
-    with ``index_shingles=None``. Work per batch scales with the BATCH:
-    the incoming docs are signed/banded, candidates come from the
+    ``index_shingles`` (required) its ``shingle_store`` companion for
+    the exact-Jaccard verify — no corpus re-read, no re-hashing. Work
+    per batch scales with the BATCH: the incoming docs are
+    signed/banded, candidates come from the
     (band, bucket) join incoming-vs-index plus the incoming self-join,
     and exact Jaccard verifies both. Drop rule matches
     incremental_dedup: an incoming doc falls to any verified match with
@@ -604,12 +603,7 @@ def incremental_lsh_dedup(
         .dropDuplicates(["inc_id", "ex_id"])
     )
     inc_sh = inc_sigs.select("id", "shingles")
-    ex_sh = (
-        index_shingles.select("id", "shingles")
-        if index_shingles is not None
-        # legacy combined layout: shingles duplicated onto band rows
-        else index.select("id", "shingles").dropDuplicates(["id"])
-    )
+    ex_sh = index_shingles.select("id", "shingles")
 
     # incoming × incoming: smaller id wins — the DROPPED side is id_b
     self_cand = (

@@ -40,9 +40,16 @@ mirroring ``similarity.pq_train_codebook``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from .similarity import _lloyd_numpy, cosine_hoisted, pq_encode
+from .similarity import (
+    _fit_centroids,
+    _nearest_centroid_udf,
+    _side,
+    _with_buckets,
+    cosine_hoisted,
+    pq_encode,
+)
 
 __all__ = [
     "semdedup",
@@ -80,58 +87,26 @@ def semdedup_train_centroids(
     fit_fraction: float | None = None,
     seed: int = 11,
     max_iter: int = 8,
-    max_driver_rows: int = 500_000,
 ):
     """Train cluster centroids with sampled k-means, shape (n_clusters, dims).
 
     The 100 TB path: centroid quality converges with a few hundred
     points per cluster, so the fit runs over a ``fit_fraction``
-    content-hash sample (``similarity._fit_sample`` — layout-independent
-    by construction) — never the corpus. When the sample fits ``max_driver_rows``
-    the Lloyd iterations run DRIVER-SIDE in numpy over the collected
-    sample (model fitting on a sufficient statistic — the ridge_fit /
-    pq_train_codebook / BPE-word-shapes class): one Spark job total,
-    where the Spark ML estimator cost ~4.7 s of JVM orchestration for a
-    4k-row sample at the ∝-corpus cluster counts the scaling probe uses
-    (measured round 9 — this, not the capped pair scan, was most of
-    semdedup's sf1 decade step). Above the bound it falls back to Spark
-    ML KMeans, the genuinely-distributed fit.
-
-    Deterministic given (data, seed) on the numpy path: sample
-    membership is a content-hash predicate (not a layout-dependent
-    Bernoulli draw) and the collected rows are lexicographically sorted
-    before seeded init, so partition layout cannot perturb the result. Centers are sorted
-    lexicographically on return on both paths (same contract as
-    ``pq_train_codebook``)."""
-    import numpy as np
-
-    # layout-independent hash draw on the id (similarity._fit_sample):
-    # DataFrame.sample's Bernoulli draw depends on the partition layout,
-    # so the fit set — and trained recall — would vary with session state
-    if fit_fraction is not None:
-        from airflow_retail_etl_spark.operators.similarity import _fit_sample
-
-        vectors = _fit_sample(
-            vectors, F.col(id_col).cast("string"), fit_fraction, seed
-        )
-    v = vectors.select(F.col(vec_col).cast("array<double>").alias("fv"))
-    # one bounded collect doubles as the size probe: below the bound,
-    # limit(max+1) returns the whole sample (deterministic), above it
-    # the overflow row just triggers the fallback
-    rows = v.limit(max_driver_rows + 1).collect()
-    if len(rows) <= max_driver_rows:
-        x = np.array([r["fv"] for r in rows])
-        x = x[np.lexsort(x.T[::-1])]  # layout-independent row order
-        return _lloyd_numpy(x, n_clusters, seed=seed, max_iter=max_iter)
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    model = KMeans(
-        k=n_clusters, seed=seed, featuresCol="fv", maxIter=max_iter
-    ).fit(v.select(array_to_vector(F.col("fv")).alias("fv")))
-    return np.array(
-        sorted([float(x) for x in c] for c in model.clusterCenters())
-    )
+    content-hash sample — never the corpus. The fit is
+    ``similarity._fit_centroids``, the one shared with the IVF coarse
+    quantizer and ``pq_train_codebook``: one collect, numpy Lloyd on the
+    driver over lexicographically sorted rows (deterministic given
+    (data, seed) under any partition layout), Spark ML KMeans above the
+    driver bound. Centers are sorted lexicographically."""
+    return _fit_centroids(
+        vectors,
+        id_col,
+        vec_col,
+        n_clusters,
+        seed=seed,
+        fit_fraction=fit_fraction,
+        max_iter=max_iter,
+    )[0]
 
 
 #: cluster count above which assignment switches from the inlined-literal
@@ -161,8 +136,9 @@ def semdedup_assign(
       and first-index tiebreak are byte-identical to the PQ encoder the
       oracle already replicates. Plan size is O(k·dims) literals, which
       is the right trade only while k is small (the oracle regime).
-    - ``"matmul"`` computes the same argmin(‖c‖² − 2⟨v,c⟩) as ONE
-      vectorized pandas_udf (Arrow batches, BLAS x·Cᵀ) — the blessed
+    - ``"matmul"`` computes the same argmin(‖c‖² − 2⟨v,c⟩) with
+      ``similarity._nearest_centroid_udf`` — the IVF cells' assignment,
+      one vectorized pandas_udf (Arrow batches, BLAS x·Cᵀ) — the blessed
       Python case (vector matmuls), O(1) plan size, no shuffle. This is
       the ∝-corpus-centroid scale path: at k=160 the literal plan costs
       seconds of analysis per query ON THE DRIVER (measured round 9 —
@@ -179,8 +155,6 @@ def semdedup_assign(
       (coarse√k → fine√k) before reaching for a driver-side matrix.
 
     ``cluster`` is the 1-based centroid position on both paths."""
-    import numpy as np
-
     cb = semdedup_centroids(n_clusters, dims) if centroids is None else centroids
     assert cb.shape == (n_clusters, dims), cb.shape
     if strategy == "auto":
@@ -204,31 +178,8 @@ def semdedup_assign(
             F.element_at("codes", 1).cast("int").alias("cluster"),
         )
     assert strategy == "matmul", strategy
-    from pyspark.sql.functions import pandas_udf
-
-    c = np.ascontiguousarray(cb, dtype=float)
-    c2 = (c * c).sum(axis=1)
-
-    @pandas_udf("int")
-    def _nearest(vs):
-        import numpy as _np
-        import pandas as _pd
-
-        x = _np.array(vs.tolist(), dtype=float)
-        if x.size == 0:
-            return _pd.Series([], dtype="int32")
-        d = -2.0 * (x @ c.T) + c2[None, :]
-        return _pd.Series(d.argmin(axis=1) + 1, dtype="int32")
-
-    from .similarity import as_double, dot
-
-    return (
-        vectors.select(
-            F.col(id_col).alias("id"),
-            as_double(F.col(vec_col)).alias("v"),
-        )
-        .withColumn("nn", dot(F.col("v"), F.col("v")))
-        .withColumn("cluster", _nearest(F.col("v")))
+    return _side(vectors, id_col, vec_col).withColumn(
+        "cluster", _nearest_centroid_udf(cb, base=1)(F.col("v"))
     )
 
 
@@ -332,8 +283,6 @@ def semdedup(
 
     pair_frames = [_pairs(joinable, ["cluster"])]
     if max_cluster_size is not None and oversize == "lsh_block":
-        from .similarity import _with_buckets
-
         big = asg.join(
             F.broadcast(
                 sizes.filter(F.col("__csz") > max_cluster_size).select(

@@ -12,6 +12,12 @@
 
 Vectors are cast float→double before any arithmetic (exact), so results are
 engine-reproducible.
+
+One core serves every face here, in ``semdedup`` and in ``ann_index``:
+``_side`` builds each (id, vector, self-dot) side, ``_fit_centroids`` is
+the one sampled k-means fit, ``_nearest_centroid_udf`` the one cell
+assignment, ``_probe_cells`` the one probe and ``_rank_topk`` the one
+exact ranker; only candidate generation differs per face.
 """
 
 from __future__ import annotations
@@ -51,6 +57,51 @@ def cosine_hoisted(a: Column, b: Column, aa: Column, bb: Column) -> Column:
     return dot(a, b) / F.sqrt(aa * bb)
 
 
+#: (id, vector, self-dot) column names of the query and corpus sides
+_QUERY = ("query_id", "qv", "qq")
+_CORPUS = ("neighbor_id", "cv", "cc")
+
+
+def _side(
+    df: DataFrame, id_col: str, vec_col: str, names=("id", "v", "nn"), *keep
+) -> DataFrame:
+    """(id, double vector, *keep, hoisted self-dot) under ``names`` — the
+    projection every side of every vector scan starts from, so each
+    self-dot folds once per VECTOR and ``cosine_hoisted`` once per pair."""
+    i, v, vv = names
+    return df.select(
+        F.col(id_col).alias(i), as_double(F.col(vec_col)).alias(v), *keep
+    ).withColumn(vv, dot(F.col(v), F.col(v)))
+
+
+def _pair_sim() -> Column:
+    """Exact cosine of a joined (``_QUERY``, ``_CORPUS``) pair row."""
+    return cosine_hoisted(F.col("qv"), F.col("cv"), F.col("qq"), F.col("cc"))
+
+
+def _rank_topk(pairs: DataFrame, k: int, *extra: str) -> DataFrame:
+    """The exact ranking step every per-query top-k ends with: per
+    ``query_id``, order by sim desc then neighbor_id asc (a strict total
+    order, so the answer is layout-independent), keep ``row_number ≤ k``
+    and publish (query_id, neighbor_id, *extra, rank, sim 6dp). Candidate
+    generation (broadcast scan, LSH buckets, probed cells, ADC shortlist)
+    is the caller's; this is the one exact ranker behind all of them."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            *extra,
+            "rank",
+            pub_round(F.col("sim"), 6).alias("sim"),
+        )
+    )
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -65,33 +116,13 @@ def brute_force_topk(
     window top-k. Self-matches (same id) are excluded. Output:
     (query_id, neighbor_id, rank, sim) with a deterministic id tiebreak.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qq", dot(F.col("qv"), F.col("qv")))
-    c = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(F.col(vec_col)).alias("cv"),
-    ).withColumn("cc", dot(F.col("cv"), F.col("cv")))
-    pairs = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
-        "query_id",
-        "neighbor_id",
-        cosine_hoisted(
-            F.col("qv"), F.col("cv"), F.col("qq"), F.col("cc")
-        ).alias("sim"),
+    q = _side(queries, id_col, vec_col, _QUERY)
+    pairs = (
+        _side(vectors, id_col, vec_col, _CORPUS)
+        .join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", _pair_sim().alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            pub_round(F.col("sim"), 6).alias("sim"),
-        )
-    )
+    return _rank_topk(pairs, k)
 
 
 def _plane_matrix(tables: int, planes: int, dims: int):
@@ -179,48 +210,23 @@ def lsh_topk(
     """
     # self-dots hoisted BEFORE the table explode: one fold per vector, not
     # one per (vector × table × candidate) row downstream
-    c = _with_buckets(
-        vectors.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double(F.col(vec_col)).alias("cv"),
-        ).withColumn("cc", dot(F.col("cv"), F.col("cv"))),
-        "cv",
-        tables=tables,
-        planes=planes,
-        dims=dims,
-    )
-    q = _with_buckets(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            as_double(F.col(vec_col)).alias("qv"),
-        ).withColumn("qq", dot(F.col("qv"), F.col("qv"))),
-        "qv",
-        tables=tables,
-        planes=planes,
-        dims=dims,
-    )
-    pairs = c.join(
-        F.broadcast(q), on=["table", "bucket"], how="inner"
-    ).filter(F.col("neighbor_id") != F.col("query_id")).select(
-        "query_id",
-        "neighbor_id",
-        cosine_hoisted(
-            F.col("qv"), F.col("cv"), F.col("qq"), F.col("cc")
-        ).alias("sim"),
-    ).dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            pub_round(F.col("sim"), 6).alias("sim"),
+    def banded(df: DataFrame, names) -> DataFrame:
+        return _with_buckets(
+            _side(df, id_col, vec_col, names),
+            names[1],
+            tables=tables,
+            planes=planes,
+            dims=dims,
         )
+
+    pairs = (
+        banded(vectors, _CORPUS)
+        .join(F.broadcast(banded(queries, _QUERY)), on=["table", "bucket"])
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", _pair_sim().alias("sim"))
+        .dropDuplicates(["query_id", "neighbor_id"])
     )
+    return _rank_topk(pairs, k)
 
 
 def lsh_neardup_pairs(
@@ -241,9 +247,7 @@ def lsh_neardup_pairs(
     defaults, while unrelated vectors rarely collide across p=8 planes.
     Every candidate is verified with exact cosine, so precision is exact.
     """
-    base = vectors.select(
-        F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")
-    ).withColumn("nn", dot(F.col("v"), F.col("v")))
+    base = _side(vectors, id_col, vec_col)
     banded = _with_buckets(
         base, "v", tables=tables, planes=planes, dims=dims
     ).select("id", "table", "bucket")
@@ -281,21 +285,6 @@ def lsh_neardup_pairs(
     )
 
 
-def _ivf_corpus(vectors: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(neighbor_id, cv, cc, fv): the corpus projection every IVF variant
-    starts from — double-cast vector, hoisted self-dot, ML vector form."""
-    from pyspark.ml.functions import array_to_vector
-
-    return (
-        vectors.select(
-            F.col(id_col).alias("neighbor_id"),
-            as_double(F.col(vec_col)).alias("cv"),
-        )
-        .withColumn("cc", dot(F.col("cv"), F.col("cv")))
-        .withColumn("fv", array_to_vector(F.col("cv")))
-    )
-
-
 def _fit_sample(df: DataFrame, key: Column, fraction: float, seed: int) -> DataFrame:
     """Layout-independent fit sample: keep iff md5-u64(seed, key) < f·2^64.
 
@@ -327,8 +316,6 @@ def _lloyd_numpy(x, k: int, *, seed: int, max_iter: int):
 
     rng = np.random.default_rng(seed)
     n = len(x)
-    if n == 0:
-        raise ValueError("empty training sample for semdedup centroids")
     init_idx = rng.choice(n, size=min(k, n), replace=False)
     c = x[np.sort(init_idx)].astype(float).copy()
     if len(c) < k:  # fewer sample rows than clusters: pad by repetition
@@ -344,18 +331,102 @@ def _lloyd_numpy(x, k: int, *, seed: int, max_iter: int):
     return np.array(sorted([float(v) for v in row] for row in c))
 
 
-#: cluster count above which assignment switches from the inlined-literal
-#: Catalyst argmin (oracle-replicable, plan size O(k·dims)) to the
-#: Arrow-batched matmul projection (plan size O(1)). The registry/oracle
-#: form (16 seeded centroids) stays well under it.
-_LITERAL_ASSIGN_MAX_K = 32
+#: fit-sample rows above which a centroid fit leaves the driver: up to
+#: it the sample is collected once and Lloyd runs in numpy, beyond it
+#: Spark ML KMeans fits the cached sample distributed
+_DRIVER_FIT_MAX_ROWS = 500_000
+
+
+def _fit_centroids(
+    df: DataFrame,
+    key_col: str,
+    vec_col: str,
+    k: int,
+    *,
+    seed: int,
+    fit_fraction: float | None,
+    max_iter: int,
+    subspaces: int = 1,
+):
+    """The one sampled k-means fit: ``k`` centers per subspace, shape
+    (subspaces, k, width // subspaces), each subspace's centers sorted
+    lexicographically. Serves the IVF coarse quantizer
+    (``_fit_coarse_cells``), ``semdedup_train_centroids`` and
+    ``pq_train_codebook`` (one subspace per PQ code).
+
+    ``fit_fraction`` draws a content-hash sample on ``key_col``
+    (``_fit_sample`` — the 100 TB path: centroid quality converges with
+    a few hundred points per center, so the fit never reads the corpus).
+    One bounded collect doubles as the size probe: up to
+    ``_DRIVER_FIT_MAX_ROWS`` the sample's rows are sorted
+    lexicographically and ``_lloyd_numpy`` runs per subspace with seed
+    ``seed + s`` on the driver — one Spark job, and bit-identical
+    centers under any partition layout (the layout cannot reach the
+    sorted rows). Spark ML's estimator costs seconds of JVM
+    orchestration per fit (measured round 9: ~4.7 s for a 4k-row
+    sample). Beyond the bound, Spark ML KMeans (random init, same
+    seeds) fits each subspace of the once-cached sample: distributed,
+    but deterministic only per layout — at that scale the fit is an
+    artifact you persist anyway."""
+    import numpy as np
+
+    if fit_fraction is not None:
+        df = _fit_sample(df, F.col(key_col).cast("string"), fit_fraction, seed)
+    v = df.select(as_double(F.col(vec_col)).alias("v"))
+    rows = v.limit(_DRIVER_FIT_MAX_ROWS + 1).collect()
+    if not rows:
+        raise ValueError("empty training sample for a centroid fit")
+    dsub = len(rows[0]["v"]) // subspaces
+    if len(rows) <= _DRIVER_FIT_MAX_ROWS:
+        x = np.array([r["v"] for r in rows])
+        x = x[np.lexsort(x.T[::-1])]  # layout-independent row order
+        return np.stack(
+            [
+                _lloyd_numpy(
+                    np.ascontiguousarray(x[:, s * dsub : (s + 1) * dsub]),
+                    k,
+                    seed=seed + s,
+                    max_iter=max_iter,
+                )
+                for s in range(subspaces)
+            ]
+        )
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    v = v.cache()  # one sample materialization shared by every subspace
+    try:
+        fits = [
+            KMeans(
+                k=k,
+                seed=seed + s,
+                featuresCol="fv",
+                initMode="random",
+                maxIter=max_iter,
+            ).fit(
+                v.select(
+                    array_to_vector(F.slice("v", s * dsub + 1, dsub)).alias("fv")
+                )
+            )
+            for s in range(subspaces)
+        ]
+    finally:
+        v.unpersist()
+    return np.stack(
+        [
+            np.array(sorted([float(x) for x in c] for c in f.clusterCenters()))
+            for f in fits
+        ]
+    )
 
 
 def _nearest_centroid_udf(cb, *, base: int = 0):
-    """Arrow-batched BLAS argmin assignment over a centroid matrix —
-    O(1) plan size, no shuffle (the semdedup matmul strategy, shared by
-    the IVF coarse quantizer). Returns a pandas_udf mapping an
-    array<double> column to the ``base``-indexed nearest-centroid id
+    """The one nearest-centroid assignment: an Arrow-batched BLAS argmin
+    of ‖c‖² − 2⟨v, c⟩ over a centroid matrix — O(1) plan size, no
+    shuffle. Assigns the IVF coarse cells (``_fit_coarse_cells``), the
+    persisted index's appends (``ann_index.append_to_ann_index``) and
+    ``semdedup_assign(strategy="matmul")``. Returns a pandas_udf mapping
+    an array<double> column to the ``base``-indexed nearest-centroid id
     (first-index tiebreak)."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
@@ -383,72 +454,35 @@ def _fit_coarse_cells(
     n_cells: int,
     seed: int,
     fit_fraction: float | None,
-    init_mode: str,
     max_iter: int,
-    max_driver_rows: int = 500_000,
 ):
     """Fit the coarse quantizer and assign cells.
 
-    Returns (assigned, centers_df): ``assigned`` is ``v`` with a ``cell``
-    column (fv dropped), ``centers_df`` a tiny (cell, centroid) literal
-    table for query-side probing. Shared by ivf_topk and ivf_pq_topk.
-
-    When the (sampled) training set fits ``max_driver_rows``, the Lloyd
-    iterations run driver-side in numpy and assignment is the Arrow
-    matmul projection — the semdedup round-9 medicine applied to the
-    coarse quantizer (Spark ML's estimator + transform cost seconds of
-    JVM orchestration per ∝-corpus fit and was most of ann_ivf's sf1
-    decade step). Cell geometry gates candidate generation only — the
-    rescore is exact and the integrity oracle (probe-all ≡ brute force)
-    is fit-independent. Spark ML remains the above-bound fallback.
+    ``v`` is a ``_CORPUS`` side. Returns (assigned, centers_df):
+    ``assigned`` is ``v`` with a 0-based ``cell`` column, ``centers_df``
+    a tiny (cell, centroid) literal table for query-side probing. Shared
+    by ivf_topk, ivf_pq_topk and ann_index.build_ann_index. The fit is
+    ``_fit_centroids``, the assignment ``_nearest_centroid_udf`` — the
+    semdedup round-9 medicine (Spark ML's estimator + transform cost
+    seconds of JVM orchestration per ∝-corpus fit and was most of
+    ann_ivf's sf1 decade step). Cell geometry gates candidate
+    generation only — the rescore is exact and the integrity oracle
+    (probe-all ≡ brute force) is fit-independent.
     """
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-
-    fit_input = (
-        v
-        if fit_fraction is None
-        else _fit_sample(
-            v, F.col("neighbor_id").cast("string"), fit_fraction, seed
-        )
+    cb = _fit_centroids(
+        v,
+        "neighbor_id",
+        "cv",
+        n_cells,
+        seed=seed,
+        fit_fraction=fit_fraction,
+        max_iter=max_iter,
+    )[0]
+    centers = [(i, [float(c) for c in row]) for i, row in enumerate(cb)]
+    return (
+        v.withColumn("cell", _nearest_centroid_udf(cb)(F.col("cv"))),
+        v.sparkSession.createDataFrame(centers, ["cell", "centroid"]),
     )
-    rows = fit_input.select("cv").limit(max_driver_rows + 1).collect()
-    if len(rows) <= max_driver_rows:
-        x = np.array([r["cv"] for r in rows])
-        x = x[np.lexsort(x.T[::-1])]  # layout-independent row order
-        cb = _lloyd_numpy(x, n_cells, seed=seed, max_iter=max_iter)
-        assigned = v.withColumn(
-            "cell", _nearest_centroid_udf(cb)(F.col("cv"))
-        ).drop("fv")
-        centers = [(i, [float(c) for c in row]) for i, row in enumerate(cb)]
-        centers_df = v.sparkSession.createDataFrame(
-            centers, ["cell", "centroid"]
-        )
-        return assigned, centers_df
-    # cache the slim training projection: Lloyd's re-reads its input every
-    # iteration, and uncached that means maxIter parquet scans + vector
-    # conversions. The training set is the SAMPLE (small by design at
-    # scale), so memory-only caching is safe; released right after fit.
-    fit_df = fit_input.select("fv").cache()
-    try:
-        model = KMeans(
-            k=n_cells,
-            seed=seed,
-            featuresCol="fv",
-            predictionCol="cell",
-            initMode=init_mode,
-            maxIter=max_iter,
-        ).fit(fit_df)
-    finally:
-        fit_df.unpersist()
-    assigned = model.transform(v).drop("fv")
-
-    # centroids as a tiny literal table: (cell, centroid array)
-    centers = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    centers_df = v.sparkSession.createDataFrame(centers, ["cell", "centroid"])
-    return assigned, centers_df
 
 
 def _probe_cells(q: DataFrame, centers_df: DataFrame, n_probe: int) -> DataFrame:
@@ -481,16 +515,16 @@ def ivf_topk(
     n_probe: int = 4,
     seed: int = 7,
     fit_fraction: float | None = None,
-    init_mode: str = "random",
     max_iter: int = 4,
 ) -> DataFrame:
-    """IVF-style approximate top-k: KMeans coarse quantizer + cell probing.
+    """IVF-style approximate top-k: k-means coarse quantizer + cell probing.
 
-    The corpus is partitioned into ``n_cells`` Voronoi cells (Spark ML
-    KMeans, fixed seed → deterministic given the data); each query probes
-    its ``n_probe`` nearest cells and scores only those members with exact
-    cosine. Versus LSH: better candidate quality on clustered data (cells
-    adapt to the distribution), at the cost of a training pass.
+    The corpus is partitioned into ``n_cells`` Voronoi cells (seeded
+    k-means, deterministic given the data — ``_fit_centroids``); each
+    query probes its ``n_probe`` nearest cells and scores only those
+    members with exact cosine. Versus LSH: better candidate quality on
+    clustered data (cells adapt to the distribution), at the cost of a
+    training pass.
 
     ``fit_fraction`` trains the quantizer on a seeded content-hash sample
     of the corpus (layout-independent — see ``_fit_sample``) — THE 100 TB
@@ -501,53 +535,29 @@ def ivf_topk(
     matrix, no shuffle of the corpus. None fits on everything (small-data
     default).
 
-    ``init_mode="random"`` + a small ``max_iter`` because a COARSE
-    quantizer doesn't need converged Lloyd's: cells only gate candidate
-    generation, rescoring is exact. k-means|| init alone costs ~5 extra
-    Spark jobs; random init + 4 iterations measures recall identical to
-    8 (0.97 at n_probe=12 on the test corpus) at ~40% of the training
-    time, and 3 already loses recall. Probe-all correctness is
-    independent of centroid quality entirely (tests/test_similarity.py).
+    A small ``max_iter`` because a COARSE quantizer doesn't need
+    converged Lloyd's: cells only gate candidate generation, rescoring
+    is exact. 4 iterations measure recall identical to 8 (0.97 at
+    n_probe=12 on the test corpus) at ~40% of the training time, and 3
+    already loses recall. Probe-all correctness is independent of
+    centroid quality entirely (tests/test_similarity.py).
     """
-    v = _ivf_corpus(vectors, id_col, vec_col)
     assigned, centers_df = _fit_coarse_cells(
-        v,
+        _side(vectors, id_col, vec_col, _CORPUS),
         n_cells=n_cells,
         seed=seed,
         fit_fraction=fit_fraction,
-        init_mode=init_mode,
         max_iter=max_iter,
     )
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qq", dot(F.col("qv"), F.col("qv")))
-    probed = _probe_cells(q, centers_df, n_probe).select(
-        "query_id", "qv", "qq", "cell"
+    probed = _probe_cells(
+        _side(queries, id_col, vec_col, _QUERY), centers_df, n_probe
+    ).select("query_id", "qv", "qq", "cell")
+    pairs = (
+        assigned.join(F.broadcast(probed), "cell")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", _pair_sim().alias("sim"))
     )
-
-    pairs = assigned.join(F.broadcast(probed), "cell").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        cosine_hoisted(
-            F.col("qv"), F.col("cv"), F.col("qq"), F.col("cc")
-        ).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            pub_round(F.col("sim"), 6).alias("sim"),
-        )
-    )
+    return _rank_topk(pairs, k)
 
 
 def cosine_neardup_pairs(
@@ -568,11 +578,7 @@ def cosine_neardup_pairs(
     # source the nested-loop pair scan otherwise runs on ONE partition —
     # all n²/2 dot folds on one core (the AQE/input-split face of the
     # spread trap, functions/partitioning.py)
-    v = _spread_id(
-        vectors.select(
-            F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")
-        )
-    ).withColumn("nn", dot(F.col("v"), F.col("v")))
+    v = _side(vectors, id_col, vec_col).transform(_spread_id)
     a, b = v.alias("a"), v.alias("b")
     pairs = a.join(b, F.col("a.id") < F.col("b.id")).select(
         F.col("a.id").alias("id_a"),
@@ -623,87 +629,42 @@ def pq_train_codebook(
     dims: int = 64,
     fit_fraction: float | None = None,
     seed: int = 7,
-    init_mode: str = "random",
     max_iter: int = 8,
-    max_driver_rows: int = 500_000,
 ):
     """Train a PQ codebook: per-subspace k-means, shape (m, ksub, dsub).
 
     The production path the seeded codebook stands in for: each of the
-    ``m`` subspaces gets its own ``ksub``-center KMeans fit (Spark ML),
-    so centroids adapt to the data distribution and ADC distances
-    actually discriminate — a random codebook's recall is whatever
-    chance gives. ``fit_fraction`` mirrors ivf_topk's sampled fit (THE
-    100 TB path: codebook quality converges with a few hundred points
-    per centroid, so the m training passes run over a ~10⁻⁵ sample, and
-    the sample is cached once for all m fits — never the corpus).
+    ``m`` subspaces gets its own ``ksub``-center k-means fit (seed
+    ``seed + s``), so centroids adapt to the data distribution and ADC
+    distances actually discriminate — a random codebook's recall is
+    whatever chance gives. The fit is ``_fit_centroids`` with one
+    subspace per code: a ``fit_fraction`` content-hash sample on
+    ``id_col``, one collect, Lloyd per subspace on the driver —
+    bit-identical codebooks under any repartitioning (pinned in tests)
+    — and Spark ML KMeans over the once-cached sample above the
+    driver bound. The vectors must be ``dims`` wide.
 
-    Deterministic given (data, seed) on the driver path: the fit sample
-    is a content-hash draw on ``id_col`` (``_fit_sample`` — membership is
-    layout-independent by construction), and when it fits
-    ``max_driver_rows`` the per-subspace Lloyd iterations run driver-side
-    in numpy over lexicographically-sorted rows (``_lloyd_numpy``, the
-    ``_fit_coarse_cells`` / ``semdedup_train_centroids`` strategy): one
-    Spark job total instead of m Spark ML estimator fits, and — unlike
-    Spark ML KMeans, whose random init draws depend on the partition
-    layout — bit-identical codebooks under any repartitioning (pinned in
-    tests). Above the bound, Spark ML per subspace is the genuinely
-    distributed fallback (deterministic only per-layout there; at that
-    scale you persist the codebook as an artifact anyway).
-
-    Centers are sorted lexicographically before assembly on both paths.
-    Feed the result to pq_encode / pq_topk / ivf_pq_topk via their
-    ``codebook`` argument. The seeded default stays for the cross-engine
-    oracle (a trained codebook is data-dependent, so DuckDB could only
-    replicate it by re-fitting).
+    Centers are sorted lexicographically per subspace. Feed the result
+    to pq_encode / pq_topk / ivf_pq_topk via their ``codebook``
+    argument. The seeded default stays for the cross-engine oracle (a
+    trained codebook is data-dependent, so DuckDB could only replicate
+    it by re-fitting).
     """
-    import numpy as np
-
-    dsub = dims // m
-    # layout-independent hash draw on the id (see _fit_sample) BEFORE the
-    # id is projected away — the trained codebook must be a pure function
-    # of (data, seed), not of the session's partition layout
-    if fit_fraction is not None:
-        vectors = _fit_sample(
-            vectors, F.col(id_col).cast("string"), fit_fraction, seed
+    cb = _fit_centroids(
+        vectors,
+        id_col,
+        vec_col,
+        ksub,
+        seed=seed,
+        fit_fraction=fit_fraction,
+        max_iter=max_iter,
+        subspaces=m,
+    )
+    if cb.shape != (m, ksub, dims // m):
+        raise ValueError(
+            f"pq_train_codebook: fit a {cb.shape} codebook, expected "
+            f"{(m, ksub, dims // m)} — are the vectors {dims} wide?"
         )
-    v = vectors.select(as_double(F.col(vec_col)).alias("v"))
-    rows = v.limit(max_driver_rows + 1).collect()
-    if len(rows) <= max_driver_rows:
-        x = np.array([r["v"] for r in rows])
-        x = x[np.lexsort(x.T[::-1])]  # layout-independent row order
-        cb = np.empty((m, ksub, dsub))
-        for s in range(m):
-            cb[s] = _lloyd_numpy(
-                np.ascontiguousarray(x[:, s * dsub : (s + 1) * dsub]),
-                ksub,
-                seed=seed + s,
-                max_iter=max_iter,
-            )
-        return cb
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    v = v.cache()  # one sample materialization shared by all m fits
-    try:
-        cb = np.empty((m, ksub, dsub))
-        for s in range(m):
-            sub = v.select(
-                array_to_vector(F.slice("v", s * dsub + 1, dsub)).alias("fv")
-            )
-            model = KMeans(
-                k=ksub,
-                seed=seed + s,
-                featuresCol="fv",
-                initMode=init_mode,
-                maxIter=max_iter,
-            ).fit(sub)
-            cb[s] = np.array(
-                sorted([float(x) for x in c] for c in model.clusterCenters())
-            )
-    finally:
-        v.unpersist()
     return cb
 
 
@@ -776,11 +737,9 @@ def pq_encode(
     """
     dsub = dims // m
     cent, c2 = _pq_literals(m, ksub, dsub, codebook)
-    base = vectors.select(
-        F.col(id_col).alias("id"),
-        as_double(F.col(vec_col)).alias("v"),
-        *keep,
-    ).withColumn("nn", dot(F.col("v"), F.col("v"))).transform(_spread_id)
+    base = _side(vectors, id_col, vec_col, ("id", "v", "nn"), *keep).transform(
+        _spread_id
+    )
     dists = base.select(
         "id",
         "v",
@@ -818,9 +777,7 @@ def _pq_query_side(
     (m·ksub doubles) — the asymmetric-distance table every ADC scan
     variant broadcasts. Shared by pq_topk and ivf_pq_topk so the two
     can never drift expression-wise."""
-    return queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qq", dot(F.col("qv"), F.col("qv"))).withColumn(
+    return _side(queries, id_col, vec_col, _QUERY).withColumn(
         "lut",
         F.transform(
             F.sequence(F.lit(0), F.lit(m * ksub - 1)),
@@ -883,27 +840,9 @@ def _pq_shortlist_rescore(
     rescored = (
         cand.join(enc.select(*join_on, "cv", "cc"), list(join_on))
         .join(F.broadcast(q.select("query_id", "qv", "qq")), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_hoisted(
-                F.col("qv"), F.col("cv"), F.col("qq"), F.col("cc")
-            ).alias("sim"),
-        )
+        .select("query_id", "neighbor_id", _pair_sim().alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            pub_round(F.col("sim"), 6).alias("sim"),
-        )
-    )
+    return _rank_topk(rescored, k)
 
 
 def pq_topk(
@@ -968,7 +907,6 @@ def ivf_pq_topk(
     n_probe: int = 4,
     seed: int = 7,
     fit_fraction: float | None = None,
-    init_mode: str = "random",
     max_iter: int = 4,
     codebook=None,
 ) -> DataFrame:
@@ -987,7 +925,7 @@ def ivf_pq_topk(
     pair is ADC-scored exactly once — the cell join partitions the same
     pair set pq_topk's exhaustive crossJoin enumerates — so the result
     must equal pq_topk with identical parameters regardless of how
-    KMeans carved the cells (the oracle-graded form; cells can then
+    k-means carved the cells (the oracle-graded form; cells can then
     only lose or duplicate pairs, which the equality would expose).
 
     ``codebook``: pq_train_codebook output for data-adapted codes; the
@@ -1001,11 +939,10 @@ def ivf_pq_topk(
     cent, _ = _pq_literals(m, ksub, dsub, codebook)
 
     assigned, centers_df = _fit_coarse_cells(
-        _ivf_corpus(vectors, id_col, vec_col),
+        _side(vectors, id_col, vec_col, _CORPUS),
         n_cells=n_cells,
         seed=seed,
         fit_fraction=fit_fraction,
-        init_mode=init_mode,
         max_iter=max_iter,
     )
     # PQ codes ride the cell assignment (keep=): at scale this is the
@@ -1060,40 +997,22 @@ def hard_negative_topk(
     exact kNN — mine negatives from the candidate set, not the corpus;
     this exhaustive form is the verifier/oracle baseline.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("q_label"),
-        as_double(F.col(vec_col)).alias("qv"),
-    ).withColumn("qq", dot(F.col("qv"), F.col("qv")))
-    c = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("n_label"),
-        as_double(F.col(vec_col)).alias("cv"),
-    ).withColumn("cc", dot(F.col("cv"), F.col("cv")))
-    pairs = c.join(
-        F.broadcast(q), F.col("n_label") != F.col("q_label")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.col("n_label").alias("neg_label"),
-        cosine_hoisted(
-            F.col("qv"), F.col("cv"), F.col("qq"), F.col("cc")
-        ).alias("sim"),
+    q = _side(
+        queries, id_col, vec_col, _QUERY, F.col(label_col).alias("q_label")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    pairs = (
+        _side(
+            vectors, id_col, vec_col, _CORPUS, F.col(label_col).alias("n_label")
+        )
+        .join(F.broadcast(q), F.col("n_label") != F.col("q_label"))
         .select(
             "query_id",
             "neighbor_id",
-            "neg_label",
-            "rank",
-            pub_round(F.col("sim"), 6).alias("sim"),
+            F.col("n_label").alias("neg_label"),
+            _pair_sim().alias("sim"),
         )
     )
+    return _rank_topk(pairs, k, "neg_label")
 
 
 def embedding_dim_stats(
@@ -1508,19 +1427,12 @@ def ivf_recall_report(
         F.col("cluster").alias("cell"),
     )
     cent, _c2 = _pq_literals(1, n_cells, dims, cb[None, :, :])
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            as_double(F.col(vec_col)).alias("qv"),
-        )
-        .withColumn("qq", dot(F.col("qv"), F.col("qv")))
-        .withColumn(
-            "aff",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_cells - 1)),
-                lambda j: dot(F.col("qv"), F.element_at(cent, j + 1)),
-            ),
-        )
+    q = _side(queries, id_col, vec_col, _QUERY).withColumn(
+        "aff",
+        F.transform(
+            F.sequence(F.lit(0), F.lit(n_cells - 1)),
+            lambda j: dot(F.col("qv"), F.element_at(cent, j + 1)),
+        ),
     )
     w_cells = Window.partitionBy("query_id").orderBy(
         F.col("a").desc(), F.col("cell").asc()
@@ -1541,12 +1453,7 @@ def ivf_recall_report(
             "query_id",
             "neighbor_id",
             "cell_rank",
-            F.round(
-                cosine_hoisted(
-                    F.col("qv"), F.col("cv"), F.col("qq"), F.col("cc")
-                ),
-                6,
-            ).alias("sim"),
+            F.round(_pair_sim(), 6).alias("sim"),
         )
     )
     grid = spark.range(1).select(
@@ -1643,23 +1550,14 @@ def grouped_topk(
             "search run per query (the broadcast side must be a single "
             "vector for the per-group ranking to be well-defined)"
         )
-    q = query.select(
-        F.col(id_col).alias("__qid"),
-        as_double(F.col(vec_col)).alias("qv"),
-    ).withColumn("qq", dot(F.col("qv"), F.col("qv")))
-    c = vectors.select(
-        F.col(group_col).alias("__g"),
-        F.col(id_col).alias("__id"),
-        as_double(F.col(vec_col)).alias("cv"),
-    ).withColumn("cc", dot(F.col("cv"), F.col("cv")))
-    scored = c.join(
-        F.broadcast(q), F.col("__id") != F.col("__qid")
-    ).select(
-        "__g",
-        "__id",
-        cosine_hoisted(
-            F.col("qv"), F.col("cv"), F.col("qq"), F.col("cc")
-        ).alias("__sim"),
+    q = _side(query, id_col, vec_col, ("__qid", "qv", "qq"))
+    scored = (
+        _side(
+            vectors, id_col, vec_col, ("__id", "cv", "cc"),
+            F.col(group_col).alias("__g"),
+        )
+        .join(F.broadcast(q), F.col("__id") != F.col("__qid"))
+        .select("__g", "__id", _pair_sim().alias("__sim"))
     )
     # LONG-domain md5 mod (round 15): same value, no per-row BigDecimal
     shard = xhash.md5_u64_mod(

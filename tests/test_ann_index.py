@@ -110,6 +110,30 @@ def test_append_admits_new_vectors_without_refit(spark, sf_dir, tmp_path):
     assert _tuples(before) == _tuples(want_base)
 
 
+def test_append_assigns_the_cell_the_build_would(spark, sf_dir, tmp_path):
+    """append_to_ann_index assigns with the build's own argmin over the
+    stored centroids: a copy of an indexed vector, appended under a new
+    id, lands in its original's cell."""
+    from pyspark.sql import functions as F
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = str(tmp_path / "ann")
+    ann_index.build_ann_index(emb, path, n_cells=16, fit_fraction=0.5)
+    offset = 1_000_000
+    copies = emb.filter("vec_id % 7 = 0").withColumn(
+        "vec_id", F.col("vec_id") + offset
+    )
+    ann_index.append_to_ann_index(copies, path)
+    cell = {
+        r["id"]: r["cell"]
+        for r in spark.read.parquet(f"{path}/cells").select("id", "cell").collect()
+    }
+    copied = {i - offset: c for i, c in cell.items() if i >= offset}
+    assert len(copied) == copies.count()
+    assert len(set(copied.values())) > 1
+    assert {i: cell[i] for i in copied} == copied
+
+
 def test_compact_folds_append_files_and_preserves_answers(spark, sf_dir, tmp_path):
     """append_to_ann_index accumulates files per cell; compact folds each
     cell to ONE file, answers identical before/after (the query path's

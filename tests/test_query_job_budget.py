@@ -30,7 +30,12 @@ on its pin, in brackets):
   and whose ``sample_quantiles`` explodes a literal q array:
   rolling_mart 13 (14), rolling_volatility 8 (9), rolling_sample 17
   (18), rolling_distinct_hll 12 (13), rolling_quantiles 21 (22),
-  streaming_quantiles 23 (24) and quantile_sketch 18 (19).
+  streaming_quantiles 23 (24) and quantile_sketch 18 (19);
+- the vector-search family's one fit, assignment, probe and ranker:
+  knn_cosine 3, knn_by_label 8, ann_lsh 4, ann_ivf 6, ann_pq 6, ivf_pq
+  10, ann_recall 25, semdedup 8, neardup_cosine 3, neardup_cosine_lsh
+  6, hard_negatives 3 and matryoshka_recall 17 (the last two vary from
+  run to run in one session, 24–25 and 15–17, so each pins its max).
 
 A query that grows an eager action fails here."""
 
@@ -67,6 +72,18 @@ JOB_BUDGET = {
     "epoch_slice": 7,
     "curriculum_order": 14,
     "corpus_budget": 7,
+    "knn_cosine": 3,
+    "knn_by_label": 8,
+    "ann_lsh": 4,
+    "ann_ivf": 6,
+    "ann_pq": 6,
+    "ivf_pq": 10,
+    "ann_recall": 25,
+    "semdedup": 8,
+    "neardup_cosine": 3,
+    "neardup_cosine_lsh": 6,
+    "hard_negatives": 3,
+    "matryoshka_recall": 17,
 }
 
 

@@ -6,8 +6,10 @@ per-day state, every decayed query folds a dense calendar by Horner,
 ``heavy_hitters_by_lang`` runs the grouped heavy-hitter engine that
 ``rolling_heavy_hitters`` shares, and the rank passes of
 ``operators.selection`` (global and grouped quantiles, the two drift
-scores, robust statistics) pick exact order statistics; each must
-equal its one-shot ``oracle_sql()`` twin bit-for-bit."""
+scores, robust statistics) pick exact order statistics, and the
+vector-search family (``operators.similarity`` / ``semdedup``) ends
+every per-query top-k in one exact ranker; each must equal its
+one-shot ``oracle_sql()`` twin bit-for-bit."""
 
 from __future__ import annotations
 
@@ -56,6 +58,21 @@ RANK_QUERIES = [
     "robust_value_stats",
 ]
 
+VECTOR_QUERIES = [
+    "knn_cosine",
+    "knn_by_label",
+    "ann_lsh",
+    "ann_ivf",
+    "ann_pq",
+    "ivf_pq",
+    "ann_recall",
+    "semdedup",
+    "neardup_cosine",
+    "neardup_cosine_lsh",
+    "hard_negatives",
+    "matryoshka_recall",
+]
+
 
 def _check_oracle():
     spec = importlib.util.spec_from_file_location(
@@ -83,7 +100,11 @@ def compare():
 
 @pytest.mark.parametrize(
     "name",
-    REPLAY_QUERIES + ROLLING_QUERIES + STATE_READ_QUERIES + RANK_QUERIES,
+    REPLAY_QUERIES
+    + ROLLING_QUERIES
+    + STATE_READ_QUERIES
+    + RANK_QUERIES
+    + VECTOR_QUERIES,
 )
 def test_replay_query_matches_one_shot_oracle(
     spark, sf_dir, oracle_con, compare, name

@@ -280,6 +280,62 @@ def test_trained_codebook_beats_seeded(spark, sf_dir):
     assert _recall(trained, bf) > _recall(seeded, bf) + 0.2
 
 
+def test_centroid_fits_fall_back_to_spark_ml_above_driver_bound(
+    spark, sf_dir, monkeypatch
+):
+    """Above ``_DRIVER_FIT_MAX_ROWS`` every sampled k-means fit — the IVF
+    coarse cells, semdedup's centroids and the PQ codebook — takes the
+    one Spark ML KMeans branch (one fit per subspace), and its centers
+    keep the driver path's contract: the right shape, sorted
+    lexicographically, and a cell in range for every vector."""
+    from pyspark.ml.clustering import KMeans
+
+    from airflow_retail_etl_spark.operators import semdedup
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    n = emb.count()
+    monkeypatch.setattr(similarity, "_DRIVER_FIT_MAX_ROWS", n // 4)
+    fits = []
+    real_fit = KMeans.fit
+    monkeypatch.setattr(
+        KMeans,
+        "fit",
+        lambda self, df: fits.append(self.getK()) or real_fit(self, df),
+    )
+
+    def is_sorted(rows):
+        rows = [list(r) for r in rows]
+        return rows == sorted(rows)
+
+    assigned, centers_df = similarity._fit_coarse_cells(
+        similarity._side(emb, "vec_id", "embedding", similarity._CORPUS),
+        n_cells=8,
+        seed=7,
+        fit_fraction=None,
+        max_iter=4,
+    )
+    centers = [r["centroid"] for r in centers_df.orderBy("cell").collect()]
+    assert len(centers) == 8 and {len(c) for c in centers} == {64}
+    assert is_sorted(centers)
+    cells = [r["cell"] for r in assigned.select("cell").collect()]
+    assert len(cells) == n and set(cells) <= set(range(8))
+
+    cb = semdedup.semdedup_train_centroids(emb, n_clusters=4, max_iter=4)
+    assert cb.shape == (4, 64) and is_sorted(cb)
+    clusters = semdedup.semdedup_assign(emb, n_clusters=4, centroids=cb)
+    got = [r["cluster"] for r in clusters.select("cluster").collect()]
+    assert len(got) == n and set(got) <= {1, 2, 3, 4}
+
+    book = similarity.pq_train_codebook(emb, m=2, ksub=4, max_iter=4)
+    assert book.shape == (2, 4, 32)
+    assert all(is_sorted(book[s]) for s in range(2))
+    codes = similarity.pq_encode(emb, m=2, ksub=4, codebook=book)
+    got = [tuple(r["codes"]) for r in codes.select("codes").collect()]
+    assert len(got) == n and {c for t in got for c in t} <= {1, 2, 3, 4}
+
+    assert fits == [8, 4, 4, 4]
+
+
 def test_hard_negative_topk_excludes_query_label(spark, sf_dir):
     from pyspark.sql import functions as F
 
