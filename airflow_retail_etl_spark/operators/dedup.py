@@ -1,23 +1,23 @@
 """Document deduplication operators (SURVEY §7.4 / BASELINE extensions).
 
-Four strategies, cheapest first:
+Beyond ``exact_dedup`` (a hash-groupBy on a content fingerprint), every
+near-dup operator here is one filter → verify pipeline:
 
-- exact_dedup       — hash-groupBy on a content fingerprint. One shuffle.
-- jaccard_pairs     — exact n-gram Jaccard via an inverted-index join
-                      (explode shingles → equi-join → pair aggregation).
-                      Exact, oracle-checkable; cost grows with shingle
-                      collision counts, so it is the verifier, not the
-                      100 TB front line.
-- minhash_lsh_pairs — MinHash signatures + banded LSH bucketing. The scale
-                      path: candidate generation is linear in corpus size
-                      (explode b bands), pairs only form inside equal
-                      (band, band-hash) buckets, and candidates are verified
-                      with exact Jaccard. All built-in HOFs + xxhash64 —
-                      no Python in the loop.
-- simhash           — 64-bit SimHash signature per doc; near-dups differ in
-                      few bits. Signature computation is a single projection.
+- filter — each family derives join keys per document (shingles,
+  MinHash bands, SimHash blocks, winnowing fingerprints, span anchors),
+  optionally caps hot keys (``max_doc_freq`` / ``max_bucket_size``, the
+  SCALE.md skew guards), and pairs documents sharing a key through ONE
+  ordered keyed self-join, ``_key_pairs`` (id_a < id_b);
+- verify — candidate pairs are re-scored exactly: set overlap by the
+  inverted-index count (``_pair_counts``) or, when keys were capped or
+  sampled, by one full-set intersection (``_verify_sets``), scored by
+  one Jaccard expression (``_jaccard``); SimHash pairs by Hamming
+  distance, span anchors by gaps-and-islands over alignment diagonals.
 
-All functions take/return DataFrames and never collect.
+Precision is exact everywhere; only candidate generation (LSH curves,
+caps) trades recall. ``similarity`` and ``semdedup`` pair embeddings
+through the same ``_key_pairs``. All functions take and return
+DataFrames.
 """
 
 from __future__ import annotations
@@ -117,6 +117,98 @@ def jaccard_pairs(
     )
 
 
+def _key_pairs(rows: DataFrame, keys: list[str], *carry: str) -> DataFrame:
+    """The ordered keyed self-join every pair generator starts from:
+    rows with equal ``keys`` pair up as (id_a, id_b, <c>_a, <c>_b, ...)
+    with id_a < id_b, one row per shared key, carrying each ``carry``
+    column from both sides. Candidate callers add
+    ``dropDuplicates(["id_a", "id_b"])``; overlap callers count. No
+    keys is the all-pairs scan."""
+    a, b = rows.alias("a"), rows.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    return a.join(b, [*on, F.col("a.id") < F.col("b.id")]).select(
+        F.col("a.id").alias("id_a"),
+        F.col("b.id").alias("id_b"),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+    )
+
+
+def _verify_sets(
+    cands: DataFrame, sets_a: DataFrame, sets_b: DataFrame
+) -> DataFrame:
+    """Exact set overlap of candidate pairs: (id_a, id_b, n_a, n_b, inter).
+
+    Both full (id, shingles) sets re-attach to the (small, deduplicated)
+    candidate set by id — the bands/keys that generated the candidates
+    never carry the set payload — and ``inter`` is one array_intersect,
+    so the counts are exact however the candidates were pruned."""
+
+    def side(sets: DataFrame, s: str) -> DataFrame:
+        return sets.select(
+            F.col("id").alias(f"id_{s}"), F.col("shingles").alias(f"sh_{s}")
+        )
+
+    both = cands.join(side(sets_a, "a"), "id_a").join(side(sets_b, "b"), "id_b")
+    return both.select(
+        "id_a",
+        "id_b",
+        F.size("sh_a").alias("n_a"),
+        F.size("sh_b").alias("n_b"),
+        F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
+    )
+
+
+def _jaccard() -> Column:
+    """Jaccard of an (n_a, n_b, inter) pair row: one division of exact
+    integers."""
+    return F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
+
+
+def _pair_counts(sh: DataFrame, max_doc_freq: int | None) -> DataFrame:
+    """(id_a, id_b, n_a, n_b, inter) for every pair of (id, shingles)
+    rows sharing ≥1 element, counts exact.
+
+    Uncapped: one inverted-index self-join plus a count. |set| rides
+    through the explode, so the pair aggregation has both sizes in its
+    group keys (functionally dependent on the ids) — no size-lookup
+    joins. explode_OUTER on purpose: plain explode lets Catalyst infer a
+    size(shingles)>0 filter and push it below the materialization
+    exchange, re-inlining the whole shingle expression into a
+    pre-repartition Filter (single partition, O(tokens²)) — observed 4×
+    slowdown. Shingle arrays are never empty (≥1 by construction), so
+    outer semantics are identical.
+
+    Capped (``max_doc_freq``): elements in more than that many sets are
+    dropped from CANDIDATE GENERATION only — one doc-frequency
+    aggregation on the exploded index, filtered before the self-join —
+    and every candidate is re-scored on the full sets by
+    ``_verify_sets``, so the counts stay exact even though capped
+    elements generated no candidates."""
+    if max_doc_freq is None:
+        inv = sh.select(
+            "id",
+            F.size("shingles").alias("n_sh"),
+            F.explode_outer("shingles").alias("s"),
+        )
+        return (
+            _key_pairs(inv, ["s"], "n_sh")
+            .groupBy(
+                "id_a",
+                "id_b",
+                F.col("n_sh_a").alias("n_a"),
+                F.col("n_sh_b").alias("n_b"),
+            )
+            .agg(F.count("*").alias("inter"))
+        )
+    inv = sh.select("id", F.explode_outer("shingles").alias("s"))
+    rare = inv.groupBy("s").agg(F.count("*").alias("df_s")).filter(
+        F.col("df_s") <= max_doc_freq
+    )
+    capped = inv.join(rare.select("s"), "s", "left_semi")
+    cands = _key_pairs(capped, ["s"]).dropDuplicates(["id_a", "id_b"])
+    return _verify_sets(cands, sh, sh)
+
+
 def set_jaccard_pairs(
     sh: DataFrame,
     *,
@@ -128,98 +220,14 @@ def set_jaccard_pairs(
     hashes, feature/tag sets, cluster memberships).
 
     ``sh`` must be (id, shingles) with ``shingles`` an array of DISTINCT
-    elements per id. Same single inverted-index join + pair aggregation,
-    same ``max_doc_freq`` hot-element candidate cap with exact full-set
-    re-scoring (see jaccard_pairs' docstring for the skew story).
+    elements per id. Pairs and counts come from ``_pair_counts`` (the
+    single inverted-index join, or the ``max_doc_freq`` hot-element
+    candidate cap with exact full-set re-scoring — see jaccard_pairs'
+    docstring for the skew story).
     """
-    if max_doc_freq is not None:
-        return _capped_jaccard_pairs(sh, max_doc_freq, min_jaccard)
-    # carry |set| through the explode: the pair aggregation then has both
-    # sizes in its group keys (functionally dependent on the ids), so no
-    # post-aggregation size-lookup joins — one shuffle join + one agg total.
-    # explode_OUTER on purpose: plain explode lets Catalyst infer a
-    # size(shingles)>0 filter and push it below the materialization
-    # exchange, re-inlining the whole shingle expression into a
-    # pre-repartition Filter (single partition, O(tokens²)) — observed 4×
-    # slowdown. Shingle arrays are never empty (≥1 by construction), so
-    # outer semantics are identical.
-    inv = sh.select(
-        "id",
-        F.size("shingles").alias("n_sh"),
-        F.explode_outer("shingles").alias("s"),
+    out = _pair_counts(sh, max_doc_freq).select(
+        "id_a", "id_b", _jaccard().alias("jaccard")
     )
-    a, b = inv.alias("a"), inv.alias("b")
-    out = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.n_sh").alias("n_a"),
-            F.col("b.n_sh").alias("n_b"),
-        )
-        .agg(F.count("*").alias("inter"))
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-            ).alias("jaccard"),
-        )
-    )
-    if min_jaccard > 0:
-        out = out.filter(F.col("jaccard") >= min_jaccard)
-    return out
-
-
-def _capped_jaccard_pairs(
-    sh: DataFrame,
-    max_doc_freq: int,
-    min_jaccard: float,
-    *,
-    with_counts: bool = False,
-) -> DataFrame:
-    """Skew-guarded exact Jaccard: candidates from capped inverted index,
-    verification on the full shingle sets.
-
-    Shingle doc-frequencies are one extra aggregation on the already-exploded
-    index; the filter drops the quadratic hot keys BEFORE the self-join. The
-    candidate set then re-attaches both full shingle arrays and scores with
-    array_intersect — the same verify shape as minhash_lsh_pairs, so the
-    Jaccard values are exact even though capped shingles generated no
-    candidates.
-
-    ``with_counts=True`` additionally exposes the exact integer
-    (inter, n_a, n_b) the verify step already computes, so callers needing
-    other set measures (containment = inter / min(n_a, n_b)) derive them
-    as one exact integer division instead of reconstructing the
-    intersection from the float jaccard.
-    """
-    inv = sh.select("id", F.explode_outer("shingles").alias("s"))
-    rare = inv.groupBy("s").agg(F.count("*").alias("df_s")).filter(
-        F.col("df_s") <= max_doc_freq
-    )
-    capped = inv.join(rare.select("s"), "s", "left_semi")
-    a, b = capped.alias("a"), capped.alias("b")
-    candidates = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    full = sh.select("id", "shingles")
-    verified = candidates.join(
-        full.withColumnsRenamed({"id": "id_a", "shingles": "sh_a"}), "id_a"
-    ).join(full.withColumnsRenamed({"id": "id_b", "shingles": "sh_b"}), "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    cols = ["id_a", "id_b", (inter / union).alias("jaccard")]
-    if with_counts:
-        cols += [
-            inter.alias("inter"),
-            F.size("sh_a").alias("n_a"),
-            F.size("sh_b").alias("n_b"),
-        ]
-    out = verified.select(*cols)
     if min_jaccard > 0:
         out = out.filter(F.col("jaccard") >= min_jaccard)
     return out
@@ -320,7 +328,6 @@ def minhash_lsh_pairs(
     min_jaccard: float = 0.5,
     hash: str = "xxhash64",
     max_bucket_size: int | None = 10_000,
-    cap_diag: dict | None = None,
 ) -> DataFrame:
     """Near-dup pairs at scale: MinHash → banded LSH → exact-Jaccard verify.
 
@@ -344,61 +351,49 @@ def minhash_lsh_pairs(
     AND band buckets derived from md5 so DuckDB can replicate candidate
     generation bit-exactly; see functions.xhash).
 
-    ``cap_diag``: optional recall accounting (round-9 verdict item 7) —
-    pass a dict and it gains ``cap_diag["bands"]``, an UNEVALUATED
-    one-row :func:`cap_dropped_mass` report over the banded frame (band
-    memberships in over-cap buckets + distinct docs touched). Evaluating
-    it is one extra aggregation the caller opts into.
+    Recall accounting for the cap: :func:`cap_dropped_mass` over
+    ``band_rows(minhash_signatures(...))`` with the same keys and cap.
     """
-    rows_per_band = num_hashes // bands
     sigs = minhash_signatures(
         df, text_col, id_col, kind=kind, n=n, num_hashes=num_hashes, hash=hash
     )
-    banded = _banded(sigs, bands, rows_per_band, hash)
-    if cap_diag is not None:
-        cap_diag["bands"] = cap_dropped_mass(
-            banded, ["band", "bucket"], max_bucket_size, member_col="id"
-        )
-    banded = _cap_buckets(banded, ["band", "bucket"], max_bucket_size)
-
-    a, b = banded.alias("a"), banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+    banded = _cap_buckets(
+        _banded(sigs, bands, num_hashes, hash), ["band", "bucket"],
+        max_bucket_size,
     )
-    sh = sigs.select("id", "shingles")
-    verified = (
-        candidates.join(
-            sh.withColumnsRenamed({"id": "id_a", "shingles": "sh_a"}), "id_a"
-        )
-        .join(
-            sh.withColumnsRenamed({"id": "id_b", "shingles": "sh_b"}), "id_b"
-        )
+    cands = _key_pairs(banded, ["band", "bucket"]).dropDuplicates(
+        ["id_a", "id_b"]
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
     return (
-        verified.select(
-            "id_a", "id_b", (inter / union).alias("jaccard")
-        ).filter(F.col("jaccard") >= min_jaccard)
+        _verify_sets(cands, sigs, sigs)
+        .select("id_a", "id_b", _jaccard().alias("jaccard"))
+        .filter(F.col("jaccard") >= min_jaccard)
     )
 
 
-def _banded(sigs: DataFrame, bands: int, rows_per_band: int, hash: str) -> DataFrame:
-    """(id, band, bucket) from signature rows — the LSH banding step.
+def _banded(sigs: DataFrame, bands: int, num_hashes: int, hash: str) -> DataFrame:
+    """(id, band, bucket) from signature rows — the LSH banding step:
+    ``bands`` bands of ``num_hashes // bands`` rows each.
 
     Bands WITHOUT the shingle arrays: the (band, bucket) joins shuffle
     ~20 bytes/row instead of the ~1KB shingle payload × bands × 2 sides;
     shingles re-attach to the (much smaller) candidate pair set.
-    explode_outer: see jaccard_pairs — avoids InferFiltersFromGenerate
+    explode_outer: see _pair_counts — avoids InferFiltersFromGenerate
     re-inlining the signature computation below the exchange.
+
+    ``bands`` outside [1, num_hashes] raises: more bands than hashes
+    leaves 0 rows per band, every band hashes the empty slice, and all
+    documents share one bucket per band — the band join degenerates to
+    all pairs, and a bucket cap then drops every candidate without an
+    error.
     """
+    if not 1 <= bands <= num_hashes:
+        raise ValueError(
+            f"bands={bands} must be in [1, num_hashes={num_hashes}]: more"
+            " bands than hashes leaves empty bands that put every document"
+            " in one bucket"
+        )
+    rows_per_band = num_hashes // bands
     if hash == "xxhash64":
         def bucket_of(band):
             return F.xxhash64(
@@ -433,39 +428,6 @@ def _banded(sigs: DataFrame, bands: int, rows_per_band: int, hash: str) -> DataF
     ).select("id", "bb.band", "bb.bucket")
 
 
-def minhash_band_index(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    kind: str = "token",
-    n: int = 3,
-    num_hashes: int = 63,
-    bands: int = 21,
-    hash: str = "xxhash64",
-) -> DataFrame:
-    """Persistable LSH band index of a corpus: (id, band, bucket).
-
-    The incremental-dedup building block: sign and band the corpus ONCE,
-    write this table out, and each day's batch joins against it instead
-    of re-shingling/re-hashing the whole corpus (incremental_lsh_dedup).
-    Rows per doc = ``bands``, ~20 bytes each — KEYS ONLY. The exact-
-    Jaccard verify's shingle sets live in the companion one-row-per-id
-    ``shingle_store`` table: storing them here would copy every doc's
-    shingle array ×bands (21× by default) for no read-time benefit,
-    since the band join never looks at them. Persist the band table
-    PARTITIONED BY band: the per-band directory layout means any reader
-    that filters bands (single-band probes, replay exclusion by a
-    second partition key) scans 1/bands of the files, and the band
-    column itself costs no storage (it is directory metadata).
-    """
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(
-        df, text_col, id_col, kind=kind, n=n, num_hashes=num_hashes, hash=hash
-    )
-    return _banded(sigs, bands, rows_per_band, hash)
-
-
 def write_band_index_bucketed(
     bands_df: DataFrame,
     table: str,
@@ -474,7 +436,7 @@ def write_band_index_bucketed(
     path: str | None = None,
     append: bool = False,
 ) -> None:
-    """Persist ``minhash_band_index`` rows as a BUCKETED catalog table,
+    """Persist ``band_rows`` output as a BUCKETED catalog table,
     clustered AND sorted by the (band, bucket) join key.
 
     The 100 TB admission shape: the index side of
@@ -512,11 +474,22 @@ def band_rows(
     bands: int = 21,
     hash: str = "xxhash64",
 ) -> DataFrame:
-    """(id, band, bucket) from PRECOMPUTED ``minhash_signatures`` output —
-    ``minhash_band_index`` with the signing pass factored out, for
-    callers that checkpoint the signatures and derive both the dedup and
-    the index rows from one materialization."""
-    return _banded(sigs, bands, num_hashes // bands, hash)
+    """Persistable LSH band index: (id, band, bucket) from
+    ``minhash_signatures`` output.
+
+    The incremental-dedup building block: sign and band the corpus ONCE
+    (checkpoint the signatures and derive both the dedup and the index
+    rows from one materialization), write this table out, and each
+    day's batch joins against it instead of re-shingling/re-hashing the
+    whole corpus (incremental_lsh_dedup). Rows per doc = ``bands``, ~20
+    bytes each — KEYS ONLY. The exact-Jaccard verify's shingle sets live
+    in the companion one-row-per-id ``shingle_store`` table: storing
+    them here would copy every doc's shingle array ×bands for no
+    read-time benefit, since the band join never looks at them. Persist
+    the band table PARTITIONED BY band: any reader that filters bands
+    scans 1/bands of the files, and the band column itself costs no
+    storage (it is directory metadata)."""
+    return _banded(sigs, bands, num_hashes, hash)
 
 
 def shingle_store(
@@ -535,63 +508,44 @@ def shingle_store(
 
 def incremental_lsh_dedup(
     index: DataFrame,
-    incoming: DataFrame,
-    text_col: str,
-    id_col: str,
+    sigs: DataFrame,
     *,
-    kind: str = "token",
-    n: int = 3,
+    index_shingles: DataFrame,
     num_hashes: int = 63,
     bands: int = 21,
     min_jaccard: float = 0.5,
     hash: str = "xxhash64",
     max_bucket_size: int | None = 10_000,
-    index_shingles: DataFrame,
-    incoming_sigs: DataFrame | None = None,
-    return_drops: bool = False,
 ) -> DataFrame:
-    """Admit incoming docs against a PRECOMPUTED corpus index — the
-    100 TB form of incremental_dedup.
+    """Admission verdict of one batch against a PRECOMPUTED corpus index
+    — the 100 TB form of incremental_dedup. Returns (drop_id).
 
-    ``index`` is ``minhash_band_index`` output (typically a parquet
-    table maintained across batches, partitioned by band) and
-    ``index_shingles`` (required) its ``shingle_store`` companion for
+    ``sigs`` is the batch's ``minhash_signatures`` (same kind/n/
+    num_hashes/hash as the index); ``index`` is ``band_rows`` output
+    (typically a parquet table maintained across batches, partitioned
+    by band) and ``index_shingles`` its ``shingle_store`` companion for
     the exact-Jaccard verify — no corpus re-read, no re-hashing. Work
-    per batch scales with the BATCH: the incoming docs are
-    signed/banded, candidates come from the
-    (band, bucket) join incoming-vs-index plus the incoming self-join,
-    and exact Jaccard verifies both. Drop rule matches
-    incremental_dedup: an incoming doc falls to any verified match with
-    the index or with a smaller-id batch sibling. Returns the surviving
-    incoming rows; append the survivors' ``minhash_band_index`` +
-    ``shingle_store`` rows for the next batch. Same ``max_bucket_size``
-    skew backstop on both joins.
+    per batch scales with the BATCH: candidates come from the
+    (band, bucket) join batch-vs-index plus the batch self-join, and
+    exact Jaccard verifies both. Drop rule matches incremental_dedup: a
+    batch doc falls to any verified match with the index or with a
+    smaller-id batch sibling. Same ``max_bucket_size`` skew backstop on
+    both joins.
 
-    ``incoming_sigs``: precomputed ``minhash_signatures`` of the batch
-    (same kind/n/num_hashes/hash). The batch-sequential callers
-    (streaming.incremental) checkpoint the signatures ONCE and feed them
-    here, so the dedup, the survivor writes, and the next-batch index
-    rows all reuse one signing pass instead of re-shingling per action.
+    The verdict is one small id column: callers pin IT rather than the
+    surviving rows (kilobytes instead of documents), anti-join the batch
+    for the admitted rows, and append the survivors' ``band_rows`` +
+    ``shingle_store`` rows for the next batch.
     """
-    rows_per_band = num_hashes // bands
-    inc_sigs = (
-        incoming_sigs
-        if incoming_sigs is not None
-        else minhash_signatures(
-            incoming, text_col, id_col,
-            kind=kind, n=n, num_hashes=num_hashes, hash=hash,
-        )
-    )
+    keys = ["band", "bucket"]
     inc_banded = _cap_buckets(
-        _banded(inc_sigs, bands, rows_per_band, hash),
-        ["band", "bucket"],
-        max_bucket_size,
+        _banded(sigs, bands, num_hashes, hash), keys, max_bucket_size
     )
     ex_banded = _cap_buckets(
-        index.select("id", "band", "bucket"), ["band", "bucket"],
-        max_bucket_size,
+        index.select("id", "band", "bucket"), keys, max_bucket_size
     )
-    # incoming × index candidates (keys only)
+    # id_a is the batch doc that drops on a verified match with id_b:
+    # batch × index candidates (keys only) ...
     cross = (
         inc_banded.alias("a")
         .join(
@@ -599,68 +553,28 @@ def incremental_lsh_dedup(
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket")),
         )
-        .select(F.col("a.id").alias("inc_id"), F.col("b.id").alias("ex_id"))
-        .dropDuplicates(["inc_id", "ex_id"])
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
     )
-    inc_sh = inc_sigs.select("id", "shingles")
-    ex_sh = index_shingles.select("id", "shingles")
-
-    # incoming × incoming: smaller id wins — the DROPPED side is id_b
-    self_cand = (
-        inc_banded.alias("a")
-        .join(
-            inc_banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("b.id").alias("drop_cand"), F.col("a.id").alias("partner"))
-        .dropDuplicates(["drop_cand", "partner"])
+    # ... and batch × batch, where the smaller id wins (the larger drops)
+    own = (
+        _key_pairs(inc_banded, keys)
+        .select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
     )
-    # ONE verify pipeline for both candidate sources (round 9: the two
-    # separate verify join chains cost an extra join + exchange per
-    # batch on the slowest benched query). Partners come from the union
-    # store (index shingles ∪ batch shingles — ids are globally unique
-    # under the incremental contract: the index holds previously
-    # admitted docs, the batch holds new ones), so one candidate union
-    # needs one probe join + one partner join + one capped verify.
-    cand = cross.select(
-        F.col("inc_id").alias("drop_cand"), F.col("ex_id").alias("partner")
-    ).unionByName(self_cand)
-    store = ex_sh.unionByName(inc_sh)
-
-    inter = F.size(F.array_intersect("sa", "sb"))
-    drops = (
-        cand.join(
-            inc_sh.withColumnsRenamed(
-                {"id": "drop_cand", "shingles": "sa"}
-            ),
-            "drop_cand",
-        )
-        .join(
-            store.withColumnsRenamed(
-                {"id": "partner", "shingles": "sb"}
-            ),
-            "partner",
-        )
-        .withColumn("__inter", inter)
-        .filter(
-            F.col("__inter")
-            / (F.size("sa") + F.size("sb") - F.col("__inter"))
-            >= min_jaccard
-        )
-        .select(F.col("drop_cand").alias("drop_id"))
+    # ONE verify for both candidate sources (round 9: two separate verify
+    # join chains cost an extra join + exchange per batch). Partners come
+    # from the union store (index shingles ∪ batch shingles — ids are
+    # globally unique under the incremental contract: the index holds
+    # previously admitted docs, the batch holds new ones).
+    store = index_shingles.select("id", "shingles").unionByName(
+        sigs.select("id", "shingles")
+    )
+    return (
+        _verify_sets(cross.unionByName(own), sigs, store)
+        .filter(_jaccard() >= min_jaccard)
+        .select(F.col("id_a").alias("drop_id"))
         .distinct()
-    )
-    if return_drops:
-        # the verdict alone (one small id column): batch-sequential
-        # callers checkpoint THIS instead of the survivor rows — same
-        # dedup compute, kilobytes materialized instead of full
-        # documents, and every downstream (admitted rows, next-batch
-        # index) is a cheap anti/semi join off it
-        return drops
-    return incoming.join(
-        drops, incoming[id_col] == drops["drop_id"], "left_anti"
     )
 
 
@@ -945,9 +859,12 @@ def simhash_pairs(
 ) -> DataFrame:
     """Near-dup candidates from SimHash signatures, banded by bit blocks.
 
-    Splits the 64-bit signature into 4 16-bit blocks; any pair within
-    Hamming distance 3 must agree on ≥1 whole block (pigeonhole), so
-    block-equality bucketing finds all such pairs without O(n²) compare.
+    Splits the 64-bit signature into ``64 // prefix_bits`` blocks (4 of
+    16 bits by default); a pair within Hamming distance ``max_hamming``
+    differs in at most that many blocks, so when there are MORE blocks
+    than that it agrees on ≥1 whole block (pigeonhole) and
+    block-equality bucketing finds every such pair without O(n²)
+    compare. Fewer blocks would silently miss pairs, so that raises.
 
     ``max_bucket_size`` guards the block self-join the same way as in
     minhash_lsh_pairs: an exact-dup cluster shares ALL blocks, so its m
@@ -955,6 +872,12 @@ def simhash_pairs(
     first; the cap is the backstop. None disables.
     """
     blocks = 64 // prefix_bits
+    if blocks <= max_hamming:
+        raise ValueError(
+            f"prefix_bits={prefix_bits} gives {blocks} blocks, too few for"
+            f" max_hamming={max_hamming}: the block pigeonhole needs more"
+            " blocks than differing bits; lower prefix_bits"
+        )
     mask = (1 << prefix_bits) - 1
     banded = sigs.select(
         "id",
@@ -974,23 +897,10 @@ def simhash_pairs(
         ).alias("bb"),
     ).select("id", "simhash", "bb.blk", "bb.block_val")
     banded = _cap_buckets(banded, ["blk", "block_val"], max_bucket_size)
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.block_val") == F.col("b.block_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    pairs = _key_pairs(banded, ["blk", "block_val"], "simhash").dropDuplicates(
+        ["id_a", "id_b"]
     )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return pairs.select(
         "id_a", "id_b", hamming.alias("hamming")
     ).filter(F.col("hamming") <= max_hamming)
@@ -1085,16 +995,9 @@ def winnow_overlap_pairs(
             .filter(F.col("df") <= max_doc_freq)
         )
         inv = inv.join(rare.select("fp"), "fp", "left_semi")
-    a, b = inv.alias("a"), inv.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-        )
+        _key_pairs(inv, ["fp"])
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
@@ -1107,7 +1010,6 @@ def incremental_dedup(
     id_col: str,
     *,
     min_jaccard: float = 0.5,
-    pairs_fn=None,
 ) -> DataFrame:
     """Admit only the incoming documents that duplicate nothing already
     indexed: the per-batch form of corpus dedup (reference intent: "all
@@ -1122,26 +1024,17 @@ def incremental_dedup(
     doc survives would need an iterative fixpoint; pipelines batch per
     day/partition, where this declarative rule is the standard one.)
 
-    ``pairs_fn(df, text_col, id_col, min_jaccard)`` generates candidate
-    pairs over the UNION corpus — defaults to exact ``jaccard_pairs`` (the
-    oracle-checkable verifier); pass a minhash_lsh_pairs wrapper at scale
-    so candidate generation stays linear. Only pairs touching an incoming
-    doc matter; with LSH banding the existing side's signatures are
-    precomputable and the band join is incoming-vs-index. Returns the
-    surviving incoming rows (original columns).
+    Pairs come from exact ``jaccard_pairs`` over the UNION corpus (the
+    oracle-checkable verifier); at scale, ``incremental_lsh_dedup``
+    admits against a precomputed band index instead, so work scales with
+    the batch. Returns the surviving incoming rows (original columns).
     """
     ex = existing.select(F.col(id_col), F.col(text_col))
     inc = incoming.select(F.col(id_col), F.col(text_col))
     union = ex.unionByName(inc)
-    if pairs_fn is None:
-        pairs = jaccard_pairs(
-            union, text_col, id_col, kind="token", n=3,
-            min_jaccard=min_jaccard,
-        ).select("id_a", "id_b")
-    else:
-        pairs = pairs_fn(union, text_col, id_col, min_jaccard).select(
-            "id_a", "id_b"
-        )
+    pairs = jaccard_pairs(
+        union, text_col, id_col, kind="token", n=3, min_jaccard=min_jaccard
+    ).select("id_a", "id_b")
     new_ids = incoming.select(F.col(id_col).alias("__nid")).distinct()
     # pairs are emitted with id_a < id_b, so:
     #  - id_b incoming  ⇒ its partner is existing or a smaller incoming id
@@ -1171,7 +1064,11 @@ def incremental_dedup(
 SPAN_CAP_SAFE_MAX = 200
 
 
-def _check_span_cap(max_doc_freq: int | None, unsafe_large_cap: bool) -> None:
+def _check_span_args(
+    k: int, min_len: int, max_doc_freq: int | None, unsafe_large_cap: bool
+) -> None:
+    """The argument check both shared-span faces share: the anchor cap
+    envelope and the k detection floor."""
     if (
         max_doc_freq is not None
         and max_doc_freq > SPAN_CAP_SAFE_MAX
@@ -1184,6 +1081,13 @@ def _check_span_cap(max_doc_freq: int | None, unsafe_large_cap: bool) -> None:
             "shuffle disk at the sf10 probe (SCALE.md span-cap "
             "envelope). Pass unsafe_large_cap=True only if shuffle "
             "capacity is provisioned for Σmin(df,cap)² anchor matches."
+        )
+    if min_len < k:
+        raise ValueError(
+            f"min_len={min_len} < k={k}: spans shorter than the anchor "
+            "k-gram produce no anchors, so the exactness guarantee would "
+            "silently not hold for lengths in [min_len, k). Lower k or "
+            "raise min_len — k is the detection floor."
         )
 
 
@@ -1238,30 +1142,17 @@ def shared_span_pairs(
     ``max_doc_freq=None`` stays allowed: the documented exhaustive /
     verification mode for corpora small enough to enumerate.
     """
-    from pyspark.sql import Window
-
-    _check_span_cap(max_doc_freq, unsafe_large_cap)
-    if min_len < k:
-        raise ValueError(
-            f"min_len={min_len} < k={k}: spans shorter than the anchor "
-            "k-gram produce no anchors, so the exactness guarantee would "
-            "silently not hold for lengths in [min_len, k). Lower k or "
-            "raise min_len — k is the detection floor."
-        )
+    _check_span_args(k, min_len, max_doc_freq, unsafe_large_cap)
     anchors = _span_anchors(
         df, text_col, id_col, k=k, hash_family=hash_family,
         max_doc_freq=max_doc_freq,
     )
-    a, b = anchors.alias("a"), anchors.alias("b")
-    matches = a.join(
-        b,
-        (F.col("a.h") == F.col("b.h")) & (F.col("a.id") < F.col("b.id")),
-    ).select(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        F.col("a.pos").alias("pa"),
-        F.col("b.pos").alias("pb"),
-        (F.col("a.pos") - F.col("b.pos")).alias("diag"),
+    matches = _key_pairs(anchors, ["h"], "pos").select(
+        "id_a",
+        "id_b",
+        F.col("pos_a").alias("pa"),
+        F.col("pos_b").alias("pb"),
+        (F.col("pos_a") - F.col("pos_b")).alias("diag"),
     )
     return _diag_islands(matches, k=k, min_len=min_len)
 
@@ -1421,12 +1312,7 @@ def shared_span_pairs_cross(
     Caps above ``SPAN_CAP_SAFE_MAX`` are refused without
     ``unsafe_large_cap=True`` (see shared_span_pairs / SCALE.md).
     """
-    _check_span_cap(max_doc_freq, unsafe_large_cap)
-    if min_len < k:
-        raise ValueError(
-            f"min_len={min_len} < k={k}: k is the detection floor "
-            "(see shared_span_pairs)"
-        )
+    _check_span_args(k, min_len, max_doc_freq, unsafe_large_cap)
     la = _span_anchors(
         left, text_col, id_col, k=k, hash_family=hash_family,
         max_doc_freq=max_doc_freq,
@@ -1563,54 +1449,19 @@ def containment_pairs(
     functions of (n_a, n_b, inter) the aggregation already carries.
     Returns (id_a, id_b, containment, jaccard), id_a < id_b.
 
-    Both branches compute containment as ONE division of exact integers
-    (oracle-grade): the capped branch takes (inter, n_a, n_b) straight
-    from the verify aggregation via ``with_counts`` — no float
-    reconstruction, so a pair sitting exactly at ``min_containment``
-    cannot flip membership between branches or engines.
+    Containment and jaccard are each ONE division of the exact integers
+    ``_pair_counts`` returns on both the capped and uncapped paths
+    (oracle-grade): no float reconstruction, so a pair sitting exactly
+    at ``min_containment`` cannot flip membership between paths or
+    engines.
     """
     sh = _with_shingles(df, text_col, id_col, kind=kind, n=n)
-    if max_doc_freq is not None:
-        out = _capped_jaccard_pairs(
-            sh, max_doc_freq, 0.0, with_counts=True
-        ).select(
-            "id_a",
-            "id_b",
-            (F.col("inter") / F.least("n_a", "n_b")).alias("containment"),
-            "jaccard",
-        )
-    else:
-        inv = sh.select(
-            "id",
-            F.size("shingles").alias("n_sh"),
-            F.explode_outer("shingles").alias("s"),
-        )
-        a, b = inv.alias("a"), inv.alias("b")
-        out = (
-            a.join(
-                b,
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .groupBy(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("a.n_sh").alias("n_a"),
-                F.col("b.n_sh").alias("n_b"),
-            )
-            .agg(F.count("*").alias("inter"))
-            .select(
-                "id_a",
-                "id_b",
-                (F.col("inter") / F.least("n_a", "n_b")).alias(
-                    "containment"
-                ),
-                (
-                    F.col("inter")
-                    / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-                ).alias("jaccard"),
-            )
-        )
+    out = _pair_counts(sh, max_doc_freq).select(
+        "id_a",
+        "id_b",
+        (F.col("inter") / F.least("n_a", "n_b")).alias("containment"),
+        _jaccard().alias("jaccard"),
+    )
     if min_containment > 0:
         out = out.filter(F.col("containment") >= min_containment)
     return out
@@ -1652,8 +1503,6 @@ def edit_distance_pairs(
     all-pairs distance directly. ``max_bucket_size`` caps degenerate
     blocks (boilerplate prefixes) exactly like the LSH bucket caps.
     """
-    from airflow_retail_etl_spark.functions.text import normalize_text
-
     k, m = max_dist, max_dist + 1
     base = df.select(
         F.col(id_col).alias("id"),

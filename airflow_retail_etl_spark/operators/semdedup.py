@@ -42,6 +42,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .dedup import _key_pairs
 from .similarity import (
     _fit_centroids,
     _nearest_centroid_udf,
@@ -256,27 +257,14 @@ def semdedup(
 
     sim = F.round(
         cosine_hoisted(
-            F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
+            F.col("v_a"), F.col("v_b"), F.col("nn_a"), F.col("nn_b")
         ),
         6,
     )
 
     def _pairs(df: DataFrame, keys: list[str]) -> DataFrame:
-        a = df.select(
-            *keys,
-            F.col("id").alias("id_a"),
-            F.col("v").alias("va"),
-            F.col("nn").alias("na"),
-        )
-        b = df.select(
-            *keys,
-            F.col("id").alias("id_b"),
-            F.col("v").alias("vb"),
-            F.col("nn").alias("nb"),
-        )
         return (
-            a.join(b, keys)
-            .filter(F.col("id_a") < F.col("id_b"))
+            _key_pairs(df, keys, "v", "nn")
             .filter(sim >= F.lit(tau))
             .select("id_a", "id_b")
         )

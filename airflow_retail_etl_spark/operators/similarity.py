@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from airflow_retail_etl_spark.functions.columns import pub_round
 from airflow_retail_etl_spark.functions.partitioning import _spread_id
+from airflow_retail_etl_spark.operators.dedup import _key_pairs
 
 
 def as_double(vec: Column) -> Column:
@@ -254,18 +255,10 @@ def lsh_neardup_pairs(
     # candidate generation on KEYS ONLY: the (table,bucket) self-join and
     # the pair dedup shuffle ~24 bytes/row instead of 2×512B vector
     # payloads × collision multiplicity; vectors re-attach to the (much
-    # smaller) deduped candidate set via two id-equi joins — the same
-    # verify shape as dedup.minhash_lsh_pairs.
-    a, b = banded.alias("a"), banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.table") == F.col("b.table"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+    # smaller) deduped candidate set via two id-equi joins — the
+    # re-attach shape of dedup._verify_sets.
+    candidates = _key_pairs(banded, ["table", "bucket"]).dropDuplicates(
+        ["id_a", "id_b"]
     )
     verified = candidates.join(
         base.withColumnsRenamed({"id": "id_a", "v": "va", "nn": "na"}), "id_a"
@@ -579,12 +572,11 @@ def cosine_neardup_pairs(
     # all n²/2 dot folds on one core (the AQE/input-split face of the
     # spread trap, functions/partitioning.py)
     v = _side(vectors, id_col, vec_col).transform(_spread_id)
-    a, b = v.alias("a"), v.alias("b")
-    pairs = a.join(b, F.col("a.id") < F.col("b.id")).select(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
+    pairs = _key_pairs(v, [], "v", "nn").select(
+        "id_a",
+        "id_b",
         cosine_hoisted(
-            F.col("a.v"), F.col("b.v"), F.col("a.nn"), F.col("b.nn")
+            F.col("v_a"), F.col("v_b"), F.col("nn_a"), F.col("nn_b")
         ).alias("sim"),
     )
     if min_sim is not None:

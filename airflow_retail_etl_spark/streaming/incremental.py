@@ -144,13 +144,19 @@ def admit_doc_batch(
     if batch.isEmpty():
         return
     spark = batch.sparkSession
+    # sign the batch ONCE (the expensive pass: shingle explode + 63-hash
+    # min-agg) and pin it; the dedup, the survivor write, and the index
+    # writes are all cheap derivations off this one materialization
+    sigs = dedup.minhash_signatures(
+        batch, text_col, id_col, num_hashes=63
+    ).localCheckpoint(eager=True)
     bands = _read_history(spark, f"{index_path}/bands")
     shingles = _read_history(spark, f"{index_path}/shingles")
     if bands is None or shingles is None:
-        # bootstrap: empty index with the correct schema (first batch
-        # self-dedups through the same LSH path as every later one)
-        bands = dedup.minhash_band_index(batch.limit(0), text_col, id_col)
-        shingles = dedup.shingle_store(batch.limit(0), text_col, id_col)
+        # bootstrap: empty typed index off the signed batch (the first
+        # batch self-dedups through the same LSH path as every later one)
+        bands = dedup.band_rows(sigs.limit(0))
+        shingles = sigs.select("id", "shingles").limit(0)
     else:
         bands = bands.filter(F.col("batch_id") != batch_id).select(
             "id", "band", "bucket"
@@ -158,26 +164,19 @@ def admit_doc_batch(
         shingles = shingles.filter(F.col("batch_id") != batch_id).select(
             "id", "shingles"
         )
-    # sign the batch ONCE (the expensive pass: shingle explode + 63-hash
-    # min-agg) and pin it; the dedup, the survivor write, and the index
-    # writes are all cheap derivations off this one materialization
-    sigs = dedup.minhash_signatures(
-        batch, text_col, id_col, num_hashes=63
+    # pin the verdict (kilobytes), not the survivor rows: the admitted
+    # rows and the index rows are anti joins off it, and the batch is
+    # read the same number of times
+    drops = dedup.incremental_lsh_dedup(
+        bands, sigs, index_shingles=shingles, min_jaccard=min_jaccard
     ).localCheckpoint(eager=True)
-    survivors = dedup.incremental_lsh_dedup(
-        bands,
-        batch,
-        text_col,
-        id_col,
-        min_jaccard=min_jaccard,
-        index_shingles=shingles,
-        incoming_sigs=sigs,
-    ).localCheckpoint(eager=True)
-    surv_ids = survivors.select(F.col(id_col).alias("id"))
-    surv_bands = dedup.band_rows(sigs).join(surv_ids, "id", "left_semi")
-    surv_shingles = sigs.select("id", "shingles").join(
-        surv_ids, "id", "left_semi"
-    )
+
+    def _admitted(df: DataFrame, col: str) -> DataFrame:
+        return df.join(drops, df[col] == drops["drop_id"], "left_anti")
+
+    survivors = _admitted(batch, id_col)
+    surv_bands = _admitted(dedup.band_rows(sigs), "id")
+    surv_shingles = _admitted(sigs.select("id", "shingles"), "id")
     bid = F.lit(batch_id).cast("long")
 
     def _overwrite(df: DataFrame, path: str, *partition_cols: str) -> None:
@@ -293,10 +292,6 @@ def replay_admission(
     from airflow_retail_etl_spark.operators import dedup
 
     first = batches[0]
-    bands = dedup.minhash_band_index(
-        first.limit(0), text_col, id_col, hash=hash
-    )
-    shingles = dedup.shingle_store(first.limit(0), text_col, id_col)
     sigs_lazy = [
         dedup.minhash_signatures(
             b, text_col, id_col, num_hashes=63, hash=hash
@@ -324,19 +319,18 @@ def replay_admission(
             sigs_pinned = list(pool.map(_pin, sigs_lazy))
     else:
         sigs_pinned = [sigs_lazy[0].localCheckpoint(eager=True)]
+    # empty typed index off the signed first batch
+    bands = dedup.band_rows(sigs_pinned[0].limit(0), hash=hash)
+    shingles = sigs_pinned[0].select("id", "shingles").limit(0)
     admitted: DataFrame | None = None
     for b, sigs in zip(batches, sigs_pinned):
         drops = dedup.incremental_lsh_dedup(
             bands,
-            b,
-            text_col,
-            id_col,
+            sigs,
+            index_shingles=shingles,
             min_jaccard=min_jaccard,
             hash=hash,
             max_bucket_size=max_bucket_size,
-            index_shingles=shingles,
-            incoming_sigs=sigs,
-            return_drops=True,
         ).localCheckpoint(eager=True)
         surv = b.join(
             drops, b[id_col] == drops["drop_id"], "left_anti"

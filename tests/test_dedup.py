@@ -184,6 +184,41 @@ def test_minhash_bucket_cap_bounds_megabucket(spark):
     assert uncapped == 60 * 59 // 2 + 1
 
 
+def test_minhash_bands_beyond_hashes_rejected(spark):
+    """More bands than hashes leaves empty bands: every doc lands in one
+    bucket per band, so under a bucket cap the true pair (100, 101) was
+    lost without an error. Such banding is refused; valid banding finds
+    the pair under the same cap."""
+    df = _boilerplate_corpus(spark)
+    with pytest.raises(ValueError, match="bands=16"):
+        dedup.minhash_lsh_pairs(
+            df, "text", "doc_id", num_hashes=8, bands=16, max_bucket_size=30
+        )
+    with pytest.raises(ValueError, match="bands=0"):
+        dedup.band_rows(dedup.minhash_signatures(df, "text", "doc_id"), bands=0)
+    found = {
+        (r.id_a, r.id_b)
+        for r in dedup.minhash_lsh_pairs(
+            df, "text", "doc_id", max_bucket_size=30
+        ).collect()
+    }
+    assert (100, 101) in found
+
+
+def test_simhash_pairs_rejects_too_few_blocks(spark):
+    """One flipped bit in each of the four 16-bit blocks is Hamming 4 and
+    shares no block, so max_hamming=4 over 4 blocks missed the pair
+    without an error. That banding is refused; 8-bit blocks find it."""
+    one_bit_per_block = sum(1 << (16 * blk) for blk in range(4))
+    sigs = spark.createDataFrame(
+        [(1, 0), (2, one_bit_per_block)], "id long, simhash long"
+    )
+    with pytest.raises(ValueError, match="max_hamming=4"):
+        dedup.simhash_pairs(sigs, max_hamming=4)
+    out = dedup.simhash_pairs(sigs, max_hamming=4, prefix_bits=8).collect()
+    assert [(r.id_a, r.id_b, r.hamming) for r in out] == [(1, 2, 4)]
+
+
 def test_simhash_block_cap_bounds_megabucket(spark):
     rows = [(i, "identical spam content repeated across the corpus") for i in range(60)]
     rows += [(200, "legitimate document alpha beta gamma delta epsilon zeta")]
@@ -337,24 +372,15 @@ def test_incremental_dedup_semantics(spark):
     assert sorted(r["doc_id"] for r in out.collect()) == [11, 13]
 
 
-def test_incremental_dedup_pluggable_pair_generator(spark):
-    """An LSH pair generator plugs in for candidate generation at scale."""
-    mk = lambda rows: spark.createDataFrame(rows, ["doc_id", "text"])
-    text = "the quick brown fox jumps over the lazy dog again and again"
-    existing = mk([(1, text)])
-    incoming = mk([(10, text), (11, "completely different words here "
-                                    "painting garden bicycle mountain")])
-
-    def lsh_pairs(df, text_col, id_col, min_jaccard):
-        return dedup.minhash_lsh_pairs(
-            df, text_col, id_col, min_jaccard=min_jaccard
-        )
-
-    out = dedup.incremental_dedup(
-        existing, incoming, "text", "doc_id",
-        min_jaccard=0.5, pairs_fn=lsh_pairs,
+def _admit(spark, batch, bands_path, sh_path):
+    """Sign the batch, take the verdict against the persisted index and
+    anti-join the batch: the admitted rows."""
+    drops = dedup.incremental_lsh_dedup(
+        spark.read.parquet(bands_path),
+        dedup.minhash_signatures(batch, "text", "doc_id"),
+        index_shingles=spark.read.parquet(sh_path),
     )
-    assert sorted(r["doc_id"] for r in out.collect()) == [11]
+    return batch.join(drops, batch["doc_id"] == drops["drop_id"], "left_anti")
 
 
 def test_incremental_lsh_dedup_with_persisted_index(spark, tmp_path):
@@ -368,34 +394,28 @@ def test_incremental_lsh_dedup_with_persisted_index(spark, tmp_path):
     existing = mk([(1, corpus_text), (2, other)])
     bands_path = str(tmp_path / "index" / "bands")
     sh_path = str(tmp_path / "index" / "shingles")
-    dedup.minhash_band_index(existing, "text", "doc_id").write.partitionBy(
-        "band"
-    ).parquet(bands_path)
+    dedup.band_rows(
+        dedup.minhash_signatures(existing, "text", "doc_id")
+    ).write.partitionBy("band").parquet(bands_path)
     dedup.shingle_store(existing, "text", "doc_id").write.parquet(sh_path)
 
     # day 1: one dup of the corpus, one fresh, one within-batch dup pair
     fresh = "penguin walrus narwhal dolphin seal otter orca whale manatee dugong"
     day1 = mk([(10, corpus_text), (11, fresh), (12, fresh)])
-    s1 = dedup.incremental_lsh_dedup(
-        spark.read.parquet(bands_path), day1, "text", "doc_id",
-        index_shingles=spark.read.parquet(sh_path),
-    )
+    s1 = _admit(spark, day1, bands_path, sh_path)
     assert sorted(r["doc_id"] for r in s1.collect()) == [11]
 
     # append survivors' index rows; day 2 dup of day-1 survivor must drop
     survivors1 = day1.join(s1.select("doc_id"), "doc_id", "left_semi")
-    dedup.minhash_band_index(survivors1, "text", "doc_id").write.mode(
-        "append"
-    ).partitionBy("band").parquet(bands_path)
+    dedup.band_rows(
+        dedup.minhash_signatures(survivors1, "text", "doc_id")
+    ).write.mode("append").partitionBy("band").parquet(bands_path)
     dedup.shingle_store(survivors1, "text", "doc_id").write.mode(
         "append"
     ).parquet(sh_path)
     day2 = mk([(20, fresh), (21, "completely novel words paint garden "
                                  "bicycle mountain river cloud stone fire")])
-    s2 = dedup.incremental_lsh_dedup(
-        spark.read.parquet(bands_path), day2, "text", "doc_id",
-        index_shingles=spark.read.parquet(sh_path),
-    )
+    s2 = _admit(spark, day2, bands_path, sh_path)
     assert sorted(r["doc_id"] for r in s2.collect()) == [21]
 
     # the band table is keys-only (no shingle payload ×21), and a
@@ -419,10 +439,17 @@ def test_incremental_lsh_agrees_with_exact_on_catchable_pairs(spark, sf_dir):
     exact = dedup.incremental_dedup(
         existing, incoming, "text", "doc_id", min_jaccard=0.5
     )
-    index = dedup.minhash_band_index(existing, "text", "doc_id")
-    lsh = dedup.incremental_lsh_dedup(
-        index, incoming, "text", "doc_id", min_jaccard=0.5,
+    index = dedup.band_rows(
+        dedup.minhash_signatures(existing, "text", "doc_id")
+    )
+    drops = dedup.incremental_lsh_dedup(
+        index,
+        dedup.minhash_signatures(incoming, "text", "doc_id"),
+        min_jaccard=0.5,
         index_shingles=dedup.shingle_store(existing, "text", "doc_id"),
+    )
+    lsh = incoming.join(
+        drops, incoming["doc_id"] == drops["drop_id"], "left_anti"
     )
     assert sorted(r["doc_id"] for r in exact.collect()) == sorted(
         r["doc_id"] for r in lsh.collect()
@@ -582,20 +609,23 @@ def test_cap_dropped_mass_reports_exact_counts(spark):
     assert r0.rows_dropped == 0 and r0.n_buckets_over_cap == 0
 
 
-def test_minhash_cap_diag_side_output(spark):
-    """minhash_lsh_pairs(cap_diag=...) surfaces the banded-frame dropped
-    mass: a 30-doc exact-dup clique under a tiny cap loses every band
-    bucket it fills, and the report says so while the pair output is
-    empty (the cap suppressed the mega-clique, the documented trade)."""
+def test_minhash_cap_dropped_mass_over_band_rows(spark):
+    """cap_dropped_mass over the band rows minhash_lsh_pairs caps
+    surfaces the dropped mass: a 30-doc exact-dup clique under a tiny
+    cap loses every band bucket it fills, and the report says so while
+    the pair output is empty (the cap suppressed the mega-clique, the
+    documented trade)."""
     rows = [(i, "identical text shared by every doc in the clique")
             for i in range(30)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    diag: dict = {}
-    pairs = dedup.minhash_lsh_pairs(
-        df, "text", "doc_id", max_bucket_size=5, cap_diag=diag
-    )
+    pairs = dedup.minhash_lsh_pairs(df, "text", "doc_id", max_bucket_size=5)
     assert pairs.count() == 0
-    r = diag["bands"].first()
+    r = dedup.cap_dropped_mass(
+        dedup.band_rows(dedup.minhash_signatures(df, "text", "doc_id")),
+        ["band", "bucket"],
+        5,
+        member_col="id",
+    ).first()
     # every band puts all 30 ids in one bucket -> all rows dropped
     assert r.n_buckets_over_cap == r.n_buckets
     assert r.rows_dropped == r.rows_total > 0

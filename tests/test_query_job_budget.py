@@ -35,7 +35,10 @@ on its pin, in brackets):
   knn_cosine 3, knn_by_label 8, ann_lsh 4, ann_ivf 6, ann_pq 6, ivf_pq
   10, ann_recall 25, semdedup 8, neardup_cosine 3, neardup_cosine_lsh
   6, hard_negatives 3 and matryoshka_recall 17 (the last two vary from
-  run to run in one session, 24–25 and 15–17, so each pins its max).
+  run to run in one session, 24–25 and 15–17, so each pins its max);
+- the near-dup family's one candidate-pair core, neardup_jaccard
+  through audio_neardup below (connected_components consumers vary by
+  one job from run to run, so they stay unpinned).
 
 A query that grows an eager action fails here."""
 
@@ -84,6 +87,22 @@ JOB_BUDGET = {
     "neardup_cosine_lsh": 6,
     "hard_negatives": 3,
     "matryoshka_recall": 17,
+    "neardup_jaccard": 3,
+    "dedup_threshold_sweep": 7,
+    "containment_pairs": 3,
+    "minhash_lsh_pairs": 9,
+    "simhash_pairs": 5,
+    "winnow_pairs": 7,
+    "shared_spans": 3,
+    "span_excise": 6,
+    "duplication_profile": 14,
+    "decontam_excise": 8,
+    "eval_leak_report": 12,
+    "incremental_dedup": 11,
+    "streaming_admission": 53,
+    "image_neardup": 7,
+    "video_neardup": 7,
+    "audio_neardup": 7,
 }
 
 

@@ -8,7 +8,9 @@ per-day state, every decayed query folds a dense calendar by Horner,
 ``operators.selection`` (global and grouped quantiles, the two drift
 scores, robust statistics) pick exact order statistics, and the
 vector-search family (``operators.similarity`` / ``semdedup``) ends
-every per-query top-k in one exact ranker; each must equal its
+every per-query top-k in one exact ranker, and the near-dup family
+(``operators.dedup`` and its multimodal faces) pairs candidates through
+one keyed self-join and verifies them exactly; each must equal its
 one-shot ``oracle_sql()`` twin bit-for-bit."""
 
 from __future__ import annotations
@@ -73,6 +75,26 @@ VECTOR_QUERIES = [
     "matryoshka_recall",
 ]
 
+DEDUP_QUERIES = [
+    "neardup_jaccard",
+    "dedup_threshold_sweep",
+    "containment_pairs",
+    "minhash_lsh_pairs",
+    "simhash_pairs",
+    "winnow_pairs",
+    "shared_spans",
+    "span_excise",
+    "duplication_profile",
+    "decontam_excise",
+    "eval_leak_report",
+    "incremental_dedup",
+    "streaming_admission",
+    "dup_clusters",
+    "image_neardup",
+    "video_neardup",
+    "audio_neardup",
+]
+
 
 def _check_oracle():
     spec = importlib.util.spec_from_file_location(
@@ -104,7 +126,8 @@ def compare():
     + ROLLING_QUERIES
     + STATE_READ_QUERIES
     + RANK_QUERIES
-    + VECTOR_QUERIES,
+    + VECTOR_QUERIES
+    + DEDUP_QUERIES,
 )
 def test_replay_query_matches_one_shot_oracle(
     spark, sf_dir, oracle_con, compare, name

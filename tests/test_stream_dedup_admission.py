@@ -184,6 +184,10 @@ def test_index_compaction_preserves_admission_decisions(spark, tmp_path):
     assert outs["compacted"] == outs["control"] == [1, 2, 12, 21]
 
 
+def _admitted(batch, drops):
+    return batch.join(drops, batch["doc_id"] == drops["drop_id"], "left_anti")
+
+
 def test_bucketed_index_probe_is_exchange_free_on_index_side(spark, sf_dir):
     """Round-8 verdict item 5: persisting the band index BUCKETED on the
     (band, bucket) join key must let incremental_lsh_dedup's index-side
@@ -199,16 +203,20 @@ def test_bucketed_index_probe_is_exchange_free_on_index_side(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
-    bands = dedup.minhash_band_index(corpus, "text", "doc_id")
+    bands = dedup.band_rows(dedup.minhash_signatures(corpus, "text", "doc_id"))
+    batch_sigs = dedup.minhash_signatures(batch, "text", "doc_id")
     shingles = dedup.shingle_store(corpus, "text", "doc_id")
     spark.sql("DROP TABLE IF EXISTS band_idx_test")
     dedup.write_band_index_bucketed(bands, "band_idx_test", buckets=8)
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            surv_bucketed = dedup.incremental_lsh_dedup(
-                spark.table("band_idx_test"), batch, "text", "doc_id",
-                index_shingles=shingles,
+            surv_bucketed = _admitted(
+                batch,
+                dedup.incremental_lsh_dedup(
+                    spark.table("band_idx_test"), batch_sigs,
+                    index_shingles=shingles,
+                ),
             )
             plan = formatted_plan(surv_bucketed)
             assert "SortMergeJoin" in plan
@@ -223,8 +231,11 @@ def test_bucketed_index_probe_is_exchange_free_on_index_side(spark, sf_dir):
             n_ex_bucketed = len(
                 re.findall(r"(?<!Broadcast)Exchange \(\d+\)", plan)
             )
-            plain = dedup.incremental_lsh_dedup(
-                bands, batch, "text", "doc_id", index_shingles=shingles,
+            plain = _admitted(
+                batch,
+                dedup.incremental_lsh_dedup(
+                    bands, batch_sigs, index_shingles=shingles
+                ),
             )
             n_ex_plain = len(
                 re.findall(
